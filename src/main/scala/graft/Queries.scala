@@ -904,10 +904,11 @@ object Queries {
       // bootstrap weights): TWO base md5 draws per row + an affine combo
       // per replicate, instead of one md5 per (row, replicate). At sf10
       // the weight lanes ARE the query cost, and the md5 count is 8x of
-      // it — measured 24 s -> 6.6 s on the whole Gram pass
-      // (tools/BootstrapDrawProbe). No overflow: h1, h2 < 2^56 and
-      // r <= 8 keeps h1 + r*h2 < 2^60. The DuckDB oracle replays the
-      // identical arithmetic on the same two md5-derived bases.
+      // it — measured 24 s -> 6.6 s on the whole Gram pass (commit
+      // e64c687; SURVEY.md §8, round 14, item 2). No overflow: h1,
+      // h2 < 2^56 and r <= 8 keeps h1 + r*h2 < 2^60. The DuckDB oracle
+      // replays the identical arithmetic on the same two md5-derived
+      // bases.
       val mod = 1L << 56
       val h1 = graft.ext.TextAnalysis.hash56(concat(lit("a:"), key))
       val h2 = graft.ext.TextAnalysis.hash56(concat(lit("b:"), key))

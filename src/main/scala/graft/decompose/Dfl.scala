@@ -38,13 +38,10 @@ object Dfl {
     val numericPreds = predictors.filterNot(stringPreds.contains)
     val (dummied, infos) = Prep.oneHot(df0, stringPreds)
     val xCols = Prep.InterceptCol +: (numericPreds ++ infos.flatMap(_.dummyCols))
-    // the prepared frame feeds the logit IRLS iterations, group stats,
-    // the Silverman passes and the KDE pass — persist ONE narrow
-    // projection (outcome, group, design), not the full source width:
-    // the cache write is what you pay per row
-    // NOT persisted (r15): the four consumers (silverman stats, grouped
-    // rank-pick, IRLS design build — which persists its own compact
-    // RDD — and the KDE grid pass) each re-run a narrow column-pruned
+    // ONE narrow projection (outcome, group, design), NOT persisted
+    // (r15): the four consumers (silverman stats, grouped rank-pick,
+    // IRLS design build — which persists its own compact RDD — and
+    // the KDE grid pass) each re-run a narrow column-pruned
     // parquet scan + cheap dummy/intercept projections; the
     // MEMORY_AND_DISK write of the row-format copy sat on the critical
     // path and cost more than the three extra scans it saved, at bench
@@ -58,109 +55,91 @@ object Dfl {
     // The pipeline has three INDEPENDENT front tracks (guide §2.6 —
     // overlap independent jobs; every job here is a near-serial
     // single-partition scan at test scale, so overlap buys real wall
-    // time and costs nothing at cluster scale):
-    //   T1 (this thread): the fused grouped Silverman stats pass + the
-    //      grouped IQR rank-pick;
-    //   T2: materialize the KDE input's fan-out exchange into a cache —
+    // time and costs nothing at cluster scale), run by nested par2s:
+    //   T1: level discovery (its own tiny distinct, the pre-r14 shape;
+    //      Spark's binary collation == the UTF-8 byte order the fused
+    //      path sorted by) gating the logit fit, which then runs
+    //      concurrently with T2's rank-pick. T1 validates the group,
+    //      so it is par2's first argument: a missing reference level
+    //      raises InvalidGroupVariable whatever the other tracks raise;
+    //   T2: the fused grouped Silverman stats pass + the grouped IQR
+    //      rank-pick;
+    //   T3: materialize the KDE input's fan-out exchange into a cache —
     //      the exchange input (outcome, group, design) depends on
     //      NOTHING the logit fit produces (the density weight lanes are
     //      computed above it), so the shuffle write no longer sits on
     //      the critical path; the grid pass reads the cached 64
     //      partitions (identical contents — round-robin from the same
-    //      source layout — so every FP sum is unchanged);
-    //   T3: level discovery (its own tiny distinct, the pre-r14 shape;
-    //      Spark's binary collation == the UTF-8 byte order the fused
-    //      path sorted by) gating the logit fit — the fit then runs
-    //      concurrently with T1's rank-pick instead of after it.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    //      source layout — so every FP sum is unchanged).
+    val fanned0 = Prep.fanOut(df)
+    val fanOutHappened = fanned0 ne df
+    val fanned =
+      if (fanOutHappened)
+        fanned0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else fanned0
     try {
-      val fanned0 = Prep.fanOut(df)
-      val fanOutHappened = fanned0 ne df
-      val fanned =
-        if (fanOutHappened)
-          fanned0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        else fanned0
-      val fannedF: java.util.concurrent.Future[_] =
-        if (fanOutHappened)
-          pool.submit(new java.util.concurrent.Callable[Long] {
-            def call(): Long = Jobs.labeled(df.sparkSession,
-              "dfl: kde fan-out materialization") { fanned.count() }
-          })
-        else null
-      val fitF = pool.submit(
-        new java.util.concurrent.Callable[(Seq[String], String, graft.estimators.LogitFit)] {
-          def call(): (Seq[String], String, graft.estimators.LogitFit) = {
-            val levels = Jobs.labeled(df.sparkSession, "dfl: group levels") {
-              Prep.groupLevels(df, group)
+      val ((levelA, fit), ((bws, extras), _)) = Jobs.par2(
+        {
+          val levels = Jobs.labeled(df.sparkSession, "dfl: group levels") {
+            Prep.groupLevels(df, group)
+          }
+          if (!levels.contains(reference))
+            throw InvalidGroupVariable(s"Reference level '$reference' not found")
+          val levelA = levels.filter(_ != reference).headOption.getOrElse(
+            throw InvalidGroupVariable("Need two group levels for DFL"))
+          val target = when(g === lit(levelA), 1.0).otherwise(0.0)
+          val withTarget = df.withColumn("__dfl_target__", target)
+          (levelA, Logit.fit(withTarget, "__dfl_target__", xCols,
+            maxIter = logitMaxIter, tol = logitTol))
+        },
+        Jobs.par2(
+          // group counts, outcome range AND both groups' Silverman
+          // stats in ONE grouped pass + ONE grouped rank-pick
+          Kde.silvermanGrouped(df, outcome, g,
+            extraAggs = Seq(count(lit(1)), min(y), max(y))),
+          if (fanOutHappened)
+            Jobs.labeled(df.sparkSession, "dfl: kde fan-out materialization") {
+              fanned.count()
             }
-            if (!levels.contains(reference))
-              throw InvalidGroupVariable(s"Reference level '$reference' not found")
-            val levelA = levels.filter(_ != reference).headOption.getOrElse(
-              throw InvalidGroupVariable("Need two group levels for DFL"))
-            val target = when(g === lit(levelA), 1.0).otherwise(0.0)
-            val withTarget = df.withColumn("__dfl_target__", target)
-            (levels, levelA,
-              Logit.fit(withTarget, "__dfl_target__", xCols,
-                maxIter = logitMaxIter, tol = logitTol))
-          }
-        })
-      try {
-        // T1: group counts, outcome range AND both groups' Silverman
-        // stats in ONE grouped pass + ONE grouped rank-pick (previously
-        // a global aggregate plus a per-group stats aggregate +
-        // rank-pick each)
-        val (bws, extras) = Kde.silvermanGrouped(df, outcome, g,
-          extraAggs = Seq(count(lit(1)), min(y), max(y)))
-        val (_, levelA, fit) =
-          try fitF.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-          }
-        val nA = extras(levelA)(0).asInstanceOf[Long].toDouble
-        val nB = extras(reference)(0).asInstanceOf[Long].toDouble
-        val ratioMarginal = nB / nA
-        // global outcome range = fold of the per-group ranges (every row
-        // belongs to exactly one group key, null level included)
-        val mins = extras.values.map(_(1)).collect { case d: java.lang.Double => d.doubleValue }
-        val maxs = extras.values.map(_(2)).collect { case d: java.lang.Double => d.doubleValue }
-        val minVal = mins.min
-        val maxVal = maxs.max
-        val step = (maxVal - minVal) / GridSize.toDouble
-        val grid = Array.tabulate(GridSize)(i => minVal + i * step)
+          else 0L))
+      val nA = extras(levelA)(0).asInstanceOf[Long].toDouble
+      val nB = extras(reference)(0).asInstanceOf[Long].toDouble
+      val ratioMarginal = nB / nA
+      // global outcome range = fold of the per-group ranges (every row
+      // belongs to exactly one group key, null level included)
+      val mins = extras.values.map(_(1)).collect { case d: java.lang.Double => d.doubleValue }
+      val maxs = extras.values.map(_(2)).collect { case d: java.lang.Double => d.doubleValue }
+      val minVal = mins.min
+      val maxVal = maxs.max
+      val step = (maxVal - minVal) / GridSize.toDouble
+      val grid = Array.tabulate(GridSize)(i => minVal + i * step)
 
-        val p = least(greatest(fit.probCol(xCols), lit(1e-4)), lit(0.9999))
+      val p = least(greatest(fit.probCol(xCols), lit(1e-4)), lit(0.9999))
 
-        val bwA = bws(levelA)
-        val bwB = bws(reference)
+      val bwA = bws(levelA)
+      val bwB = bws(reference)
 
-        // all three densities in ONE scan: per-density weight columns
-        // that are 0 outside the density's subset. The weight lanes
-        // evaluate ABOVE the (already materialized) fan-out, so the grid
-        // pass is the only work left on the critical path here.
-        val isA = g === lit(levelA)
-        val isB = g === lit(reference)
-        val psi = (p / (lit(1.0) - p)) * lit(ratioMarginal)
-        if (fannedF != null) {
-          try fannedF.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException => throw e.getCause
-          }
-        }
-        val dens = Kde.onGridMulti(fanned, outcome,
-          Seq(when(isA, 1.0).otherwise(0.0),
-            when(isB, 1.0).otherwise(0.0),
-            when(isB, psi).otherwise(0.0)),
-          grid, Seq(bwA, bwB, bwB))
+      // all three densities in ONE scan: per-density weight columns
+      // that are 0 outside the density's subset. The weight lanes
+      // evaluate ABOVE the (already materialized) fan-out, so the grid
+      // pass is the only work left on the critical path here.
+      val isA = g === lit(levelA)
+      val isB = g === lit(reference)
+      val psi = (p / (lit(1.0) - p)) * lit(ratioMarginal)
+      val dens = Kde.onGridMulti(fanned, outcome,
+        Seq(when(isA, 1.0).otherwise(0.0),
+          when(isB, 1.0).otherwise(0.0),
+          when(isB, psi).otherwise(0.0)),
+        grid, Seq(bwA, bwB, bwB))
 
-        DflResult(
-          grid = grid,
-          densityA = dens(0),
-          densityB = dens(1),
-          densityBCounterfactual = dens(2),
-          logitConverged = fit.converged)
-      } finally {
-        if (fanOutHappened) { fanned.unpersist(blocking = false); () }
-      }
-    } finally pool.shutdown()
+      DflResult(
+        grid = grid,
+        densityA = dens(0),
+        densityB = dens(1),
+        densityBCounterfactual = dens(2),
+        logitConverged = fit.converged)
+    } finally {
+      if (fanOutHappened) { fanned.unpersist(blocking = false); () }
+    }
   }
 }

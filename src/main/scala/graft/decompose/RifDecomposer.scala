@@ -18,12 +18,12 @@ object RifDecomposer {
       cfg.categorical ++ cfg.weights.toSeq
     val cleaned = Prep.clean(df, modelCols.distinct)
     // the >= 2-levels / reference-exists validation is its own distinct
-    // job, independent of the RIF passes — overlap them (guide §2.6);
-    // an invalid group still raises the same InvalidGroupVariable, just
-    // after the concurrent transform work instead of before it
+    // job, independent of the RIF passes — overlap them (guide §2.6).
+    // It is the FIRST argument, so an invalid group raises
+    // InvalidGroupVariable even when the transform fails on it too.
     val (transformed, _) = graft.core.Jobs.par2(
-      Rif.transformPerGroup(cleaned, cfg.outcome, cfg.group, tau),
-      Prep.splitGroups(cleaned, cfg.group, cfg.reference))._1
+      Prep.splitGroups(cleaned, cfg.group, cfg.reference),
+      Rif.transformPerGroup(cleaned, cfg.outcome, cfg.group, tau))._2
     val replaced = transformed
       .withColumn(cfg.outcome, col("__rif__"))
       .drop("__rif__")

@@ -34,11 +34,6 @@ object Frontier {
       steps: Int = 50, paymentScale: Option[Int] = None): Seq[FrontierPoint] = {
     // ONE prepare + Gram pass feeds the greedy allocation AND the pooled
     // frontier design (previously optimize re-ran both internally).
-    // persistDummied stays OFF here (measured, round 10): the frame's
-    // three consumers (Gram pass, the optimizer's annotated cache, the
-    // payments broadcast join) each re-derive it as cheap codegen over
-    // the caller's already-cached source — a second full-width cache
-    // write costs more than it saves. No persist -> no unpersist below.
     val (p, lanes) = Equity.prepareAndGram(df, cfg)
     val dummied = p.dummied
     val xCols = p.xCols
@@ -51,7 +46,7 @@ object Frontier {
     // -adjustment key; boundaries only balance buckets).
     val opt = Equity.optimizePrepared(dummied, xCols, p.names, p.split, lanes,
       cfg.copy(budget = 0.0, strategy = AllocationStrategy.Greedy), idCol,
-      keepAnnotated = true, wantPrefixBoundaries = true)
+      wantPrefixBoundaries = true)
     val totalNeed = opt.metrics.requiredBudget
     val maxB = maxBudget.getOrElse(totalNeed * 1.1)
     val safeMax = if (maxB < 1e-9) 1000.0 else maxB
@@ -178,9 +173,6 @@ object Frontier {
       val (ts, p, sig) = statAt(xty, yy)
       FrontierPoint(budget, ts, p, sig)
     }
-    } finally {
-      joined.unpersist(blocking = false)
-      opt.releaseCache()
-    }
+    } finally { joined.unpersist(blocking = false) }
   }
 }

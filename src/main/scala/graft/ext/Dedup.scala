@@ -828,34 +828,35 @@ object Dedup {
     based.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Shingle-table row count from which [[minhashLshPairs]] turns its
+    * length prefilter on. Below it the filter's carry cost (the size lane
+    * through the signature checkpoint, the band union and the bucket
+    * join: +0.4 s at sf0.1, OPTIMIZATION_r15.md §4) outweighs the
+    * candidates it drops; at sf10 it saves 3.3 s (SURVEY.md §8, round
+    * 14, item 3). */
+  private val LshLenFilterMinShingleRows = 32000000L
+
   /** LSH-banded MinHash near-dup candidates, verified with exact Jaccard.
     * bands * rowsPerBand must equal numHashes. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 8,
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val rowsPerBand = numHashes / bands
     val sh = shingles(df, idCol, textCol, shingleN).localCheckpoint()
-    // The lossless length prefilter (min|set| >= t*max|set|) pays a
-    // small DIFFUSE carry cost (the size lane through the signature
-    // checkpoint, the band union, and the bucket join — measured ~0.2-
-    // 0.4 s at sf0.1, r15 `tools/LshLenAb` receipt) and only starts
-    // earning it back when the banded candidate mass is corpus-scale
-    // (sf10: -3.3 s, r14 receipt). Gate it on the corpus size: the
-    // shingle table is already checkpointed, so the row count is a
-    // ~40 ms cached-metadata job, paid only when no explicit override
-    // is set. The filter is recall-lossless, so BOTH settings produce
-    // byte-identical output (LshLenAb asserts it) — the gate can never
-    // change results, only the candidate mass.
-    val lenFilter = df.sparkSession.conf
-      .getOption("spark.graft.dedup.lshLenFilter") match {
-        case Some(v) => v.toBoolean
-        case None =>
-          val minRows = df.sparkSession.conf
-            .getOption("spark.graft.dedup.lshLenFilterMinShingleRows")
-            .map(_.toLong).getOrElse(32000000L)
-          sh.count() >= minRows
-      }
+    // gate the length prefilter on the corpus size: the shingle table is
+    // already checkpointed, so the row count is a ~40 ms cached-metadata
+    // job. The filter is recall-lossless, so the gate can never change
+    // results, only the candidate mass.
+    minhashLshPairsOn(sh, idCol, numHashes, bands, threshold,
+      lenFilter = sh.count() >= LshLenFilterMinShingleRows)
+  }
+
+  /** [[minhashLshPairs]] on a checkpointed shingle table, with the length
+    * prefilter on or off. */
+  private[graft] def minhashLshPairsOn(sh: DataFrame, idCol: String,
+      numHashes: Int, bands: Int, threshold: Double,
+      lenFilter: Boolean): DataFrame = {
+    val rowsPerBand = numHashes / bands
     // one row per doc — checkpoint so the 8-band union and the bucket
     // self-join read the tiny signature table instead of re-running the
     // numHashes-way aggregation over the full shingle set per branch
@@ -877,7 +878,7 @@ object Dedup {
     // arrays, no intersection, and the distinct's input shrinks too.
     // On the dense synthetic corpus at sf10, 86% of the banded
     // candidate stream sits at J < 0.1 (hot-bucket background, not
-    // near-threshold structure — receipt in tools/LshCandHist) and 62%
+    // near-threshold structure — SURVEY.md §8, round 14, item 3) and 62%
     // dies on this one predicate (7.96M -> 3.05M candidates measured,
     // outputs byte-identical). Filtering on columns carried by the
     // band join itself keeps the whole thing one shuffle — linear in
@@ -885,29 +886,13 @@ object Dedup {
     val joined0 = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
           col(s"x.$idCol") < col(s"y.$idCol"))
-    val candPlain = (if (lenFilter)
+    val cand = (if (lenFilter)
         joined0.filter(least(col("x.__lsz__"), col("y.__lsz__")) >=
           lit(threshold) * greatest(col("x.__lsz__"), col("y.__lsz__"))
             - lit(1e-9))
       else joined0)
       .select(col(s"x.$idCol").as("id_a"), col(s"y.$idCol").as("id_b"))
       .distinct()
-    // opt-in scale instrumentation (one extra job + a candidate
-    // checkpoint): `spark.graft.dedup.lshStats=true` logs the banded
-    // candidate count and distinct docs touched, so a super-linear
-    // scale reading can be attributed to candidate growth vs
-    // per-candidate cost without re-deriving the pipeline
-    val cand =
-      if (df.sparkSession.conf.getOption("spark.graft.dedup.lshStats")
-          .contains("true")) {
-        val c = candPlain.localCheckpoint()
-        val nDocs = c.select(explode(array(col("id_a"), col("id_b"))))
-          .distinct().count()
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"minhashLshPairs: ${c.count()} banded candidates over " +
-            s"$nDocs distinct docs")
-        c
-      } else candPlain
     // verify candidates with exact Jaccard over the full shingle sets
     // (array-route: see exactInterByArrays — the candidate mass is
     // corpus-quadratic in the pairwise-similarity BACKGROUND, so the

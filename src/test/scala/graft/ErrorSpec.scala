@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.decompose.{Oaxaca, OaxacaConfig}
+import graft.decompose.{Dfl, Oaxaca, OaxacaConfig, RifDecomposer}
 import graft.estimators.Ols
 import graft.prep.Prep
 
@@ -46,6 +46,24 @@ class ErrorSpec extends SparkSpec {
     assertThrows[InvalidGroupVariable] {
       Oaxaca.run(df, OaxacaConfig("y", "g", "Z", predictors = Seq("x"),
         bootstrapReps = 0))
+    }
+  }
+
+  // a non-numeric outcome makes the RIF transform and the Silverman pass
+  // fail on their own cast; the missing reference level must still win
+  private def badOutcomeNoRef = (1 to 20).map(i =>
+    (s"n/a-$i", if (i % 2 == 0) "A" else "B", (i % 5).toDouble)).toDF("y", "g", "x")
+
+  test("RIF quantile decomposition raises InvalidGroupVariable for a missing reference level") {
+    assertThrows[InvalidGroupVariable] {
+      RifDecomposer.decomposeQuantile(badOutcomeNoRef,
+        OaxacaConfig("y", "g", "Z", predictors = Seq("x"), bootstrapReps = 0), 0.5)
+    }
+  }
+
+  test("DFL raises InvalidGroupVariable for a missing reference level") {
+    assertThrows[InvalidGroupVariable] {
+      Dfl.run(badOutcomeNoRef, "y", "g", "Z", Seq("x"))
     }
   }
 

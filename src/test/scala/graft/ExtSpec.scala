@@ -70,6 +70,18 @@ class ExtSpec extends SparkSpec {
     assert(pairs.contains((0L, 1L)))
   }
 
+  test("MinHash LSH length prefilter is recall-lossless: on == off") {
+    // the public entry turns the filter on only for corpus-scale shingle
+    // tables, so drive both settings directly on the same checkpoint
+    val sh = Dedup.shingles(docs, "doc_id", "text", 3).localCheckpoint()
+    def run(lenFilter: Boolean) = Dedup.minhashLshPairsOn(sh, "doc_id",
+        numHashes = 16, bands = 8, threshold = 0.3, lenFilter = lenFilter)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val off = run(lenFilter = false)
+    assert(off.exists(p => p._1 == 0L && p._2 == 4L), s"LSH missed the (0,4) duplicate: $off")
+    assert(run(lenFilter = true) == off)
+  }
+
   test("SimHash: identical docs at Hamming 0; related docs close") {
     val pairsDf = Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 8)
     val pairs = pairsDf

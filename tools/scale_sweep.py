@@ -105,13 +105,14 @@ def cpu_jiffies():
     see: same-code load-gated batches differed 1.5-2.7x while loadavg
     and cpu_mhz were flat. Recording the per-batch steal SHARE makes a
     stolen batch self-declaring, so a judge can discard it instead of
-    re-adjudicating the whole sweep."""
+    re-adjudicating the whole sweep. Busy excludes steal: stolen time
+    is time the guest did not run."""
     try:
         with open("/proc/stat") as f:
             parts = f.readline().split()
         vals = [int(x) for x in parts[1:11]]
         steal = vals[7] if len(vals) > 7 else 0
-        return sum(vals) - vals[3] - vals[4], steal, sum(vals)
+        return sum(vals) - vals[3] - vals[4] - steal, steal, sum(vals)
     except Exception:
         return 0, 0, 0
 
