@@ -104,13 +104,6 @@ object Queries {
       .withColumn("row_id", (col("__rk__") + 1).cast(LongType)).drop("__rk__")
   }
 
-  private def withRowId(df: DataFrame): DataFrame = {
-    val out = withRowIdUnpersisted(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    out
-  }
-
   /** The row-id assignment is a global sort; cache it per (session, dir)
     * so the three equity queries share one materialization — and, by
     * default, persist it to disk as a BUCKETED parquet table keyed by a
@@ -121,22 +114,16 @@ object Queries {
     * cache sweep) re-reads a 9-column bucketed scan instead of re-paying
     * the global rank. The fingerprint (source size + mtime) is part of
     * the table path, so a driver-side fixture regeneration can never
-    * serve a stale id map — it simply misses and rebuilds.
-    * `SPARK_GRAFT_ROWID_INGEST=0` restores the in-memory-only path
-    * (the A/B lever; see SURVEY §8 for the measured numbers). */
+    * serve a stale id map — it simply misses and rebuilds (SURVEY §8
+    * has the measured numbers against the in-memory-only sort). */
   private val rowIdCache =
     scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
   private def liWithRowId(s: SparkSession, d: String): DataFrame =
     rowIdCache.getOrElseUpdate((System.identityHashCode(s), d), {
-      if (sys.env.get("SPARK_GRAFT_ROWID_INGEST").contains("0"))
-        withRowId(t(s, d, "lineitem"))
-      else {
-        val frame = rowIdIngestTable(s, d)
-        val out = frame.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        out
-      }
+      val out = rowIdIngestTable(s, d).persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      out.count()
+      out
     })
 
   /** Read (building on first use per data vintage) the row-id-bearing

@@ -222,11 +222,6 @@ object Gram {
       wCol: Option[String] = None): GramResult =
     computeGrouped(df, yCol, xCols, wCol, lit(0), 1, 0, 0L)(0)(0)
 
-  /** One-lane variant with bootstrap reps: result(r) for r in 0..reps. */
-  def computeReps(df: DataFrame, yCol: String, xCols: Seq[String],
-      wCol: Option[String], reps: Int, seed: Long): Array[GramResult] =
-    computeGrouped(df, yCol, xCols, wCol, lit(0), 1, reps, seed)(0)
-
   /** Gram pass producing `nLanes * (reps + 1)` systems in ONE scan:
     * `laneOf` maps each row to a lane index (e.g. group A=0 / B=1; rows
     * mapping outside [0, nLanes) are skipped). Within each lane, rep 0

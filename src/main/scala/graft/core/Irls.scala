@@ -1,172 +1,45 @@
 package graft.core
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Fixed-plan design cache for iteratively reweighted least squares.
   *
-  * The per-iteration DataFrame route (build `z`/`w` columns with the
-  * current beta as literals, run [[Gram.compute]]) re-enters Catalyst
-  * every step: beta literals make every iteration's plan NEW, so each
-  * scan pays analysis + whole-stage-codegen compilation (~100-300 ms of
-  * driver fixed cost) before touching a row. A converging fit is 10-30
-  * iterations — that fixed cost dominates small-scale fits and is pure
-  * waste at any scale. Here the (y, w, x) projection is evaluated ONCE
-  * through Catalyst (so pruning/pushdown still apply), converted to
-  * primitive rows, and persisted; each iteration is then a plain
-  * `treeAggregate` closure over the cached RDD with ZERO per-iteration
-  * planning — the same structure Spark MLlib's own iterative optimizers
-  * use (e.g. mllib LogisticRegression's treeAggregate loops).
+  * The (lane, y, base weights, x) projection is evaluated ONCE through
+  * Catalyst (so pruning/pushdown still apply), converted to primitive
+  * rows and persisted; each iteration is then a plain `treeAggregate`
+  * closure over the cached RDD with no per-iteration planning — beta
+  * literals would otherwise make every iteration's plan new.
   *
-  * Bit-exactness: row order within partitions, partition count,
-  * `treeAggregate` depth, and the accumulation order inside
-  * [[GramBuffer]] all match the DataFrame route exactly, so fits are
-  * bitwise identical to the per-iteration plans they replace (the
-  * working-response arithmetic must be written in the same association
-  * order as the Column expressions it mirrors — see the estimators).
-  */
+  * Invariant: every pass accumulates into a [[GramBuffer]] in the same
+  * shape as the Gram scan it stands for — [[gram]] as
+  * [[Gram.compute]] (`add`), [[gramMulti]] as [[Gram.computeMulti]]
+  * (`addOne` + per-row `bumpLane`) — over the same partitions, row order
+  * and `treeAggregate` depth. The estimators write their working-response
+  * arithmetic in the association order of the Column expressions that
+  * scan would evaluate, so a fit equals the per-iteration Gram route.
+  *
+  * Each row carries a lane index (`laneOf`, e.g. group A=0 / B=1) and
+  * one base weight per entry of `wCols`; rows whose lane is null or
+  * outside [0, nLanes) are dropped at build time, exactly the rows
+  * [[Gram.computeMulti]] skips. */
 final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
-    wCol: Option[String]) {
-
-  val k: Int = xCols.size
-
-  /** ONE flat row-major chunk per partition, stride 2 + k per row
-    * ([y, wBase, x_0 .. x_{k-1}]): exact 8 B/value with no per-row
-    * object headers or pointer chasing — a fraction of the footprint
-    * (and GC pressure) of one small array per row, and the iteration
-    * loops run over contiguous memory. */
-  private val rows: RDD[Array[Double]] = {
-    val w = wCol.map(col(_).cast("double")).getOrElse(lit(1.0))
-    val proj = df.select(
-      (col(yCol).cast("double") +: w +:
-        xCols.map(c => col(c).cast("double"))): _*)
-    val kk = k
-    proj.queryExecution.toRdd.mapPartitions { it =>
-      val ab = scala.collection.mutable.ArrayBuilder.make[Double]
-      while (it.hasNext) {
-        val r = it.next()
-        if (r.anyNull)
-          throw InvalidArgument(
-            "IRLS design read a null model value; drop null rows first")
-        ab += r.getDouble(0)
-        ab += r.getDouble(1)
-        var i = 0
-        while (i < kk) { ab += r.getDouble(2 + i); i += 1 }
-      }
-      Iterator.single(ab.result())
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  import IrlsDesign.Buf
-
-  /** ONE working-response Gram system at `beta`: for each row,
-    * `working(y, wBase, xb, out)` writes out(0) = z (response) and
-    * out(1) = w (weight); the design enters the normal equations
-    * unchanged. Accumulates via [[GramBuffer.add]] — the exact shape of
-    * the single-system [[Gram.compute]] pass. */
-  def gram(beta: Array[Double])(
-      working: (Double, Double, Double, Array[Double]) => Unit): GramResult = {
-    val kk = k
-    val stride = 2 + kk
-    val res = Jobs.labeled(df.sparkSession, "irls: iteration pass") {
-      rows.treeAggregate(new Buf(kk, 1, 1))(
-      seqOp = (buf, chunk) => {
-        var off = 0
-        while (off < chunk.length) {
-          var xb = 0.0
-          var i = 0
-          while (i < kk) { xb += chunk(off + 2 + i) * beta(i); i += 1 }
-          working(chunk(off), chunk(off + 1), xb, buf.zw)
-          System.arraycopy(chunk, off + 2, buf.gb.xRow, 0, kk)
-          buf.gb.add(0, buf.zw(0), buf.zw(1), buf.gb.xRow, Gram.oneRep)
-          off += stride
-        }
-        buf
-      },
-      combOp = (x, y) => x.merge(y),
-      depth = 2)
-    }
-    res.gb.result(0, 0)
-  }
-
-  /** Multi-system variant (one system per beta, e.g. one per tau): each
-    * row contributes to every system via `working(y, wBase, xb_s, s,
-    * out)`; systems with out(1) == 0 skip the row. Accumulates via
-    * [[GramBuffer.addOne]] — the exact shape of [[Gram.computeMulti]].
-    * Returns one [[GramResult]] per system. */
-  def gramMulti(betas: Array[Array[Double]])(
-      working: (Double, Double, Double, Int, Array[Double]) => Unit)
-      : Array[GramResult] = {
-    val kk = k
-    val stride = 2 + kk
-    val nSys = betas.length
-    val res = rows.treeAggregate(new Buf(kk, 1, nSys))(
-      seqOp = (buf, chunk) => {
-        var off = 0
-        while (off < chunk.length) {
-          System.arraycopy(chunk, off + 2, buf.gb.xRow, 0, kk)
-          var s = 0
-          while (s < nSys) {
-            val b = betas(s)
-            var xb = 0.0
-            var i = 0
-            while (i < kk) { xb += chunk(off + 2 + i) * b(i); i += 1 }
-            working(chunk(off), chunk(off + 1), xb, s, buf.zw)
-            if (buf.zw(1) != 0.0)
-              buf.gb.addOne(0, s, buf.zw(0), buf.zw(1), buf.gb.xRow)
-            s += 1
-          }
-          buf.gb.bumpLane(0)
-          off += stride
-        }
-        buf
-      },
-      combOp = (x, y) => x.merge(y),
-      depth = 2)
-    Array.tabulate(nSys)(s => res.gb.result(0, s))
-  }
-
-  def unpersist(): Unit = { rows.unpersist(blocking = false); () }
-}
-
-object IrlsDesign {
-  /** Aggregation buffer: the Gram systems plus per-row scratch (safe —
-    * treeAggregate applies seqOp serially per partition buffer). A
-    * top-level class so closures never capture the design (and its
-    * DataFrame) itself. */
-  private[core] final class Buf(kk: Int, lanes: Int, nSys: Int)
-      extends Serializable {
-    val gb = new GramBuffer(kk, lanes, nSys)
-    val zw = new Array[Double](2)
-    def merge(o: Buf): Buf = { gb.merge(o.gb); this }
-  }
-}
-
-/** Lane-aware, multi-base-weight variant of [[IrlsDesign]] for batched
-  * grouped fits (e.g. [[graft.estimators.Probit.fitManyGrouped]]'s
-  * bootstrap-replicate probits): each row carries a lane index and one
-  * base weight PER SYSTEM (replicate), and every iteration advances all
-  * (lane, system) fits in one closure pass. The former DataFrame route
-  * built one `z`/`w` Column pair per system per iteration — with
-  * hundreds of bootstrap replicates that is a giant NEW plan (and one
-  * whole-stage-codegen compile) every iteration. Row layout per chunk:
-  * [lane, y, w_0 .. w_{nW-1}, x_0 .. x_{k-1}]; rows whose lane is null
-  * or outside [0, nLanes) are dropped at build time, exactly the rows
-  * [[Gram.computeMulti]] skipped. */
-final class IrlsDesignLanes(df: DataFrame, yCol: String,
-    xCols: Seq[String], wCols: Seq[String], laneOf: org.apache.spark.sql.Column,
-    nLanes: Int) {
+    wCols: Seq[Column], laneOf: Column = lit(0), nLanes: Int = 1) {
 
   val k: Int = xCols.size
   private val nW = wCols.size
   private val strideV = 2 + nW + k
 
+  /** ONE flat row-major chunk per partition, row layout
+    * [lane, y, w_0 .. w_{nW-1}, x_0 .. x_{k-1}]: exact 8 B/value with no
+    * per-row object headers, and the iteration loops run over
+    * contiguous memory. */
   private val rows: RDD[Array[Double]] = {
     val proj0 = df.select(
       (laneOf.cast("int").as("__lane__") +: col(yCol).cast("double") +:
-        (wCols.map(c => col(c).cast("double")) ++
+        (wCols.map(_.cast("double")) ++
           xCols.map(c => col(c).cast("double")))): _*)
     // same fixed fan-out guard as Gram.computeMulti, decided ONCE at
     // build: a replicate-heavy pass does ~nSys * stride flops per row,
@@ -196,12 +69,47 @@ final class IrlsDesignLanes(df: DataFrame, yCol: String,
     }.persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** One pass advancing `nSys` active systems across all lanes:
-    * `betas(s)(lane)` is system s's current beta for that lane,
-    * `wIdx(s)` its base-weight slot, `working(y, wBase, xb, s, out)`
-    * its working response. Returns [lane][system]. Accumulates via
-    * [[GramBuffer.addOne]] + per-row `bumpLane`, the exact shape of
-    * [[Gram.computeMulti]]. */
+  import IrlsDesign.Buf
+
+  /** ONE working-response Gram system at `beta` over every row (lanes
+    * ignored), with base-weight slot 0: `working(y, wBase, xb, out)`
+    * writes out(0) = z (response) and out(1) = w (weight); the design
+    * enters the normal equations unchanged. Accumulates via
+    * [[GramBuffer.add]] — the exact shape of the single-system
+    * [[Gram.compute]] pass. */
+  def gram(beta: Array[Double])(
+      working: (Double, Double, Double, Array[Double]) => Unit): GramResult = {
+    val kk = k
+    val xOff = 2 + nW
+    val stride = strideV
+    val res = Jobs.labeled(df.sparkSession, "irls: iteration pass") {
+      rows.treeAggregate(new Buf(kk, 1, 1))(
+      seqOp = (buf, chunk) => {
+        var off = 0
+        while (off < chunk.length) {
+          var xb = 0.0
+          var i = 0
+          while (i < kk) { xb += chunk(off + xOff + i) * beta(i); i += 1 }
+          working(chunk(off + 1), chunk(off + 2), xb, buf.zw)
+          System.arraycopy(chunk, off + xOff, buf.gb.xRow, 0, kk)
+          buf.gb.add(0, buf.zw(0), buf.zw(1), buf.gb.xRow, Gram.oneRep)
+          off += stride
+        }
+        buf
+      },
+      combOp = (x, y) => x.merge(y),
+      depth = 2)
+    }
+    res.gb.result(0, 0)
+  }
+
+  /** One pass advancing `nSys` systems across all lanes (e.g. one per
+    * tau, or one per bootstrap replicate): `betas(s)(lane)` is system
+    * s's current beta for that lane, `wIdx(s)` its base-weight slot,
+    * `working(y, wBase, xb, s, out)` its working response; systems with
+    * out(1) == 0 skip the row. Accumulates via [[GramBuffer.addOne]] +
+    * per-row `bumpLane`, the exact shape of [[Gram.computeMulti]].
+    * Returns [lane][system]. */
   def gramMulti(betas: Array[Array[Array[Double]]], wIdx: Array[Int])(
       working: (Double, Double, Double, Int, Array[Double]) => Unit)
       : Array[Array[GramResult]] = {
@@ -209,7 +117,7 @@ final class IrlsDesignLanes(df: DataFrame, yCol: String,
     val nw = nW
     val stride = strideV
     val nSys = betas.length
-    val res = rows.treeAggregate(new IrlsDesign.Buf(kk, nLanes, nSys))(
+    val res = rows.treeAggregate(new Buf(kk, nLanes, nSys))(
       seqOp = (buf, chunk) => {
         var off = 0
         while (off < chunk.length) {
@@ -239,4 +147,17 @@ final class IrlsDesignLanes(df: DataFrame, yCol: String,
   }
 
   def unpersist(): Unit = { rows.unpersist(blocking = false); () }
+}
+
+object IrlsDesign {
+  /** Aggregation buffer: the Gram systems plus per-row scratch (safe —
+    * treeAggregate applies seqOp serially per partition buffer). A
+    * top-level class so closures never capture the design (and its
+    * DataFrame) itself. */
+  private[core] final class Buf(kk: Int, lanes: Int, nSys: Int)
+      extends Serializable {
+    val gb = new GramBuffer(kk, lanes, nSys)
+    val zw = new Array[Double](2)
+    def merge(o: Buf): Buf = { gb.merge(o.gb); this }
+  }
 }

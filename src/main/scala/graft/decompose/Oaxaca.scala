@@ -2,7 +2,7 @@ package graft.decompose
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.core._
-import graft.estimators.{Heckman, Ols, OlsFit}
+import graft.estimators.{Ols, OlsFit, Probit}
 import graft.prep.Prep
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -129,10 +129,7 @@ final case class OaxacaConfig(
     seed: Long = 42L,
     selectionOutcome: Option[String] = None,
     selectionPredictors: Seq[String] = Nil,
-    bootstrapMode: BootstrapMode = BootstrapMode.Poisson,
-    /** Heckman bootstrap: advance ALL replicate probit fits per data scan
-      * (multi-system Gram) instead of one IRLS loop per replicate. */
-    heckmanBatched: Boolean = true)
+    bootstrapMode: BootstrapMode = BootstrapMode.Poisson)
 
 /** Distributed Oaxaca–Blinder mean decomposition (SURVEY §2.4 D1–D10).
   *
@@ -270,104 +267,6 @@ object Oaxaca {
       groupALevel = levelA, groupBLevel = levelB,
       names = names, xaMean = point.xaMean, xbMean = point.xbMean,
       betaStar = point.betaStar, point = point)
-  }
-
-  /** Heckman-selection decomposition path (SURVEY §2.3 E6, §2.4 D7):
-    * per-group two-step fits (probit + IMR-augmented OLS), names gain a
-    * final "IMR" entry, and detailed selection contributions
-    * theta_ref * delta_ref * gamma_ref_i * (Zbar_A_i - Zbar_B_i) are
-    * reported per selection predictor (`builder.rs:477-534`). Bootstrap
-    * replicates rerun the full two-step under per-rep Poisson weights. */
-  private def runHeckman(dummied: DataFrame, split: Prep.GroupSplit,
-      xCols: Seq[String], names0: Seq[String], cfg: OaxacaConfig): OaxacaResults = {
-    if (cfg.refCoefficients == RefCoefficients.Pooled)
-      throw InvalidArgument(
-        "Pooled reference coefficients are not supported with Heckman selection")
-    if (cfg.heckmanBatched)
-      return runHeckmanBatched(dummied, split, xCols, names0, cfg)
-    val selX = Prep.InterceptCol +: cfg.selectionPredictors
-    val names = names0 :+ "IMR"
-    val selNames = "intercept" +: cfg.selectionPredictors
-
-    // content hash over the model columns only (keeps column pruning)
-    val hashCol = xxhash64((col(cfg.outcome) +: col(cfg.group) +:
-      (xCols ++ selX).distinct.map(col)): _*)
-    val pois = graft.functions.PoissonDraw.apply _
-
-    def pass(rep: Int): SinglePass = {
-      val (dfA, dfB, wName) =
-        if (rep == 0) (split.dfA, split.dfB, cfg.weights)
-        else {
-          val w = pois(hashCol, lit(cfg.seed + rep.toLong)) *
-            cfg.weights.map(col(_).cast("double")).getOrElse(lit(1.0))
-          val withW = dummied.withColumn("__boot_w__", w)
-          val g = col(cfg.group).cast("string")
-          (withW.filter(g === lit(split.levelA)),
-            withW.filter(g === lit(split.levelB)), Some("__boot_w__"))
-        }
-      val fitA = Heckman.fit(dfA, cfg.outcome, xCols, cfg.selectionOutcome.get,
-        selX, wName)
-      val fitB = Heckman.fit(dfB, cfg.outcome, xCols, cfg.selectionOutcome.get,
-        selX, wName)
-
-      val betaA = fitA.beta
-      val betaB = fitB.beta
-      val xaMean = fitA.xMeans
-      val xbMean = fitB.xMeans
-      val betaStar: DenseVector[Double] = cfg.refCoefficients match {
-        case RefCoefficients.GroupA => betaA
-        case RefCoefficients.Cotton =>
-          // weight-share uses the FULL-group weight sums: the reference's
-          // w_a comes from prepare_data on the whole cleaned group frame
-          // (`builder.rs:592-599`), not the selection-filtered subset
-          val swA = fitA.swAll
-          val swB = fitB.swAll
-          val wa = swA / (swA + swB)
-          betaA * wa + betaB * (1.0 - wa)
-        case _ => betaB
-      }
-
-      val dx = xaMean - xbMean
-      val dbeta = betaA - betaB
-      val explained = dx dot betaStar
-      val total = (xaMean dot betaA) - (xbMean dot betaB)
-      val detExp = names.indices.map(i =>
-        names(i) -> (xaMean(i) - xbMean(i)) * betaStar(i))
-      val detUnexp = names.indices.map(i => names(i) ->
-        (xaMean(i) * (betaA(i) - betaStar(i)) + xbMean(i) * (betaStar(i) - betaB(i))))
-
-      // detailed selection (theta = IMR coefficient of the reference side)
-      val (thetaRef, deltaRef, gammaRef, _) = cfg.refCoefficients match {
-        case RefCoefficients.GroupA => (betaA(betaA.length - 1), fitA.imrDelta, fitA.gamma, fitA)
-        case _ => (betaB(betaB.length - 1), fitB.imrDelta, fitB.gamma, fitB)
-      }
-      val detSel =
-        if (gammaRef.length == selNames.size && fitA.zMeans.length == selNames.size)
-          selNames.indices.map { i =>
-            selNames(i) -> thetaRef * deltaRef * gammaRef(i) *
-              (fitA.zMeans(i) - fitB.zMeans(i))
-          }
-        else Nil
-
-      // total gap over all (cleaned) group rows, weighted
-      val w = wName.map(col(_).cast("double")).getOrElse(lit(1.0))
-      def gmean(d: DataFrame): Double = {
-        val r = d.agg(sum(col(cfg.outcome).cast("double") * w), sum(w)).head()
-        r.getDouble(0) / r.getDouble(1)
-      }
-      val totalGap = gmean(dfA) - gmean(dfB)
-
-      SinglePass(explained, total - explained,
-        dx dot betaB, xbMean dot dbeta, dx dot dbeta,
-        totalGap, detExp, detUnexp, detSel.toSeq, xaMean, xbMean,
-        betaA, betaB, betaStar)
-    }
-
-    val point = pass(0)
-    val repPasses = (1 to cfg.bootstrapReps).flatMap(r =>
-      Try(pass(r)).toOption)
-    assemble(point, repPasses, cfg.bootstrapReps,
-      split.dfA.count(), split.dfB.count(), split.levelA, split.levelB, names)
   }
 
   /** Exact per-group multinomial replicate weights: rows get a stable
@@ -514,18 +413,25 @@ object Oaxaca {
       betaB, betaStar)
   }
 
-  /** Batched Heckman path: ALL bootstrap replicates advance together —
+  /** Heckman-selection decomposition path (SURVEY §2.3 E6, §2.4 D7):
+    * per-group two-step fits (probit + IMR-augmented OLS), names gain a
+    * final "IMR" entry, and detailed selection contributions
+    * theta_ref * delta_ref * gamma_ref_i * (Zbar_A_i - Zbar_B_i) are
+    * reported per selection predictor (`builder.rs:477-534`).
+    *
+    * ALL bootstrap replicates (per-rep Poisson weights) advance together:
     * the selection probits via one multi-system Gram scan per scoring
     * iteration, the IMR-augmented OLS fits via ONE scan, and the
-    * selection-side aggregates via two more scans. For B replicates this
-    * is ~(scoring iterations + 3) data passes instead of
-    * O(B * iterations). Replicate slots that fail (singular fit) are
-    * dropped, mirroring the reference's drop-with-warning semantics. */
-  private def runHeckmanBatched(dummied: DataFrame, split: Prep.GroupSplit,
+    * selection-side aggregates via one more. For B replicates this is
+    * ~(scoring iterations + 3) data passes instead of O(B * iterations).
+    * Replicate slots that fail (singular fit) are dropped, mirroring the
+    * reference's drop-with-warning semantics. */
+  private def runHeckman(dummied: DataFrame, split: Prep.GroupSplit,
       xCols: Seq[String], names0: Seq[String],
       cfg: OaxacaConfig): OaxacaResults = {
-    import graft.estimators.Probit
-    import org.apache.spark.storage.StorageLevel
+    if (cfg.refCoefficients == RefCoefficients.Pooled)
+      throw InvalidArgument(
+        "Pooled reference coefficients are not supported with Heckman selection")
     val spark = dummied.sparkSession
     val selX = Prep.InterceptCol +: cfg.selectionPredictors
     val names = names0 :+ "IMR"
@@ -538,11 +444,10 @@ object Oaxaca {
       (xCols ++ selX).distinct.map(col)): _*)
     val pois = graft.functions.PoissonDraw.apply _
 
-    // persist a NARROW projection (model columns only, not the full
-    // source width): every byte of the cache write is paid per row, and
-    // the full frame can carry wide payload columns (e.g. lineitem's
-    // comment string) that nothing downstream reads — on the sf0.1
-    // bench the unprojected persist was most of the first probit pass
+    // a NARROW projection (model columns only, not the full source
+    // width): the full frame can carry wide payload columns (e.g.
+    // lineitem's comment string) that nothing downstream reads, and each
+    // of the scans below would pay for them per row
     val modelCols = ((cfg.outcome +: cfg.group +: selOut +:
       cfg.weights.toSeq) ++ xCols ++ selX).distinct
     var withW = dummied.select(modelCols.map(col): _*)
@@ -551,133 +456,127 @@ object Oaxaca {
       withW = withW.withColumn(s"__bw_$r",
         pois(hashCol, lit(cfg.seed + r.toLong)) * baseW)
     }
-    // NOT persisted: the probit iterations read IrlsDesignLanes' own
+    // NOT persisted: the probit iterations read IrlsDesign's own
     // compact persisted RDD, so this frame is scanned only thrice (design
     // build, selected-rows Gram, stats pass) — and the draws are
     // deterministic hash functions of the row (PoissonDraw over hashCol),
     // so recomputation is exact. A MEMORY_AND_DISK cache write of the
     // projection costs more than two extra narrow columnar scans.
-    val cached = withW
-    try {
-      val wCols = (0 to nReps).map(r => s"__bw_$r")
-      val gammas = Probit.fitManyGrouped(cached, selOut, selX, wCols, lane, 2)
+    val wCols = (0 to nReps).map(r => s"__bw_$r")
+    val gammas = Probit.fitManyGrouped(withW, selOut, selX, wCols, lane, 2)
 
-      var aug = cached
-      (0 to nReps).foreach { r =>
-        val zg = (0 until 2).foldLeft(lit(0.0)) { (acc, l) =>
-          when(lane === l, Ols.predictionCol(selX, gammas(l)(r)._1)).otherwise(acc)
-        }
-        val phi = NormalDist.pdfCol(zg)
-        val cdf = NormalDist.cdfCol(spark, zg)
-        aug = aug.withColumn(s"__zg_$r", zg)
-          .withColumn(s"__imr_$r", when(cdf < 1e-10, 0.0).otherwise(phi / cdf))
+    var aug = withW
+    (0 to nReps).foreach { r =>
+      val zg = (0 until 2).foldLeft(lit(0.0)) { (acc, l) =>
+        when(lane === l, Ols.predictionCol(selX, gammas(l)(r)._1)).otherwise(acc)
       }
-      val selRows = aug.filter(col(selOut).cast("double") === 1.0)
-
-      val systems = (0 to nReps).map(r =>
-        Gram.MultiSystem(cfg.outcome, s"__bw_$r", Some(s"__imr_$r")))
-
-      // selection delta (selected rows only, via when-guards: sum()
-      // skips the null branch, so each ds_r/dw_r sees exactly the rows
-      // the old selected-rows-only aggregation saw, in the same scan
-      // order) + selection-side means + outcome means + counts per
-      // (lane, rep) — ONE grouped pass over the augmented frame instead
-      // of the former delta pass + z pass
-      val selP = col(selOut).cast("double") === 1.0
-      val statAggs = (0 to nReps).flatMap(r =>
-        Seq(
-          sum(when(selP, col(s"__bw_$r") * -col(s"__imr_$r") *
-            (col(s"__imr_$r") + col(s"__zg_$r")))).as(s"ds_$r"),
-          sum(when(selP, col(s"__bw_$r"))).as(s"dw_$r")) ++
-        selX.zipWithIndex.map { case (c, i) =>
-          sum(col(c).cast("double") * col(s"__bw_$r")).as(s"zs_${r}_$i") } ++
-          Seq(sum(col(s"__bw_$r")).as(s"zw_$r"),
-            sum(col(cfg.outcome).cast("double") * col(s"__bw_$r")).as(s"zy_$r"))) ++
-        Seq(count(lit(1)).as("__zn__"))
-      // the selected-rows Gram and the stats pass both depend only on
-      // the probit fits, not on each other — overlap them (guide §2.6);
-      // each keeps its own scan, partitioning and accumulation order,
-      // so every value is bit-identical to the sequential run
-      val (grams, statRows) = graft.core.Jobs.par2(
-        Gram.computeMulti(selRows, xCols, systems, lane, 2),
-        Jobs.labeled(spark, "heckman: selection stats pass") {
-          aug.filter(lane >= 0)
-            .groupBy(lane.as("__lane__"))
-            .agg(statAggs.head, statAggs.tail: _*)
-            .collect().map(r => r.getInt(0) -> r).toMap
-        })
-      val deltaRows = statRows
-      val zRows = statRows
-
-      def passFor(r: Int): SinglePass = {
-        val fitA = Ols.fromGram(grams(0)(r), names)
-        val fitB = Ols.fromGram(grams(1)(r), names)
-        val betaA = fitA.beta
-        val betaB = fitB.beta
-        val xaMean = grams(0)(r).xMeans
-        val xbMean = grams(1)(r).xMeans
-        val betaStar: DenseVector[Double] = cfg.refCoefficients match {
-          case RefCoefficients.GroupA => betaA
-          case RefCoefficients.Cotton =>
-            // per-replicate FULL-group weight sums (zw_r aggregates all
-            // rows of the lane under the replicate's bootstrap weight) —
-            // matches the unbatched path's fit.swAll and the reference's
-            // full-group w.sum() (`builder.rs:592-599`)
-            val swA = zRows(0).getAs[Double](s"zw_$r")
-            val swB = zRows(1).getAs[Double](s"zw_$r")
-            val wa = swA / (swA + swB)
-            betaA * wa + betaB * (1.0 - wa)
-          case _ => betaB
-        }
-        val dx = xaMean - xbMean
-        val dbeta = betaA - betaB
-        val explained = dx dot betaStar
-        val total = (xaMean dot betaA) - (xbMean dot betaB)
-        val detExp = names.indices.map(i =>
-          names(i) -> (xaMean(i) - xbMean(i)) * betaStar(i))
-        val detUnexp = names.indices.map(i => names(i) ->
-          (xaMean(i) * (betaA(i) - betaStar(i)) +
-            xbMean(i) * (betaStar(i) - betaB(i))))
-
-        def zMeans(l: Int): DenseVector[Double] = {
-          val row = zRows(l)
-          val sw = row.getAs[Double](s"zw_$r")
-          DenseVector.tabulate(selX.size)(i =>
-            row.getAs[Double](s"zs_${r}_$i") / sw)
-        }
-        def delta(l: Int): Double = {
-          val row = deltaRows(l)
-          row.getAs[Double](s"ds_$r") / row.getAs[Double](s"dw_$r")
-        }
-        val (thetaRef, deltaRef, gammaRef) = cfg.refCoefficients match {
-          case RefCoefficients.GroupA =>
-            (betaA(betaA.length - 1), delta(0), gammas(0)(r)._1)
-          case _ => (betaB(betaB.length - 1), delta(1), gammas(1)(r)._1)
-        }
-        val zA = zMeans(0)
-        val zB = zMeans(1)
-        val detSel =
-          if (gammaRef.length == selNames.size && zA.length == selNames.size)
-            selNames.indices.map(i =>
-              selNames(i) -> thetaRef * deltaRef * gammaRef(i) * (zA(i) - zB(i)))
-          else Nil
-
-        def gmean(l: Int): Double =
-          zRows(l).getAs[Double](s"zy_$r") / zRows(l).getAs[Double](s"zw_$r")
-        val totalGap = gmean(0) - gmean(1)
-
-        SinglePass(explained, total - explained,
-          dx dot betaB, xbMean dot dbeta, dx dot dbeta,
-          totalGap, detExp, detUnexp, detSel.toSeq, xaMean, xbMean,
-          betaA, betaB, betaStar)
-      }
-
-      val point = passFor(0)
-      val repPasses = (1 to nReps).flatMap(r => Try(passFor(r)).toOption)
-      assemble(point, repPasses, nReps,
-        zRows(0).getAs[Long]("__zn__"), zRows(1).getAs[Long]("__zn__"),
-        split.levelA, split.levelB, names)
+      val phi = NormalDist.pdfCol(zg)
+      val cdf = NormalDist.cdfCol(spark, zg)
+      aug = aug.withColumn(s"__zg_$r", zg)
+        .withColumn(s"__imr_$r", when(cdf < 1e-10, 0.0).otherwise(phi / cdf))
     }
+    val selRows = aug.filter(col(selOut).cast("double") === 1.0)
+
+    val systems = (0 to nReps).map(r =>
+      Gram.MultiSystem(cfg.outcome, s"__bw_$r", Some(s"__imr_$r")))
+
+    // selection delta (selected rows only, via when-guards: sum()
+    // skips the null branch, so each ds_r/dw_r sees exactly the rows a
+    // selected-rows-only aggregation would, in the same scan order) +
+    // selection-side means + outcome means + counts per (lane, rep) —
+    // ONE grouped pass over the augmented frame
+    val selP = col(selOut).cast("double") === 1.0
+    val statAggs = (0 to nReps).flatMap(r =>
+      Seq(
+        sum(when(selP, col(s"__bw_$r") * -col(s"__imr_$r") *
+          (col(s"__imr_$r") + col(s"__zg_$r")))).as(s"ds_$r"),
+        sum(when(selP, col(s"__bw_$r"))).as(s"dw_$r")) ++
+      selX.zipWithIndex.map { case (c, i) =>
+        sum(col(c).cast("double") * col(s"__bw_$r")).as(s"zs_${r}_$i") } ++
+        Seq(sum(col(s"__bw_$r")).as(s"zw_$r"),
+          sum(col(cfg.outcome).cast("double") * col(s"__bw_$r")).as(s"zy_$r"))) ++
+      Seq(count(lit(1)).as("__zn__"))
+    // the selected-rows Gram and the stats pass both depend only on
+    // the probit fits, not on each other — overlap them (guide §2.6);
+    // each keeps its own scan, partitioning and accumulation order,
+    // so every value is bit-identical to the sequential run
+    val (grams, stats) = graft.core.Jobs.par2(
+      Gram.computeMulti(selRows, xCols, systems, lane, 2),
+      Jobs.labeled(spark, "heckman: selection stats pass") {
+        aug.filter(lane >= 0)
+          .groupBy(lane.as("__lane__"))
+          .agg(statAggs.head, statAggs.tail: _*)
+          .collect().map(r => r.getInt(0) -> r).toMap
+      })
+
+    def passFor(r: Int): SinglePass = {
+      val fitA = Ols.fromGram(grams(0)(r), names)
+      val fitB = Ols.fromGram(grams(1)(r), names)
+      val betaA = fitA.beta
+      val betaB = fitB.beta
+      val xaMean = grams(0)(r).xMeans
+      val xbMean = grams(1)(r).xMeans
+      val betaStar: DenseVector[Double] = cfg.refCoefficients match {
+        case RefCoefficients.GroupA => betaA
+        case RefCoefficients.Cotton =>
+          // per-replicate FULL-group weight sums (zw_r aggregates all
+          // rows of the lane under the replicate's bootstrap weight) —
+          // matches Heckman.fit's swAll and the reference's full-group
+          // w.sum() (`builder.rs:592-599`)
+          val swA = stats(0).getAs[Double](s"zw_$r")
+          val swB = stats(1).getAs[Double](s"zw_$r")
+          val wa = swA / (swA + swB)
+          betaA * wa + betaB * (1.0 - wa)
+        case _ => betaB
+      }
+      val dx = xaMean - xbMean
+      val dbeta = betaA - betaB
+      val explained = dx dot betaStar
+      val total = (xaMean dot betaA) - (xbMean dot betaB)
+      val detExp = names.indices.map(i =>
+        names(i) -> (xaMean(i) - xbMean(i)) * betaStar(i))
+      val detUnexp = names.indices.map(i => names(i) ->
+        (xaMean(i) * (betaA(i) - betaStar(i)) +
+          xbMean(i) * (betaStar(i) - betaB(i))))
+
+      def zMeans(l: Int): DenseVector[Double] = {
+        val row = stats(l)
+        val sw = row.getAs[Double](s"zw_$r")
+        DenseVector.tabulate(selX.size)(i =>
+          row.getAs[Double](s"zs_${r}_$i") / sw)
+      }
+      def delta(l: Int): Double = {
+        val row = stats(l)
+        row.getAs[Double](s"ds_$r") / row.getAs[Double](s"dw_$r")
+      }
+      val (thetaRef, deltaRef, gammaRef) = cfg.refCoefficients match {
+        case RefCoefficients.GroupA =>
+          (betaA(betaA.length - 1), delta(0), gammas(0)(r)._1)
+        case _ => (betaB(betaB.length - 1), delta(1), gammas(1)(r)._1)
+      }
+      val zA = zMeans(0)
+      val zB = zMeans(1)
+      val detSel =
+        if (gammaRef.length == selNames.size && zA.length == selNames.size)
+          selNames.indices.map(i =>
+            selNames(i) -> thetaRef * deltaRef * gammaRef(i) * (zA(i) - zB(i)))
+        else Nil
+
+      def gmean(l: Int): Double =
+        stats(l).getAs[Double](s"zy_$r") / stats(l).getAs[Double](s"zw_$r")
+      val totalGap = gmean(0) - gmean(1)
+
+      SinglePass(explained, total - explained,
+        dx dot betaB, xbMean dot dbeta, dx dot dbeta,
+        totalGap, detExp, detUnexp, detSel.toSeq, xaMean, xbMean,
+        betaA, betaB, betaStar)
+    }
+
+    val point = passFor(0)
+    val repPasses = (1 to nReps).flatMap(r => Try(passFor(r)).toOption)
+    assemble(point, repPasses, nReps,
+      stats(0).getAs[Long]("__zn__"), stats(1).getAs[Long]("__zn__"),
+      split.levelA, split.levelB, names)
   }
 
   /** Pooled design [X | groupIndicator] Gram assembled from the two group

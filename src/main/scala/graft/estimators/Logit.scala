@@ -4,7 +4,6 @@ import breeze.linalg.{norm, DenseVector}
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Logistic regression via Newton/IRLS
   * (`oaxaca_blinder/src/math/logit.rs:31-118`).
@@ -39,14 +38,15 @@ object Logit {
     * Each iteration is one [[IrlsDesign.gram]] closure over the cached
     * primitive design — no per-iteration Catalyst planning (the beta
     * literals would make every iteration's plan new; see [[IrlsDesign]]).
-    * The scalar working-response arithmetic below mirrors the Column
-    * expressions it replaced in the same association order, so fits are
-    * bit-identical to the per-iteration DataFrame route. */
+    * The scalar working-response arithmetic below is written in the
+    * association order of the equivalent z/w Column expressions, so fits
+    * equal the per-iteration [[Gram.compute]] route bit for bit. */
   def fit(df: DataFrame, targetCol: String, xCols: Seq[String],
       maxIter: Int = 100, tol: Double = 1e-6,
       wCol: Option[String] = None): LogitFit = {
     val k = xCols.size
-    val design = new IrlsDesign(df, targetCol, xCols, wCol)
+    val design = new IrlsDesign(df, targetCol, xCols,
+      Seq(wCol.map(col).getOrElse(lit(1.0))))
     try {
       var beta = DenseVector.zeros[Double](k)
       var converged = false

@@ -2,9 +2,8 @@ package graft.estimators
 
 import breeze.linalg.{norm, DenseMatrix, DenseVector}
 import graft.core._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Probit via Fisher scoring (`oaxaca_blinder/src/math/probit.rs:25-172`):
   * score weights lambda = phi/Phi (y=1) or -phi/(1-Phi) (y=0) with Phi
@@ -28,6 +27,20 @@ object Probit {
 
   private val Ridge = 1e-9
 
+  /** Fisher-scoring working response at linear index `z`: out(0) =
+    * z + lambda/w0, out(1) = w0 * wBase. Written in the association order
+    * of the Column expressions it mirrors (pdf as exp((z*z)*-0.5), cdf via
+    * the same commons-math3 erf the codegen'd graft_erf calls). */
+  private def working(y: Double, wBase: Double, z: Double,
+      out: Array[Double]): Unit = {
+    val phi = NormalDist.pdfColOrder(z)
+    val bigPhi = math.min(math.max(NormalDist.cdf(z), 1e-10), 1.0 - 1e-10)
+    val lambda = if (y > 0.5) phi / bigPhi else -phi / (1.0 - bigPhi)
+    val w0 = (phi * phi) / (bigPhi * (1.0 - bigPhi))
+    out(0) = z + (if (w0 > 0.0) lambda / w0 else 0.0)
+    out(1) = w0 * wBase
+  }
+
   /** Batched probit: one fit per (lane, base-weight system), where each
     * Fisher-scoring iteration is ONE multi-system Gram scan — the
     * bootstrap-replicate fits advance together per data pass instead of
@@ -35,7 +48,7 @@ object Probit {
     * (beta, converged); a slot that hits a singular solve is frozen and
     * reported unconverged. */
   def fitManyGrouped(df: DataFrame, targetCol: String, xCols: Seq[String],
-      baseWCols: Seq[String], laneOf: org.apache.spark.sql.Column,
+      baseWCols: Seq[String], laneOf: Column,
       nLanes: Int, maxIter: Int = 100,
       tol: Double = 1e-6): Array[Array[(DenseVector[Double], Boolean)]] = {
     val k = xCols.size
@@ -43,11 +56,10 @@ object Probit {
     val betas = Array.fill(nLanes, nSys)(DenseVector.zeros[Double](k))
     val converged = Array.fill(nLanes, nSys)(false)
     val failed = Array.fill(nLanes, nSys)(false)
-    // fixed-plan iterations (see IrlsDesignLanes): the former route built
-    // one z/w Column pair PER SYSTEM per iteration — with hundreds of
-    // bootstrap replicates, a giant new plan + codegen compile every
-    // scan. The scalar probit working response matches Probit.fit's.
-    val design = new IrlsDesignLanes(df, targetCol, xCols, baseWCols,
+    // fixed-plan iterations (see IrlsDesign): one z/w Column pair PER
+    // SYSTEM per iteration would be, with hundreds of bootstrap
+    // replicates, a giant new plan + codegen compile every scan
+    val design = new IrlsDesign(df, targetCol, xCols, baseWCols.map(col),
       laneOf, nLanes)
     try {
       var iter = 0
@@ -60,15 +72,7 @@ object Probit {
         val activeBetas = active.map(s =>
           Array.tabulate(nLanes)(l => betas(l)(s).toArray)).toArray
         val grams = design.gramMulti(activeBetas, active.toArray) {
-          (y, wBase, z, _, out) =>
-            val phi = NormalDist.pdfColOrder(z)
-            val bigPhi =
-              math.min(math.max(NormalDist.cdf(z), 1e-10), 1.0 - 1e-10)
-            val lambda =
-              if (y > 0.5) phi / bigPhi else -phi / (1.0 - bigPhi)
-            val w0 = (phi * phi) / (bigPhi * (1.0 - bigPhi))
-            out(0) = z + (if (w0 > 0.0) lambda / w0 else 0.0)
-            out(1) = w0 * wBase
+          (y, wBase, z, _, out) => working(y, wBase, z, out)
         }
         allDone = true
         for (l <- 0 until nLanes; (s, si) <- active.zipWithIndex
@@ -97,12 +101,9 @@ object Probit {
       maxIter: Int = 100, tol: Double = 1e-6,
       wCol: Option[String] = None): ProbitFit = {
     val k = xCols.size
-    // fixed-plan iterations (see IrlsDesign): the scalar working-response
-    // arithmetic mirrors the former Column expressions in the same
-    // association order (pdf as exp((z*z)*-0.5), cdf via the same
-    // commons-math3 erf the codegen'd graft_erf calls), so fits are
-    // bit-identical to the per-iteration DataFrame route
-    val design = new IrlsDesign(df, targetCol, xCols, wCol)
+    // fixed-plan iterations (see IrlsDesign)
+    val design = new IrlsDesign(df, targetCol, xCols,
+      Seq(wCol.map(col).getOrElse(lit(1.0))))
     try {
       var beta = DenseVector.zeros[Double](k)
       var converged = false
@@ -110,16 +111,7 @@ object Probit {
       var lastGram: GramResult = null
       while (iters < maxIter && !converged) {
         iters += 1
-        val g = design.gram(beta.toArray) { (y, wBase, z, out) =>
-          val phi = NormalDist.pdfColOrder(z)
-          val bigPhi =
-            math.min(math.max(NormalDist.cdf(z), 1e-10), 1.0 - 1e-10)
-          val lambda =
-            if (y > 0.5) phi / bigPhi else -phi / (1.0 - bigPhi)
-          val w0 = (phi * phi) / (bigPhi * (1.0 - bigPhi))
-          out(0) = z + (if (w0 > 0.0) lambda / w0 else 0.0)
-          out(1) = w0 * wBase
-        }
+        val g = design.gram(beta.toArray)(working)
         lastGram = g
         // (X'WX + rI) b' = X'Wz + r b  (identical to the reference's
         // ridged Newton step, see scaladoc)

@@ -153,22 +153,24 @@ object QuantileReg {
       // fixed-plan iterations (see IrlsDesign): the per-tau reweighting
       // runs as a closure over the cached design instead of fresh
       // weight-column plans per iteration; w = c / max(|y - xb|, Eps)
-      // mirrors the former Column expression's association order
-      val design = new IrlsDesign(proj, yCol, xCols, None)
+      // keeps the association order of the equivalent Column expression
+      val design = new IrlsDesign(proj, yCol, xCols, Seq(lit(1.0)))
       try {
       var iter = 0
       while (iter < maxIter && done.contains(false)) {
         iter += 1
         val active = (0 until nT).filter(i => !done(i))
         val activeTaus = active.map(taus).toArray
+        // one lane, every tau on base-weight slot 0
         val grams = design.gramMulti(
-          active.map(i => betas(i).toArray).toArray) {
+          active.map(i => Array(betas(i).toArray)).toArray,
+          new Array[Int](active.size)) {
           (y, _, xb, s, out) =>
             val r = y - xb
             val c = if (r > 0.0) activeTaus(s) else 1.0 - activeTaus(s)
             out(0) = y
             out(1) = c / math.max(math.abs(r), Eps)
-        }
+        }(0)
         active.zipWithIndex.foreach { case (i, si) =>
           val g = grams(si)
           val b = betas(i)

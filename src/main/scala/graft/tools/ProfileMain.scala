@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run one harness query with a job-level timing listener.
   * Usage: runMain graft.tools.ProfileMain <queryName> <sfDir> [reps]
-  * Prints one line per Spark job (duration, first stage name) so the
-  * per-phase cost of a multi-pass query is visible without the UI. */
+  * Prints one line per Spark job (duration, driver gap before it or
+  * `overlap` when it started beside a running job, label and stage
+  * names) so the per-phase cost of a multi-pass query is visible
+  * without the UI. */
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -22,26 +24,35 @@ object ProfileMain {
     spark.sparkContext.setLogLevel("WARN")
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     @volatile var enabled = false
-    @volatile var lastEnd = 0L
+    // listener events arrive on one bus thread, in order
+    var running = 0
+    var lastEnd = 0L
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        // driver "think time": a job that starts while no job runs waited
+        // since the last job ended (planning / codegen / driver algebra)
+        // — the between-jobs gap that job durations alone never show. A
+        // job started beside a running one (Jobs.par2) has no gap.
+        val gap =
+          if (running > 0) "overlap   "
+          else f"gap ${if (lastEnd > 0) (j.time - lastEnd) / 1000.0 else 0.0}%6.3f"
+        running += 1
         if (enabled) {
-          // driver "think time" since the previous job ended: planning /
-          // codegen / driver algebra — the between-jobs gap that job
-          // durations alone never show
-          val gap = if (lastEnd > 0) (j.time - lastEnd) / 1000.0 else 0.0
           val label = Option(j.properties)
             .flatMap(p => Option(p.getProperty("spark.job.description")))
           val desc = label.map(_ + " | ").getOrElse("") +
             j.stageInfos.map(_.name).distinct.mkString(" | ")
-          starts(j.jobId) = (j.time, f"gap ${gap}%6.3f | " + desc)
+          starts(j.jobId) = (j.time, gap + " | " + desc)
         }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = {
+        running -= 1
+        lastEnd = j.time
         starts.remove(j.jobId).foreach { case (t0, desc) =>
-          lastEnd = j.time
           if (enabled) println(
             f"[job ${j.jobId}%3d] ${(j.time - t0) / 1000.0}%7.3f s  ${desc.take(240)}")
         }
+      }
     })
     val fn = graft.SparkEntry.queries(name)
     for (r <- 1 to reps) {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core._
-import graft.decompose.{Dfl, Oaxaca, OaxacaConfig, RifDecomposer}
+import graft.decompose.{Dfl, Oaxaca, OaxacaConfig, RefCoefficients, RifDecomposer}
 import graft.estimators.Ols
 import graft.prep.Prep
 
@@ -46,6 +46,17 @@ class ErrorSpec extends SparkSpec {
     assertThrows[InvalidGroupVariable] {
       Oaxaca.run(df, OaxacaConfig("y", "g", "Z", predictors = Seq("x"),
         bootstrapReps = 0))
+    }
+  }
+
+  test("Heckman selection with pooled reference coefficients raises InvalidArgument") {
+    val df = (1 to 20).map(i => (i.toDouble, if (i % 2 == 0) "A" else "B",
+      (i % 5).toDouble, (i % 3).toDouble, if (i % 4 == 0) 0.0 else 1.0))
+      .toDF("y", "g", "x", "z", "s")
+    assertThrows[InvalidArgument] {
+      Oaxaca.run(df, OaxacaConfig("y", "g", "B", predictors = Seq("x"),
+        refCoefficients = RefCoefficients.Pooled, bootstrapReps = 0,
+        selectionOutcome = Some("s"), selectionPredictors = Seq("z")))
     }
   }
 

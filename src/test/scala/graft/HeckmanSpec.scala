@@ -2,7 +2,10 @@ package graft
 
 import graft.decompose._
 import graft.estimators.{Heckman, Probit}
+import graft.functions.PoissonDraw
 import graft.prep.Prep
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Probit + Heckman selection: mirrors `math/probit.rs:174-244` and the
   * F5 DGP of `tests/heckman_test.rs:1-74`. */
@@ -67,6 +70,44 @@ class HeckmanSpec extends SparkSpec {
     assert(math.abs(explained + unexplained - total) < 1e-9)
   }
 
+  /** One replicate of the Heckman two-fold decomposition the long way:
+    * [[Heckman.fit]] per group on a frame prepared as `Oaxaca.run`
+    * prepares it, weighted by replicate `rep`'s Poisson draw (rep 0:
+    * unweighted), then the group-B-reference algebra. Returns (total gap,
+    * explained, unexplained, detailed selection). */
+  private def heckmanPass(df: DataFrame, cfg: OaxacaConfig, rep: Int)
+      : (Double, Double, Double, Seq[(String, Double)]) = {
+    val selOut = cfg.selectionOutcome.get
+    val modelCols = (cfg.outcome +: cfg.group +: cfg.predictors) ++
+      (selOut +: cfg.selectionPredictors)
+    val prepared = Prep.withIntercept(Prep.clean(df, modelCols.distinct))
+    val xCols = Prep.designCols(cfg.predictors, Nil)
+    val selX = Prep.InterceptCol +: cfg.selectionPredictors
+    val hash = xxhash64((col(cfg.outcome) +: col(cfg.group) +:
+      (xCols ++ selX).distinct.map(col)): _*)
+    val (frame, wName) =
+      if (rep == 0) (prepared, None)
+      else (prepared.withColumn("__boot_w__",
+        PoissonDraw(hash, lit(cfg.seed + rep.toLong))), Some("__boot_w__"))
+    val g = col(cfg.group).cast("string")
+    val dfA = frame.filter(g =!= lit(cfg.reference))
+    val dfB = frame.filter(g === lit(cfg.reference))
+    val fitA = Heckman.fit(dfA, cfg.outcome, xCols, selOut, selX, wName)
+    val fitB = Heckman.fit(dfB, cfg.outcome, xCols, selOut, selX, wName)
+    val explained = (fitA.xMeans - fitB.xMeans) dot fitB.beta
+    val total = (fitA.xMeans dot fitA.beta) - (fitB.xMeans dot fitB.beta)
+    val w = wName.map(col).getOrElse(lit(1.0))
+    def gmean(d: DataFrame): Double = {
+      val r = d.agg(sum(col(cfg.outcome) * w), sum(w)).head()
+      r.getDouble(0) / r.getDouble(1)
+    }
+    val theta = fitB.beta(fitB.beta.length - 1)
+    val sel = ("intercept" +: cfg.selectionPredictors).indices.map(i =>
+      ("intercept" +: cfg.selectionPredictors)(i) -> theta * fitB.imrDelta *
+        fitB.gamma(i) * (fitA.zMeans(i) - fitB.zMeans(i)))
+    (gmean(dfA) - gmean(dfB), explained, total - explained, sel)
+  }
+
   test("batched Heckman bootstrap equals the sequential path") {
     val rng = new scala.util.Random(23)
     val rows = (0 until 600).map { _ =>
@@ -82,18 +123,24 @@ class HeckmanSpec extends SparkSpec {
     val cfg = OaxacaConfig("outcome", "group", "B", predictors = Seq("x"),
       bootstrapReps = 4, seed = 9L,
       selectionOutcome = Some("selection"), selectionPredictors = Seq("z"))
-    val batched = Oaxaca.run(df, cfg.copy(heckmanBatched = true))
-    val seq = Oaxaca.run(df, cfg.copy(heckmanBatched = false))
+    val batched = Oaxaca.run(df, cfg)
+    val point = heckmanPass(df, cfg, 0)
+    val reps = (1 to cfg.bootstrapReps).flatMap(r =>
+      scala.util.Try(heckmanPass(df, cfg, r)).toOption)
     // same Poisson weights + same math -> same point estimates and SEs
     // (tolerances absorb IRLS stopping-path and summation-order noise)
-    assert(math.abs(batched.totalGap - seq.totalGap) < 1e-9)
-    batched.twoFold.zip(seq.twoFold).foreach { case (b, s) =>
-      assert(math.abs(b.estimate - s.estimate) < 1e-6, s"${b.name} estimate")
-      assert(math.abs(b.stdErr - s.stdErr) < 1e-4, s"${b.name} se b=${b.stdErr} s=${s.stdErr}")
+    assert(math.abs(batched.totalGap - point._1) < 1e-9)
+    val twoFold = Seq(("explained", point._2, reps.map(_._2)),
+      ("unexplained", point._3, reps.map(_._3)))
+    assert(batched.twoFold.map(_.name) == twoFold.map(_._1))
+    batched.twoFold.zip(twoFold).foreach { case (b, (name, est, repV)) =>
+      val se = Bootstrap.stats(repV)._1
+      assert(math.abs(b.estimate - est) < 1e-6, s"$name estimate")
+      assert(math.abs(b.stdErr - se) < 1e-4, s"$name se b=${b.stdErr} s=$se")
     }
-    assert(batched.detailedSelection.map(_.name) == seq.detailedSelection.map(_.name))
-    batched.detailedSelection.zip(seq.detailedSelection).foreach { case (b, s) =>
-      assert(math.abs(b.estimate - s.estimate) < 1e-6, s"sel ${b.name}")
+    assert(batched.detailedSelection.map(_.name) == point._4.map(_._1))
+    batched.detailedSelection.zip(point._4).foreach { case (b, (name, v)) =>
+      assert(math.abs(b.estimate - v) < 1e-6, s"sel $name")
     }
   }
 
