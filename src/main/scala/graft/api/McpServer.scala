@@ -56,7 +56,7 @@ object McpServer {
 
   /** Parse csv_content into a DataFrame of string columns plus the
     * 0-based row index (all numeric typing happens downstream in
-    * `Equity.prepare`'s strict casts, like the engine's prepare_data). */
+    * `Equity.prepareFrame`'s strict casts, like the engine's prepare_data). */
   def csvToDf(spark: SparkSession, csv: String): DataFrame = {
     val lines = csv.split("\r?\n").filter(_.nonEmpty)
     require(lines.length >= 2, "csv_content needs a header and data rows")

@@ -41,35 +41,13 @@ object Windows {
     if (boundaries.isEmpty) lit(0)
     else graft.functions.BucketIndex(v, boundaries)
 
-  /** Adds `outCol` = sum of `value` over all rows strictly before the
-    * current row in the global ordering (exclusive prefix sum).
-    *
-    * Tie-dense keys (e.g. a uniform adjustment amount, an outcome
-    * dominated by one value) collapse the boundary probe's distinct set,
-    * which would funnel ALL tied rows into one bucket = one window task
-    * at scale — exactly the failure this machinery exists to prevent.
-    * The point/range bucket split isolates each heavy tied value in its
-    * own (odd) bucket, and point buckets are then SUB-bucketed on
-    * quantile boundaries of the first tie-break: within a point bucket
-    * the key is constant, and the sub id is monotone in the tie-break,
-    * so ordering by (bucket, sub, key, ties) IS the global (key, ties)
-    * order and every prefix stays bit-identical — no tie run ever sorts
-    * in a single task. The tie probe is only paid when the key probe
-    * actually collapsed (and skipped when no tie-break is castable).
-    *
-    * @param keyCol    numeric primary ordering column
-    * @param ascending ordering direction of keyCol
-    * @param tieBreaks extra columns making the ordering total
-    */
   /** The bucketed front half of [[exclusivePrefixSum]] — split out so
     * specs can assert the effective (bucket, sub) split on tie-dense
     * keys, not just the plan shape. */
   private[graft] def prefixBucketed(df: DataFrame, keyCol: Column,
       ascending: Boolean, tieBreaks: Seq[Column], value: Column,
-      numBuckets: Int = 0,
       boundariesOverride: Option[Array[Double]] = None): DataFrame = {
-    val buckets = if (numBuckets > 0) numBuckets
-      else df.sparkSession.sessionState.conf.numShufflePartitions
+    val buckets = df.sparkSession.sessionState.conf.numShufflePartitions
     // monotone bucket id (negated key for descending order so bucket
     // order == global order)
     val signedKey = if (ascending) keyCol.cast("double")
@@ -123,14 +101,33 @@ object Windows {
       .withColumn("__val__", value)
   }
 
+  /** Adds `outCol` = sum of `value` over all rows strictly before the
+    * current row in the global ordering (exclusive prefix sum).
+    *
+    * Tie-dense keys (e.g. a uniform adjustment amount, an outcome
+    * dominated by one value) collapse the boundary probe's distinct set,
+    * which would funnel ALL tied rows into one bucket = one window task
+    * at scale — exactly the failure this machinery exists to prevent.
+    * The point/range bucket split isolates each heavy tied value in its
+    * own (odd) bucket, and point buckets are then SUB-bucketed on
+    * quantile boundaries of the first tie-break: within a point bucket
+    * the key is constant, and the sub id is monotone in the tie-break,
+    * so ordering by (bucket, sub, key, ties) IS the global (key, ties)
+    * order and every prefix stays bit-identical — no tie run ever sorts
+    * in a single task. The tie probe is only paid when the key probe
+    * actually collapsed (and skipped when no tie-break is castable).
+    *
+    * @param keyCol    numeric primary ordering column
+    * @param ascending ordering direction of keyCol
+    * @param tieBreaks extra columns making the ordering total
+    */
   def exclusivePrefixSum(df: DataFrame, keyCol: Column, ascending: Boolean,
       tieBreaks: Seq[Column], value: Column, outCol: String,
-      numBuckets: Int = 0,
       boundariesOverride: Option[Array[Double]] = None): DataFrame = {
     val ordering = (if (ascending) keyCol.asc else keyCol.desc) +:
       tieBreaks.map(_.asc)
     val bucketed = prefixBucketed(df, keyCol, ascending, tieBreaks, value,
-      numBuckets, boundariesOverride)
+      boundariesOverride)
     val local = Window.partitionBy(col("__bucket__"), col("__sub__"))
       .orderBy(ordering: _*)
       .rowsBetween(Window.unboundedPreceding, -1)

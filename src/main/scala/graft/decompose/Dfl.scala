@@ -36,8 +36,7 @@ object Dfl {
     val stringPreds = predictors.filter(p =>
       df0.schema(p).dataType == org.apache.spark.sql.types.StringType)
     val numericPreds = predictors.filterNot(stringPreds.contains)
-    val (dummied, infos) = Prep.oneHot(df0, stringPreds)
-    val xCols = Prep.InterceptCol +: (numericPreds ++ infos.flatMap(_.dummyCols))
+    val (designed, xCols, _) = Prep.design(df0, numericPreds, stringPreds)
     // ONE narrow projection (outcome, group, design), NOT persisted
     // (r15): the four consumers (silverman stats, grouped rank-pick,
     // IRLS design build — which persists its own compact RDD — and
@@ -47,8 +46,7 @@ object Dfl {
     // path and cost more than the three extra scans it saved, at bench
     // scale and at 100 TB alike (same bytes re-read either way, minus
     // the write).
-    val df = Prep.withIntercept(dummied)
-      .select((outcome +: group +: xCols).distinct.map(col): _*)
+    val df = designed.select((outcome +: group +: xCols).distinct.map(col): _*)
     val g = col(group).cast("string")
     val y = col(outcome).cast("double")
 

@@ -36,18 +36,7 @@ final case class MmConfig(
     simulations: Int = 200,
     bootstrapReps: Int = 20,
     seed: Long = 42L,
-    maxRowsPerGroup: Int = 2000000,
-    /** When true, a group LARGER than `maxRowsPerGroup` gets its
-      * point-pass per-tau quantile regressions fit DISTRIBUTED on the
-      * full group via [[graft.estimators.QuantileReg.fitMany]] (all
-      * taus batched per scan) instead of on the capped subsample —
-      * the point estimates then reflect every row. Simulation row
-      * draws (a Monte Carlo draw from the empirical x-distribution,
-      * for which the multi-million-row subsample is statistically
-      * equivalent) and bootstrap replicates stay on the capped sample.
-      * Default false: the sampled path is the fast default; below the
-      * cap the flag changes nothing. */
-    distributedFits: Boolean = false)
+    maxRowsPerGroup: Int = 2000000)
 
 final case class MmResults(
     effects: Map[String, Map[String, ComponentResult]], // key "q50" -> component -> stats
@@ -61,13 +50,11 @@ object MachadoMata {
     val modelCols = (cfg.outcome +: cfg.group +: cfg.predictors) ++ cfg.categorical
     val cleaned0 = df.select(modelCols.distinct.map(col): _*)
     val cleaned = Prep.clean(cleaned0, modelCols.distinct)
-    val (dummied0, infos) = Prep.oneHot(cleaned, cfg.categorical)
-    val dummied = Prep.withIntercept(dummied0)
-    val xCols = Prep.designCols(cfg.predictors, infos)
+    val (dummied, xCols, _) =
+      Prep.design(cleaned, cfg.predictors, cfg.categorical)
     val split = Prep.splitGroups(dummied, cfg.group, cfg.reference)
 
-    def collectGroup(g: DataFrame)
-        : (Array[Array[Double]], Array[Double], Boolean, DataFrame) = {
+    def collectGroup(g: DataFrame): (Array[Array[Double]], Array[Double]) = {
       val base = g.select((col(cfg.outcome).cast("double") +:
         xCols.map(c => col(c).cast("double"))): _*)
       val n = base.count()
@@ -84,54 +71,23 @@ object MachadoMata {
       val rows = capped.collect()
       val x = rows.map(r => Array.tabulate(xCols.size)(i => r.getDouble(i + 1)))
       val y = rows.map(_.getDouble(0))
-      (x, y, n > cfg.maxRowsPerGroup, base)
+      (x, y)
     }
-    val (xA, yA, cappedA, fullA) = collectGroup(split.dfA)
-    val (xB, yB, cappedB, fullB) = collectGroup(split.dfB)
+    val (xA, yA) = collectGroup(split.dfA)
+    val (xB, yB) = collectGroup(split.dfB)
     if (xA.length < 2 || xB.length < 2)
       throw InvalidGroupVariable("One group has insufficient data")
 
-    val rng = new scala.util.Random(cfg.seed)
-
-    // distributed point-pass fits (cfg.distributedFits): regenerate the
-    // point pass's tau sequence with ITS seed so the betas align with
-    // singlePass's own Random stream, then batch every tau through one
-    // fitMany design per above-cap group — the point estimates then
-    // reflect the full group, not the subsample
-    val outcomeCast = "__mm_y__"
-    def fitDistributed(full: DataFrame, taus: Array[Double]) =
-      QuantileReg.fitMany(
-        full.withColumnRenamed(full.columns.head, outcomeCast),
-        outcomeCast, xCols, taus.toSeq)
-        .map(b => b.toArray: IndexedSeq[Double]).toIndexedSeq
-    val pointFits: Option[(IndexedSeq[IndexedSeq[Double]],
-        IndexedSeq[IndexedSeq[Double]])] =
-      if (!cfg.distributedFits || (!cappedA && !cappedB)) None
-      else {
-        val r = new scala.util.Random(cfg.seed)
-        val taus = Array.fill(cfg.simulations)(0.01 + r.nextDouble() * 0.98)
-        def local(x: Array[Array[Double]], y: Array[Double]) =
-          taus.toSeq.par
-            .map(t => Try(QuantileReg.fitLocal(x, y, t)).toOption).seq
-            .flatten.map(b => b.toArray: IndexedSeq[Double]).toIndexedSeq
-        val bA = if (cappedA) fitDistributed(fullA, taus) else local(xA, yA)
-        val bB = if (cappedB) fitDistributed(fullB, taus) else local(xB, yB)
-        Some((bA, bB))
-      }
-
     def singlePass(xa: Array[Array[Double]], ya: Array[Double],
         xb: Array[Array[Double]], yb: Array[Double],
-        passSeed: Long,
-        fitted: Option[(IndexedSeq[IndexedSeq[Double]],
-          IndexedSeq[IndexedSeq[Double]])] = None): Map[String, MmEffects] = {
+        passSeed: Long): Map[String, MmEffects] = {
       val r = new scala.util.Random(passSeed)
       val taus = Array.fill(cfg.simulations)(0.01 + r.nextDouble() * 0.98)
-      val betasA = fitted.map(_._1).getOrElse(taus.toSeq.par
-        .map(t => Try(QuantileReg.fitLocal(xa, ya, t)).toOption).seq
-        .flatten.map(b => b.toArray: IndexedSeq[Double]).toIndexedSeq)
-      val betasB = fitted.map(_._2).getOrElse(taus.toSeq.par
-        .map(t => Try(QuantileReg.fitLocal(xb, yb, t)).toOption).seq
-        .flatten.map(b => b.toArray: IndexedSeq[Double]).toIndexedSeq)
+      def fits(x: Array[Array[Double]], y: Array[Double]) = taus.toSeq.par
+        .map(t => Try(QuantileReg.fitLocal(x, y, t)).toOption).seq
+        .flatten.map(b => b.toArray: IndexedSeq[Double]).toIndexedSeq
+      val betasA = fits(xa, ya)
+      val betasB = fits(xb, yb)
       if (betasA.size < cfg.simulations / 2 || betasB.size < cfg.simulations / 2)
         throw ConvergenceFailed(
           "Failed to estimate a sufficient number of quantile regressions.")
@@ -163,7 +119,7 @@ object MachadoMata {
       }.toMap
     }
 
-    val point = singlePass(xA, yA, xB, yB, cfg.seed, pointFits)
+    val point = singlePass(xA, yA, xB, yB, cfg.seed)
     val reps = (1 to cfg.bootstrapReps).flatMap { rep =>
       val r = new scala.util.Random(cfg.seed + rep)
       def resample(x: Array[Array[Double]], y: Array[Double]) = {

@@ -103,17 +103,6 @@ final case class OaxacaResults(
   }
 }
 
-/** Bootstrap resampling semantics: Poissonized weights (one scan for all
-  * replicates — the 100 TB path) or the reference's exact per-group
-  * multinomial with-replacement draw (count vectors are generated on the
-  * driver, O(reps * n) memory — test/small-scale fidelity mode,
-  * `oaxaca_blinder/src/builder.rs:822-827`). */
-sealed trait BootstrapMode
-object BootstrapMode {
-  case object Poisson extends BootstrapMode
-  case object Multinomial extends BootstrapMode
-}
-
 /** Configuration (the fluent-builder surface of
   * `oaxaca_blinder/src/builder.rs:165-246`). */
 final case class OaxacaConfig(
@@ -128,8 +117,7 @@ final case class OaxacaConfig(
     bootstrapReps: Int = 20,
     seed: Long = 42L,
     selectionOutcome: Option[String] = None,
-    selectionPredictors: Seq[String] = Nil,
-    bootstrapMode: BootstrapMode = BootstrapMode.Poisson)
+    selectionPredictors: Seq[String] = Nil)
 
 /** Distributed Oaxaca–Blinder mean decomposition (SURVEY §2.4 D1–D10).
   *
@@ -148,23 +136,17 @@ object Oaxaca {
       cfg.categorical ++ cfg.weights.toSeq ++ cfg.selectionOutcome.toSeq ++
       cfg.selectionPredictors
     val cleaned = Prep.clean(df, modelCols.distinct)
-    val (dummied0, dummyInfos) = Prep.oneHot(cleaned, cfg.categorical)
-    val dummied = Prep.withIntercept(dummied0)
-    val xCols = Prep.designCols(cfg.predictors, dummyInfos)
+    val (dummied, xCols, dummyInfos) =
+      Prep.design(cleaned, cfg.predictors, cfg.categorical)
     val names = Prep.designNames(xCols)
 
     if (cfg.selectionOutcome.isDefined) {
       val split = Prep.splitGroups(dummied, cfg.group, cfg.reference)
       return runHeckman(dummied, split, xCols, names, cfg)
     }
-    if (cfg.bootstrapMode == BootstrapMode.Multinomial && cfg.bootstrapReps > 0) {
-      // multinomial weights are drawn against the eagerly-known split
-      val split = Prep.splitGroups(dummied, cfg.group, cfg.reference)
-      return runPrepared(dummied, split, xCols, names, dummyInfos, cfg)
-    }
-    // Common path (Poisson/no bootstrap): level discovery rides the Gram
-    // scan itself — ONE job end to end instead of distinct+collect
-    // followed by the scan (BASELINE.md row 1's fixed-cost tax).
+    // Level discovery rides the Gram scan itself — ONE job end to end
+    // instead of distinct+collect followed by the scan (BASELINE.md
+    // row 1's fixed-cost tax).
     val seedCols =
       if (dummied.columns.contains(Prep.RowIdCol)) Seq(Prep.RowIdCol)
       else Seq.empty[String]
@@ -182,21 +164,16 @@ object Oaxaca {
   private[graft] def runPrepared(dummied: DataFrame, split: Prep.GroupSplit,
       xCols: Seq[String], names: Seq[String], dummyInfos: Seq[Prep.DummyInfo],
       cfg: OaxacaConfig): OaxacaResults = {
-    val (gramInput, repWeightCols) = cfg.bootstrapMode match {
-      case BootstrapMode.Multinomial if cfg.bootstrapReps > 0 =>
-        multinomialWeights(dummied, split, xCols, cfg)
-      case _ => (dummied, Seq.empty[String])
-    }
     // key replicate draws on the row id when the caller attached one
     // (Prep.withRowId): content keying would give exact-duplicate rows
     // identical draws (correlated resampling, a documented O(1/n)
     // approximation); the id column recovers per-row independence
     val seedCols =
-      if (gramInput.columns.contains(Prep.RowIdCol)) Seq(Prep.RowIdCol)
+      if (dummied.columns.contains(Prep.RowIdCol)) Seq(Prep.RowIdCol)
       else Seq.empty[String]
-    val lanes = Gram.computeGrouped(gramInput, cfg.outcome, xCols, cfg.weights,
+    val lanes = Gram.computeGrouped(dummied, cfg.outcome, xCols, cfg.weights,
       Prep.laneOf(split, cfg.group), nLanes = 2, reps = cfg.bootstrapReps,
-      seed = cfg.seed, repWeightCols = repWeightCols, seedCols = seedCols)
+      seed = cfg.seed, seedCols = seedCols)
     finishLanes(lanes, split, names, dummyInfos, cfg)
   }
 
@@ -269,60 +246,22 @@ object Oaxaca {
       betaStar = point.betaStar, point = point)
   }
 
-  /** Exact per-group multinomial replicate weights: rows get a stable
-    * within-group index; seeded count vectors are drawn on the driver
-    * and joined back as one weight column per replicate. */
-  private def multinomialWeights(dummied: DataFrame, split: Prep.GroupSplit,
-      xCols: Seq[String], cfg: OaxacaConfig): (DataFrame, Seq[String]) = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val spark = dummied.sparkSession
-    val reps = cfg.bootstrapReps
-    val g = col(cfg.group).cast("string")
-    val orderCols = (col(cfg.outcome) +: xCols.map(col)) :+ g
-    val withIdx = dummied.withColumn("__bi__",
-      row_number().over(Window.partitionBy(g).orderBy(orderCols: _*)) - 1)
-    val sizes = withIdx.groupBy(g.as("__g__")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val wCols = (1 to reps).map(r => s"__mw_$r")
-    val rows = sizes.toSeq.sortBy(_._1).flatMap { case (lvl, nL) =>
-      val n = nL.toInt
-      val counts = Array.ofDim[Int](reps, n)
-      for (r <- 0 until reps) {
-        val rng = new scala.util.Random(
-          Gram.mix(cfg.seed, lvl.hashCode.toLong * 1000003L + r + 1))
-        var i = 0
-        while (i < n) { counts(r)(rng.nextInt(n)) += 1; i += 1 }
-      }
-      (0 until n).map(i => org.apache.spark.sql.Row.fromSeq(
-        lvl +: i +: (0 until reps).map(r => counts(r)(i).toDouble)))
-    }
-    val schema = StructType(
-      StructField("__g__", StringType) +: StructField("__bj__", IntegerType) +:
-        wCols.map(c => StructField(c, DoubleType)))
-    val wdf = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(rows.size / 100000, 1)), schema)
-    (withIdx.join(wdf,
-      g === wdf("__g__") && col("__bi__") === wdf("__bj__"))
-      .drop("__g__", "__bj__"),
-      wCols)
-  }
+  /** Column [[groupBResiduals]] writes the residuals to. */
+  val ResidualCol = "residual"
 
   /** Group-B model residuals y - x'beta_B from the RAW (pre-Yun) fit —
     * what `OaxacaResults.residuals` feeds into the budget optimizer
     * (`builder.rs:932-950`, `types.rs:98-156`). */
-  def groupBResiduals(df: DataFrame, cfg: OaxacaConfig,
-      residualCol: String = "residual"): DataFrame = {
+  def groupBResiduals(df: DataFrame, cfg: OaxacaConfig): DataFrame = {
     val modelCols = (cfg.outcome +: cfg.group +: cfg.predictors) ++
       cfg.categorical ++ cfg.weights.toSeq
     val cleaned = Prep.clean(df, modelCols.distinct)
-    val (dummied0, dummyInfos) = Prep.oneHot(cleaned, cfg.categorical)
-    val dummied = Prep.withIntercept(dummied0)
-    val xCols = Prep.designCols(cfg.predictors, dummyInfos)
+    val (dummied, xCols, _) =
+      Prep.design(cleaned, cfg.predictors, cfg.categorical)
     val split = Prep.splitGroups(dummied, cfg.group, cfg.reference)
     val g = Gram.compute(split.dfB, cfg.outcome, xCols, cfg.weights)
     val fitB = Ols.fromGram(g, xCols)
-    split.dfB.withColumn(residualCol,
+    split.dfB.withColumn(ResidualCol,
       Ols.residualCol(cfg.outcome, xCols, fitB.beta))
   }
 
@@ -332,7 +271,7 @@ object Oaxaca {
       budget: Double, targetGap: Double,
       tieBreak: Seq[org.apache.spark.sql.Column]): DataFrame = {
     val dfB = groupBResiduals(df, cfg)
-    BudgetOptimizer.optimize(dfB, "residual", tieBreak, results.totalGap,
+    BudgetOptimizer.optimize(dfB, ResidualCol, tieBreak, results.totalGap,
       results.nB, budget, targetGap)
   }
 

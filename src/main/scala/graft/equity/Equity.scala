@@ -122,25 +122,16 @@ object Equity {
       dummied: DataFrame, xCols: Seq[String], names: Seq[String],
       split: Prep.GroupSplit, infos: Seq[Prep.DummyInfo])
 
-  /** Shared prep: clean, dummy-encode, intercept-first design (the
-    * engine's prepare_data layout), two-group split. */
-  /** [[prepare]] minus the split: everything derivable lazily (no job). */
+  /** Clean, dummy-encode, intercept-first design (the engine's
+    * prepare_data layout): everything derivable lazily (no job). */
   private def prepareFrame(df: DataFrame, cfg: EquityConfig)
       : (DataFrame, Seq[String], Seq[Prep.DummyInfo]) = {
     val modelCols = (cfg.outcome +: cfg.group +: cfg.predictors) ++ cfg.categorical
     // engine layer: strict Float64 casts with non-numeric rejection
     // (`engine/src/analysis.rs:14-35`)
     val casted = Prep.strictCast(df, (cfg.outcome +: cfg.predictors).distinct)
-    val cleaned = Prep.clean(casted, modelCols.distinct)
-    val (dummied0, infos) = Prep.oneHot(cleaned, cfg.categorical)
-    val dummied = Prep.withIntercept(dummied0)
-    (dummied, Prep.designCols(cfg.predictors, infos), infos)
-  }
-
-  private[graft] def prepare(df: DataFrame, cfg: EquityConfig): EquityPrep = {
-    val (dummied, xCols, infos) = prepareFrame(df, cfg)
-    EquityPrep(dummied, xCols, Prep.designNames(xCols),
-      Prep.splitGroups(dummied, cfg.group, cfg.reference), infos)
+    Prep.design(Prep.clean(casted, modelCols.distinct), cfg.predictors,
+      cfg.categorical)
   }
 
   /** One prepare + one Gram pass — the shared front half of every
@@ -341,13 +332,6 @@ object Equity {
       model, idCol, prefixBoundaries = prefixBoundaries)
   }
 
-  /** Per-feature contribution columns x_j * beta_j (`analysis.rs:723-742`). */
-  def contributionCols(model: FairModel): Seq[Column] =
-    model.xCols.zipWithIndex.map { case (c, i) =>
-      (col(c).cast("double") * lit(model.beta(i)))
-        .as(s"contrib_${model.names(i)}")
-    }
-
   /** G3 `verify_inner` (`engine/src/analysis.rs:40-96`): apply wage
     * deltas by row id, re-run the decomposition on the mutated frame. */
   def verifyAdjustments(df: DataFrame, adjustments: DataFrame, idCol: String,
@@ -363,18 +347,12 @@ object Equity {
     * prepared outcome in place and decomposes via [[Oaxaca.runPrepared]]
     * — no second clean/one-hot/split pass. Mutating the outcome never
     * changes group labels or design columns, so the prepared metadata
-    * stays valid; only the split's frames are re-derived (lazily, no
-    * action) from the mutated frame for the Multinomial-bootstrap path. */
+    * and the split's levels stay valid. */
   private[graft] def verifyPrepared(p: EquityPrep, adjustments: DataFrame,
       idCol: String, deltaCol: String, cfg: EquityConfig,
       bootstrapReps: Int = 0): OaxacaResults = {
     val mutated = applyDeltas(p.dummied, adjustments, idCol, deltaCol, cfg.outcome)
-    val g = col(cfg.group).cast("string")
-    val mutSplit = Prep.GroupSplit(p.split.levelA, p.split.levelB,
-      mutated.filter(g === lit(p.split.levelA)),
-      mutated.filter(g === lit(p.split.levelB)),
-      g === lit(p.split.levelA))
-    Oaxaca.runPrepared(mutated, mutSplit, p.xCols, p.names, p.infos,
+    Oaxaca.runPrepared(mutated, p.split, p.xCols, p.names, p.infos,
       OaxacaConfig(cfg.outcome, cfg.group, cfg.reference, cfg.predictors,
         cfg.categorical, refCoefficients = RefCoefficients.Pooled,
         bootstrapReps = bootstrapReps))

@@ -62,14 +62,6 @@ object Cluster {
       .distinct()
   }
 
-  /** Connected components of the undirected graph given as (idA, idB)
-    * pairs. Returns one row per node that appears in any pair:
-    * (id, component) with component = the smallest node id reachable
-    * from id. Fails loudly if `maxRounds` alternating rounds do not
-    * reach the fixpoint (each round at least halves the maximum
-    * root-distance, so 30 rounds covers any graph with < 2^30 nodes per
-    * component — hitting the cap means the input violates the edge
-    * contract, not that more rounds are needed). */
   /** Edge count below which the fixpoint runs as a driver union-find
     * instead of the distributed star rounds: 2M (u, v) longs is ~32 MB
     * plus map overhead — the same bounded-driver-fast-path precedent as
@@ -81,6 +73,14 @@ object Cluster {
     * thing that survives 100 TB. */
   val DriverEdgeCap = 2000000L
 
+  /** Connected components of the undirected graph given as (idA, idB)
+    * pairs. Returns one row per node that appears in any pair:
+    * (id, component) with component = the smallest node id reachable
+    * from id. Fails loudly if `maxRounds` alternating rounds do not
+    * reach the fixpoint (each round at least halves the maximum
+    * root-distance, so 30 rounds covers any graph with < 2^30 nodes per
+    * component — hitting the cap means the input violates the edge
+    * contract, not that more rounds are needed). */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxRounds: Int = 30,
       driverEdgeCap: Long = DriverEdgeCap): DataFrame = {

@@ -151,6 +151,11 @@ object Dedup {
     try Math.addExact(a, b)
     catch { case _: ArithmeticException => Long.MaxValue }
 
+  /** d*(d-1)/2 saturating, without intermediate overflow: halve the
+    * even factor. */
+  private def pairsOf(d: Long): Long =
+    if (d % 2 == 0L) satMul(d / 2, d - 1) else satMul(d, (d - 1) / 2)
+
   /** Largest df cap whose cumulative candidate mass fits the budget,
     * from the ascending per-df histogram (df value -> #shingles at
     * that df). Greedy from the cold end: dropping the hottest shingles
@@ -163,11 +168,6 @@ object Dedup {
     * negative), and a wrapped `cum + mass <= budget` would silently
     * wave through the very stream the budget must bound. Overflow pins
     * to Long.MaxValue, which can only make the cap STRICTER. */
-  /** d*(d-1)/2 saturating, without intermediate overflow: halve the
-    * even factor. */
-  private def pairsOf(d: Long): Long =
-    if (d % 2 == 0L) satMul(d / 2, d - 1) else satMul(d, (d - 1) / 2)
-
   def capForBudget(histo: Array[(Long, Long)], budget: Long): Option[Long] = {
     var cum = 0L
     var cap = 0L

@@ -170,9 +170,6 @@ object Prep {
     (out, infos)
   }
 
-  /** Add the intercept column and return the design column order:
-    * [intercept, numeric predictors..., dummy columns...]
-    * (`oaxaca_blinder/src/builder.rs:294-378`). */
   /** Fan a small input out to a FIXED partition count ahead of a kernel
     * with HEAVY per-row work. A single parquet file scans as ONE
     * partition (and a `.persist` inherits that), so e.g. per-row hash
@@ -191,11 +188,22 @@ object Prep {
       df.repartition(target)
     else df
 
+  /** Add the intercept column and return the design column order:
+    * [intercept, numeric predictors..., dummy columns...]
+    * (`oaxaca_blinder/src/builder.rs:294-378`). */
   def withIntercept(df: DataFrame): DataFrame =
     df.withColumn(InterceptCol, lit(1.0))
 
   def designCols(numeric: Seq[String], dummies: Seq[DummyInfo]): Seq[String] =
     InterceptCol +: (numeric ++ dummies.flatMap(_.dummyCols))
+
+  /** [[oneHot]] then [[withIntercept]]: the design frame, its column
+    * order ([[designCols]]) and the one-hot metadata. */
+  def design(cleaned: DataFrame, numeric: Seq[String], categorical: Seq[String])
+      : (DataFrame, Seq[String], Seq[DummyInfo]) = {
+    val (dummied, infos) = oneHot(cleaned, categorical)
+    (withIntercept(dummied), designCols(numeric, infos), infos)
+  }
 
   /** Human-facing names for design columns (intercept renamed). */
   def designNames(cols: Seq[String]): Seq[String] =

@@ -199,6 +199,27 @@ class EquitySpec extends SparkSpec {
       s"leaked ${after - before} persisted RDDs")
   }
 
+  test("optimizeAndVerify's composed verify equals verifyAdjustments") {
+    val df = f4
+    val full = EquityConfig("wage", "group", "A", Seq("education"))
+    def est(r: graft.decompose.OaxacaResults, name: String) =
+      r.twoFold.find(_.name == name).get.estimate
+    // a budget below the total need (96) funds only part of group B, so
+    // the two groups no longer share one line and the explained/
+    // unexplained split depends on the reference coefficients
+    for (cfg <- Seq(full, full.copy(budget = 20.0))) {
+      val (opt, composed) = Equity.optimizeAndVerify(df, cfg, "id")
+      val adj = opt.adjustmentsUnsorted.filter(col("adjustment") > 1e-9)
+        .select(col("id"), col("adjustment"))
+      val public = Equity.verifyAdjustments(df, adj, "id", "adjustment", cfg)
+      assert(math.abs(composed.totalGap - public.totalGap) < 1e-9)
+      for (name <- Seq("explained", "unexplained"))
+        assert(math.abs(est(composed, name) - est(public, name)) < 1e-9,
+          s"budget ${cfg.budget} $name: ${est(composed, name)} vs " +
+            s"${est(public, name)}")
+    }
+  }
+
   test("defensibility: funded adjustments are defensible") {
     val res = Equity.optimize(f11, f11cfg, "id")
     val out = Equity.checkDefensibility(f11,

@@ -156,32 +156,6 @@ class OaxacaSpec extends SparkSpec {
     }
   }
 
-  test("multinomial (exact) bootstrap mode produces sane SEs too") {
-    val n = 500
-    val rng = new scala.util.Random(19)
-    val rows = (0 until n).map { i =>
-      val g = if (i % 2 == 0) "A" else "B"
-      val x = rng.nextDouble() * 10
-      ((if (g == "A") 5.0 else 2.0) + 1.5 * x + rng.nextGaussian(), x, g)
-    }
-    val df = rows.toDF("y", "x", "g")
-    val exact = Oaxaca.run(df, OaxacaConfig("y", "g", "B",
-      predictors = Seq("x"), bootstrapReps = 30, seed = 4L,
-      bootstrapMode = BootstrapMode.Multinomial))
-    val pois = Oaxaca.run(df, OaxacaConfig("y", "g", "B",
-      predictors = Seq("x"), bootstrapReps = 30, seed = 4L))
-    // identical point estimates (up to summation-order float noise from
-    // the weight join's row reordering); SEs agree within sampling noise
-    assert(math.abs(exact.totalGap - pois.totalGap) < 1e-9)
-    val seE = exact.twoFold.find(_.name == "unexplained").get.stdErr
-    val seP = pois.twoFold.find(_.name == "unexplained").get.stdErr
-    assert(seE > 0 && seP > 0)
-    assert(seE / seP > 0.4 && seE / seP < 2.5, s"seE=$seE seP=$seP")
-    // exact mode: every replicate preserves the group sizes, so the
-    // per-rep gap estimates never drop a group
-    assert(exact.twoFold.forall(c => !c.estimate.isNaN))
-  }
-
   test("optimizeBudget on results mirrors D15 (types.rs)") {
     val df = Seq(
       (30.0, 10.0, "A"), (32.0, 12.0, "A"), (34.0, 14.0, "A"),

@@ -1,0 +1,54 @@
+#!/usr/bin/env python3
+"""List every `spark.graft.*` conf key and `SPARK_GRAFT_*` env var read
+under src/main, with file:line for each read site.
+
+A read is a quoted string literal naming the knob (conf keys and env
+vars are only ever read through literals or constants holding them);
+mentions in comments do not count. Exits 1 if a `spark.graft.*` key is
+missing from README.md, so a new conf key cannot ship undocumented.
+
+Usage: python3 tools/list_knobs.py
+"""
+import os
+import re
+import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PATTERN = re.compile(r'"((?:spark\.graft\.[A-Za-z0-9_.]+)|(?:SPARK_GRAFT_[A-Z0-9_]+))"')
+
+
+def scan():
+    knobs = {}
+    src = os.path.join(ROOT, "src", "main")
+    for dirpath, _, files in sorted(os.walk(src)):
+        for f in sorted(files):
+            if not f.endswith(".scala"):
+                continue
+            path = os.path.join(dirpath, f)
+            rel = os.path.relpath(path, ROOT)
+            with open(path, encoding="utf-8") as fh:
+                for n, line in enumerate(fh, 1):
+                    code = line.split("//", 1)[0]
+                    for m in PATTERN.finditer(code):
+                        knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
+    return knobs
+
+
+def main():
+    knobs = scan()
+    with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
+        readme = fh.read()
+    conf = sorted(k for k in knobs if k.startswith("spark.graft."))
+    env = sorted(k for k in knobs if k.startswith("SPARK_GRAFT_"))
+    missing = [k for k in conf if k not in readme]
+    for title, keys in (("conf keys", conf), ("env vars", env)):
+        print(f"{title} ({len(keys)}):")
+        for k in keys:
+            print(f"  {k}  {', '.join(knobs[k])}")
+    for k in missing:
+        print(f"MISSING from README.md: {k}", file=sys.stderr)
+    return 1 if missing else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
