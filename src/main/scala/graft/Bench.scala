@@ -1,4 +1,5 @@
 package graft
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
@@ -123,24 +124,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").toSet)
     val loadStart = loadAvg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create("graft-bench")
     // warm up JVM/session + parquet footers so the first timed query does
     // not absorb initialization cost
     spark.range(1000).selectExpr("sum(id)").collect()
     Seq("lineitem", "orders", "customer", "documents", "embeddings")
       .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").schema)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.selected.toSeq.sortBy(_._1)
     // a failed query is reported with a `null` time (and listed in
     // "failed"); failures are EXCLUDED from the headline total so a
     // fast-failing query cannot make a run look faster than a clean one

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Declarative SQL surface for the engine: add
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) and the
+  * `withExtensions(new GraftExtensions)` on a session builder) and the
   * engine's primitives become plain SQL functions — no Scala required:
   *
   *   - `graft_erf(x)` — the native codegen erf kernel behind

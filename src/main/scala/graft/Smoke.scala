@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 
 /** Local stand-in for the driver's t1 smoke: runs SparkEntry.entry on
   * sf0.001 and prints the result (checks rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("graft-smoke")
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(50, truncate = false)

@@ -25,6 +25,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     Queries.queries ++ QueriesExt.queries
 
+  /** The queries named in `SPARK_GRAFT_ONLY` (comma-separated), or all
+    * of them when it is unset: the local-iteration filter that Bench
+    * and Verify share. */
+  def selected: Map[String, (SparkSession, String) => DataFrame] = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    queries.filter { case (n, _) => only.forall(_.contains(n)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,26 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.Session
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("graft-verify")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (comma-separated names), like the bench's
-    // SPARK_GRAFT_BENCH_ONLY; the driver sets nothing and runs all
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

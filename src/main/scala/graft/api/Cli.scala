@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Session
 import graft.decompose._
 import graft.estimators.{Akm, Matching}
 import org.apache.spark.sql.SparkSession
@@ -8,10 +9,12 @@ import java.nio.file.{Files, Paths}
 /** CLI surface (S8) mirroring the reference's clap arguments
   * (`oaxaca_blinder/src/main.rs:43-159`): --data, --outcome, --group,
   * --reference, --predictors, --categorical, --analysis-type
-  * {mean,quantile,akm,match}, --ref-coeffs, --quantiles,
-  * --bootstrap-reps, --simulations, --formula, --weights,
-  * --worker-col/--firm-col, --k-neighbors, --matching-method,
-  * --output-json/--output-markdown.
+  * {mean,quantile,akm,match}, --ref-coeffs, --quantiles (one value),
+  * --bootstrap-reps, --formula, --weights, --worker-col/--firm-col,
+  * --k-neighbors, --matching-method, --output-json/--output-markdown.
+  * A flag outside [[Flags]] is an error, not silently ignored. The
+  * session comes from [[graft.core.Session]] (`SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_MASTER`).
   *
   * The `report` subcommand (first positional token, mirroring the
   * reference's `Commands::Report` — `main.rs:18-24,131-159,334-376` +
@@ -21,15 +24,7 @@ import java.nio.file.{Files, Paths}
 object Cli {
 
   def main(args: Array[String]): Unit = {
-    val opts = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(opts.getOrElse("master", "local[*]"))
-      .appName("oaxaca-cli")
-      .config("spark.sql.shuffle.partitions",
-        opts.getOrElse("shuffle-partitions", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("oaxaca-cli")
     try execute(args, spark) finally spark.stop()
   }
 
@@ -81,8 +76,10 @@ object Cli {
               .filter(_.nonEmpty).toIndexedSeq: _*))
           val res =
             if (opts.getOrElse("analysis-type", "mean") == "quantile")
-              b.decomposeQuantile(opts.getOrElse("quantiles", "0.5")
-                .split(',').head.toDouble)
+              opts.getOrElse("quantiles", "0.5").split(',') match {
+                case Array(q) => b.decomposeQuantile(q.toDouble)
+                case qs => sys.error(s"--quantiles takes one value, got ${qs.length}")
+              }
             else b.run()
           println(Export.summary(res))
           opts.get("output-json").foreach(p =>
@@ -132,12 +129,21 @@ object Cli {
     }
   }
 
+  /** Every flag [[execute]] reads. */
+  private val Flags = Set("data", "outcome", "group", "reference",
+    "predictors", "categorical", "normalize", "formula", "weights",
+    "analysis-type", "ref-coeffs", "quantiles", "bootstrap-reps",
+    "selection-outcome", "selection-predictors", "worker-col", "firm-col",
+    "treatment", "id-col", "k-neighbors", "matching-method", "output",
+    "output-json", "output-markdown")
+
   private def parseArgs(args: Array[String]): Map[String, String] = {
     val m = scala.collection.mutable.Map.empty[String, String]
     var i = 0
     while (i < args.length) {
       val a = args(i)
       if (a.startsWith("--")) {
+        if (!Flags(a.drop(2))) sys.error(s"Unknown argument $a")
         if (i + 1 < args.length && !args(i + 1).startsWith("--")) {
           m(a.drop(2)) = args(i + 1); i += 2
         } else { m(a.drop(2)) = "true"; i += 1 }

@@ -1,6 +1,7 @@
 package graft.api
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.core.Session
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
@@ -225,13 +226,7 @@ object McpHttp {
     }.getOrElse(8080)
     val key = sys.env.getOrElse("GRAFT_MCP_API_KEY",
       sys.error("GRAFT_MCP_API_KEY is required for the HTTP transport"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-mcp-http").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create("graft-mcp-http")
     val server = new Server(spark, key, port).start()
     System.err.println(s"[mcp-http] serving on 127.0.0.1:${server.boundPort}")
     new CountDownLatch(1).await() // serve until killed

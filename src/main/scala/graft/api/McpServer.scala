@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.core.Session
 import graft.decompose.RefCoefficients
 import graft.equity._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -324,13 +325,7 @@ object McpServer {
       "id" -> id)))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .appName("graft-mcp").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create("graft-mcp")
     // stdio mode rate-limits by BLOCKING until a token frees up, like
     // the reference (`meridian-mcp/src/main.rs:193-211`, default 60/min)
     val bucket = new McpHttp.TokenBucket(

@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.core.Session
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` for the named declared queries to
   * `<outDir>/<query>_<suffix>.txt` — the plan receipts the round
@@ -21,13 +21,7 @@ object PlanDump {
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.create("graft-plandump")
     names.foreach { n =>
       val df = graft.SparkEntry.queries(n)(spark, sfDir)
       val plan = df.queryExecution.explainString(

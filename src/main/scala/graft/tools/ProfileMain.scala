@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.core.Session
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiler: run one harness query with a job-level timing listener.
   * Usage: runMain graft.tools.ProfileMain <queryName> <sfDir> [reps]
@@ -14,14 +14,7 @@ object ProfileMain {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create("graft-profile")
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     @volatile var enabled = false
     // listener events arrive on one bus thread, in order

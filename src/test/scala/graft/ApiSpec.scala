@@ -114,4 +114,22 @@ class ApiSpec extends SparkSpec {
     // the categorical expands into addressable sector_B rows
     assert(html.contains("sector_B"))
   }
+
+  test("CLI rejects a flag it does not read, naming it") {
+    val e = intercept[RuntimeException](graft.api.Cli.execute(
+      Array("--data", "unused.csv", "--master", "local[2]"), spark))
+    assert(e.getMessage.contains("--master"))
+  }
+
+  test("CLI rejects a --quantiles list it would only partly run") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_q").toString
+    df.coalesce(1).write.mode("overwrite").option("header", "true")
+      .csv(s"$dir/data")
+    val e = intercept[RuntimeException](graft.api.Cli.execute(Array(
+      "--data", s"$dir/data", "--analysis-type", "quantile",
+      "--outcome", "wage", "--group", "gender", "--reference", "F",
+      "--predictors", "education", "--bootstrap-reps", "0",
+      "--quantiles", "0.1,0.5"), spark))
+    assert(e.getMessage.contains("--quantiles"))
+  }
 }

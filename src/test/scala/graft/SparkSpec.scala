@@ -1,22 +1,16 @@
 package graft
 
+import graft.core.Session
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
 /** Shared local SparkSession for all suites (one JVM, forked by sbt). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The production bootstrap at its defaults (`local[4]`, 4 shuffle
+    * partitions, UTC), whatever `SPARK_GRAFT_*` the JVM was started
+    * with, so specs run at the layout Verify pins. */
+  lazy val spark: SparkSession = Session.create("graft-test", env = Map.empty)
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -4,8 +4,10 @@ under src/main, with file:line for each read site.
 
 A read is a quoted string literal naming the knob (conf keys and env
 vars are only ever read through literals or constants holding them);
-mentions in comments do not count. Exits 1 if a `spark.graft.*` key is
-missing from README.md, so a new conf key cannot ship undocumented.
+mentions in comments do not count. Exits 1 if a `spark.graft.*` key or
+a `SPARK_GRAFT_*` env var is missing from README.md, so a new knob
+cannot ship undocumented, or if an env var is read at more than one
+site, so two mains cannot drift apart on its default again.
 
 Usage: python3 tools/list_knobs.py
 """
@@ -40,14 +42,17 @@ def main():
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
     env = sorted(k for k in knobs if k.startswith("SPARK_GRAFT_"))
-    missing = [k for k in conf if k not in readme]
+    missing = [k for k in conf + env if k not in readme]
+    repeated = [k for k in env if len(knobs[k]) > 1]
     for title, keys in (("conf keys", conf), ("env vars", env)):
         print(f"{title} ({len(keys)}):")
         for k in keys:
             print(f"  {k}  {', '.join(knobs[k])}")
     for k in missing:
         print(f"MISSING from README.md: {k}", file=sys.stderr)
-    return 1 if missing else 0
+    for k in repeated:
+        print(f"READ AT {len(knobs[k])} SITES (one allowed): {k}", file=sys.stderr)
+    return 1 if missing or repeated else 0
 
 
 if __name__ == "__main__":

@@ -132,7 +132,7 @@ def run_bench(sf_dir, snap, queries):
         "SPARK_GRAFT_CPUS": "32",
         "SPARK_GRAFT_BENCH_REPS": str(REPS),
         "SPARK_GRAFT_BENCH_NO_EXTRA": "1",
-        "SPARK_GRAFT_BENCH_ONLY": ",".join(queries),
+        "SPARK_GRAFT_ONLY": ",".join(queries),
     })
     subprocess.run(
         ["sbt", "-batch", "runMain graft.Bench"], cwd=REPO, env=env,
