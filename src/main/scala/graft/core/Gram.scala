@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * reference implements as an in-memory matrix factorization
   * (`oaxaca_blinder/src/math/ols.rs:44-144`, `logit.rs:51-70`,
   * `probit.rs:82-112`) reduces to one pass of this aggregation. The
-  * partial-merge is matrix addition, so it `treeAggregate`s linearly at
-  * any data size, and only k-dimensional objects ever reach the driver.
+  * partial-merge is matrix addition, so it merges up `Jobs.treeReduce`
+  * linearly at any data size, and only k-dimensional objects ever reach
+  * the driver.
   */
 final case class GramResult(
     k: Int,
@@ -293,25 +294,19 @@ object Gram {
     val trackIdx = if (trackCol.isDefined) 4 + k + repWeightCols.size else -1
     // A replicate-heavy pass does ~nReps * stride flops per row; a small
     // input (one parquet file -> one scan partition) would run all of it
-    // on ONE task no matter how many cores exist. Repartition to a FIXED
-    // count — fixed, so partition contents (and therefore every FP sum)
-    // are bit-identical at any thread count. Large inputs already carry
-    // enough scan partitions and skip the shuffle. NOTE: caller-attached
+    // on ONE task no matter how many cores exist, so it goes through
+    // Jobs.fanOut (a fixed partition count). NOTE: caller-attached
     // replicate-weight EXPRESSIONS (repWeightCols) evaluate below this
     // exchange — a caller whose weights are expensive per-row work must
     // fan out upstream, before attaching them (see q_bootstrap8).
     val proj =
-      if ((nReps >= 16 || externalReps) &&
-          proj0.queryExecution.toRdd.getNumPartitions < 16)
-        proj0.repartition(64)
-      else proj0
+      if (nReps >= 16 || externalReps) Jobs.fanOut(proj0) else proj0
     val repsTotal = nReps + 1
     val zero = new GramBuffer(k, nLanes, repsTotal)
     // toRdd: the codegen'd UnsafeRow stream, no per-row boxing into Row
     // (safe here: seqOp reads each field once and retains nothing)
-    val res = Jobs.labeled(df.sparkSession,
-      s"gram: ${nLanes}-lane ${repsTotal}-rep fused scan") {
-    proj.queryExecution.toRdd.treeAggregate(zero)(
+    val res = Jobs.treeReduce(proj.queryExecution.toRdd,
+      s"gram: ${nLanes}-lane ${repsTotal}-rep fused scan")(zero)(
       seqOp = (buf, row) => {
         val lane = if (row.isNullAt(2)) -1 else row.getInt(2)
         if (lane >= 0 && lane < nLanes) {
@@ -362,9 +357,7 @@ object Gram {
         }
         buf
       },
-      combOp = (a, b) => a.merge(b),
-      depth = 2)
-    }
+      combOp = (a, b) => a.merge(b))
     val grams = Array.tabulate(nLanes)(l =>
       Array.tabulate(repsTotal)(r => res.result(l, r)))
     (grams, trackCol.map(_ =>
@@ -399,15 +392,13 @@ object Gram {
     val proj0 = df.select(
       (laneOf.cast("int").as("__lane__") +:
         (xCols.map(c => col(c).cast("double")) ++ sysCols)): _*)
-    // same fixed-count fan-out as computeGrouped: many systems per row on
-    // a single-file scan must not serialize onto one task
-    val proj =
-      if (nSys >= 16 && proj0.queryExecution.toRdd.getNumPartitions < 16)
-        proj0.repartition(64)
-      else proj0
+    // Jobs.fanOut, as in computeGrouped: many systems per row on a
+    // single-file scan must not serialize onto one task
+    val proj = if (nSys >= 16) Jobs.fanOut(proj0) else proj0
     val kBase = xCols.size
     val zero = new GramBuffer(k, nLanes, nSys)
-    val res = proj.queryExecution.toRdd.treeAggregate(zero)(
+    val res = Jobs.treeReduce(proj.queryExecution.toRdd,
+      s"gram: ${nLanes}-lane ${nSys}-system pass")(zero)(
       seqOp = (buf, row) => {
         val lane = if (row.isNullAt(0)) -1 else row.getInt(0)
         if (lane >= 0 && lane < nLanes) {
@@ -431,8 +422,7 @@ object Gram {
         }
         buf
       },
-      combOp = (a, b) => a.merge(b),
-      depth = 2)
+      combOp = (a, b) => a.merge(b))
     Array.tabulate(nLanes)(l => Array.tabulate(nSys)(s => res.result(l, s)))
   }
 

@@ -9,17 +9,18 @@ import org.apache.spark.storage.StorageLevel
   *
   * The (lane, y, base weights, x) projection is evaluated ONCE through
   * Catalyst (so pruning/pushdown still apply), converted to primitive
-  * rows and persisted; each iteration is then a plain `treeAggregate`
+  * rows and persisted; each iteration is then a plain `Jobs.treeReduce`
   * closure over the cached RDD with no per-iteration planning — beta
   * literals would otherwise make every iteration's plan new.
   *
   * Invariant: every pass accumulates into a [[GramBuffer]] in the same
   * shape as the Gram scan it stands for — [[gram]] as
   * [[Gram.compute]] (`add`), [[gramMulti]] as [[Gram.computeMulti]]
-  * (`addOne` + per-row `bumpLane`) — over the same partitions, row order
-  * and `treeAggregate` depth. The estimators write their working-response
-  * arithmetic in the association order of the Column expressions that
-  * scan would evaluate, so a fit equals the per-iteration Gram route.
+  * (`addOne` + per-row `bumpLane`) — over the same partitions and row
+  * order, merged by the same `Jobs.treeReduce`. The estimators write
+  * their working-response arithmetic in the association order of the
+  * Column expressions that scan would evaluate, so a fit equals the
+  * per-iteration Gram route.
   *
   * Each row carries a lane index (`laneOf`, e.g. group A=0 / B=1) and
   * one base weight per entry of `wCols`; rows whose lane is null or
@@ -41,13 +42,10 @@ final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
       (laneOf.cast("int").as("__lane__") +: col(yCol).cast("double") +:
         (wCols.map(_.cast("double")) ++
           xCols.map(c => col(c).cast("double")))): _*)
-    // same fixed fan-out guard as Gram.computeMulti, decided ONCE at
-    // build: a replicate-heavy pass does ~nSys * stride flops per row,
-    // and a single-file scan would run all of it on one task
-    val proj =
-      if (nW >= 16 && proj0.queryExecution.toRdd.getNumPartitions < 16)
-        proj0.repartition(64)
-      else proj0
+    // Jobs.fanOut, as in Gram.computeMulti, decided ONCE at build: a
+    // replicate-heavy pass does ~nSys * stride flops per row, and a
+    // single-file scan would run all of it on one task
+    val proj = if (nW >= 16) Jobs.fanOut(proj0) else proj0
     val kk = k
     val nw = nW
     val nl = nLanes
@@ -82,8 +80,8 @@ final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
     val kk = k
     val xOff = 2 + nW
     val stride = strideV
-    val res = Jobs.labeled(df.sparkSession, "irls: iteration pass") {
-      rows.treeAggregate(new Buf(kk, 1, 1))(
+    val res = Jobs.treeReduce(rows, "irls: iteration pass")(
+      new Buf(kk, 1, 1))(
       seqOp = (buf, chunk) => {
         var off = 0
         while (off < chunk.length) {
@@ -97,9 +95,7 @@ final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
         }
         buf
       },
-      combOp = (x, y) => x.merge(y),
-      depth = 2)
-    }
+      combOp = (x, y) => x.merge(y))
     res.gb.result(0, 0)
   }
 
@@ -117,7 +113,8 @@ final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
     val nw = nW
     val stride = strideV
     val nSys = betas.length
-    val res = rows.treeAggregate(new Buf(kk, nLanes, nSys))(
+    val res = Jobs.treeReduce(rows, "irls: multi-system iteration pass")(
+      new Buf(kk, nLanes, nSys))(
       seqOp = (buf, chunk) => {
         var off = 0
         while (off < chunk.length) {
@@ -140,8 +137,7 @@ final class IrlsDesign(df: DataFrame, yCol: String, xCols: Seq[String],
         }
         buf
       },
-      combOp = (x, y) => x.merge(y),
-      depth = 2)
+      combOp = (x, y) => x.merge(y))
     Array.tabulate(nLanes)(l =>
       Array.tabulate(nSys)(s => res.gb.result(l, s)))
   }

@@ -1,13 +1,19 @@
 package graft.core
 
 import java.util.concurrent.{ExecutionException, FutureTask}
-import org.apache.spark.sql.SparkSession
+import scala.reflect.ClassTag
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Job labeling (guide §1.5): multi-pass operators set a description per
-  * phase so the UI / job-level profilers attribute cost to the phase, not
-  * to an anonymous AQE stage-materialization callsite. Descriptions are
-  * thread-local and AQE's stage futures capture them, so concurrent
-  * actions from different threads stay correctly labeled. */
+/** How the engine submits jobs. Job labeling (guide §1.5): multi-pass
+  * operators set a description per phase so the UI / job-level
+  * profilers attribute cost to the phase, not to an anonymous AQE
+  * stage-materialization callsite. Descriptions are thread-local and
+  * AQE's stage futures capture them, so concurrent actions from
+  * different threads stay correctly labeled. Every one-pass aggregation
+  * merges through [[treeReduce]] and fans out through [[fanOut]] or
+  * [[fanOutBy]]. */
 object Jobs {
   /** Labels the jobs `body` submits; the enclosing label (or none) is
     * restored afterwards, so nested phases do not clobber their parent. */
@@ -17,6 +23,35 @@ object Jobs {
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(outer)
   }
+
+  /** The engine's one merge site: partition buffers (Gram, KDE grid,
+    * sketch, covariance) merge up a depth-2 `treeAggregate` under
+    * `label`. `rdd` is evaluated under the label too, since planning a
+    * DataFrame's RDD runs its AQE shuffle stages. */
+  def treeReduce[T, B: ClassTag](rdd: => RDD[T], label: String)(zero: B)(
+      seqOp: (B, T) => B, combOp: (B, B) => B): B =
+    labeled(SparkSession.active, label) {
+      rdd.treeAggregate(zero)(seqOp, combOp, depth = 2)
+    }
+
+  /** Fan a scan of fewer than 16 partitions out to a FIXED 64 ahead of
+    * HEAVY per-row work (replicate-heavy Gram and IRLS passes, DFL's
+    * grid KDE, token hashing); otherwise return `df` itself. A single
+    * parquet file scans as ONE partition, so that work would run on one
+    * task. Cheap codegen Gram scans must not fan out: at sf0.1 the
+    * shuffle cost more than it saved (q_quantreg 1.4 -> 2.6 s). The
+    * fixed count keeps partition contents, and so every floating-point
+    * sum order, identical at any thread count. */
+  def fanOut(df: DataFrame): DataFrame =
+    if (narrow(df)) df.repartition(64) else df
+
+  /** [[fanOut]]'s test, but hash-partitioned on `key` into 32, ahead of
+    * a text operator's tokenize + explode: one id's rows land together. */
+  def fanOutBy(df: DataFrame, key: String): DataFrame =
+    if (narrow(df)) df.repartition(32, col(key)) else df
+
+  private def narrow(df: DataFrame): Boolean =
+    df.queryExecution.toRdd.getNumPartitions < 16
 
   /** Run two INDEPENDENT action chains concurrently (guide §2.6 —
     * overlap independent jobs: Spark happily runs several jobs at once;

@@ -69,7 +69,7 @@ object Dfl {
     //      the critical path; the grid pass reads the cached 64
     //      partitions (identical contents — round-robin from the same
     //      source layout — so every FP sum is unchanged).
-    val fanned0 = Prep.fanOut(df)
+    val fanned0 = Jobs.fanOut(df)
     val fanOutHappened = fanned0 ne df
     val fanned =
       if (fanOutHappened)

@@ -121,7 +121,8 @@ object Frontier {
     // is safe; null model values fail loudly as everywhere else.
     val stride = k + 1
     val zero = new Array[Double](steps * stride)
-    val acc = proj.queryExecution.toRdd.treeAggregate(zero)(
+    val acc = graft.core.Jobs.treeReduce(proj.queryExecution.toRdd,
+      "equity: frontier sweep")(zero)(
       seqOp = (buf, row) => {
         if (row.anyNull)
           throw graft.core.InvalidArgument(
@@ -146,8 +147,7 @@ object Frontier {
         }
         buf
       },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
+      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
 
     def statAt(xty: DenseVector[Double], yy: Double): (Double, Double, Boolean) = {
       val beta = covInv * xty

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Gaussian kernel density estimation + Silverman bandwidth
   * (`oaxaca_blinder/src/math/kde.rs:20-59`).
   *
-  * The grid evaluation is ONE `treeAggregate` pass accumulating all grid
+  * The grid evaluation is ONE `Jobs.treeReduce` pass accumulating all grid
   * sums per partition (no 100x explode, no collect of data). Weights are
   * normalized to 1 as in the reference.
   */
@@ -50,9 +50,8 @@ object Kde {
     // same doubles with zero copying. Fields are consumed immediately,
     // never stored, so row-buffer reuse is safe. Null model values threw
     // from the external route (Row.getDouble NPE); keep failing fast.
-    val acc = graft.core.Jobs.labeled(df.sparkSession,
-      s"kde: ${nL}-lane grid pass") {
-      proj.queryExecution.toRdd.treeAggregate(zero)(
+    val acc = graft.core.Jobs.treeReduce(proj.queryExecution.toRdd,
+      s"kde: ${nL}-lane grid pass")(zero)(
       seqOp = (buf, row) => {
         if (row.anyNull)
           throw graft.core.InvalidArgument(
@@ -98,9 +97,7 @@ object Kde {
         }
         buf
       },
-      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a },
-      depth = 2)
-    }
+      combOp = (a, b) => { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a })
     Array.tabulate(nL) { l =>
       val base = l * stride
       val sw = acc(base + m)

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Jobs
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -29,13 +30,10 @@ object Dedup {
     * The tokenize+explode multiplies each doc into hundreds of rows, so
     * a small-file corpus scan (few partitions) would serialize all that
     * work on one core; fan the INPUT out by id hash first when the scan
-    * has too little parallelism (deterministic row placement, same
-    * fixed-count discipline as the Gram kernel's repartition). */
+    * has too little parallelism ([[Jobs.fanOutBy]]: deterministic row
+    * placement at a fixed partition count). */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame = {
-    val in =
-      if (df.queryExecution.toRdd.getNumPartitions < 16)
-        df.repartition(32, col(idCol))
-      else df
+    val in = Jobs.fanOutBy(df, idCol)
     in.select(col(idCol), split(col(textCol), "\\s+").as("__toks__"))
       .filter(size(col("__toks__")) >= n)
       .select(col(idCol), explode(array_distinct(expr(

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * assignment, or near-dup thresholding on real embedding corpora.
   *
   * Scale shape: the d-dim mean and the d x d second-moment Gram are ONE
-  * `treeAggregate` pass (d(d+1)/2 + d + 1 accumulator doubles — for
+  * `Jobs.treeReduce` pass (d(d+1)/2 + d + 1 accumulator doubles — for
   * d = 1024 that is ~4 MB per partition, driver gets one copy); the
   * eigen-solve is driver-side power iteration on the d x d covariance
   * (trivial at any corpus size — d never grows with the data); the
@@ -75,7 +75,8 @@ object Embeddings {
     val tri = d * (d + 1) / 2
     // layout: [0] = n, [1..d] = sums, [1+d ..] = upper-triangle products
     val zero = new Array[Double](1 + d + tri)
-    val acc = proj.rdd.treeAggregate(zero)(
+    val acc = graft.core.Jobs.treeReduce(proj.rdd,
+      "embeddings: mean/covariance pass")(zero)(
       seqOp = (buf, row) => {
         val x = row.getSeq[Double](0)
         require(x.length == d,
@@ -94,8 +95,7 @@ object Embeddings {
       },
       combOp = (a, b) => {
         var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      },
-      depth = 2)
+      })
     val n = acc(0).toLong
     require(n >= 2, s"need at least 2 vectors to fit a covariance, got $n")
     val mean = Array.tabulate(d)(i => acc(1 + i) / n)

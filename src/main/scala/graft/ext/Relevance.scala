@@ -1,6 +1,6 @@
 package graft.ext
 
-import graft.core.OperatorCaches
+import graft.core.{Jobs, OperatorCaches}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,13 +14,10 @@ import org.apache.spark.sql.functions._
 object Relevance {
 
   /** Non-distinct whitespace tokens per doc (one row per occurrence),
-    * fanned out when the source scan has too little parallelism (same
-    * small-file discipline as [[Dedup.shingles]]). */
+    * fanned out by [[Jobs.fanOutBy]] when the source scan has too little
+    * parallelism. */
   def tokens(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val in =
-      if (df.queryExecution.toRdd.getNumPartitions < 16)
-        df.repartition(32, col(idCol))
-      else df
+    val in = Jobs.fanOutBy(df, idCol)
     in.select(col(idCol),
         explode(split(col(textCol), "\\s+")).as("term"))
       .filter(col("term") =!= "")

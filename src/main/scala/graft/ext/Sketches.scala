@@ -1,11 +1,12 @@
 package graft.ext
 
+import graft.core.Jobs
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
 
 /** Mergeable frequency sketches — the approximate-aggregation pattern
   * for corpora where exact per-token state is too big: each partition
   * folds its rows into a fixed depth x width count grid, grids add
-  * elementwise up the treeAggregate combiner, and the driver holds one
+  * elementwise up the `Jobs.treeReduce` combiner, and the driver holds one
   * O(depth * width) result no matter the corpus size. Estimates
   * overcount only (min over depth rows), never undercount.
   *
@@ -99,7 +100,7 @@ object Sketches {
     md5Hash56(s"lc:$seed:$item")
 
   /** Per-group linear counters over whitespace tokens, ALL groups in
-    * ONE treeAggregate pass (per-group bitmap lanes — the GroupedOls
+    * ONE `Jobs.treeReduce` pass (per-group bitmap lanes — the GroupedOls
     * pattern): a tiny distinct-levels job, then one scan folding each
     * partition's (group, token) stream into |groups| bitmaps of m bits.
     * Null groups are skipped. */
@@ -110,11 +111,11 @@ object Sketches {
       .na.drop().distinct().collect().map(_.getString(0)).sorted
     val idx = levels.zipWithIndex.toMap
     val words = m / 64
-    val toks = graft.prep.Prep.fanOut(
+    val toks = Jobs.fanOut(
       df.select(F.col(groupCol).cast("string"),
         F.split(F.col(textCol), "\\s+").as("__toks__")))
     val zero = new Array[Long](levels.length * words)
-    val acc = toks.rdd.treeAggregate(zero)(
+    val acc = Jobs.treeReduce(toks.rdd, "sketch: linear count")(zero)(
       seqOp = (buf, row) => {
         if (!row.isNullAt(0)) {
           val base = idx(row.getString(0)) * words
@@ -133,8 +134,7 @@ object Sketches {
       },
       combOp = (a, b) => {
         var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-      },
-      depth = 2)
+      })
     levels.map { l =>
       l -> LinearCounter(m, seed,
         acc.slice(idx(l) * words, (idx(l) + 1) * words))
@@ -205,14 +205,14 @@ object Sketches {
   private[ext] def bfHash(seed: Long, item: String): Long =
     md5Hash56(s"bf:$seed:$item")
 
-  /** Bloom over the values of `itemCol` in ONE treeAggregate pass. */
+  /** Bloom over the values of `itemCol` in ONE `Jobs.treeReduce` pass. */
   def bloomOf(df: DataFrame, itemCol: String, m: Int = 4096, k: Int = 4,
       seed: Long = 7L): Bloom = {
     require(m >= 64 && m % 64 == 0, "m must be a positive multiple of 64")
     require(k >= 1, "k must be >= 1")
     val items = df.select(F.col(itemCol).cast("string")).na.drop()
     val zero = new Array[Long](m / 64)
-    val acc = items.rdd.treeAggregate(zero)(
+    val acc = Jobs.treeReduce(items.rdd, "sketch: bloom")(zero)(
       seqOp = (buf, row) => {
         val (h1, h2) = CountMin.split(bfHash(seed, row.getString(0)))
         var r = 0
@@ -225,23 +225,22 @@ object Sketches {
       },
       combOp = (a, b) => {
         var i = 0; while (i < a.length) { a(i) |= b(i); i += 1 }; a
-      },
-      depth = 2)
+      })
     Bloom(m, k, seed, acc)
   }
 
   /** Build a count-min sketch of whitespace tokens of `textCol` in ONE
-    * treeAggregate pass (the corpus never shuffles; partial grids merge
+    * `Jobs.treeReduce` pass (the corpus never shuffles; partial grids merge
     * pairwise). The input fans out first: token hashing is heavy
     * per-row work and a single-file scan would otherwise run it on one
     * task. */
   def countMinTokens(df: DataFrame, textCol: String, depth: Int = 4,
       width: Int = 512, seed: Long = 7L): CountMin = {
     require(depth >= 1 && width >= 2, "need depth >= 1, width >= 2")
-    val toks = graft.prep.Prep.fanOut(
+    val toks = Jobs.fanOut(
       df.select(F.split(F.col(textCol), "\\s+").as("__toks__")))
     val zero = new Array[Long](depth * width + 1) // grid ++ total
-    val acc = toks.rdd.treeAggregate(zero)(
+    val acc = Jobs.treeReduce(toks.rdd, "sketch: count-min")(zero)(
       seqOp = (buf, row) => {
         val ts = row.getSeq[String](0)
         var i = 0
@@ -262,8 +261,7 @@ object Sketches {
       },
       combOp = (a, b) => {
         var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a
-      },
-      depth = 2)
+      })
     CountMin(depth, width, seed, acc(depth * width),
       Array.tabulate(depth, width)((r, b) => acc(r * width + b)))
   }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Jobs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -107,10 +108,7 @@ object TextAnalysis {
     * on (doc, gram) then doc — scales like any inverted index. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String,
       n: Int): DataFrame = {
-    val in =
-      if (df.queryExecution.toRdd.getNumPartitions < 16)
-        df.repartition(32, col(idCol))
-      else df
+    val in = Jobs.fanOutBy(df, idCol)
     val grams = in
       .select(col(idCol), split(col(textCol), "\\s+").as("__toks__"))
       .filter(size(col("__toks__")) >= n)

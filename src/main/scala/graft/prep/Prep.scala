@@ -170,24 +170,6 @@ object Prep {
     (out, infos)
   }
 
-  /** Fan a small input out to a FIXED partition count ahead of a kernel
-    * with HEAVY per-row work. A single parquet file scans as ONE
-    * partition (and a `.persist` inherits that), so e.g. per-row hash
-    * draws or 100-point KDE grids would run on one task no matter how
-    * many cores exist. Use it ONLY where per-row work dominates
-    * (q_bootstrap8's md5 draws, DFL's grid KDE): for cheap codegen Gram
-    * scans a measured A/B at sf0.1 showed the shuffle + per-task
-    * overhead COSTS more than single-task execution saves (q_quantreg
-    * 1.4 -> 2.6 s fanned out), and any input big enough for parallelism
-    * to matter there already carries enough scan partitions. The fixed
-    * count keeps partition contents — and therefore every
-    * floating-point sum order — identical at any thread count (the same
-    * determinism argument as Gram's replicate fan-out). */
-  def fanOut(df: DataFrame, minParts: Int = 16, target: Int = 64): DataFrame =
-    if (df.queryExecution.toRdd.getNumPartitions < minParts)
-      df.repartition(target)
-    else df
-
   /** Add the intercept column and return the design column order:
     * [intercept, numeric predictors..., dummy columns...]
     * (`oaxaca_blinder/src/builder.rs:294-378`). */

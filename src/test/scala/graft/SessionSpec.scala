@@ -11,7 +11,8 @@ class SessionSpec extends SparkSpec {
       "spark.master" -> "local[4]",
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false"))
+      "spark.ui.enabled" -> "false",
+      "spark.log.level" -> "ERROR"))
   }
 
   test("SPARK_GRAFT_CPUS sets both the local cores and the partitions") {

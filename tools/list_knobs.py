@@ -7,7 +7,10 @@ vars are only ever read through literals or constants holding them);
 mentions in comments do not count. Exits 1 if a `spark.graft.*` key or
 a `SPARK_GRAFT_*` env var is missing from README.md, so a new knob
 cannot ship undocumented, or if an env var is read at more than one
-site, so two mains cannot drift apart on its default again.
+site, so two mains cannot drift apart on its default again. Also exits
+1 if a `treeAggregate(` call or a `getNumPartitions < 16` fan-out test
+appears outside core/Jobs.scala: partition buffers merge, and small
+scans fan out, at one site each (`Jobs.treeReduce`, `Jobs.fanOut`).
 
 Usage: python3 tools/list_knobs.py
 """
@@ -17,10 +20,13 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PATTERN = re.compile(r'"((?:spark\.graft\.[A-Za-z0-9_.]+)|(?:SPARK_GRAFT_[A-Z0-9_]+))"')
+JOBS = os.path.join("src", "main", "scala", "graft", "core", "Jobs.scala")
+ONE_SITE = ("treeAggregate(", "getNumPartitions < 16")
 
 
 def scan():
     knobs = {}
+    strays = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -33,11 +39,13 @@ def scan():
                     code = line.split("//", 1)[0]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
-    return knobs
+                    if rel != JOBS and not code.lstrip().startswith(("*", "/*")):
+                        strays += [f"{rel}:{n}: {p}" for p in ONE_SITE if p in code]
+    return knobs, strays
 
 
 def main():
-    knobs = scan()
+    knobs, strays = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -52,7 +60,9 @@ def main():
         print(f"MISSING from README.md: {k}", file=sys.stderr)
     for k in repeated:
         print(f"READ AT {len(knobs[k])} SITES (one allowed): {k}", file=sys.stderr)
-    return 1 if missing or repeated else 0
+    for s in strays:
+        print(f"OUTSIDE core/Jobs.scala: {s}", file=sys.stderr)
+    return 1 if missing or repeated or strays else 0
 
 
 if __name__ == "__main__":
