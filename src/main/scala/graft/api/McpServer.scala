@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.core.Session
+import graft.core.{InvalidArgument, Session}
 import graft.decompose.RefCoefficients
 import graft.equity._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -103,8 +103,18 @@ object McpServer {
       case _ => RefCoefficients.Pooled
     }
 
-  private def reps(a: JValue): Int =
-    math.min((a \ "bootstrap_reps").extractOrElse[Int](100), 10000)
+  private def reps(a: JValue): Int = {
+    val r = (a \ "bootstrap_reps").extractOrElse[Int](100)
+    if (r < 0)
+      throw InvalidArgument(s"bootstrap_reps must be >= 0, got $r")
+    math.min(r, 10000)
+  }
+
+  /** Rows the server collects anyway are sorted by row id here, on the
+    * driver: the engine's sorted views pay a range-sampling job and a
+    * shuffle for the same order. Row ids are unique longs in column 0. */
+  private def collectById(df: DataFrame): List[Row] =
+    df.collect().toList.sortBy(_.getLong(0))
 
   private def jOpt(v: Option[Double]): JValue =
     v.map(JDouble(_)).getOrElse(JNull)
@@ -145,7 +155,7 @@ object McpServer {
   }
 
   private def optimizationJson(res: OptimizeResult): JValue = {
-    val adjRows = res.adjustments.collect().toList
+    val adjRows = collectById(res.adjustmentsUnsorted)
     JObject(
       "adjustments" -> JArray(adjRows.map { r =>
         JObject(
@@ -225,8 +235,8 @@ object McpServer {
         StructType(Seq(StructField(RowId, LongType, nullable = false),
           StructField("predictor", StringType),
           StructField("value", org.apache.spark.sql.types.DoubleType)))))
-    val judged = Equity.checkDefensibility(df, adjDf, overrides, RowId,
-      "value", cfgOf(a)).collect().toList
+    val judged = collectById(Equity.defensibilityVerdicts(df, adjDf,
+      overrides, RowId, "value", cfgOf(a)))
     JArray(judged.map { r =>
       JObject(
         "index" -> JLong(r.getLong(0)),
@@ -242,10 +252,11 @@ object McpServer {
   }
 
   private def efficientFrontier(spark: SparkSession, a: JValue): JValue = {
+    val steps = (a \ "steps").extractOrElse[Int](50)
+    if (steps < 1) throw InvalidArgument(s"steps must be >= 1, got $steps")
     val df = csvToDf(spark, (a \ "csv_content").extract[String])
     val pts = Frontier.compute(df, cfgOf(a), RowId,
-      maxBudget = (a \ "max_budget").extractOpt[Double],
-      steps = (a \ "steps").extractOrElse[Int](50))
+      maxBudget = (a \ "max_budget").extractOpt[Double], steps = steps)
     JArray(pts.map(p => JObject(
       "budget" -> JDouble(p.budget),
       "t_statistic" -> JDouble(p.tStatistic),

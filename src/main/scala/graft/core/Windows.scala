@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * A plain `Window.orderBy(...)` with no partition key collapses to ONE
   * task in Spark — fine at test scale, fatal at 100 TB. This helper
   * computes the same exclusive running sum by bucketing on the VALUE of
-  * the ordering key (boundaries from one approxQuantile pass, frozen as
-  * literals), then per-bucket windows plus a bucket-count-sized offset
+  * the ordering key (boundaries from one approxQuantile pass, frozen
+  * into the plan), then per-bucket windows plus a bucket-count-sized offset
   * table. Because the bucket of a row is a pure function of its key —
   * not of partition ids or range-sampling seeds — re-executions of the
   * returned plan are always self-consistent and deterministic.
@@ -140,16 +140,14 @@ object Windows {
         .agg(sum(col("__val__")).as("__tot__"))
         .collect()
     }.map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
-    var offsets = Map.empty[(Int, Int), Double]
     var acc = 0.0
-    totals.keys.toSeq.sorted.foreach { k =>
-      offsets += k -> acc
+    val offsets = totals.keys.toSeq.sorted.map { k =>
+      val off = acc
       acc += totals(k)
+      k -> off
     }
-    val offCol = offsets.foldLeft(lit(0.0)) { case (c, ((b, s), off)) =>
-      when(col("__bucket__") === lit(b) && col("__sub__") === lit(s),
-        lit(off)).otherwise(c)
-    }
+    val offCol = graft.functions.KeyedOffset(col("__bucket__"),
+      col("__sub__"), offsets)
     withLocal.withColumn(outCol, col("__local_prefix__") + offCol)
       .drop("__pfx_key__", "__bucket__", "__sub__", "__val__",
         "__local_prefix__")

@@ -2,6 +2,7 @@ package graft.decompose
 
 import graft.core._
 import graft.estimators.{Kde, Logit}
+import graft.functions.Param
 import graft.prep.Prep
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -78,9 +79,7 @@ object Dfl {
     try {
       val ((levelA, fit), ((bws, extras), _)) = Jobs.par2(
         {
-          val levels = Jobs.labeled(df.sparkSession, "dfl: group levels") {
-            Prep.groupLevels(df, group)
-          }
+          val levels = Prep.groupLevels(df, group)
           if (!levels.contains(reference))
             throw InvalidGroupVariable(s"Reference level '$reference' not found")
           val levelA = levels.filter(_ != reference).headOption.getOrElse(
@@ -123,7 +122,7 @@ object Dfl {
       // pass is the only work left on the critical path here.
       val isA = g === lit(levelA)
       val isB = g === lit(reference)
-      val psi = (p / (lit(1.0) - p)) * lit(ratioMarginal)
+      val psi = (p / (lit(1.0) - p)) * Param(ratioMarginal)
       val dens = Kde.onGridMulti(fanned, outcome,
         Seq(when(isA, 1.0).otherwise(0.0),
           when(isB, 1.0).otherwise(0.0),

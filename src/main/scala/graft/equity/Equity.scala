@@ -4,6 +4,7 @@ import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.core._
 import graft.decompose.{Oaxaca, OaxacaConfig, OaxacaResults, RefCoefficients}
 import graft.estimators.Ols
+import graft.functions.Param
 import graft.prep.Prep
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -70,7 +71,7 @@ final case class FairModel(
   def leverageCol: Column = {
     val k = xCols.size
     val terms = for (i <- 0 until k; j <- 0 until k) yield
-      col(xCols(i)).cast("double") * col(xCols(j)).cast("double") * lit(covInv(i, j))
+      col(xCols(i)).cast("double") * col(xCols(j)).cast("double") * Param(covInv(i, j))
     terms.reduce(_ + _)
   }
 
@@ -80,7 +81,7 @@ final case class FairModel(
     val fair = fairWageCol
     if (sigma2 <= 1e-9) (fair, fair)
     else {
-      val margin = lit(zScore) * sqrt(lit(sigma2) * (lit(1.0) + leverageCol))
+      val margin = Param(zScore) * sqrt(Param(sigma2) * (lit(1.0) + leverageCol))
       (fair - margin, fair + margin)
     }
   }
@@ -290,7 +291,7 @@ object Equity {
           boundariesOverride = prefixBoundaries)
         val withPay = withPrefix.withColumn("__pay__",
           greatest(lit(0.0), least(col("__diff__"),
-            lit(effectiveBudget) - col("__spent_before__"))))
+            Param(effectiveBudget) - col("__spent_before__"))))
         candidates.filter(!col("__eligible__"))
           .withColumn("__spent_before__", lit(0.0))
           .withColumn("__pay__", lit(0.0))
@@ -299,7 +300,7 @@ object Equity {
         val ratio = if (totalNeed > 0.0)
           math.min(effectiveBudget / totalNeed, 1.0) else 0.0
         candidates.withColumn("__pay__",
-          when(col("__eligible__"), col("__diff__") * lit(ratio)).otherwise(0.0))
+          when(col("__eligible__"), col("__diff__") * Param(ratio)).otherwise(0.0))
     }
 
     // lazy: every caller consumes the allocation exactly once, so its
@@ -398,10 +399,19 @@ object Equity {
   /** G5 `check_defensibility_inner` (`engine/src/defensibility.rs:9-388`):
     * apply predictor overrides by row id, refit the fair model on the
     * overridden reference group, then judge each proposed adjustment:
-    * defensible iff new wage >= lower PI bound - 1.0. */
+    * defensible iff new wage >= lower PI bound - 1.0. Ordered by row id. */
   def checkDefensibility(df: DataFrame, adjustments: DataFrame,
       overrides: Option[DataFrame], idCol: String, deltaCol: String,
-      cfg: EquityConfig): DataFrame = {
+      cfg: EquityConfig): DataFrame =
+    defensibilityVerdicts(df, adjustments, overrides, idCol, deltaCol, cfg)
+      .orderBy(col(idCol))
+
+  /** [[checkDefensibility]] without the output contract's `ORDER BY id`
+    * — for a caller that collects the verdicts anyway and sorts them on
+    * the driver, where a range-shuffle sort is pure waste. */
+  private[graft] def defensibilityVerdicts(df: DataFrame,
+      adjustments: DataFrame, overrides: Option[DataFrame], idCol: String,
+      deltaCol: String, cfg: EquityConfig): DataFrame = {
     // overrides: long-format (id, predictor, value) -> wide coalesce
     val overridden = overrides match {
       case None => df
@@ -424,7 +434,7 @@ object Equity {
 
   /** Judging half of [[checkDefensibility]] on an already-prepared frame
     * and already-fitted fair model — the shared-prep path for G5
-    * compositions (`engine/src/defensibility.rs:200-388`). */
+    * compositions (`engine/src/defensibility.rs:200-388`). Unsorted. */
   private[graft] def checkDefensibilityPrepared(p: EquityPrep,
       model: FairModel, adjustments: DataFrame, idCol: String,
       deltaCol: String, cfg: EquityConfig): DataFrame = {
@@ -452,7 +462,6 @@ object Equity {
         col("new_wage"), col("fair_wage"), col("fair_wage_lower_bound"),
         col("fair_wage_upper_bound"), col("is_defensible"),
         col("defensibility_message"))
-      .orderBy(col(idCol))
   }
 
   /** G2+G5 composed: one prepare + Gram feeds both the optimizer and the
@@ -481,7 +490,8 @@ object Equity {
     // over deterministic buckets), so a caller consuming it twice
     // recomputes identical rows — it just pays the join twice, which
     // is the right default for the 1-consumer contract.
-    (opt, checkDefensibilityPrepared(p, model, adj, idCol, "adjustment", cfg))
+    (opt, checkDefensibilityPrepared(p, model, adj, idCol, "adjustment", cfg)
+      .orderBy(col(idCol)))
   }
 
   /** G1 `decompose_inner` result (`engine/src/analysis.rs:98-307`):

@@ -2,6 +2,7 @@ package graft.estimators
 
 import breeze.linalg.DenseVector
 import graft.core._
+import graft.functions.Param
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -635,7 +636,7 @@ object Akm {
     val rCol =
       if (controls.isEmpty) col("__v0__")
       else col("__v0__") - vecCols.tail.zipWithIndex
-        .map { case (c, i) => col(c) * lit(beta(i)) }.reduce(_ + _)
+        .map { case (c, i) => col(c) * Param(beta(i)) }.reduce(_ + _)
     val withR = obs.withColumn("__r__", rCol).localCheckpoint()
 
     var alpha = withR.select(col("w")).distinct()
@@ -693,7 +694,7 @@ object Akm {
       .withColumn("__pred__",
         (if (controls.isEmpty) lit(0.0)
          else vecCols.tail.zipWithIndex
-           .map { case (c, i) => col(c) * lit(beta(i)) }.reduce(_ + _)) +
+           .map { case (c, i) => col(c) * Param(beta(i)) }.reduce(_ + _)) +
           col("__a__") + col("__p__"))
     val stats = pred.agg(
       sum(pow(col("__v0__") - col("__pred__"), 2)).as("rss"),

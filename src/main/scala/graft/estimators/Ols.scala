@@ -2,6 +2,7 @@ package graft.estimators
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import graft.core._
+import graft.functions.Param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -57,10 +58,11 @@ object Ols {
       wCol: Option[String] = None): OlsFit =
     fromGram(Gram.compute(df, yCol, xCols, wCol), xCols)
 
-  /** Fitted-value column x'beta — pure codegen arithmetic, no UDF. */
+  /** Fitted-value column x'beta — pure codegen arithmetic, no UDF; the
+    * coefficients enter as [[graft.functions.Param]]s. */
   def predictionCol(xCols: Seq[String], beta: DenseVector[Double]): Column =
     xCols.zipWithIndex
-      .map { case (c, i) => col(c).cast("double") * lit(beta(i)) }
+      .map { case (c, i) => col(c).cast("double") * Param(beta(i)) }
       .reduce(_ + _)
 
   /** Residual column y - x'beta. */

@@ -566,7 +566,7 @@ object Dedup {
     val pairScheme = threshold >= PairKeyMinThreshold
     if (nHotExplicit > 0L) log.warn(
       s"ngramJaccardPairs: explicit maxShingleDf=${maxShingleDf.get} " +
-        s"fires — dropping $nHotExplicit hot shingles from candidate " +
+        s"fires: dropping $nHotExplicit hot shingles from candidate " +
         "generation; pairs overlapping ONLY on those shingles " +
         "will not be discovered")
     val keysPlain = keyIndexFused(sh, dfTab, idCol, threshold, pairScheme,
@@ -590,7 +590,7 @@ object Dedup {
       // the moment it is made, not reconstructed after the fact
       val (nKeysDropped, massDropped) = droppedAboveCap(keyHisto.get, cap)
       log.warn(
-        s"ngramJaccardPairs: budget cap fires — dropping $nKeysDropped " +
+        s"ngramJaccardPairs: budget cap fires: dropping $nKeysDropped " +
           s"index keys with df > $cap, an estimated $massDropped " +
           s"candidate pairs cut before verification " +
           s"(candidateBudget=${effBudget.get}" +

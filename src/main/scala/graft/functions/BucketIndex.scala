@@ -22,12 +22,14 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * method large enough to trip codegen/JIT limits — the round-11
   * interleaving doubled it and measurably fell off the compiled path.
   * This expression is O(log k) with a fixed, tiny method body: one
-  * `Arrays.binarySearch` against a per-query static array. */
+  * `Arrays.binarySearch` against a per-query static array. The hash
+  * ignores the boundaries, for the reason [[ParamExpr]] gives. */
 case class BucketIndexExpr(child: Expression, boundaries: Array[Double])
     extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
   override def prettyName: String = "bucket_index"
+  override def hashCode: Int = (prettyName, child).hashCode
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess

@@ -3,6 +3,8 @@ package graft.prep
 import graft.core._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Data preparation operators (SURVEY §2.2). All are lazy DataFrame
   * transformations — Catalyst prunes/pushes them into the scan. */
@@ -31,9 +33,37 @@ object Prep {
   final case class GroupSplit(levelA: String, levelB: String,
       dfA: DataFrame, dfB: DataFrame, indicatorA: Column)
 
+  /** Sorted distinct non-null levels of `groupCol` (Spark's binary
+    * string order, see [[utf8Sorted]]). */
   def groupLevels(df: DataFrame, groupCol: String): Seq[String] =
-    df.select(col(groupCol).cast("string")).na.drop().distinct()
-      .orderBy(col(groupCol)).collect().map(_.getString(0)).toSeq
+    groupLevelsOf(df, Seq(groupCol)).head
+
+  /** [[groupLevels]] of every column in `cols`, in ONE labeled job: each
+    * partition collects its distinct strings per column, the sets merge
+    * up the tree and are sorted on the driver. A `distinct` + `orderBy`
+    * + `collect` costs four jobs under AQE (shuffle, range sample,
+    * shuffle, result) for what one scan already knows. */
+  def groupLevelsOf(df: DataFrame, cols: Seq[String]): Seq[Seq[String]] = {
+    val n = cols.size
+    val zero = Array.fill(n)(mutable.HashSet.empty[UTF8String])
+    val sets = Jobs.treeReduce(
+      df.select(cols.map(c => col(c).cast("string")): _*).queryExecution.toRdd,
+      "prep: group levels")(zero)(
+      seqOp = (acc, row) => {
+        var i = 0
+        while (i < n) {
+          if (!row.isNullAt(i)) {
+            val v = row.getUTF8String(i)
+            // the row buffer is reused: copy only strings not seen yet
+            if (!acc(i).contains(v)) acc(i) += v.clone()
+          }
+          i += 1
+        }
+        acc
+      },
+      combOp = (a, b) => { var i = 0; while (i < n) { a(i) ++= b(i); i += 1 }; a })
+    sets.toSeq.map(s => utf8Sorted(s.toSeq.map(_.toString)))
+  }
 
   def splitGroups(df: DataFrame, groupCol: String, reference: String): GroupSplit = {
     val levels = groupLevels(df, groupCol)
@@ -58,8 +88,8 @@ object Prep {
 
   /** Sort by UTF-8 bytes — Spark's binary string collation, which
     * differs from JVM UTF-16 code-unit order for supplementary-plane
-    * characters. Level choices made driver-side must match
-    * [[groupLevels]]' Spark `orderBy` exactly. */
+    * characters. Every level choice made driver-side sorts with it, so
+    * levels order as a Spark `orderBy` would order them. */
   def utf8Sorted(values: Seq[String]): Seq[String] = values.sortWith { (x, y) =>
     val a = x.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val b = y.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -153,8 +183,9 @@ object Prep {
     * the detailed decomposition stays addressable per `{var}_{level}`. */
   def oneHot(df: DataFrame, categoricals: Seq[String]): (DataFrame, Seq[DummyInfo]) = {
     var out = df
-    val infos = categoricals.map { v =>
-      val levels = groupLevels(df, v)
+    val allLevels =
+      if (categoricals.isEmpty) Nil else groupLevelsOf(df, categoricals)
+    val infos = categoricals.zip(allLevels).map { case (v, levels) =>
       if (levels.size < 2)
         throw InvalidGroupVariable(
           s"Categorical '$v' must have at least 2 levels, found ${levels.size}")
@@ -210,14 +241,22 @@ object Prep {
     })
     if (needCheck.nonEmpty) {
       // try_cast (not cast): ANSI mode would throw mid-scan on the first
-      // bad value instead of letting us report the offending column
-      val checks = needCheck.flatMap(c => Seq(
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"pre_$c"),
-        sum(when(expr(s"try_cast(`$c` AS DOUBLE)").isNull, 1L).otherwise(0L))
-          .as(s"post_$c")))
-      val row = df.agg(checks.head, checks.tail: _*).head()
+      // bad value instead of letting us report the offending column.
+      // One labeled job: null counts before and after the cast, per
+      // column, summed up the tree (an agg + head is two jobs under AQE)
+      val flags = needCheck.flatMap(c =>
+        Seq(col(c).isNull, expr(s"try_cast(`$c` AS DOUBLE)").isNull))
+      val m = flags.size
+      val nulls = Jobs.treeReduce(df.select(flags: _*).queryExecution.toRdd,
+        "prep: strict-cast check")(new Array[Long](m))(
+        seqOp = (acc, row) => {
+          var i = 0
+          while (i < m) { if (row.getBoolean(i)) acc(i) += 1; i += 1 }
+          acc
+        },
+        combOp = (a, b) => { var i = 0; while (i < m) { a(i) += b(i); i += 1 }; a })
       needCheck.zipWithIndex.foreach { case (c, i) =>
-        if (row.getLong(2 * i + 1) > row.getLong(2 * i))
+        if (nulls(2 * i + 1) > nulls(2 * i))
           throw InvalidArgument(s"Column '$c' contains non-numeric data " +
             "but was selected as a continuous variable.")
       }

@@ -1,10 +1,12 @@
 package graft
 
+import graft.api.McpServer
 import graft.core.Gram
 import graft.decompose.{BudgetOptimizer, Oaxaca, OaxacaConfig}
 import graft.equity._
 import graft.estimators.Ols
 import graft.prep.Prep
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Budget optimizer goldens (`tests/optimize_budget_test.rs:1-71`, F4)
@@ -232,5 +234,43 @@ class EquitySpec extends SparkSpec {
       assert(r.getAs[Boolean]("is_defensible"),
         s"row ${r.getAs[Long]("id")} not defensible: ${r.getAs[String]("defensibility_message")}")
     }
+  }
+
+  test("fitted values stay out of the generated code of the allocation and the verdicts") {
+    // two payloads that differ only in their outcome values: the betas,
+    // sigma^2, fair wages, budget split, prefix-sum boundaries and
+    // offsets all differ between them
+    def payload(shift: Int): DataFrame = {
+      val rows = (0 until 240).map { i =>
+        val edu = 8 + i % 9
+        val exp = i * 7 % 13
+        val g = if (i % 3 == 0) "F" else "M"
+        val noise = ((i * 37 + shift * 53) % 101 - 50) * (40.0 + shift)
+        val wage = 30000.0 + 1500.0 * edu + 800.0 * exp -
+          (if (g == "F") 3000.0 else 0.0) + noise
+        s"$wage,$edu,$exp,$g,${if (i % 2 == 0) "eng" else "sales"}"
+      }
+      McpServer.csvToDf(spark,
+        ("wage,education,experience,gender,department" +: rows).mkString("\n"))
+    }
+    val cfg = f11cfg.copy(budget = 20000.0)
+    val id = McpServer.RowId
+    val adj = Seq((3L, 500.0), (10L, 1200.0), (31L, 50.0)).toDF(id, "value")
+    def sources(df: DataFrame): (Seq[String], Seq[String], Seq[Double]) = {
+      val res = Equity.optimize(df, cfg, id)
+      assert(res.metrics.requiredBudget > cfg.budget, "the prefix-sum path must run")
+      val verdicts = Equity.defensibilityVerdicts(df, adj, None, id, "value", cfg)
+      def code(q: DataFrame): Seq[String] = {
+        q.collect() // AQE's final plan holds every codegen stage
+        q.queryExecution.debug.codegenToSeq().map(_._2).sorted
+      }
+      (code(res.adjustmentsUnsorted), code(verdicts), res.model.beta.toArray.toSeq)
+    }
+    val (alloc1, verd1, beta1) = sources(payload(0))
+    val (alloc2, verd2, beta2) = sources(payload(1))
+    assert(beta1 != beta2)
+    assert(alloc1.nonEmpty && verd1.nonEmpty)
+    assert(alloc1 == alloc2, "the allocation plan's generated source depends on fitted values")
+    assert(verd1 == verd2, "the verdicts' generated source depends on fitted values")
   }
 }

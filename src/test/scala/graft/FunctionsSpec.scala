@@ -1,11 +1,16 @@
 package graft
 
-import graft.functions.{CenteredDot, DotProduct}
+import graft.functions.{CenteredDot, DotProduct, KeyedOffset, KeyedOffsetExpr, Param, ParamExpr}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Unit coverage for the native array kernels (DotProductExpr /
   * CenteredDotExpr) — value equivalence with the higher-order-function
-  * formulations they replaced, float widening, and null semantics. */
+  * formulations they replaced, float widening, and null semantics — and
+  * for the parameter leaves (ParamExpr, KeyedOffsetExpr). */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -85,6 +90,54 @@ class FunctionsSpec extends SparkSpec {
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)))
     }
+  }
+
+  test("Param: codegen equals eval, the optimizer keeps it, the hash ignores the value") {
+    val vs = Seq(0.1, -1234.5678e-3, Double.MaxValue, -0.0, Double.NaN)
+    vs.foreach { v =>
+      // GenerateUnsafeProjection compiles or throws: no interpreted fallback
+      val gen = GenerateUnsafeProjection.generate(Seq(ParamExpr(v)))
+        .apply(InternalRow.empty).getDouble(0)
+      val interp = ParamExpr(v).eval(null).asInstanceOf[Double]
+      assert(java.lang.Double.doubleToRawLongBits(gen) ==
+        java.lang.Double.doubleToRawLongBits(interp))
+      assert(java.lang.Double.doubleToRawLongBits(interp) ==
+        java.lang.Double.doubleToRawLongBits(v))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Tuple1(3.0), Tuple1(-0.5)), 2)).toDF("x")
+    val q = df.select((Param(0.1) * lit(3.0) + col("x") * Param(0.7)).as("y"))
+    val opt = q.queryExecution.optimizedPlan
+    assert(opt.expressions.exists(_.exists(_.isInstanceOf[ParamExpr])), opt.toString)
+    assert(!opt.expressions.exists(_.exists {
+      case l: Literal => l.value == 0.1 * 3.0
+      case _ => false
+    }), s"the optimizer folded a parameter: $opt")
+    assert(q.collect().map(_.getDouble(0)).toSeq ==
+      Seq(0.1 * 3.0 + 3.0 * 0.7, 0.1 * 3.0 + -0.5 * 0.7))
+    assert(ParamExpr(1.0).hashCode == ParamExpr(2.0).hashCode)
+    assert(ParamExpr(1.0).semanticHash() == ParamExpr(2.0).semanticHash())
+    assert(ParamExpr(1.0) != ParamExpr(2.0))
+    assert(!ParamExpr(1.0).semanticEquals(ParamExpr(2.0)))
+  }
+
+  test("KeyedOffset: codegen equals eval; an absent key or a null input gives 0") {
+    val table = Seq((0, 0) -> 0.0, (1, 0) -> 2.5, (1, 3) -> 7.25, (4, -1) -> -1.5)
+    val e = org.apache.spark.sql.GraftSqlBridge
+      .expression(KeyedOffset(col("b"), col("s"), table))
+      .asInstanceOf[KeyedOffsetExpr]
+    val bound = e.copy(left = BoundReference(0, IntegerType, nullable = true),
+      right = BoundReference(1, IntegerType, nullable = true))
+    val proj = GenerateUnsafeProjection.generate(Seq(bound))
+    val cases = table.map { case ((b, s), o) => (Option(b), Option(s), o) } ++
+      Seq((Some(1), Some(1), 0.0), (Some(9), Some(0), 0.0),
+        (None, Some(0), 0.0), (Some(1), None, 0.0))
+    cases.foreach { case (b, s, want) =>
+      val row = InternalRow(b.map(Int.box).orNull, s.map(Int.box).orNull)
+      assert(proj.apply(row).getDouble(0) == want, s"codegen ($b, $s)")
+      assert(bound.eval(row) == want, s"eval ($b, $s)")
+    }
+    assert(e.hashCode == e.copy(offsets = Array(9.0, 9.0, 9.0, 9.0)).hashCode)
   }
 
   test("the kernels stay inside whole-stage codegen (no ScalaUDF)") {

@@ -1,17 +1,20 @@
 package graft
 
-import graft.core.{Gram, Jobs}
-import graft.equity.{EquityConfig, Frontier}
+import graft.core.{Gram, InvalidArgument, Jobs}
+import graft.equity.{Equity, EquityConfig, Frontier}
 import graft.estimators.Probit
 import graft.ext.{Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import scala.collection.mutable
 
-/** `Jobs.par2`'s failure path, `Jobs.labeled`'s nesting, and
-  * `Jobs.treeReduce`'s result and job labels. */
+/** `Jobs.par2`'s failure path, `Jobs.labeled`'s nesting,
+  * `Jobs.treeReduce`'s result and job labels, and the job counts of the
+  * discovery passes built on it. */
 class JobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -146,5 +149,73 @@ class JobsSpec extends SparkSpec {
       "sketch: count-min", "embeddings: mean/covariance pass")
     val missing = want.filterNot(labels)
     assert(missing.isEmpty, s"missing $missing; labels seen: $labels")
+  }
+
+  /** String columns over a parallelized RDD (4 partitions): the shape
+    * of a serving payload, which no optimizer rule folds into a local
+    * relation. */
+  private def strings(names: Seq[String], rows: Seq[Seq[String]]): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromSeq), 4),
+      StructType(names.map(StructField(_, StringType, nullable = true))))
+
+  test("groupLevels: one job, same levels as distinct + orderBy + collect") {
+    // U+1F600 (a surrogate pair in UTF-16) sorts after U+FF5E in UTF-8
+    // byte order, but before it in UTF-16 code-unit order
+    val smile = new String(Character.toChars(0x1F600))
+    val df = strings(Seq("g", "empty"), Seq(
+      Seq("b", null), Seq("\uFF5E", null), Seq(smile, null), Seq(null, null),
+      Seq("a", null), Seq("B", null), Seq("b", null), Seq("", null),
+      Seq(smile + "x", null), Seq("a", null)))
+    def old(c: String): Seq[String] =
+      df.select(col(c).cast("string")).na.drop().distinct()
+        .orderBy(col(c)).collect().map(_.getString(0)).toSeq
+    var got = Seq.empty[String]
+    val labels = labelsOf { got = Prep.groupLevels(df, "g") }
+    assert(labels == Seq("prep: group levels"))
+    assert(got == old("g"))
+    assert(got == Seq("", "B", "a", "b", "\uFF5E", smile, smile + "x"))
+    assert(Prep.groupLevels(df, "empty").isEmpty && old("empty").isEmpty)
+    val both = labelsOf {
+      assert(Prep.groupLevelsOf(df, Seq("g", "empty")) == Seq(old("g"), Nil))
+    }
+    assert(both.count(_ == "prep: group levels") == 1)
+  }
+
+  test("strictCast: one job for the check, same error for a non-numeric column") {
+    val df = strings(Seq("ok", "bad"),
+      Seq(Seq("1.5", "abc"), Seq("2", "3.0"), Seq(null, "4")))
+    val labels = labelsOf {
+      intercept[InvalidArgument] { Prep.strictCast(df, Seq("ok", "bad")) }
+    }
+    assert(labels == Seq("prep: strict-cast check"))
+    val e = intercept[InvalidArgument] { Prep.strictCast(df, Seq("bad")) }
+    assert(e.getMessage == "Column 'bad' contains non-numeric data but was " +
+      "selected as a continuous variable.")
+    var casted: DataFrame = null
+    assert(labelsOf { casted = Prep.strictCast(df, Seq("ok")) } ==
+      Seq("prep: strict-cast check"))
+    assert(casted.select("ok").collect().map(r =>
+      if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq ==
+      Seq(Some(1.5), Some(2.0), None))
+  }
+
+  test("Equity.optimize on a one-categorical payload: at most 2 jobs before the Gram pass") {
+    val rng = new scala.util.Random(11)
+    val rows = (0 until 120).map { i =>
+      val edu = 8 + rng.nextInt(10)
+      val g = if (i % 3 == 0) "F" else "M"
+      val wage = 30000.0 + 1500.0 * edu - (if (g == "F") 2000.0 else 0.0) +
+        rng.nextInt(4000)
+      Seq(wage.toString, edu.toString, g, Seq("eng", "ops", "sales")(i % 5 % 3))
+    }
+    val base = strings(Seq("wage", "education", "gender", "dept"), rows)
+    val df = base.withColumn("id", monotonically_increasing_id())
+    val cfg = EquityConfig("wage", "gender", "M", Seq("education"),
+      categorical = Seq("dept"), budget = 5000.0)
+    val labels = labelsOf { Equity.optimize(df, cfg, "id") ; () }
+    val before = labels.takeWhile(l => !l.startsWith("gram:"))
+    assert(before.size < labels.size, s"no Gram pass in $labels")
+    assert(before.size <= 2, s"discovery jobs before the Gram pass: $before")
   }
 }

@@ -114,4 +114,24 @@ class McpSpec extends SparkSpec {
     val budgets = pts.map(p => (p \ "budget").extract[Double])
     assert(budgets == budgets.sorted && budgets.head == 0.0)
   }
+
+  test("negative bootstrap_reps and steps < 1 are rejected with a clear error") {
+    def error(name: String, extraArgs: String): String = {
+      val args =
+        s"""{"csv_content":${JsonMethods.compact(JsonMethods.render(JString(csv)))},
+           |"outcome_variable":"wage","group_variable":"group",
+           |"reference_group":"A","predictors":["education"]$extraArgs}"""
+          .stripMargin.replaceAll("\n", "")
+      val resp = JsonMethods.parse(McpServer.handle(spark,
+        rpc("tools/call", s"""{"name":"$name","arguments":$args}""")).get)
+      assert((resp \ "result") == JNothing, s"$name$extraArgs succeeded")
+      (resp \ "error" \ "message").extract[String]
+    }
+    for (tool <- Seq("forensic_decomposition", "verify_adjustments"))
+      assert(error(tool, ""","bootstrap_reps":-1""") ==
+        "bootstrap_reps must be >= 0, got -1")
+    for (steps <- Seq(0, -3))
+      assert(error("generate_efficient_frontier", s""","steps":$steps""") ==
+        s"steps must be >= 1, got $steps")
+  }
 }

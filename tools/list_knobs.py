@@ -11,6 +11,11 @@ site, so two mains cannot drift apart on its default again. Also exits
 1 if a `treeAggregate(` call or a `getNumPartitions < 16` fan-out test
 appears outside core/Jobs.scala: partition buffers merge, and small
 scans fan out, at one site each (`Jobs.treeReduce`, `Jobs.fanOut`).
+And exits 1 if a fitted or request-derived double (coefficients,
+(X'X)^-1, sigma^2, z, budget, pro-rata ratio, the prefix-sum offsets of
+`Windows.exclusivePrefixSum`) enters a plan through `lit(`: Spark writes
+a literal into the generated source, so every new value compiles a new
+class. Such values go through `graft.functions.Param`.
 
 Usage: python3 tools/list_knobs.py
 """
@@ -22,11 +27,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PATTERN = re.compile(r'"((?:spark\.graft\.[A-Za-z0-9_.]+)|(?:SPARK_GRAFT_[A-Z0-9_]+))"')
 JOBS = os.path.join("src", "main", "scala", "graft", "core", "Jobs.scala")
 ONE_SITE = ("treeAggregate(", "getNumPartitions < 16")
+FITTED_LIT = re.compile(r"lit\((beta|covInv|sigma2|zScore|effectiveBudget|ratio)")
+DEF = re.compile(r"\bdef (\w+)")
 
 
 def scan():
     knobs = {}
     strays = []
+    literals = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -35,17 +43,25 @@ def scan():
             path = os.path.join(dirpath, f)
             rel = os.path.relpath(path, ROOT)
             with open(path, encoding="utf-8") as fh:
+                in_def = None
                 for n, line in enumerate(fh, 1):
                     code = line.split("//", 1)[0]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
-                    if rel != JOBS and not code.lstrip().startswith(("*", "/*")):
+                    if code.lstrip().startswith(("*", "/*")):
+                        continue
+                    d = DEF.search(code)
+                    in_def = d.group(1) if d else in_def
+                    if rel != JOBS:
                         strays += [f"{rel}:{n}: {p}" for p in ONE_SITE if p in code]
-    return knobs, strays
+                    if FITTED_LIT.search(code) or (
+                            in_def == "exclusivePrefixSum" and "lit(off)" in code):
+                        literals.append(f"{rel}:{n}: {code.strip()}")
+    return knobs, strays, literals
 
 
 def main():
-    knobs, strays = scan()
+    knobs, strays, literals = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -62,7 +78,9 @@ def main():
         print(f"READ AT {len(knobs[k])} SITES (one allowed): {k}", file=sys.stderr)
     for s in strays:
         print(f"OUTSIDE core/Jobs.scala: {s}", file=sys.stderr)
-    return 1 if missing or repeated or strays else 0
+    for s in literals:
+        print(f"FITTED VALUE AS lit( (use Param): {s}", file=sys.stderr)
+    return 1 if missing or repeated or strays or literals else 0
 
 
 if __name__ == "__main__":
