@@ -267,7 +267,7 @@ object Queries {
     }),
 
     // E8 query twin: quantile_cont-convention Silverman per group via the
-    // same rank-pick (sigma and count ride the rollup as extra lanes —
+    // same rank-pick (sigma and count ride the stats pass as lanes —
     // one scan + one pruned rank window, no per-group value buffering)
     "q_silverman" -> ((s, d) => {
       val stats = graft.core.Windows.quantilesType7Grouped(
@@ -686,20 +686,21 @@ object Queries {
           Ols.predictionCol(xCols, bB).as("__v__")))
         .unionByName(b.select(lit("BB").as("__pool__"),
           Ols.predictionCol(xCols, bB).as("__v__")))
-      val nA = a.count()
-      val nB = b.count()
       val qs = Seq(0.1, 0.5, 0.9)
       def rankOf(n: Long, q: Double): Long =
         math.min(math.floor(n * q).toLong, n - 1)
-      val got = Windows.valuesAtRanksGrouped(preds, col("__pool__"),
-        col("__v__"), Map(
-          "AA" -> qs.map(rankOf(nA, _)).toSet,
-          "AB" -> qs.map(rankOf(nA, _)).toSet,
-          "BB" -> qs.map(rankOf(nB, _)).toSet))
+      // each pool's n is its non-null prediction count: AA and AB have
+      // group A's rows, BB group B's
+      val got = Windows.groupedOrderStats(preds, col("__pool__"),
+        col("__v__"), Nil, "rank-pick: mm pooled predictions") { n =>
+        qs.map(rankOf(n, _)).toSet
+      }
+      def at(pool: String, q: Double): Double =
+        got(pool).at(rankOf(got(pool).n, q))
       val rows = qs.map { q =>
-        val qAA = got("AA")(rankOf(nA, q))
-        val qAB = got("AB")(rankOf(nA, q))
-        val qBB = got("BB")(rankOf(nB, q))
+        val qAA = at("AA", q)
+        val qAB = at("AB", q)
+        val qBB = at("BB", q)
         Row(s"q${(q * 100).toInt}", r6d(qAA - qBB), r6d(qAB - qBB),
           r6d(qAA - qAB))
       }

@@ -53,7 +53,7 @@ object Windows {
     val signedKey = if (ascending) keyCol.cast("double")
       else -keyCol.cast("double")
     val keyed = df.withColumn("__pfx_key__", signedKey)
-    val probes = (1 until buckets).map(_.toDouble / buckets).toArray
+    val probes = probeFractions(buckets)
     // boundariesOverride: callers that already run an aggregate over the
     // same rows can ride the boundary probe on it as a percentile_approx
     // lane (see Equity.optimizePrepared) and pass the result here — one
@@ -153,73 +153,99 @@ object Windows {
         "__local_prefix__")
   }
 
-  /** Values of `value` (nulls dropped) at the given 0-based global sort
-    * ranks — WITHOUT a global sort: the single-group case of
-    * [[valuesAtRanksGrouped]]. Rows tied on the value get arbitrary
-    * consecutive ranks, which is immaterial here: tied rows share the
-    * value, so value-at-rank is well-defined. */
-  def valuesAtRanks(df: DataFrame, value: Column,
-      ranks: Set[Long]): Map[Long, Double] = {
-    if (ranks.isEmpty) return Map.empty
-    valuesAtRanksGrouped(df.select(lit("_").as("__g__"), value.as("__v__")),
-      col("__g__"), col("__v__"), Map("_" -> ranks))
-      .getOrElse("_", Map.empty)
+  /** The `n - 1` probe fractions `i / n` that split a value range into
+    * `n` buckets: the quantile probe of every bucket-boundary sketch. */
+  private def probeFractions(n: Int): Array[Double] =
+    (1 until n).map(_.toDouble / n).toArray
+
+  /** The bucket-boundary sketch as an aggregate lane: a
+    * `percentile_approx` of `v` at the `n - 1` probe fractions, at the
+    * given accuracy (a typed null array when `n <= 1`). Boundaries only
+    * balance buckets, so any accuracy gives the same results. */
+  private[graft] def boundaryLane(v: Column, n: Int, accuracy: Int): Column =
+    if (n <= 1) lit(null).cast("array<double>")
+    else percentile_approx(v, array(probeFractions(n).toSeq.map(lit): _*),
+      lit(accuracy))
+
+  /** One group's result of [[groupedOrderStats]]: the non-null value
+    * count, the caller's lanes in argument order, and the values at the
+    * requested 0-based ranks. */
+  private[graft] final case class OrderStats(n: Long, lanes: Seq[Any],
+      at: Map[Long, Double])
+
+  /** The engine's one grouped order-statistics front end: ONE labeled
+    * grouped stats pass (per-group non-null count of `value` and the
+    * caller's `lanes`) and ONE [[valuesAtRanksGrouped]] for the ranks
+    * `ranksOf(n)` of every group. Lanes may reference any column of
+    * `df`. The null group key and groups with n == 0 carry their lanes
+    * but get no ranks.
+    *
+    * The stats pass stays a codegen hash aggregate and the rank-pick
+    * sizes and runs its own boundary probe. Folding the probe into the
+    * stats pass as a per-group [[boundaryLane]] saves the probe jobs but
+    * moves the pass onto the object-hash path, and its one-bucket-per-
+    * shuffle-partition boundaries leave the window sorting most of the
+    * rows when several ranks are asked: measured at sf0.1 on 4 cores
+    * with 4 shuffle partitions (Bench min channel, medians of 5
+    * alternating pairs), the lane lost on q_quantile_t7 (1.88 -> 1.98 s)
+    * and q_mm_newton3 (2.93 -> 4.10 s), each in 4 of 5 pairs. */
+  private[graft] def groupedOrderStats(df: DataFrame, group: Column,
+      value: Column, lanes: Seq[Column], label: String)(
+      ranksOf: Long => Set[Long]): Map[String, OrderStats] = {
+    val spark = df.sparkSession
+    val base = df.withColumn("__g__", group.cast("string"))
+      .withColumn("__v__", value.cast("double"))
+    val aggs = count(col("__v__")) +:
+      lanes.zipWithIndex.map { case (c, i) => c.as(s"__l${i}__") }
+    val rows = Jobs.labeled(spark, label) {
+      base.groupBy(col("__g__")).agg(aggs.head, aggs.tail: _*).collect()
+    }
+    val wanted = rows.collect {
+      case r if !r.isNullAt(0) && r.getLong(1) > 0 =>
+        r.getString(0) -> ranksOf(r.getLong(1))
+    }.toMap
+    val picked = Jobs.labeled(spark, label) {
+      valuesAtRanksGrouped(base, col("__g__"), col("__v__"), wanted)
+    }
+    rows.map { r =>
+      val g = if (r.isNullAt(0)) null else r.getString(0)
+      g -> OrderStats(r.getLong(1), lanes.indices.map(i => r.get(2 + i)),
+        picked.getOrElse(g, Map.empty))
+    }.toMap
   }
 
   /** Per-group R type-7 (linearly interpolated) sample quantiles at the
     * given taus, plus caller-supplied per-group aggregate lanes, WITHOUT
     * the exact `percentile` aggregate — that aggregate buffers every
-    * value of a group inside one task, which dies at 100 TB. Shape:
-    * ONE grouped stats pass (per-group n + the extra lanes, pure-codegen
-    * HashAggregate) + the rank-pick's own `approxQuantile` boundary
-    * probe + ONE grouped value-bucketed rank-pick
-    * for the bracketing order statistics of every (group, tau), then
-    * driver interpolation `(hi-pos)*vLo + (pos-lo)*vHi` — identical
-    * arithmetic to Spark's `percentile` and DuckDB's `quantile_cont`.
-    * Returns per group: (non-null value count, tau -> quantile, the
-    * extra aggregate values in argument order). Groups with n == 0 are
+    * value of a group inside one task, which dies at 100 TB. The
+    * bracketing order statistics of every (group, tau) come from
+    * [[groupedOrderStats]], then driver interpolation
+    * `(hi-pos)*vLo + (pos-lo)*vHi` — identical arithmetic to Spark's
+    * `percentile` and DuckDB's `quantile_cont`. Returns per group:
+    * (non-null value count, tau -> quantile, the extra aggregate values
+    * in argument order). Groups with n == 0 and the null group are
     * omitted; n == 1 reports the single value at every tau. */
   def quantilesType7Grouped(df: DataFrame, group: Column, value: Column,
       taus: Seq[Double], extraAggs: Seq[Column] = Nil)
       : Map[String, (Long, Map[Double, Double], Seq[Any])] = {
     require(taus.nonEmpty && taus.forall(t => t >= 0.0 && t <= 1.0),
       "taus must be within [0, 1]")
-    // the stats pass runs over the ORIGINAL frame (extraAggs may
-    // reference any of its columns) with the group/value expressions
-    // tagged on. Counts and extras stay a pure-codegen HashAggregate —
-    // folding the rank-pick's boundary probe in as a percentile_approx
-    // lane (the Rif idiom) measured SLOWER here: the imperative sketch
-    // forces the whole aggregation onto the ObjectHashAggregate path,
-    // costing more than the dedicated approxQuantile job it saves.
-    val base = df.withColumn("__g__", group.cast("string"))
-      .withColumn("__v__", value.cast("double"))
-    val aggLanes = count(col("__v__")).as("__n__") +:
-      extraAggs.zipWithIndex.map { case (c, i) => c.as(s"__a${i}__") }
-    val rows = base.groupBy(col("__g__"))
-      .agg(aggLanes.head, aggLanes.tail: _*)
-      .collect()
-    val perGroup = rows.filter(!_.isNullAt(0))
-      .map(r => r.getString(0) ->
-        (r.getLong(1), extraAggs.indices.map(i => r.get(2 + i))))
-      .toMap
-    val wanted = perGroup.collect { case (g, (n, _)) if n >= 1 =>
-      g -> taus.flatMap { t =>
+    val stats = groupedOrderStats(df, group, value, extraAggs,
+        "rank-pick: type-7 stats") { n =>
+      taus.flatMap { t =>
         val pos = (n - 1).toDouble * t
         Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
       }.toSet
     }
-    val ranked = valuesAtRanksGrouped(base, col("__g__"), col("__v__"),
-      wanted)
-    perGroup.collect { case (g, (n, extras)) if n >= 1 =>
-      val vals = ranked(g)
+    stats.collect { case (g, s) if g != null && s.n >= 1 =>
       val qs = taus.map { t =>
-        val pos = (n - 1).toDouble * t
+        val pos = (s.n - 1).toDouble * t
         val lo = math.floor(pos).toLong
         val hi = math.ceil(pos).toLong
-        val vLo = vals(lo)
-        t -> (if (lo == hi) vLo else (hi - pos) * vLo + (pos - lo) * vals(hi))
+        val vLo = s.at(lo)
+        t -> (if (lo == hi) vLo else (hi - pos) * vLo + (pos - lo) * s.at(hi))
       }.toMap
-      g -> (n, qs, extras)
+      g -> (s.n, qs, s.lanes)
     }
   }
 
@@ -288,16 +314,17 @@ object Windows {
       else
         vals0.join(broadcastableGroups(spark, want.keys), Seq("__g__"),
           "left_semi")
-    val buckets = nBucketsBase.toInt
-    val probes = (1 until buckets).map(_.toDouble / buckets).toArray
-    // callers that already ran an aggregation over the frame can fold the
-    // boundary probe into it (percentile_approx lane) and skip this job
+    val probes = probeFractions(nBucketsBase.toInt)
+    // precomputedBoundaries: any boundary set gives the same results
+    // (specs use it to show that)
     val boundaries = precomputedBoundaries match {
       case Some(b) => graft.functions.BucketIndexExpr.normalize(b)
       case None =>
         if (probes.isEmpty) Array.empty[Double]
         else graft.functions.BucketIndexExpr.normalize(
-          vals.stat.approxQuantile("__v__", probes, 0.01))
+          Jobs.labeled(spark, "rank-pick: boundary probe") {
+            vals.stat.approxQuantile("__v__", probes, 0.01)
+          })
     }
     if (want.size.toLong * nBuckets2 > maxDriverTuples)
       return valuesAtRanksGroupedDense(spark, vals, boundaries, want)

@@ -238,7 +238,7 @@ object Equity {
 
     // The budget-constrained Greedy path needs bucket boundaries for its
     // scale-safe prefix sum (Windows.exclusivePrefixSum); ride that probe
-    // on THIS aggregate as a percentile_approx lane over the same rows
+    // on THIS aggregate as a `Windows.boundaryLane` over the same rows
     // the prefix pass will see (keep && eligible, signed key = -diff,
     // descending) instead of paying approxQuantile its own job. Any
     // monotone boundary set is result-correct — buckets only set the
@@ -249,11 +249,10 @@ object Equity {
       cfg.budget > 0.0 && cfg.strategy == AllocationStrategy.Greedy
     val nBuckets =
       annotated.sparkSession.sessionState.conf.numShufflePartitions
-    val probes = (1 until nBuckets).map(_.toDouble / nBuckets)
     val boundaryLane =
-      if ((mayConstrain || wantPrefixBoundaries) && probes.nonEmpty)
-        percentile_approx(when(keepM && col("__eligible__"), -col("__diff__")),
-          array(probes.map(lit): _*), lit(10000)).as("bnds")
+      if (mayConstrain || wantPrefixBoundaries)
+        Windows.boundaryLane(when(keepM && col("__eligible__"),
+          -col("__diff__")), nBuckets, 10000).as("bnds")
       else lit(null).as("bnds")
     val sums = graft.core.Jobs.labeled(annotated.sparkSession,
       "equity: need/net sums + boundary lane") {

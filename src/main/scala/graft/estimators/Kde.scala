@@ -105,107 +105,35 @@ object Kde {
     }
   }
 
-  /** Silverman's rule with the kde.rs index convention:
-    * q1 = sorted[floor(0.25 n)], q3 = sorted[floor(0.75 n)] (0-based).
-    * Both ranks come from ONE distributed sort (the `wanted`-set pattern
-    * of `Rif.transformPerGroup`), not one sort per quartile. */
-  def silverman(df: DataFrame, valueCol: String): Double = {
-    val v = col(valueCol).cast("double")
-    val row = df.agg(count(v).as("n"), avg(v).as("mean"),
-      var_samp(v).as("var")).head()
-    val n = row.getLong(0)
-    val std = math.sqrt(row.getDouble(2))
-    val i1 = math.max((n * 0.25).toLong, 0L)
-    val i3 = math.max((n * 0.75).toLong, 0L)
-    val qs = elementsAtIndices(df, valueCol, Set(i1, i3))
-    val a = math.min(std, (qs(i3) - qs(i1)) / 1.34)
-    0.9 * a * math.pow(n.toDouble, -0.2)
-  }
-
-  /** Per-group Silverman bandwidths — same arithmetic as [[silverman]]
-    * per group, but ALL groups share ONE grouped stats pass and ONE
-    * grouped rank-pick instead of paying a stats aggregate plus a
-    * rank-pick (≈4 jobs) per group. `extraAggs` lanes ride the stats
+  /** Per-group Silverman bandwidths with the kde.rs index convention:
+    * q1 = sorted[floor(0.25 n)], q3 = sorted[floor(0.75 n)] (0-based),
+    * h = 0.9 min(sd, (q3 - q1) / 1.34) n^-0.2. ALL groups share ONE
+    * grouped stats pass and ONE grouped rank-pick
+    * (`Windows.groupedOrderStats`). `extraAggs` lanes ride the stats
     * pass for free (the DFL caller folds its group counts and the
     * global outcome range in, erasing its own separate pass). Returns
     * (group → bandwidth, group → extra lane values); groups with no
-    * non-null value are omitted from the bandwidth map but still carry
-    * their extras. */
+    * non-null value and the null group are omitted from the bandwidth
+    * map but still carry their extras. */
   def silvermanGrouped(df: DataFrame, valueCol: String, group: Column,
       extraAggs: Seq[Column] = Nil)
       : (Map[String, Double], Map[String, Seq[Any]]) = {
     val v = col(valueCol).cast("double")
-    val base = df.withColumn("__g__", group.cast("string"))
-    // a per-group percentile_approx lane rides the stats pass and
-    // replaces the rank-pick's own quantile-probe JOB: each group's
-    // sketch approximates its bucket boundaries (coarse accuracy 100,
-    // same as the probe it replaces — boundaries only balance buckets,
-    // they never touch results), and the per-group arrays merge
-    // driver-side below. Job count is the whole game at both test scale
-    // (fixed scheduling cost per pass) and 100 TB (a full scan per pass).
-    val nBuckets = df.sparkSession.sessionState.conf.numShufflePartitions
-    val bndLane =
-      if (nBuckets <= 1) lit(null).cast("array<double>")
-      else percentile_approx(v,
-        array((1 until nBuckets).map(i => lit(i.toDouble / nBuckets)): _*),
-        lit(100))
-    val lanes = Seq(count(v).as("__n__"), var_samp(v).as("__var__")) ++
-      extraAggs.zipWithIndex.map { case (c, i) => c.as(s"__x${i}__") } ++
-      Seq(bndLane.as("__bnds__"))
-    val bndIdx = 3 + extraAggs.size
-    val rows = graft.core.Jobs.labeled(df.sparkSession,
-      "silverman: grouped stats+boundary lane") {
-      base.groupBy(col("__g__")).agg(lanes.head, lanes.tail: _*)
-        .collect()
+    def quartileIdx(n: Long): (Long, Long) =
+      ((n * 0.25).toLong, (n * 0.75).toLong)
+    val stats = graft.core.Windows.groupedOrderStats(df, group, v,
+        var_samp(v) +: extraAggs, "silverman: grouped stats") { n =>
+      val (i1, i3) = quartileIdx(n)
+      Set(i1, i3)
     }
-    // merged boundaries: interleave every group's j-th probe value and
-    // take the middle of each block — the median across groups of each
-    // per-group quantile, a balanced pooled approximation (exactness is
-    // irrelevant; normalize() dedupes whatever comes out)
-    val perGroup = rows.iterator.filter(r => !r.isNullAt(0) && !r.isNullAt(bndIdx))
-      .map(_.getSeq[Double](bndIdx).toArray).toArray
-    val boundaries: Array[Double] =
-      if (perGroup.isEmpty) Array.empty
-      else {
-        val merged = perGroup.flatten.sorted
-        val nG = perGroup.length
-        Array.tabulate(nBuckets - 1)(j => merged(j * nG + nG / 2))
-      }
-    // key extras by group INCLUDING a null group level (original callers'
-    // whole-frame aggregates saw those rows too); bandwidths only for
-    // real levels with data
-    val stats = rows.map { r =>
-      val g = if (r.isNullAt(0)) null else r.getString(0)
-      g -> ((r.getLong(1), if (r.isNullAt(2)) 0.0 else r.getDouble(2),
-        extraAggs.indices.map(i => r.get(3 + i))))
-    }.toMap
-    val ranks = stats.collect { case (g, (n, _, _)) if g != null && n > 0 =>
-      g -> Set(math.max((n * 0.25).toLong, 0L),
-        math.max((n * 0.75).toLong, 0L))
+    val bws = stats.collect { case (g, s) if g != null && s.n > 0 =>
+      val std = math.sqrt(Option(s.lanes.head).fold(0.0)(_.asInstanceOf[Double]))
+      val (i1, i3) = quartileIdx(s.n)
+      val a = math.min(std, (s.at(i3) - s.at(i1)) / 1.34)
+      g -> 0.9 * a * math.pow(s.n.toDouble, -0.2)
     }
-    val picked = graft.core.Windows.valuesAtRanksGrouped(base, col("__g__"),
-      v, ranks, Some(boundaries))
-    val bws = stats.collect { case (g, (n, vr, _)) if g != null && n > 0 =>
-      val std = math.sqrt(vr)
-      val i1 = math.max((n * 0.25).toLong, 0L)
-      val i3 = math.max((n * 0.75).toLong, 0L)
-      val qs = picked(g)
-      val a = math.min(std, (qs(i3) - qs(i1)) / 1.34)
-      g -> 0.9 * a * math.pow(n.toDouble, -0.2)
-    }
-    (bws, stats.map { case (g, (_, _, ex)) => g -> ex })
+    (bws, stats.map { case (g, s) => g -> s.lanes.tail })
   }
-
-  /** 0-based elements of the sorted column at the given ranks, via the
-    * value-bucketed prefix-count rank pick (no global sort; nulls are
-    * dropped first so ranks align with count(v)). */
-  def elementsAtIndices(df: DataFrame, valueCol: String,
-      idxs: Set[Long]): Map[Long, Double] =
-    graft.core.Windows.valuesAtRanks(df, col(valueCol), idxs)
-
-  /** 0-based element of the sorted column. */
-  def elementAtIndex(df: DataFrame, valueCol: String, idx: Long): Double =
-    elementsAtIndices(df, valueCol, Set(math.max(idx, 0L)))(math.max(idx, 0L))
 
   def gaussianCol(u: Column): Column =
     lit(InvSqrt2Pi) * exp(u * u * lit(-0.5))

@@ -17,8 +17,8 @@ object Rif {
     * RIF mean closed-form: mean(RIF) = q + (tau - countLeQ/n) / f —
     * consumers that only need the mean skip a whole extra scan.
     *
-    * `density` is the FLOORED estimate (>= 1e-8, see transformPerGroup
-    * pass 3), so the closed form is only valid where the transform
+    * `density` is the FLOORED estimate (>= 1e-8, see transformPerGroup's
+    * density pass), so the closed form is only valid where the transform
     * actually applied it: for n < 2 the transform passes y through
     * unchanged, so the group mean of the output is the single value
     * itself (= qTau when n == 1; qTau is the 0.0 fallback when n == 0,
@@ -31,11 +31,14 @@ object Rif {
   }
 
   /** Compute RIF of `outcome` separately within each level of
-    * `groupCol`, appending it as `outCol`. Three aggregate passes total
-    * (moments+quantile, one grouped IQR rank-pick for ALL levels,
-    * one-point density), each fully distributed over a narrow
-    * two-column projection the scan prunes to. Only per-group scalars
-    * reach the driver. */
+    * `groupCol`, appending it as `outCol`: one
+    * `Windows.groupedOrderStats` call (per-group stats and the order
+    * statistics of ALL levels) and one one-point density pass, each
+    * fully distributed over a narrow two-column projection the scan
+    * prunes to. Only per-group scalars reach the driver. Groups with
+    * n < 2 pass y through; n == 0 (all-null outcome) reports qTau 0.0,
+    * bandwidth 1.0 and the floored density. Rows with a null group
+    * pass y through and get no [[GroupRif]]. */
   def transformPerGroup(df: DataFrame, outcome: String, groupCol: String,
       tau: Double, outCol: String = "__rif__"): (DataFrame, Seq[GroupRif]) = {
     val y = col(outcome).cast("double")
@@ -49,131 +52,67 @@ object Rif {
     // re-read either way, minus the write. Callers with an expensive
     // upstream (not a bare table scan) can persist before calling.
     val narrow = df.select(g.as("__g__"), y.as("__y__"))
-    val (stats, bandwidths, densities, countsLe) = {
-      // pass 1: n and sample stddev per group — pure codegen aggregates.
-      // The type-7 quantile is NOT computed here: the exact `percentile`
-      // aggregate buffers every distinct value and dominated this pass;
-      // the quantile instead comes from the same rank-pick pass as the
-      // IQR below (two extra order statistics, free at that point). A
-      // PER-GROUP percentile_approx lane rides the same aggregate and
-      // replaces the rank pass's own quantile-probe job; the per-group
-      // arrays merge driver-side into pooled boundaries (median across
-      // groups of each per-group quantile — the silvermanGrouped idiom).
-      // This pass was a `rollup` with the boundary lane on the
-      // grand-total row: the rollup's Expand pushed every row through
-      // the aggregate TWICE and ran a second accuracy-1000 sketch for
-      // the total grouping set — measured ~0.8 s of q_rif's 2.1 s at
-      // sf0.1. The plain groupBy halves the aggregated rows, and
-      // accuracy 100 suffices because boundaries only balance buckets
-      // (the rank-pick is exact at ANY bucketing). Job count is still
-      // the whole game: every pass is a fixed scheduling cost at test
-      // scale and a full scan at 100 TB.
-      val nBuckets =
-        narrow.sparkSession.sessionState.conf.numShufflePartitions
-      val probeArr = array((1 until nBuckets)
-        .map(i => lit(i.toDouble / nBuckets)): _*)
-      val momentRows = graft.core.Jobs.labeled(df.sparkSession,
-        "rif: grouped moments+boundary lane") {
-        narrow.groupBy(col("__g__"))
-          .agg(count(col("__y__")).as("n"), stddev_samp(col("__y__")).as("std"),
-            percentile_approx(col("__y__"), probeArr, lit(100)).as("bnds"))
-          .collect()
-      }
-      val moments = momentRows
-        .map(r => (r.getString(0), (r.getLong(1),
-          if (r.isNullAt(2)) 0.0 else r.getDouble(2))))
-        .toMap
-      val perGroupBnds = momentRows.iterator.filter(!_.isNullAt(3))
-        .map(_.getSeq[Double](3).toArray).toArray
-      val boundaries: Array[Double] =
-        if (perGroupBnds.isEmpty) Array.empty
+    // IQR uses the rif.rs ceil-index convention:
+    // q75 = sorted[max(ceil(0.75 n), 1) - 1] (0-based), same for q25.
+    // q_tau is the type-7 interpolation between the two bracketing
+    // order statistics at pos = tau*(n-1) — same arithmetic as Spark's
+    // `percentile` ((hi-pos)*v_lo + (pos-lo)*v_hi). For n == 1 every
+    // index is 0.
+    def rifIdx(n: Long, p: Double): Long = {
+      val i = math.ceil(p * n).toLong
+      math.min(if (i == 0) 0 else i - 1, n - 1) // 0-based
+    }
+    def tauPos(n: Long): Double = (n - 1).toDouble * tau
+    val picked = graft.core.Windows.groupedOrderStats(narrow, col("__g__"),
+        col("__y__"), Seq(stddev_samp(col("__y__"))),
+        "rif: grouped moments") { n =>
+      val pos = tauPos(n)
+      Set(rifIdx(n, 0.25), rifIdx(n, 0.75), math.floor(pos).toLong,
+        math.ceil(pos).toLong)
+    }.filter(_._1 != null)
+    // per level: (n, q_tau, bandwidth)
+    val stats = picked.map { case (lvl, s) =>
+      val pos = tauPos(s.n)
+      val (lo, hi) = (math.floor(pos).toLong, math.ceil(pos).toLong)
+      val q =
+        if (s.n < 1) 0.0
+        else if (lo == hi) s.at(lo)
+        else (hi - pos) * s.at(lo) + (pos - lo) * s.at(hi)
+      val bw =
+        if (s.n < 2) 1.0
         else {
-          val merged = perGroupBnds.flatten.sorted
-          val nG = perGroupBnds.length
-          Array.tabulate(nBuckets - 1)(j => merged(j * nG + nG / 2))
-        }
-
-      // pass 2: ONE grouped value-bucketed rank-pick covers every level
-      // and every needed order statistic (`Windows.valuesAtRanksGrouped`)
-      // — a partitionBy(group) window would sort each group in ONE task,
-      // which dies at scale, and a per-group `valuesAtRanks` loop
-      // multiplies the passes by the number of levels (the round-6
-      // q_rif_decomp regression).
-      // IQR uses the rif.rs ceil-index convention:
-      // q75 = sorted[max(ceil(0.75 n), 1) - 1] (0-based), same for q25.
-      // q_tau is the type-7 interpolation between the two bracketing
-      // order statistics at pos = tau*(n-1) — same arithmetic as Spark's
-      // `percentile` ((hi-pos)*v_lo + (pos-lo)*v_hi).
-      def rifIdx(n: Long, p: Double): Long = {
-        val i = math.ceil(p * n).toLong
-        math.min(if (i == 0) 0 else i - 1, n - 1) // 0-based
-      }
-      def tauPos(n: Long): Double = (n - 1).toDouble * tau
-      // n == 1 groups take the passthrough in the final expression but
-      // still report q_tau (= the single value); n == 0 (all-null
-      // outcome) groups have no rows to rank and fall back to q = 0.0
-      val wanted = moments.collect {
-        case (lvl, (n, _)) if n >= 2 =>
-          val pos = tauPos(n)
-          lvl -> Set(rifIdx(n, 0.25), rifIdx(n, 0.75),
-            math.floor(pos).toLong, math.ceil(pos).toLong)
-        case (lvl, (1L, _)) => lvl -> Set(0L)
-      }
-      val ranked = graft.core.Windows.valuesAtRanksGrouped(
-        narrow, col("__g__"), col("__y__"), wanted, Some(boundaries))
-      val stats = moments.map { case (lvl, (n, std)) =>
-        val q =
-          if (n < 1) 0.0
-          else if (n == 1) ranked(lvl)(0L)
-          else {
-            val pos = tauPos(n)
-            val lo = math.floor(pos).toLong
-            val hi = math.ceil(pos).toLong
-            val vLo = ranked(lvl)(lo)
-            if (lo == hi) vLo
-            else (hi - pos) * vLo + (pos - lo) * ranked(lvl)(hi)
-          }
-        (lvl, (n, std, q))
-      }
-      val bandwidths = moments.map { case (lvl, (n, std)) =>
-        if (n < 2) lvl -> 1.0
-        else {
-          val vals = ranked(lvl)
-          val q25 = vals(rifIdx(n, 0.25))
-          val q75 = vals(rifIdx(n, 0.75))
-          val iqr = q75 - q25
+          val std = Option(s.lanes.head).fold(0.0)(_.asInstanceOf[Double])
+          val iqr = s.at(rifIdx(s.n, 0.75)) - s.at(rifIdx(s.n, 0.25))
           val minSpread0 = if (iqr > 1e-8) math.min(std, iqr / 1.34) else std
           val minSpread = if (minSpread0 < 1e-8) 1.0 else minSpread0
-          lvl -> 0.9 * minSpread * math.pow(n.toDouble, -0.2)
+          0.9 * minSpread * math.pow(s.n.toDouble, -0.2)
         }
-      }
-
-      // pass 3: one-point density at q_tau per group, with a
-      // count(y <= q) lane riding along — it makes the group RIF mean
-      // closed-form on the driver (see [[GroupRif.meanRif]])
-      val qOfN = caseOver(col("__g__"), stats.map { case (l, (_, _, q)) => l -> q })
-      val hOfN = caseOver(col("__g__"), bandwidths.toSeq)
-      val densityRows = graft.core.Jobs.labeled(df.sparkSession,
-        "rif: one-point density") {
-        narrow
-          .select(col("__g__").as("g"),
-            Kde.gaussianCol((qOfN - col("__y__")) / hOfN).as("k"),
-            when(col("__y__") <= qOfN, 1L).otherwise(0L).as("le"))
-          .groupBy(col("g")).agg(sum(col("k")).as("sk"), sum(col("le")).as("nle"))
-          .collect()
-      }
-      val densities = densityRows.map { r =>
-        val lvl = r.getString(0)
-        val (n, _, _) = stats(lvl)
-        val d = r.getDouble(1) / (n.toDouble * bandwidths(lvl))
-        lvl -> math.max(d, 1e-8)
-      }.toMap
-      val countsLe = densityRows.map(r => r.getString(0) -> r.getLong(2)).toMap
-      (stats, bandwidths, densities, countsLe)
+      lvl -> (s.n, q, bw)
     }
 
-    val qOf = caseOver(g, stats.map { case (l, (_, _, q)) => l -> q })
+    // one-point density at q_tau per group, with a count(y <= q) lane
+    // riding along — it makes the group RIF mean closed-form on the
+    // driver (see [[GroupRif.meanRif]])
+    val qOfN = caseOver(col("__g__"), stats.map { case (l, (_, q, _)) => l -> q })
+    val hOfN = caseOver(col("__g__"), stats.map { case (l, (_, _, h)) => l -> h })
+    val densityRows = graft.core.Jobs.labeled(df.sparkSession,
+      "rif: one-point density") {
+      narrow
+        .select(col("__g__").as("g"),
+          Kde.gaussianCol((qOfN - col("__y__")) / hOfN).as("k"),
+          when(col("__y__") <= qOfN, 1L).otherwise(0L).as("le"))
+        .groupBy(col("g")).agg(sum(col("k")).as("sk"), sum(col("le")).as("nle"))
+        .collect()
+    }.filter(!_.isNullAt(0))
+    val densities = densityRows.map { r =>
+      val lvl = r.getString(0)
+      val (n, _, h) = stats(lvl)
+      val d = if (n == 0) 0.0 else r.getDouble(1) / (n.toDouble * h)
+      lvl -> math.max(d, 1e-8)
+    }.toMap
+    val countsLe = densityRows.map(r => r.getString(0) -> r.getLong(2)).toMap
 
+    val qOf = caseOver(g, stats.map { case (l, (_, q, _)) => l -> q })
     val fOf = caseOver(g, densities.toSeq)
     val rif = when(qOf.isNull, y).otherwise(
       qOf + (lit(tau) - when(y <= qOf, 1.0).otherwise(0.0)) / fOf)
@@ -182,8 +121,8 @@ object Rif {
     val rifFinal = if (small.isEmpty) rif else
       when(g.isin(small: _*), y).otherwise(rif)
 
-    val info = stats.toSeq.sortBy(_._1).map { case (l, (n, _, q)) =>
-      GroupRif(l, n, q, bandwidths(l), densities(l),
+    val info = stats.toSeq.sortBy(_._1).map { case (l, (n, q, h)) =>
+      GroupRif(l, n, q, h, densities(l),
         countsLe.getOrElse(l, 0L))
     }
     (df.withColumn(outCol, rifFinal), info)

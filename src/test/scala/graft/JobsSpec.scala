@@ -1,8 +1,8 @@
 package graft
 
-import graft.core.{Gram, InvalidArgument, Jobs}
+import graft.core.{Gram, InvalidArgument, Jobs, Windows}
 import graft.equity.{Equity, EquityConfig, Frontier}
-import graft.estimators.Probit
+import graft.estimators.{Kde, Probit, Rif}
 import graft.ext.{Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
@@ -217,5 +217,21 @@ class JobsSpec extends SparkSpec {
     val before = labels.takeWhile(l => !l.startsWith("gram:"))
     assert(before.size < labels.size, s"no Gram pass in $labels")
     assert(before.size <= 2, s"discovery jobs before the Gram pass: $before")
+  }
+
+  test("the grouped order-statistics front ends label every job they submit") {
+    val rng = new scala.util.Random(3)
+    val df = (0 until 400).map(i => (s"g${i % 2}", rng.nextDouble() * 10))
+      .toDF("g", "v")
+    val labels = labelsOf {
+      Windows.quantilesType7Grouped(df, col("g"), col("v"), Seq(0.25, 0.5))
+      Kde.silvermanGrouped(df, "v", col("g"))
+      Rif.transformPerGroup(df, "v", "g", 0.5)
+      ()
+    }
+    assert(labels.nonEmpty && labels.forall(_.nonEmpty),
+      s"unlabeled jobs: $labels")
+    assert(labels.map(_.takeWhile(_ != ':')).toSet ==
+      Set("rank-pick", "silverman", "rif"), labels)
   }
 }

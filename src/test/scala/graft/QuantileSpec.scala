@@ -90,6 +90,33 @@ class QuantileSpec extends SparkSpec {
       s"closed form ${big.meanRif(0.5)} vs avg $avgRif")
   }
 
+  test("RIF: an all-null-outcome group falls back and passes y through") {
+    val a = Seq(("a", Some(1.0)), ("a", Some(2.0)), ("a", Some(4.0)))
+    val df = (a ++ Seq(("z", None), ("z", None))).toDF("g", "y")
+    val (out, info) = Rif.transformPerGroup(df, "y", "g", 0.5)
+    val (_, infoA) = Rif.transformPerGroup(a.toDF("g", "y"), "y", "g", 0.5)
+    assert(info.map(_.level) == Seq("a", "z"))
+    assert(info.head == infoA.head)
+    assert(info(1) == Rif.GroupRif("z", 0L, 0.0, 1.0, 1e-8, 0L))
+    val zOut = out.filter(col("g") === "z").select("__rif__").collect()
+    assert(zOut.length == 2 && zOut.forall(_.isNullAt(0)))
+  }
+
+  test("RIF: rows with a null group pass y through and get no GroupRif") {
+    val a = Seq((Option("a"), 1.0), (Option("a"), 2.0), (Option("a"), 4.0))
+    val df = (a ++ Seq((None, 5.0), (None, 7.0))).toDF("g", "y")
+    val (out, info) = Rif.transformPerGroup(df, "y", "g", 0.5)
+    val (outA, infoA) = Rif.transformPerGroup(a.toDF("g", "y"), "y", "g", 0.5)
+    assert(info == infoA)
+    val nullOut = out.filter(col("g").isNull).select("y", "__rif__")
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    assert(nullOut == Map(5.0 -> 5.0, 7.0 -> 7.0))
+    def rifs(d: org.apache.spark.sql.DataFrame) = d.filter(col("g") === "a")
+      .select("y", "__rif__").collect()
+      .map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+    assert(rifs(out) == rifs(outA))
+  }
+
   test("DFL produces 100-point grid and three densities (features_test.rs)") {
     val rng = new scala.util.Random(3)
     val rows = (0 until 500).map { i =>

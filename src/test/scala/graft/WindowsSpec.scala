@@ -191,4 +191,61 @@ class WindowsSpec extends SparkSpec {
       assert(got(id) == want(id), s"$id: ${got(id)} vs ${want(id)}")
     }
   }
+
+  test("groupedOrderStats: exact order statistics, lanes, n = 1, n = 0 and the null group") {
+    val rng = new scala.util.Random(17)
+    val real = (0 until 3000).map { i =>
+      (Option(s"g${i % 3}"), Option(math.floor(rng.nextDouble() * 60) / 4.0))
+    }
+    val rows = real ++ Seq((Option("one"), Option(2.5)),
+      (Option("empty"), None), (Option("empty"), None),
+      (None, Option(-1.0)), (None, Option(9.0)))
+    val df = rows.toDF("g", "v")
+    val taus = Seq(0.0, 0.1, 0.25, 0.5, 0.9, 1.0)
+    // type-7 brackets, kde.rs floor quartile indices, rif.rs ceil indices
+    def ranksOf(n: Long): Set[Long] = taus.flatMap { t =>
+      val pos = (n - 1) * t
+      Seq(math.floor(pos).toLong, math.ceil(pos).toLong,
+        math.max((n * t).toLong, 0L) min (n - 1),
+        math.min(math.max(math.ceil(t * n).toLong - 1, 0L), n - 1))
+    }.toSet
+    val got = Windows.groupedOrderStats(df, col("g"), col("v"),
+      Seq(count(lit(1)), max(col("v"))), "rank-pick: spec")(ranksOf)
+    assert(got.keySet == Set("g0", "g1", "g2", "one", "empty", null))
+    val sorted = rows.collect { case (Some(g), Some(v)) => g -> v }
+      .groupBy(_._1).map { case (g, vs) => g -> vs.map(_._2).sorted.toIndexedSeq }
+    sorted.foreach { case (g, vs) =>
+      val s = got(g)
+      assert(s.n == vs.size)
+      assert(s.lanes == Seq(vs.size.toLong, vs.max))
+      assert(s.at.keySet == ranksOf(vs.size))
+      s.at.foreach { case (r, v) => assert(v == vs(r.toInt), s"$g rank $r") }
+    }
+    assert(got("one").at == Map(0L -> 2.5))
+    assert(got("empty") == Windows.OrderStats(0L, Seq(2L, null), Map.empty))
+    assert(got(null) == Windows.OrderStats(2L, Seq(2L, 9.0), Map.empty))
+    // the front ends against exact references: Spark's `percentile` for
+    // type-7, and the kde.rs floor-index Silverman rule on sorted arrays
+    val t7 = Windows.quantilesType7Grouped(df, col("g"), col("v"), taus)
+    val want = df.filter(col("g").isNotNull).groupBy(col("g"))
+      .agg(expr(s"percentile(v, array(${taus.mkString("D,")}D))").as("qs"))
+      .collect().collect { case r if !r.isNullAt(1) =>
+        r.getString(0) -> r.getSeq[Double](1) }.toMap
+    assert(t7.keySet == want.keySet)
+    want.foreach { case (g, qs) =>
+      taus.zip(qs).foreach { case (t, q) => assert(t7(g)._2(t) == q, s"$g $t") }
+    }
+    val (bws, extras) = graft.estimators.Kde.silvermanGrouped(df, "v",
+      col("g"), Seq(count(lit(1))))
+    assert(bws.keySet == Set("g0", "g1", "g2", "one"))
+    assert(extras.keySet == got.keySet && extras(null) == Seq(2L))
+    sorted.filter(_._2.size > 1).foreach { case (g, vs) =>
+      val n = vs.size
+      val mean = vs.sum / n
+      val sd = math.sqrt(vs.map(v => (v - mean) * (v - mean)).sum / (n - 1))
+      val iqr = vs((n * 0.75).toInt) - vs((n * 0.25).toInt)
+      val h = 0.9 * math.min(sd, iqr / 1.34) * math.pow(n.toDouble, -0.2)
+      assert(math.abs(bws(g) - h) < 1e-12 * h, s"$g: ${bws(g)} vs $h")
+    }
+  }
 }

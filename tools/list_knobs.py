@@ -11,6 +11,10 @@ site, so two mains cannot drift apart on its default again. Also exits
 1 if a `treeAggregate(` call or a `getNumPartitions < 16` fan-out test
 appears outside core/Jobs.scala: partition buffers merge, and small
 scans fan out, at one site each (`Jobs.treeReduce`, `Jobs.fanOut`).
+Likewise a `percentile_approx(`, `approxQuantile(` or
+`valuesAtRanksGrouped(` call outside core/Windows.scala: bucket-boundary
+sketches and grouped order statistics are built there
+(`Windows.boundaryLane`, `Windows.groupedOrderStats`).
 And exits 1 if a fitted or request-derived double (coefficients,
 (X'X)^-1, sigma^2, z, budget, pro-rata ratio, the prefix-sum offsets of
 `Windows.exclusivePrefixSum`) enters a plan through `lit(`: Spark writes
@@ -26,7 +30,11 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PATTERN = re.compile(r'"((?:spark\.graft\.[A-Za-z0-9_.]+)|(?:SPARK_GRAFT_[A-Z0-9_]+))"')
 JOBS = os.path.join("src", "main", "scala", "graft", "core", "Jobs.scala")
-ONE_SITE = ("treeAggregate(", "getNumPartitions < 16")
+WINDOWS = os.path.join("src", "main", "scala", "graft", "core", "Windows.scala")
+ONE_SITE = {
+    JOBS: ("treeAggregate(", "getNumPartitions < 16"),
+    WINDOWS: ("percentile_approx(", "approxQuantile(", "valuesAtRanksGrouped("),
+}
 FITTED_LIT = re.compile(r"lit\((beta|covInv|sigma2|zScore|effectiveBudget|ratio)")
 DEF = re.compile(r"\bdef (\w+)")
 
@@ -52,8 +60,10 @@ def scan():
                         continue
                     d = DEF.search(code)
                     in_def = d.group(1) if d else in_def
-                    if rel != JOBS:
-                        strays += [f"{rel}:{n}: {p}" for p in ONE_SITE if p in code]
+                    for site, calls in ONE_SITE.items():
+                        if rel != site:
+                            strays += [(site, f"{rel}:{n}: {p}")
+                                       for p in calls if p in code]
                     if FITTED_LIT.search(code) or (
                             in_def == "exclusivePrefixSum" and "lit(off)" in code):
                         literals.append(f"{rel}:{n}: {code.strip()}")
@@ -76,8 +86,8 @@ def main():
         print(f"MISSING from README.md: {k}", file=sys.stderr)
     for k in repeated:
         print(f"READ AT {len(knobs[k])} SITES (one allowed): {k}", file=sys.stderr)
-    for s in strays:
-        print(f"OUTSIDE core/Jobs.scala: {s}", file=sys.stderr)
+    for site, s in strays:
+        print(f"OUTSIDE {site}: {s}", file=sys.stderr)
     for s in literals:
         print(f"FITTED VALUE AS lit( (use Param): {s}", file=sys.stderr)
     return 1 if missing or repeated or strays or literals else 0
