@@ -1,5 +1,6 @@
 package graft.core
 
+import graft.functions.{BucketIndex, SortedLookup}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,24 +23,7 @@ object Windows {
     * ~100 MB of boxed driver state, far above any decomposition workload
     * (2-3 groups) and low enough that a runaway group-dense caller fails
     * fast instead of OOMing the driver mid-collect. */
-  val MaxDriverGroupBucketTuples: Long = 2000000L
-
-  /** Interleaved point/range bucket id over frozen boundaries:
-    * boundary VALUES get their own exact-match (odd) buckets, strict
-    * ranges between them the even buckets. `approxQuantile` boundaries
-    * are actual data values, so when the probe collapses (tie-dense /
-    * near-constant keys) the mass sits ON the surviving boundaries —
-    * point buckets capture exactly those heavy tie runs, and every
-    * range bucket is bounded by the probe spacing (more mass between
-    * two adjacent distinct boundaries would have yielded another
-    * distinct boundary). Monotone in `v` by construction: v strictly
-    * between b_{j-1} and b_j -> 2j, v == b_j -> 2j + 1. Computed by a
-    * native binary-search expression: a 31-boundary when-chain fold is
-    * O(k) per row and big enough to fall off the compiled codegen path
-    * (measured 2-3x on the whole quantile family). */
-  private def pointRangeBucket(v: Column, boundaries: Array[Double]): Column =
-    if (boundaries.isEmpty) lit(0)
-    else graft.functions.BucketIndex(v, boundaries)
+  private[graft] val MaxDriverGroupBucketTuples: Long = 2000000L
 
   /** The bucketed front half of [[exclusivePrefixSum]] — split out so
     * specs can assert the effective (bucket, sub) split on tie-dense
@@ -69,7 +53,7 @@ object Windows {
     // comparisons all evaluated false); callers order/filter null keys
     // upstream
     val bucket =
-      coalesce(pointRangeBucket(col("__pfx_key__"), boundaries), lit(0))
+      coalesce(BucketIndex(col("__pfx_key__"), boundaries), lit(0))
     // sub-split point buckets when the key probe collapsed: distinct
     // boundaries < min(8, buckets/4) means ONE tied value may hold an
     // O(n) share of the rows
@@ -146,8 +130,8 @@ object Windows {
       acc += totals(k)
       k -> off
     }
-    val offCol = graft.functions.KeyedOffset(col("__bucket__"),
-      col("__sub__"), offsets)
+    val offCol = SortedLookup(Seq(col("__bucket__"), col("__sub__")),
+      offsets.map { case ((b, s), off) => Seq(b, s) -> off }, Some(0.0))
     withLocal.withColumn(outCol, col("__local_prefix__") + offCol)
       .drop("__pfx_key__", "__bucket__", "__sub__", "__val__",
         "__local_prefix__")
@@ -178,7 +162,7 @@ object Windows {
     * caller's `lanes`) and ONE [[valuesAtRanksGrouped]] for the ranks
     * `ranksOf(n)` of every group. Lanes may reference any column of
     * `df`. The null group key and groups with n == 0 carry their lanes
-    * but get no ranks.
+    * but get no ranks. A NaN value counts in n and ranks last.
     *
     * The stats pass stays a codegen hash aggregate and the rank-pick
     * sizes and runs its own boundary probe. Folding the probe into the
@@ -224,7 +208,9 @@ object Windows {
     * `percentile` and DuckDB's `quantile_cont`. Returns per group:
     * (non-null value count, tau -> quantile, the extra aggregate values
     * in argument order). Groups with n == 0 and the null group are
-    * omitted; n == 1 reports the single value at every tau. */
+    * omitted; n == 1 reports the single value at every tau. NaN
+    * propagates as in Spark's `percentile`: it ranks last, so it is the
+    * quantile at tau 1 and at any tau that interpolates towards it. */
   def quantilesType7Grouped(df: DataFrame, group: Column, value: Column,
       taus: Seq[Double], extraAggs: Seq[Column] = Nil)
       : Map[String, (Long, Map[Double, Double], Seq[Any])] = {
@@ -262,23 +248,28 @@ object Windows {
     * not the whole frame. The window partitions by (group, bucket), so
     * no group's rows ever collapse into one task.
     *
+    * One route, at any group or rank count: every table the pick needs
+    * (group -> id, (group, bucket) -> rank offset, the wanted
+    * (group, rank) set) enters the plan as one [[SortedLookup]], so the
+    * generated code is the same for every request, and an absent key
+    * (null) filters the row out. Rows with a null group or a null value
+    * never rank; NaN ranks last, as in Spark's `percentile`: the bucket
+    * index puts it in the top range bucket and the window's ascending
+    * order puts it after every number.
+    *
     * DRIVER-MEMORY CONTRACT: the per-(group, bucket) count metadata is
-    * collected to the driver, O(|ranksByGroup| x 2*shufflePartitions)
-    * tuples (the input is filtered to the REQUESTED groups first, so
-    * the frame's own group cardinality never matters). Callers already
-    * hold a driver-side map per requested group, so the collect adds a
-    * small constant factor — but a caller fanning out to ~10^6 groups
-    * at 200 shuffle partitions would put ~4x10^8 tuples on the driver.
-    * [[MaxDriverGroupBucketTuples]] bounds the driver route: past it
-    * the call switches to [[valuesAtRanksGroupedDense]], which keeps
-    * the offset metadata distributed end to end (the returned result
-    * map is O(requested ranks) either way — that size is the caller's
-    * own ask). Decompositions use 2-3 groups and stay on the
-    * driver-algebra route; `maxDriverTuples` exists so specs can force
-    * the dense route at any size. */
-  def valuesAtRanksGrouped(df: DataFrame, group: Column, value: Column,
-      ranksByGroup: Map[String, Set[Long]],
-      precomputedBoundaries: Option[Array[Double]] = None,
+    * collected to the driver, O(|ranksByGroup| x 2*buckets) tuples (the
+    * input is filtered to the REQUESTED groups first, so the frame's own
+    * group cardinality never matters). Callers already hold a
+    * driver-side map per requested group, so the collect adds a small
+    * constant factor. [[MaxDriverGroupBucketTuples]] guards the driver:
+    * past it the call switches to [[valuesAtRanksGroupedDense]], which
+    * keeps the offset metadata distributed end to end (the returned
+    * result map is O(requested ranks) either way — that size is the
+    * caller's own ask). `maxDriverTuples` exists so specs can force the
+    * dense route at any size. */
+  private[graft] def valuesAtRanksGrouped(df: DataFrame, group: Column,
+      value: Column, ranksByGroup: Map[String, Set[Long]],
       maxDriverTuples: Long = MaxDriverGroupBucketTuples)
       : Map[String, Map[Long, Double]] = {
     val want = ranksByGroup.collect {
@@ -286,7 +277,8 @@ object Windows {
     }
     if (want.isEmpty) return Map.empty
     val spark = df.sparkSession
-    import spark.implicits._
+    // group id = index into the requested groups, sorted
+    val groups = want.keys.toIndexedSeq.sorted
     // Bucket count scales with the REQUESTED rank count, not just the
     // shuffle-partition count: each wanted rank keeps at most one range
     // bucket (~n/buckets rows) alive through the final window sort, so
@@ -299,218 +291,125 @@ object Windows {
     // choice — the rank-pick is exact at ANY bucketing, so results are
     // bit-identical across bucket counts.
     val totalWanted = want.valuesIterator.map(_.size).sum
-    val nBucketsBase = math.min(1024L,
+    val nBuckets = math.min(1024L,
       math.max(spark.sessionState.conf.numShufflePartitions.toLong,
         16L * totalWanted))
-    val nBuckets2 = 2L * nBucketsBase
-    val vals0 = df
-      .select(group.cast("string").as("__g__"), value.cast("double").as("__v__"))
-      .na.drop()
-    // a 10^5-literal isin would blow up codegen/analysis; group-dense
-    // calls restrict via a semi-join instead
-    val vals =
-      if (want.size <= 1000)
-        vals0.filter(col("__g__").isin(want.keys.toSeq: _*))
-      else
-        vals0.join(broadcastableGroups(spark, want.keys), Seq("__g__"),
-          "left_semi")
-    val probes = probeFractions(nBucketsBase.toInt)
-    // precomputedBoundaries: any boundary set gives the same results
-    // (specs use it to show that)
-    val boundaries = precomputedBoundaries match {
-      case Some(b) => graft.functions.BucketIndexExpr.normalize(b)
-      case None =>
-        if (probes.isEmpty) Array.empty[Double]
-        else graft.functions.BucketIndexExpr.normalize(
-          Jobs.labeled(spark, "rank-pick: boundary probe") {
-            vals.stat.approxQuantile("__v__", probes, 0.01)
-          })
-    }
-    if (want.size.toLong * nBuckets2 > maxDriverTuples)
-      return valuesAtRanksGroupedDense(spark, vals, boundaries, want)
-    // interleaved point/range buckets (see pointRangeBucket): a rank
-    // that falls inside a POINT bucket needs no sort at all — every row
-    // there shares the boundary value, so the answer IS that value,
-    // resolved on the driver below. Only thin RANGE buckets (bounded by
-    // the probe spacing) ever reach the window, so a (near-)constant
-    // value column — which collapses the probe's distinct set — can no
-    // longer funnel all rows into one single-task sort: its heavy tied
-    // values short-circuit driver-side instead.
-    val bucket = pointRangeBucket(col("__v__"), boundaries)
-    val bucketed = vals.withColumn("__bucket__", bucket)
-    // per-(group, bucket) counts: <= groups * buckets rows, deterministic
-    // (value-derived buckets), so re-executions stay self-consistent
-    val totals = Jobs.labeled(spark, "rank-pick: per-(group,bucket) counts") {
-      bucketed.groupBy(col("__g__"), col("__bucket__"))
-        .agg(count(lit(1)).as("__n__"))
-        .collect()
-    }.map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    val offsets: Map[(String, Int), Long] =
-      totals.keys.groupBy(_._1).flatMap { case (g, ks) =>
-        var acc = 0L
-        ks.map(_._2).toSeq.sorted.map { b =>
-          val entry = (g, b) -> acc
-          acc += totals((g, b))
-          entry
-        }
-      }
-    // resolve ranks landing in point buckets straight from the boundary
-    // value; only the rest need the distributed rank-pick
-    val pointHits: Map[String, Map[Long, Double]] = offsets.toSeq.collect {
-      case ((g, b), off) if b % 2 == 1 =>
-        want(g).filter(r => r >= off && r < off + totals((g, b)))
-          .map(r => (g, r, boundaries((b - 1) / 2)))
-    }.flatten.groupBy(_._1)
-      .map { case (g, hs) => g -> hs.map(h => h._2 -> h._3).toMap }
-    val remaining: Map[String, Set[Long]] = want.map { case (g, rs) =>
-      g -> (rs -- pointHits.getOrElse(g, Map.empty).keySet)
-    }.filter(_._2.nonEmpty)
-    if (remaining.isEmpty) return pointHits
-    // prune to the RANGE buckets whose [offset, offset + n) range holds
-    // a still-unresolved rank for SOME group — everything else never
-    // needs sorting. The prune predicate references __bucket__ exactly
-    // once (a plain isin): a per-(group, bucket) OR-chain here re-inlines
-    // the bucket when-fold once per term below the exchange and measured
-    // ~10x slower than the whole window it guards.
-    val keptBuckets = offsets.collect {
-      case ((g, b), off)
-        if b % 2 == 0 && remaining.getOrElse(g, Set.empty)
-          .exists(r => r >= off && r < off + totals((g, b))) => b
-    }.toSet
-    val keepBucket =
-      col("__bucket__").isin(keptBuckets.toSeq.map(_.asInstanceOf[Any]): _*)
-    // rank offsets for EVERY (group, bucket) pair that survives the
-    // bucket prune — a surviving row's rank must be exact even when its
-    // own (group, bucket) wasn't the hit target, or the final rank
-    // filter could select an impostor row. For the COMMON case (a few
-    // groups x a few kept buckets — every decomposition caller) the
-    // offsets and the requested ranks inline as flat when-chains /
-    // OR-predicates over the POST-window columns: the two broadcast
-    // LocalRelation joins they replace cost two extra AQE stage rounds
-    // plus their planning (~0.3 s of driver gap per call at test scale,
-    // pure fixed cost at any scale). A high-cardinality call (grouped
-    // fits over thousands of levels) would generate an enormous
-    // Catalyst expression that way (codegen 64KB method fallback, slow
-    // analysis), so past 64 entries the attachments stay BROADCAST
-    // joins. Both routes see the identical window input (the offset
-    // attachment can never drop a row: every surviving (group, bucket)
-    // has an offsets entry), so ranks — and results — are bit-identical.
-    // The isin bucket prune stays a plain filter so it still pushes
-    // toward the scan.
-    val offEntries = offsets.toSeq
-      .collect { case ((g, b), off) if keptBuckets(b) => (g, b, off.toDouble) }
-    val wantEntries = remaining.iterator
-      .flatMap { case (g, rs) => rs.map(r => (g, r.toDouble)) }.toSeq
-    val local = Window.partitionBy(col("__g__"), col("__bucket__"))
-      .orderBy(col("__v__").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val localRank = coalesce(sum(lit(1.0)).over(local), lit(0.0))
+    val gid = SortedLookup(Seq(group.cast("string")),
+      groups.indices.map(i => Seq(groups(i)) -> i.toDouble), None)
+    val vals = df.select(gid.cast("int").as("__gid__"),
+        value.cast("double").as("__v__"))
+      .filter(col("__gid__").isNotNull && col("__v__").isNotNull)
+    val boundaries = graft.functions.BucketIndexExpr.normalize(
+      Jobs.labeled(spark, "rank-pick: boundary probe") {
+        vals.stat.approxQuantile("__v__", probeFractions(nBuckets.toInt), 0.01)
+      })
+    val bucketed = vals.withColumn("__bucket__",
+      BucketIndex(col("__v__"), boundaries))
     val picked =
-      if (offEntries.size + wantEntries.size <= 64) {
-        val offCol = offEntries.foldLeft(lit(null).cast("double")) {
-          case (acc, (g, b, off)) =>
-            when(col("__g__") === lit(g) && col("__bucket__") === lit(b),
-              lit(off)).otherwise(acc)
+      if (want.size * 2L * nBuckets > maxDriverTuples)
+        valuesAtRanksGroupedDense(bucketed, boundaries, groups.map(want))
+      else {
+        // per-(group, bucket) counts: <= groups * buckets rows,
+        // deterministic (value-derived buckets), so re-executions stay
+        // self-consistent
+        val counts = Jobs.labeled(spark, "rank-pick: per-(group,bucket) counts") {
+          bucketed.groupBy(col("__gid__"), col("__bucket__")).count().collect()
+        }.map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2))
+        // each wanted rank's (group, bucket) and that bucket's first rank
+        val hits = counts.groupBy(_._1._1).toSeq.flatMap { case (g, cs) =>
+          var acc = 0L
+          cs.sortBy(_._1._2).flatMap { case ((_, b), n) =>
+            acc += n
+            want(groups(g)).filter(r => r >= acc - n && r < acc)
+              .map(r => (g, b, acc - n, r))
+          }
         }
-        val wantPred = wantEntries.map { case (g, r) =>
-          col("__g__") === lit(g) && col("__rk__") === lit(r)
-        }.reduce(_ || _)
-        bucketed.filter(keepBucket)
-          .withColumn("__rk__", localRank + offCol)
-          .filter(wantPred)
-      } else {
-        val offDf = offEntries.toDF("__g__", "__bucket__", "__off__")
-        val wantDf = wantEntries.toDF("__g__", "__rk__")
-        bucketed.filter(keepBucket)
-          .join(broadcast(offDf), Seq("__g__", "__bucket__"))
-          .withColumn("__rk__", localRank + col("__off__"))
-          .join(broadcast(wantDf), Seq("__g__", "__rk__"))
+        // a rank in a POINT bucket needs no sort — every row there holds
+        // the boundary value. Only thin RANGE buckets (bounded by the
+        // probe spacing) reach the window, so a (near-)constant value
+        // column, which collapses the probe's distinct set, cannot funnel
+        // its rows into one single-task sort.
+        val (points, ranges) = hits.partition(_._2 % 2 == 1)
+        val local = Window.partitionBy(col("__gid__"), col("__bucket__"))
+          .orderBy(col("__v__").asc)
+        // the offset table holds only the (group, bucket) pairs with a
+        // wanted rank: every other row is pruned before the sort
+        val offset = SortedLookup(Seq(col("__gid__"), col("__bucket__")),
+          ranges.map(h => Seq(h._1, h._2) -> h._3.toDouble).distinct, None)
+        val wanted = SortedLookup(Seq(col("__gid__"), col("__rk__")),
+          ranges.map(h => Seq(h._1, h._4) -> 0.0), None)
+        val windowed = if (ranges.isEmpty) Array.empty[(Int, Long, Double)]
+          else Jobs.labeled(spark, "rank-pick: windowed pick") {
+            bucketed.withColumn("__off__", offset)
+              .filter(col("__off__").isNotNull)
+              .withColumn("__rk__",
+                (row_number().over(local) + col("__off__") - 1).cast("long"))
+              .filter(wanted.isNotNull)
+              .select(col("__gid__"), col("__rk__"), col("__v__")).collect()
+          }.map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+        points.map(h => (h._1, h._4, boundaries((h._2 - 1) / 2))) ++ windowed
       }
-    val windowed = Jobs.labeled(spark, "rank-pick: windowed pick") {
-      picked
-        .select(col("__g__"), col("__rk__"), col("__v__"))
-        .collect()
+    picked.groupBy(_._1).map { case (g, hs) =>
+      groups(g) -> hs.map(h => h._2 -> h._3).toMap
     }
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => r.getDouble(1).toLong -> r.getDouble(2)).toMap
-      }
-    // merge driver-resolved point-bucket answers with the windowed ones
-    (windowed.keySet ++ pointHits.keySet).iterator.map { g =>
-      g -> (windowed.getOrElse(g, Map.empty) ++
-        pointHits.getOrElse(g, Map.empty))
-    }.toMap
   }
 
-  /** The requested group names as a DataFrame (partitioned, not a
-    * LocalRelation literal list). */
-  private def broadcastableGroups(spark: org.apache.spark.sql.SparkSession,
-      groups: Iterable[String]): DataFrame = {
-    import spark.implicits._
-    spark.sparkContext.parallelize(groups.toSeq,
-      math.max(1, spark.sparkContext.defaultParallelism)).toDF("__g__")
-  }
-
-  /** Group-dense rank-pick: the same bucketed algorithm as
-    * [[valuesAtRanksGrouped]] with every piece of per-(group, bucket)
+  /** Group-dense rank-pick, the driver-memory guard of
+    * [[valuesAtRanksGrouped]]: the same bucketed algorithm over the same
+    * (group id, value) rows with every piece of per-(group, bucket)
     * metadata kept DISTRIBUTED — cumulative offsets via a per-group
-    * window over the (group, bucket) count table (at most
-    * 2*shufflePartitions rows per group, so no skew), rank-to-bucket
-    * location via an equi-join on the group plus the offset-range
-    * predicate, point buckets resolved by a broadcast join against the
-    * boundary values, and range buckets by a per-(group, bucket)
-    * `row_number` window on the semi-joined rows. Only the RESULT
-    * (one row per requested rank — the size of the caller's own input
-    * map) is ever collected. */
-  private def valuesAtRanksGroupedDense(
-      spark: org.apache.spark.sql.SparkSession, vals: DataFrame,
-      boundaries: Array[Double], want: Map[String, Set[Long]])
-      : Map[String, Map[Long, Double]] = {
+    * window over the (group, bucket) count table (at most 2 * buckets
+    * rows per group, so no skew), rank-to-bucket location via an
+    * equi-join on the group plus the offset-range predicate, point
+    * buckets resolved from the boundary values, and range buckets by a
+    * per-(group, bucket) `row_number` window on the semi-joined rows.
+    * Only the RESULT (one row per requested rank — the size of the
+    * caller's own input map) is ever collected. Its jobs carry
+    * `rank-pick:` labels. The two frames it reads twice are cached and
+    * released before it returns (not local checkpoints: a task of a
+    * stage AQE cancels can still be reading after the result is in, and
+    * a released checkpoint fails it where a released cache recomputes). */
+  private def valuesAtRanksGroupedDense(bucketed0: DataFrame,
+      boundaries: Array[Double], want: IndexedSeq[Set[Long]])
+      : Seq[(Int, Long, Double)] = {
+    val spark = bucketed0.sparkSession
     import spark.implicits._
-    val bucket = pointRangeBucket(col("__v__"), boundaries)
-    // read twice (count table + the final window); keep the lineage flat
-    val bucketed = vals.withColumn("__bucket__", bucket).localCheckpoint()
-    val totals = bucketed.groupBy(col("__g__"), col("__bucket__"))
-      .agg(count(lit(1)).as("__n__"))
-    val wOff = Window.partitionBy(col("__g__")).orderBy(col("__bucket__"))
+    val bucketed = bucketed0.persist()
+    val wOff = Window.partitionBy(col("__gid__")).orderBy(col("__bucket__"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = totals.withColumn("__off__",
-      coalesce(sum(col("__n__")).over(wOff), lit(0L)))
+    val offs = bucketed.groupBy(col("__gid__"), col("__bucket__")).count()
+      .withColumn("__off__", coalesce(sum(col("count")).over(wOff), lit(0L)))
     val ranksDf = spark.sparkContext.parallelize(
-        want.iterator.flatMap { case (g, rs) =>
-          rs.iterator.map(r => (g, r))
-        }.toSeq,
+        want.indices.flatMap(g => want(g).map(r => (g, r))),
         math.max(1, spark.sparkContext.defaultParallelism))
-      .toDF("__g__", "__r__")
+      .toDF("__gid__", "__r__")
     // each rank falls in exactly one bucket's [off, off + n) span;
     // ranks past the group's total row count simply never match (the
     // same omission semantics as the driver route)
-    val located = ranksDf.join(offs, Seq("__g__"))
+    val located = ranksDf.join(offs, Seq("__gid__"))
       .filter(col("__r__") >= col("__off__") &&
-        col("__r__") < col("__off__") + col("__n__"))
-      .select(col("__g__"), col("__r__"), col("__bucket__"), col("__off__"))
-      .localCheckpoint()
-    val boundaryVals = boundaries.zipWithIndex
-      .map { case (v, i) => (2 * i + 1, v) }.toSeq
-      .toDF("__bucket__", "__pv__")
+        col("__r__") < col("__off__") + col("count"))
+      .select(col("__gid__"), col("__r__"), col("__bucket__"), col("__off__"))
+      .persist()
+    val pointValue = SortedLookup(Seq(col("__bucket__")),
+      boundaries.indices.map(i => Seq(2 * i + 1) -> boundaries(i)), None)
     val pointRows = located.filter(col("__bucket__") % 2 === 1)
-      .join(broadcast(boundaryVals), Seq("__bucket__"))
-      .select(col("__g__"), col("__r__"), col("__pv__").as("__v__"))
+      .select(col("__gid__"), col("__r__"), pointValue.as("__v__"))
     val targets = located.filter(col("__bucket__") % 2 === 0)
-      .select(col("__g__"), col("__bucket__"), col("__r__"),
+      .select(col("__gid__"), col("__bucket__"), col("__r__"),
         (col("__r__") - col("__off__")).as("__lr__"))
-    val keep = targets.select(col("__g__"), col("__bucket__")).distinct()
-    val local = Window.partitionBy(col("__g__"), col("__bucket__"))
+    val keep = targets.select(col("__gid__"), col("__bucket__")).distinct()
+    val local = Window.partitionBy(col("__gid__"), col("__bucket__"))
       .orderBy(col("__v__").asc)
     val rangeRows = bucketed
-      .join(keep, Seq("__g__", "__bucket__"), "left_semi")
+      .join(keep, Seq("__gid__", "__bucket__"), "left_semi")
       .withColumn("__lr__", row_number().over(local).cast("long") - lit(1L))
-      .join(targets, Seq("__g__", "__bucket__", "__lr__"))
-      .select(col("__g__"), col("__r__"), col("__v__"))
-    pointRows.unionByName(rangeRows).collect()
-      .groupBy(_.getString(0))
-      .map { case (g, rows) =>
-        g -> rows.map(r => r.getLong(1) -> r.getDouble(2)).toMap
-      }
+      .join(targets, Seq("__gid__", "__bucket__", "__lr__"))
+      .select(col("__gid__"), col("__r__"), col("__v__"))
+    try {
+      Jobs.labeled(spark, "rank-pick: dense pick") {
+        pointRows.unionByName(rangeRows).collect()
+      }.map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+    } finally Seq(bucketed, located).foreach(_.unpersist(blocking = false))
   }
 }

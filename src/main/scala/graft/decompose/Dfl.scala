@@ -28,7 +28,10 @@ object Dfl {
   /** `logitMaxIter`/`logitTol` pin the reweighting logit's iteration
     * count (tol = 0.0 forces exactly maxIter iterations) — the oracle
     * query q_dfl_newton3 uses 3 pinned iterations so the whole pipeline
-    * is closed-form; production callers keep the convergence defaults. */
+    * is closed-form; production callers keep the convergence defaults.
+    * A NaN outcome propagates into the outcome range, the bandwidths and
+    * the densities; a group whose outcomes are all null raises
+    * [[InvalidGroupVariable]]. */
   def run(df0: DataFrame, outcome: String, group: String, reference: String,
       predictors: Seq[String], logitMaxIter: Int = 100,
       logitTol: Double = 1e-6): DflResult = {
@@ -113,8 +116,11 @@ object Dfl {
 
       val p = least(greatest(fit.probCol(xCols), lit(1e-4)), lit(0.9999))
 
-      val bwA = bws(levelA)
-      val bwB = bws(reference)
+      // silvermanGrouped omits a group with no non-null outcome
+      val (bwA, bwB) = (bws.get(levelA), bws.get(reference)) match {
+        case (Some(a), Some(b)) => (a, b)
+        case _ => throw InvalidGroupVariable("One group has no data")
+      }
 
       // all three densities in ONE scan: per-density weight columns
       // that are 0 outside the density's subset. The weight lanes

@@ -114,7 +114,8 @@ object Kde {
     * global outcome range in, erasing its own separate pass). Returns
     * (group → bandwidth, group → extra lane values); groups with no
     * non-null value and the null group are omitted from the bandwidth
-    * map but still carry their extras. */
+    * map but still carry their extras. A NaN value propagates: its
+    * group's variance, and so its bandwidth, is NaN. */
   def silvermanGrouped(df: DataFrame, valueCol: String, group: Column,
       extraAggs: Seq[Column] = Nil)
       : (Map[String, Double], Map[String, Seq[Any]]) = {

@@ -1,6 +1,7 @@
 package graft.estimators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.SortedLookup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recentered Influence Function transform for a quantile
@@ -38,7 +39,9 @@ object Rif {
     * prunes to. Only per-group scalars reach the driver. Groups with
     * n < 2 pass y through; n == 0 (all-null outcome) reports qTau 0.0,
     * bandwidth 1.0 and the floored density. Rows with a null group
-    * pass y through and get no [[GroupRif]]. */
+    * pass y through and get no [[GroupRif]]. A NaN outcome propagates:
+    * it ranks last in its group's order statistics, so its group's
+    * moments, and possibly its q_tau and bandwidth, are NaN. */
   def transformPerGroup(df: DataFrame, outcome: String, groupCol: String,
       tau: Double, outCol: String = "__rif__"): (DataFrame, Seq[GroupRif]) = {
     val y = col(outcome).cast("double")
@@ -93,8 +96,10 @@ object Rif {
     // one-point density at q_tau per group, with a count(y <= q) lane
     // riding along — it makes the group RIF mean closed-form on the
     // driver (see [[GroupRif.meanRif]])
-    val qOfN = caseOver(col("__g__"), stats.map { case (l, (_, q, _)) => l -> q })
-    val hOfN = caseOver(col("__g__"), stats.map { case (l, (_, _, h)) => l -> h })
+    val qOfN = SortedLookup(Seq(col("__g__")),
+      stats.map { case (l, (_, q, _)) => Seq(l) -> q }, None)
+    val hOfN = SortedLookup(Seq(col("__g__")),
+      stats.map { case (l, (_, _, h)) => Seq(l) -> h }, None)
     val densityRows = graft.core.Jobs.labeled(df.sparkSession,
       "rif: one-point density") {
       narrow
@@ -112,25 +117,19 @@ object Rif {
     }.toMap
     val countsLe = densityRows.map(r => r.getString(0) -> r.getLong(2)).toMap
 
-    val qOf = caseOver(g, stats.map { case (l, (_, q, _)) => l -> q })
-    val fOf = caseOver(g, densities.toSeq)
+    // n < 2: reference returns the series unchanged, so those groups
+    // (and the null group) get no q_tau and pass y through
+    val qOf = SortedLookup(Seq(g),
+      stats.collect { case (l, (n, q, _)) if n >= 2 => Seq(l) -> q }, None)
+    val fOf = SortedLookup(Seq(g),
+      densities.map { case (l, f) => Seq(l) -> f }, None)
     val rif = when(qOf.isNull, y).otherwise(
       qOf + (lit(tau) - when(y <= qOf, 1.0).otherwise(0.0)) / fOf)
-    // n < 2: reference returns the series unchanged
-    val small = stats.collect { case (l, (n, _, _)) if n < 2 => l }.toSeq
-    val rifFinal = if (small.isEmpty) rif else
-      when(g.isin(small: _*), y).otherwise(rif)
 
     val info = stats.toSeq.sortBy(_._1).map { case (l, (n, q, h)) =>
       GroupRif(l, n, q, h, densities(l),
         countsLe.getOrElse(l, 0L))
     }
-    (df.withColumn(outCol, rifFinal), info)
+    (df.withColumn(outCol, rif), info)
   }
-
-  /** Per-level scalar lookup as a when/otherwise chain (few levels). */
-  private def caseOver(g: Column, values: Iterable[(String, Double)]): Column =
-    values.foldLeft(lit(null).cast("double")) { case (acc, (lvl, v)) =>
-      when(g === lit(lvl), lit(v)).otherwise(acc)
-    }
 }

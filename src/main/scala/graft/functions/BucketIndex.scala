@@ -14,7 +14,13 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   *
   * Semantics (boundaries b_0 < ... < b_{k-1}):
   * v strictly between b_{j-1} and b_j -> 2j (range bucket);
-  * v == b_j -> 2j + 1 (point bucket). Monotone in v.
+  * v == b_j -> 2j + 1 (point bucket). Monotone in v; with no
+  * boundaries every value is in bucket 0. `approxQuantile` boundaries
+  * are actual data values, so when the probe collapses (tie-dense or
+  * near-constant keys) the mass sits ON the surviving boundaries: point
+  * buckets capture exactly those heavy tie runs, and every range bucket
+  * is bounded by the probe spacing (more mass between two adjacent
+  * distinct boundaries would have yielded another distinct boundary).
   *
   * The when-chain formulation (`sum_i CASE WHEN v > b_i ...`) is O(k)
   * comparisons per row and, at the shuffle-partition boundary counts the
@@ -23,7 +29,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType}
   * interleaving doubled it and measurably fell off the compiled path.
   * This expression is O(log k) with a fixed, tiny method body: one
   * `Arrays.binarySearch` against a per-query static array. The hash
-  * ignores the boundaries, for the reason [[ParamExpr]] gives. */
+  * ignores the boundaries, for the reason [[ParamExpr]] gives. Keyed
+  * tables over the buckets (offsets, wanted ranks) go through
+  * [[SortedLookupExpr]], which replaced their when-chains the same way. */
 case class BucketIndexExpr(child: Expression, boundaries: Array[Double])
     extends UnaryExpression {
 
@@ -54,12 +62,10 @@ object BucketIndexExpr {
   /** Interleaved point/range index (see class doc). Java binarySearch
     * returns the match index i (-> 2i + 1) or -(insertion + 1)
     * (-> 2 * insertion). NaN sorts above all values (Java double
-    * ordering), landing in the top range bucket — same as the when-chain
-    * it replaces, where NaN comparisons were false... NaN > b is false in
-    * SQL, so the chain put NaN in bucket 0; rank picks never see NaN
-    * (na.drop upstream) and prefix-sum keys are cast doubles where a NaN
-    * would have been null-dropped by callers, so the difference is
-    * unobservable — documented for completeness. */
+    * ordering) and lands in the top range bucket, after every number,
+    * which is where SQL's ascending order puts it too. So the rank-pick
+    * ranks NaN last, as Spark's `percentile` does, and a NaN prefix-sum
+    * key sums after every number. */
   def index(boundaries: Array[Double], v0: Double): Int = {
     // -0.0 + 0.0 == +0.0 (IEEE), everything else unchanged: binarySearch
     // orders -0.0 < 0.0, but SQL treats the zeros as equal, so an

@@ -41,6 +41,16 @@ class ErrorSpec extends SparkSpec {
     }
   }
 
+  test("DFL with a group whose outcomes are all null raises InvalidGroupVariable") {
+    val df = Seq((Option(1.0), "A", 1.0), (Option(2.0), "A", 2.0),
+      (Option(3.0), "A", 3.0), (Option.empty[Double], "B", 1.0),
+      (Option.empty[Double], "B", 2.0), (Option.empty[Double], "B", 3.0))
+      .toDF("y", "g", "x")
+    assertThrows[InvalidGroupVariable] {
+      Dfl.run(df, "y", "g", "A", Seq("x"))
+    }
+  }
+
   test("unknown reference level raises InvalidGroupVariable") {
     val df = Seq((1.0, "A", 1.0), (2.0, "B", 2.0)).toDF("y", "g", "x")
     assertThrows[InvalidGroupVariable] {

@@ -1,16 +1,16 @@
 package graft
 
-import graft.functions.{CenteredDot, DotProduct, KeyedOffset, KeyedOffsetExpr, Param, ParamExpr}
+import graft.functions.{CenteredDot, DotProduct, Param, ParamExpr, SortedLookup, SortedLookupExpr}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Unit coverage for the native array kernels (DotProductExpr /
   * CenteredDotExpr) — value equivalence with the higher-order-function
   * formulations they replaced, float widening, and null semantics — and
-  * for the parameter leaves (ParamExpr, KeyedOffsetExpr). */
+  * for the parameter leaves (ParamExpr, SortedLookupExpr). */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -121,13 +121,15 @@ class FunctionsSpec extends SparkSpec {
     assert(!ParamExpr(1.0).semanticEquals(ParamExpr(2.0)))
   }
 
-  test("KeyedOffset: codegen equals eval; an absent key or a null input gives 0") {
+  test("SortedLookup: codegen equals eval; absent key or null input gives 0") {
     val table = Seq((0, 0) -> 0.0, (1, 0) -> 2.5, (1, 3) -> 7.25, (4, -1) -> -1.5)
     val e = org.apache.spark.sql.GraftSqlBridge
-      .expression(KeyedOffset(col("b"), col("s"), table))
-      .asInstanceOf[KeyedOffsetExpr]
-    val bound = e.copy(left = BoundReference(0, IntegerType, nullable = true),
-      right = BoundReference(1, IntegerType, nullable = true))
+      .expression(SortedLookup(Seq(col("b"), col("s")),
+        table.map { case ((b, s), o) => Seq(b, s) -> o }, Some(0.0)))
+      .asInstanceOf[SortedLookupExpr]
+    val bound = e.withNewChildren(Seq(0, 1).map(i =>
+      Cast(BoundReference(i, IntegerType, nullable = true), LongType)))
+      .asInstanceOf[SortedLookupExpr]
     val proj = GenerateUnsafeProjection.generate(Seq(bound))
     val cases = table.map { case ((b, s), o) => (Option(b), Option(s), o) } ++
       Seq((Some(1), Some(1), 0.0), (Some(9), Some(0), 0.0),
@@ -137,7 +139,29 @@ class FunctionsSpec extends SparkSpec {
       assert(proj.apply(row).getDouble(0) == want, s"codegen ($b, $s)")
       assert(bound.eval(row) == want, s"eval ($b, $s)")
     }
-    assert(e.hashCode == e.copy(offsets = Array(9.0, 9.0, 9.0, 9.0)).hashCode)
+    assert(e.hashCode == e.copy(values = Array(9.0, 9.0, 9.0, 9.0)).hashCode)
+  }
+
+  test("SortedLookup: string and long keys; absent None gives null") {
+    // repartitioned, so the projection is not folded into a LocalRelation
+    val df = Seq((0, "b", 2L), (1, "a", 1L), (2, "b", 1L), (3, "c", 1L),
+      (4, null, 1L), (5, "\u00e9", 3L)).toDF("id", "g", "r").repartition(2)
+    val look = SortedLookup(Seq(col("g"), col("r")), Seq(Seq("a", 1L) -> 10.0,
+      Seq("b", 2) -> 20.0, Seq("\u00e9", 3L) -> 30.0, Seq("b", 9L) -> 90.0), None)
+    val want = Seq(Some(20.0), Some(10.0), None, None, None, Some(30.0))
+    // whole-stage codegen and interpreted evaluation agree
+    for ((wholeStage, mode) <- Seq(("true", "CODEGEN_ONLY"), ("false", "NO_CODEGEN"))) {
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try {
+        val got = df.select(col("id"), look).collect().sortBy(_.getInt(0))
+          .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))).toSeq
+        assert(got == want, mode)
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
   }
 
   test("the kernels stay inside whole-stage codegen (no ScalaUDF)") {

@@ -6,42 +6,15 @@ import graft.estimators.{Kde, Probit, Rif}
 import graft.ext.{Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import scala.collection.mutable
 
 /** `Jobs.par2`'s failure path, `Jobs.labeled`'s nesting,
   * `Jobs.treeReduce`'s result and job labels, and the job counts of the
   * discovery passes built on it. */
 class JobsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** The labels of the jobs `body` submits, in submission order. A
-    * sentinel job closes the window: listener events arrive in order,
-    * so once its start is seen every earlier job start has been too. */
-  private def labelsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val seen = mutable.ArrayBuffer.empty[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = seen.synchronized {
-        seen += Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-      }
-    }
-    val sentinel = s"jobs-spec sentinel ${System.nanoTime}"
-    sc.addSparkListener(listener)
-    try {
-      body
-      Jobs.labeled(spark, sentinel) { sc.parallelize(Seq(1)).count() }
-      val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-      while (!seen.synchronized(seen.contains(sentinel)) &&
-          System.nanoTime < deadline) Thread.sleep(10)
-    } finally sc.removeSparkListener(listener)
-    seen.synchronized(seen.takeWhile(_ != sentinel).toSeq)
-  }
 
   private def liveGraftThreads: Seq[String] =
     Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq

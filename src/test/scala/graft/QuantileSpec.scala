@@ -149,22 +149,94 @@ class QuantileSpec extends SparkSpec {
     val byG = rows.groupBy(_._1).map { case (g, rs) =>
       g -> rs.map(_._2).sorted.toIndexedSeq
     }
+    def pick(wanted: Map[String, Set[Long]]): Map[String, Map[Long, Double]] = {
+      val got = graft.core.Windows.valuesAtRanksGrouped(
+        df, col("g"), col("v"), wanted)
+      assert(got.keySet == wanted.keySet)
+      wanted.foreach { case (g, rs) =>
+        assert(got(g) == rs.map(r => r -> byG(g)(r.toInt)).toMap, g)
+      }
+      got
+    }
     val wanted = byG.map { case (g, vs) =>
       g -> Set(0L, vs.size / 3L, vs.size - 1L)
     }
-    val got = graft.core.Windows.valuesAtRanksGrouped(
-      df, col("g"), col("v"), wanted)
+    val got = pick(wanted)
+    // buckets only balance the sort: the bucket count grows with the
+    // rank-set size (16 per wanted rank, at most 1024) and with
+    // spark.sql.shuffle.partitions, and neither changes a value
+    val wider = pick(byG.map { case (g, vs) =>
+      g -> (wanted(g) ++ (0L until vs.size.toLong by 9L))
+    })
+    val one = byG.map { case (g, vs) => g -> Set(vs.size / 3L) }
+    val few = pick(one)
+    spark.conf.set("spark.sql.shuffle.partitions", "300")
+    val manyPartitions = try pick(one)
+      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
     wanted.foreach { case (g, rs) =>
-      rs.foreach(r => assert(got(g)(r) == byG(g)(r.toInt), s"$g rank $r"))
+      assert(wider(g).filter(e => rs(e._1)) == got(g), g)
+      assert(few(g) == got(g).filter(e => one(g)(e._1)), g)
+      assert(manyPartitions(g) == few(g), g)
     }
-    // precomputed boundaries only balance buckets — coarse, duplicated,
-    // or even empty boundary sets must not change any returned value
-    val got2 = graft.core.Windows.valuesAtRanksGrouped(
-      df, col("g"), col("v"), wanted, Some(Array(1.0, 1.0, 3.7)))
-    assert(got2 == got)
-    val got3 = graft.core.Windows.valuesAtRanksGrouped(
-      df, col("g"), col("v"), wanted, Some(Array.empty[Double]))
-    assert(got3 == got)
+  }
+
+  test("valuesAtRanksGrouped: 200 groups x 3 ranks against sorted arrays") {
+    import org.apache.spark.sql.functions.col
+    val rng = new scala.util.Random(13)
+    val rows = (0 until 200).flatMap { g =>
+      (0 until 5 + g % 40).map(_ => (s"g$g", math.floor(rng.nextDouble() * 80) / 8.0))
+    }
+    val byG = rows.groupBy(_._1).map { case (g, rs) =>
+      g -> rs.map(_._2).sorted.toIndexedSeq
+    }
+    val wanted = byG.map { case (g, vs) =>
+      g -> Set(0L, vs.size / 2L, vs.size - 1L)
+    }
+    val got = graft.core.Windows.valuesAtRanksGrouped(
+      rng.shuffle(rows).toDF("g", "v"), col("g"), col("v"), wanted)
+    assert(got.keySet == wanted.keySet)
+    wanted.foreach { case (g, rs) =>
+      assert(got(g) == rs.map(r => r -> byG(g)(r.toInt)).toMap, g)
+    }
+  }
+
+  test("NaN ranks last and ±Inf are values: type-7 equals Spark's exact percentile") {
+    import org.apache.spark.sql.functions._
+    val df = Seq(("nan", Double.NaN), ("nan", 3.0), ("nan", 5.0),
+      ("inf", Double.PositiveInfinity), ("inf", 1.0), ("inf", 2.0),
+      ("inf", Double.NegativeInfinity), ("inf", 2.5)).toDF("g", "v")
+    val taus = Seq(0.0, 0.5, 1.0)
+    val got = graft.core.Windows.quantilesType7Grouped(df, col("g"),
+      col("v"), taus)
+    val want = df.groupBy(col("g"))
+      .agg(expr(s"percentile(v, array(${taus.mkString("D,")}D))").as("qs"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    assert(got.keySet == want.keySet)
+    assert(got("nan")._1 == 3L && got("inf")._1 == 5L)
+    want.foreach { case (g, qs) =>
+      taus.zip(qs).foreach { case (t, q) =>
+        assert(java.lang.Double.compare(got(g)._2(t), q) == 0,
+          s"$g tau=$t: ${got(g)._2(t)} vs $q")
+      }
+    }
+    assert(got("nan")._2(1.0).isNaN && got("nan")._2(0.5) == 5.0)
+  }
+
+  test("a NaN outcome propagates through Silverman, RIF and DFL") {
+    import org.apache.spark.sql.functions._
+    // n = 3 puts the NaN (rank 2, the last) at a rank every front end asks
+    // for: the Silverman q3 floor(0.75 n) and the rif.rs q75 ceil(0.75 n) - 1
+    val df = Seq((Double.NaN, "F", 10.0), (3.0, "F", 12.0), (5.0, "F", 14.0),
+      (4.0, "M", 10.0), (6.0, "M", 11.0), (8.0, "M", 12.0), (9.0, "M", 13.0),
+      (11.0, "M", 14.0), (12.0, "M", 15.0)).toDF("wage", "gender", "education")
+    val (bws, _) = Kde.silvermanGrouped(df, "wage", col("gender"))
+    assert(bws("F").isNaN && !bws("M").isNaN)
+    val (out, info) = Rif.transformPerGroup(df, "wage", "gender", 0.5)
+    assert(info.map(i => i.level -> i.n) == Seq("F" -> 3L, "M" -> 6L))
+    assert(info.head.qTau == 5.0 && info.head.bandwidth.isNaN)
+    assert(out.count() == 9L)
+    val res = Dfl.run(df, "wage", "gender", "F", Seq("education"))
+    assert(res.grid.length == Dfl.GridSize && res.densityA.length == Dfl.GridSize)
   }
 
   test("quantilesType7Grouped matches the exact percentile aggregate + extra lanes") {

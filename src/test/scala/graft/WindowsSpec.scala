@@ -152,6 +152,33 @@ class WindowsSpec extends SparkSpec {
     assert(got("0") == Map(2L -> 2.0) && got("99999") == Map(2L -> 2.0))
   }
 
+  test("valuesAtRanksGrouped: the dense guard labels its jobs and " +
+      "releases its checkpoints") {
+    val rng = new scala.util.Random(29)
+    val rows = (1 to 20).flatMap { g =>
+      (0 until 30).map(_ => (s"g$g", math.floor(rng.nextDouble() * 12) / 2))
+    }
+    val df = rows.toDF("g", "v")
+    val want = (1 to 20).map(g => s"g$g" -> Set(0L, 14L, 29L)).toMap
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var got = Map.empty[String, Map[Long, Double]]
+    val labels = labelsOf {
+      got = Windows.valuesAtRanksGrouped(df, col("g"), col("v"), want,
+        maxDriverTuples = 1L)
+    }
+    assert(labels.nonEmpty && labels.forall(_.startsWith("rank-pick: ")),
+      s"unlabeled or foreign jobs: $labels")
+    assert(sc.getPersistentRDDs.keySet == before,
+      "the dense route left persisted RDDs behind")
+    val sorted = rows.groupBy(_._1).map { case (g, vs) =>
+      g -> vs.map(_._2).sorted.toIndexedSeq }
+    assert(got.keySet == want.keySet)
+    want.foreach { case (g, rs) =>
+      assert(got(g) == rs.map(r => r -> sorted(g)(r.toInt)).toMap, g)
+    }
+  }
+
   test("signed zeros: -0.0 and 0.0 share a bucket (SQL equality, not " +
       "Double.compare)") {
     // kernel level: binarySearch orders -0.0 < 0.0; the normalization

@@ -20,6 +20,12 @@ And exits 1 if a fitted or request-derived double (coefficients,
 `Windows.exclusivePrefixSum`) enters a plan through `lit(`: Spark writes
 a literal into the generated source, so every new value compiles a new
 class. Such values go through `graft.functions.Param`.
+The grouped rank-pick has one route: exits 1 on a `lit(`, `isin(` or
+`broadcast(` call inside `Windows.valuesAtRanksGrouped` (its tables
+enter the plan through `graft.functions.SortedLookup`), and on any
+mention under src/main of the switches and helpers that lookup replaced
+(`KeyedOffset`, `precomputedBoundaries`, `broadcastableGroups`,
+`caseOver`).
 
 Usage: python3 tools/list_knobs.py
 """
@@ -37,12 +43,16 @@ ONE_SITE = {
 }
 FITTED_LIT = re.compile(r"lit\((beta|covInv|sigma2|zScore|effectiveBudget|ratio)")
 DEF = re.compile(r"\bdef (\w+)")
+RANK_PICK_CALLS = ("lit(", "isin(", "broadcast(")
+REPLACED = ("KeyedOffset", "precomputedBoundaries", "broadcastableGroups",
+            "caseOver")
 
 
 def scan():
     knobs = {}
     strays = []
     literals = []
+    switches = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -54,6 +64,7 @@ def scan():
                 in_def = None
                 for n, line in enumerate(fh, 1):
                     code = line.split("//", 1)[0]
+                    switches += [f"{rel}:{n}: {w}" for w in REPLACED if w in line]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
                     if code.lstrip().startswith(("*", "/*")):
@@ -67,11 +78,14 @@ def scan():
                     if FITTED_LIT.search(code) or (
                             in_def == "exclusivePrefixSum" and "lit(off)" in code):
                         literals.append(f"{rel}:{n}: {code.strip()}")
-    return knobs, strays, literals
+                    if in_def == "valuesAtRanksGrouped":
+                        switches += [f"{rel}:{n}: {p}" for p in RANK_PICK_CALLS
+                                     if p in code]
+    return knobs, strays, literals, switches
 
 
 def main():
-    knobs, strays, literals = scan()
+    knobs, strays, literals, switches = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -90,7 +104,9 @@ def main():
         print(f"OUTSIDE {site}: {s}", file=sys.stderr)
     for s in literals:
         print(f"FITTED VALUE AS lit( (use Param): {s}", file=sys.stderr)
-    return 1 if missing or repeated or strays or literals else 0
+    for s in switches:
+        print(f"RANK-PICK SWITCH (use SortedLookup): {s}", file=sys.stderr)
+    return 1 if missing or repeated or strays or literals or switches else 0
 
 
 if __name__ == "__main__":
