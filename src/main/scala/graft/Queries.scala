@@ -6,8 +6,11 @@ import graft.equity._
 import graft.estimators._
 import graft.prep.Prep
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Driver-checked query registry: every operator from SURVEY §2 exposed
   * as a (SparkSession, sfDir) => DataFrame, with a DuckDB oracle where
@@ -17,7 +20,9 @@ import org.apache.spark.sql.types._
 object Queries {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Jobs.labeled(spark, s"read: $name") {
+      spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   def r6(c: Column): Column = round(c, 6)
 
@@ -64,10 +69,10 @@ object Queries {
       if (x.isNaN || x.isInfinite) null else r6d(x)
     val rows = res.twoFold.map(c =>
       Row(c.name, r6d(c.estimate), if (reps == 0) null else safe(c.stdErr)))
-    s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+    local(s, StructType(Seq(
       StructField("component", StringType),
       StructField("estimate", DoubleType),
-      StructField("std_err", DoubleType)))).orderBy("component")
+      StructField("std_err", DoubleType))), rows, "component")
   }
 
   // Equity-layer setup: fair model on reference group "F", target group
@@ -261,9 +266,9 @@ object Queries {
       val rows = taus.zipWithIndex.map { case (tau, i) =>
         Row(i + 1, r6d(qs(tau)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("idx", IntegerType),
-        StructField("quantile", DoubleType)))).orderBy("idx")
+        StructField("quantile", DoubleType))), rows, "idx")
     }),
 
     // E8 query twin: quantile_cont-convention Silverman per group via the
@@ -281,9 +286,9 @@ object Queries {
         Row(g, r6d(0.9 * math.min(sigma, iqr / 1.34) *
           math.pow(n.toDouble, -0.2)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("l_linestatus", StringType),
-        StructField("bandwidth", DoubleType)))).orderBy("l_linestatus")
+        StructField("bandwidth", DoubleType))), rows, "l_linestatus")
     }),
 
     "q_onehot_means" -> ((s, d) => {
@@ -309,11 +314,11 @@ object Queries {
       val rows = fits.map { case (lvl, f) =>
         Row(lvl, r6d(f.beta(0)), r6d(f.beta(1)), r6d(math.sqrt(f.sigma2)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("l_returnflag", StringType),
         StructField("intercept", DoubleType),
         StructField("slope", DoubleType),
-        StructField("resid_stddev", DoubleType)))).orderBy("l_returnflag")
+        StructField("resid_stddev", DoubleType))), rows, "l_returnflag")
     }),
 
     "q_wls_group" -> ((s, d) => {
@@ -323,18 +328,18 @@ object Queries {
       val rows = fits.map { case (lvl, f) =>
         Row(lvl, r6d(f.beta(0)), r6d(f.beta(1)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("l_linestatus", StringType),
         StructField("intercept", DoubleType),
-        StructField("slope", DoubleType)))).orderBy("l_linestatus")
+        StructField("slope", DoubleType))), rows, "l_linestatus")
     }),
 
     "q_vif" -> ((s, d) => {
       val vifs = Vif.compute(t(s, d, "lineitem"), Seq("l_quantity", "l_discount"))
       val rows = vifs.map { case (v, x) => Row(v, r6d(x)) }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
-        StructField("vif", DoubleType)))).orderBy("variable")
+        StructField("vif", DoubleType))), rows, "variable")
     }),
 
     // ---- decomposition (D1-D4, D8) ----
@@ -360,10 +365,10 @@ object Queries {
       val unex = res.detailedUnexplained.map(c => c.name -> c.estimate).toMap
       val rows = res.detailedExplained.map(c =>
         Row(c.name, r6d(c.estimate), r6d(unex(c.name))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
         StructField("explained", DoubleType),
-        StructField("unexplained", DoubleType)))).orderBy("variable")
+        StructField("unexplained", DoubleType))), rows, "variable")
     }),
 
     "q_decomp_pooled" -> ((s, d) => {
@@ -385,12 +390,12 @@ object Queries {
       // transform's own scalars — no fourth scan for the averages
       val rows = info.map(i => Row(i.level, r6d(i.qTau), r6d(i.bandwidth),
         r6d(i.density), r6d(i.meanRif(0.5))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("l_linestatus", StringType),
         StructField("q_tau", DoubleType),
         StructField("bandwidth", DoubleType),
         StructField("density", DoubleType),
-        StructField("avg_rif", DoubleType)))).orderBy("l_linestatus")
+        StructField("avg_rif", DoubleType))), rows, "l_linestatus")
     }),
 
     "q_rif_decomp" -> ((s, d) => {
@@ -407,10 +412,10 @@ object Queries {
       val grid = Array.tabulate(11)(i => i * 0.01)
       val dens = Kde.onGrid(t(s, d, "lineitem"), "l_discount", None, grid, 0.02)
       val rows = grid.indices.map(i => Row(i, r6d(grid(i)), r6d(dens(i))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("idx", IntegerType),
         StructField("grid", DoubleType),
-        StructField("density", DoubleType)))).orderBy("idx")
+        StructField("density", DoubleType))), rows, "idx")
     }),
 
     // E2 with a FULL oracle: exactly 3 Newton/IRLS iterations from
@@ -425,9 +430,9 @@ object Queries {
       val rows = xCols.zipWithIndex.map { case (c, i) =>
         Row(if (c == Prep.InterceptCol) "intercept" else c, r6d(fit.beta(i)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
-        StructField("coef", DoubleType)))).orderBy("variable")
+        StructField("coef", DoubleType))), rows, "variable")
     }),
 
     // no SQL oracle (IRLS): rows-only checks
@@ -439,9 +444,9 @@ object Queries {
       val rows = xCols.zipWithIndex.map { case (c, i) =>
         Row(if (c == Prep.InterceptCol) "intercept" else c, r6d(fit.beta(i)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
-        StructField("coef", DoubleType)))).orderBy("variable")
+        StructField("coef", DoubleType))), rows, "variable")
     }),
 
     // E4 with a FULL oracle: exactly 3 Fisher-scoring iterations from
@@ -458,9 +463,9 @@ object Queries {
       val rows = xCols.zipWithIndex.map { case (c, i) =>
         Row(if (c == Prep.InterceptCol) "intercept" else c, r6d(fit.beta(i)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
-        StructField("coef", DoubleType)))).orderBy("variable")
+        StructField("coef", DoubleType))), rows, "variable")
     }),
 
     "q_probit" -> ((s, d) => {
@@ -472,10 +477,10 @@ object Queries {
         Row(if (c == Prep.InterceptCol) "intercept" else c, r6d(fit.beta(i)),
           r6d(math.sqrt(fit.vcov(i, i))))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
         StructField("coef", DoubleType),
-        StructField("std_err", DoubleType)))).orderBy("variable")
+        StructField("std_err", DoubleType))), rows, "variable")
     }),
 
     // E6/D7 with a FULL oracle: the selection probit pinned at 3 Fisher
@@ -528,9 +533,9 @@ object Queries {
         selNames.indices.map(i => s"sel_${selNames(i)}" -> detSel(i)) :+
         ("total_gap" -> (gm("O") - gm("F")))
       val rows = metrics.map { case (m, v) => Row(m, r6d(v)) }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("metric", StringType),
-        StructField("value", DoubleType)))).orderBy("metric")
+        StructField("value", DoubleType))), rows, "metric")
     }),
 
     "q_heckman_decomp" -> ((s, d) => {
@@ -543,10 +548,10 @@ object Queries {
       val unex = res.detailedUnexplained.map(c => c.name -> c.estimate).toMap
       val rows = res.detailedExplained.map(c =>
         Row(c.name, r6d(c.estimate), r6d(unex(c.name))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
         StructField("explained", DoubleType),
-        StructField("unexplained", DoubleType)))).orderBy("variable")
+        StructField("unexplained", DoubleType))), rows, "variable")
     }),
 
     "q_dfl" -> ((s, d) => {
@@ -555,12 +560,12 @@ object Queries {
       val rows = res.grid.indices.map(i => Row(i, r6d(res.grid(i)),
         r6d(res.densityA(i)), r6d(res.densityB(i)),
         r6d(res.densityBCounterfactual(i))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("idx", IntegerType),
         StructField("grid", DoubleType),
         StructField("density_a", DoubleType),
         StructField("density_b", DoubleType),
-        StructField("density_b_cf", DoubleType)))).orderBy("idx")
+        StructField("density_b_cf", DoubleType))), rows, "idx")
     }),
 
     // D14 with a FULL oracle: 3 pinned logit iterations make the whole
@@ -577,12 +582,12 @@ object Queries {
       val rows = res.grid.indices.map(i => Row(i, r6d(res.grid(i)),
         r6d(res.densityA(i)), r6d(res.densityB(i)),
         r6d(res.densityBCounterfactual(i))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("idx", IntegerType),
         StructField("grid", DoubleType),
         StructField("density_a", DoubleType),
         StructField("density_b", DoubleType),
-        StructField("density_b_cf", DoubleType)))).orderBy("idx")
+        StructField("density_b_cf", DoubleType))), rows, "idx")
     }),
 
     // ---- quantile decomposition + JMP (E5, D12, D13) ----
@@ -614,10 +619,10 @@ object Queries {
       val rows = taus.zip(betas).map { case (tau, b) =>
         Row(tau, r6d(b(0)), r6d(b(1)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("tau", DoubleType),
         StructField("intercept", DoubleType),
-        StructField("slope", DoubleType)))).orderBy("tau")
+        StructField("slope", DoubleType))), rows, "tau")
     }),
 
     "q_quantreg" -> ((s, d) => {
@@ -635,10 +640,10 @@ object Queries {
       val rows = taus.zip(betas).map { case (tau, b) =>
         Row(tau, r6d(b(0)), r6d(b(1)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("tau", DoubleType),
         StructField("intercept", DoubleType),
-        StructField("slope", DoubleType)))).orderBy("tau")
+        StructField("slope", DoubleType))), rows, "tau")
     }),
 
     "q_mm_quantile" -> ((s, d) => {
@@ -651,11 +656,11 @@ object Queries {
         Row(k, r6d(e("gap").estimate), r6d(e("characteristics").estimate),
           r6d(e("coefficients").estimate))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("quantile", StringType),
         StructField("gap", DoubleType),
         StructField("characteristics", DoubleType),
-        StructField("coefficients", DoubleType)))).orderBy("quantile")
+        StructField("coefficients", DoubleType))), rows, "quantile")
     }),
 
     // D12 with a FULL oracle: the Machado-Mata skeleton (group split,
@@ -704,11 +709,11 @@ object Queries {
         Row(s"q${(q * 100).toInt}", r6d(qAA - qBB), r6d(qAB - qBB),
           r6d(qAA - qAB))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("quantile", StringType),
         StructField("gap", DoubleType),
         StructField("characteristics", DoubleType),
-        StructField("coefficients", DoubleType)))).orderBy("quantile")
+        StructField("coefficients", DoubleType))), rows, "quantile")
     }),
 
     // ---- AKM + matching (E10-E16) ----
@@ -812,11 +817,11 @@ object Queries {
       val rows = pts.zipWithIndex.map { case (p, i) =>
         Row(i, r(p.budget, 2), r(p.tStatistic, 4), p.isSignificant)
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("step", IntegerType),
         StructField("budget", DoubleType),
         StructField("t_stat", DoubleType),
-        StructField("is_significant", BooleanType)))).orderBy("step")
+        StructField("is_significant", BooleanType))), rows, "step")
     }),
 
     // ---- BASELINE.md rows 1-3, apples-to-apples: EXACTLY the
@@ -846,11 +851,11 @@ object Queries {
           bootstrapReps = 500, seed = 42L))
       val rows = (res.twoFold ++ res.threeFold).map(c =>
         Row(c.name, r6d(c.estimate), r6d(c.stdErr), r6d(c.pValue)))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("component", StringType),
         StructField("estimate", DoubleType),
         StructField("std_err", DoubleType),
-        StructField("p_value", DoubleType)))).orderBy("component")
+        StructField("p_value", DoubleType))), rows, "component")
     }),
 
     // P8/D9 with a FULL oracle: the replicates-as-lanes bootstrap kernel
@@ -928,10 +933,10 @@ object Queries {
         Row("explained", r6d(pt._2), r6d(sd(reps.map(_._2)))),
         Row("gap", r6d(pt._1), r6d(sd(reps.map(_._1)))),
         Row("unexplained", r6d(pt._3), r6d(sd(reps.map(_._3)))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("component", StringType),
         StructField("estimate", DoubleType),
-        StructField("se", DoubleType)))).orderBy("component")
+        StructField("se", DoubleType))), rows, "component")
     }),
 
     "q_decomp_groupa" -> ((s, d) => {
@@ -1010,10 +1015,10 @@ object Queries {
       val unex = res.detailedUnexplained.map(c => c.name -> c.estimate).toMap
       val rows = res.detailedExplained.map(c =>
         Row(c.name, r6d(c.estimate), r6d(unex(c.name))))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("variable", StringType),
         StructField("explained", DoubleType),
-        StructField("unexplained", DoubleType)))).orderBy("variable")
+        StructField("unexplained", DoubleType))), rows, "variable")
     }),
 
     "q_g1_decompose" -> ((s, d) => {
@@ -1025,7 +1030,7 @@ object Queries {
         res.summary.totalCount, res.summary.groupACount,
         res.summary.groupBCount, r6d(res.summary.groupAMean),
         r6d(res.summary.groupBMean)))
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1), StructType(Seq(
+      local(s, StructType(Seq(
         StructField("total_gap", DoubleType),
         StructField("explained_gap", DoubleType),
         StructField("unexplained_gap", DoubleType),
@@ -1035,7 +1040,7 @@ object Queries {
         StructField("group_a_count", LongType),
         StructField("group_b_count", LongType),
         StructField("group_a_mean", DoubleType),
-        StructField("group_b_mean", DoubleType))))
+        StructField("group_b_mean", DoubleType))), rows)
     }),
 
     // ---- budget optimizer (D15) ----
@@ -1060,9 +1065,27 @@ object Queries {
   )
 
   private def oneRow(s: SparkSession, names: Seq[String], values: Seq[Double]): DataFrame =
-    s.createDataFrame(
-      s.sparkContext.parallelize(Seq(Row(values.map(r6d): _*)), 1),
-      StructType(names.map(StructField(_, DoubleType))))
+    local(s, StructType(names.map(StructField(_, DoubleType))),
+      Seq(Row(values.map(r6d): _*)))
+
+  /** A small, bounded driver-held result as a local relation, sorted on
+    * the driver by `sortBy` in Spark's ascending order: nulls first, NaN
+    * after every number, -0.0 tied with 0.0, strings by UTF-8 bytes, and
+    * ties kept in input order. That is the row order `.orderBy(sortBy)`
+    * gives the same rows, without the jobs: collecting a local relation
+    * runs none. The rows are embedded in the plan, so large driver data
+    * stays an RDD instead (see `ext/Cluster.scala`). */
+  def local(s: SparkSession, schema: StructType, rows: Seq[Row],
+      sortBy: String*): DataFrame = {
+    val ordering = new InterpretedOrdering(sortBy.map { c =>
+      val f = schema(c)
+      SortOrder(BoundReference(schema.fieldIndex(c), f.dataType, f.nullable),
+        Ascending)
+    })
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(schema)
+    val sorted = rows.sortBy(r => toInternal(r).asInstanceOf[InternalRow])(ordering)
+    s.createDataFrame(sorted.asJava, schema)
+  }
 
   // ---------------------------------------------------------------------
   // DuckDB oracle SQL — ANSI SQL over the same parquet tables, matching

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType
   * as the Spark side. */
 object QueriesExt {
 
-  import Queries.{r6, t}
+  import Queries.{local, r6, t}
 
   /** events.parquet has been generated with two `ts` encodings over
     * time: TIMESTAMP(NANOS), which Spark's parquet reader can only read
@@ -255,11 +255,10 @@ object QueriesExt {
       val rows = m.components(0).toSeq.zipWithIndex.map { case (v, i) =>
         Row(i + 1, Queries.r6d(v), Queries.r6d(m.eigenvalues(0)))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        StructType(Seq(
-          StructField("idx", IntegerType),
-          StructField("component", DoubleType),
-          StructField("eigval", DoubleType)))).orderBy("idx")
+      local(s, StructType(Seq(
+        StructField("idx", IntegerType),
+        StructField("component", DoubleType),
+        StructField("eigval", DoubleType))), rows, "idx")
     }),
 
     "q_pca_project" -> ((s, d) => {
@@ -300,12 +299,11 @@ object QueriesExt {
         .collect()
       val rows = top.map(r => Row(r.getString(0), r.getLong(1),
         cm.estimate(r.getString(0)))).toSeq
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        StructType(Seq(
-          StructField("token", StringType),
-          StructField("n_exact", LongType),
-          StructField("n_est", LongType))))
-        .orderBy(col("n_exact").desc, col("token"))
+      // already in (n_exact desc, token) order: the top-15 query sorted it
+      local(s, StructType(Seq(
+        StructField("token", StringType),
+        StructField("n_exact", LongType),
+        StructField("n_est", LongType))), rows)
     }),
 
     // linear-counting distinct-cardinality sketch, all language groups
@@ -324,12 +322,11 @@ object QueriesExt {
       val rows = counters.toSeq.sortBy(_._1).map { case (lang, c) =>
         Row(lang, c.occupied.toLong, Queries.r6d(c.estimate), exact(lang))
       }
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        StructType(Seq(
-          StructField("lang", StringType),
-          StructField("occupied", LongType),
-          StructField("n_est", DoubleType),
-          StructField("n_exact", LongType)))).orderBy("lang")
+      local(s, StructType(Seq(
+        StructField("lang", StringType),
+        StructField("occupied", LongType),
+        StructField("n_est", DoubleType),
+        StructField("n_exact", LongType))), rows, "lang")
     }),
 
     // bloom prefilter (the decontam-at-scale pattern: when the exact

@@ -223,18 +223,11 @@ object McpServer {
     val items = adjustmentItems(a)
     val adjDf = adjustmentsDf(spark, a)
     // long-format overrides (index, predictor, value) from the per-item maps
-    val ovRows = items.flatMap { j =>
+    val overrides = items.flatMap { j =>
       val idx = (j \ "index").extract[Long]
       (j \ "predictor_overrides").extractOpt[Map[String, String]]
-        .getOrElse(Map.empty).map { case (p, v) => Row(idx, p, v.toDouble) }
+        .getOrElse(Map.empty).map { case (p, v) => (idx, p, v.toDouble) }
     }
-    val overrides =
-      if (ovRows.isEmpty) None
-      else Some(spark.createDataFrame(
-        spark.sparkContext.parallelize(ovRows, 1),
-        StructType(Seq(StructField(RowId, LongType, nullable = false),
-          StructField("predictor", StringType),
-          StructField("value", org.apache.spark.sql.types.DoubleType)))))
     val judged = collectById(Equity.defensibilityVerdicts(df, adjDf,
       overrides, RowId, "value", cfgOf(a)))
     JArray(judged.map { r =>

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 /** Reference-coefficient (beta*) policy for the two-fold decomposition
@@ -84,7 +85,7 @@ final case class OaxacaResults(
       Row(e.name, e.estimate, u.map(_.estimate).getOrElse(0.0), e.stdErr,
         u.map(_.stdErr).getOrElse(Double.NaN))
     }
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 
   def aggregateDf(spark: SparkSession): DataFrame = {
@@ -99,7 +100,7 @@ final case class OaxacaResults(
       (ComponentResult("total_gap", totalGap, Double.NaN, Double.NaN,
         Double.NaN, Double.NaN, Double.NaN) +: (twoFold ++ threeFold)).map(c =>
         Row(c.name, c.estimate, c.stdErr, c.pValue, c.ciLower, c.ciUpper))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    spark.createDataFrame(rows.asJava, schema)
   }
 }
 

@@ -6,8 +6,10 @@ import graft.decompose.{Oaxaca, OaxacaConfig, OaxacaResults, RefCoefficients}
 import graft.estimators.Ols
 import graft.functions.Param
 import graft.prep.Prep
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Pay-equity engine layer (SURVEY §2.5, `engine/src/analysis.rs` +
   * `defensibility.rs`), re-expressed distributed: the fair-wage model and
@@ -398,9 +400,11 @@ object Equity {
   /** G5 `check_defensibility_inner` (`engine/src/defensibility.rs:9-388`):
     * apply predictor overrides by row id, refit the fair model on the
     * overridden reference group, then judge each proposed adjustment:
-    * defensible iff new wage >= lower PI bound - 1.0. Ordered by row id. */
+    * defensible iff new wage >= lower PI bound - 1.0. Ordered by row id.
+    * `overrides` are driver-side long-format `(id, predictor, value)`
+    * rows over a `LongType` id column. */
   def checkDefensibility(df: DataFrame, adjustments: DataFrame,
-      overrides: Option[DataFrame], idCol: String, deltaCol: String,
+      overrides: Seq[(Long, String, Double)], idCol: String, deltaCol: String,
       cfg: EquityConfig): DataFrame =
     defensibilityVerdicts(df, adjustments, overrides, idCol, deltaCol, cfg)
       .orderBy(col(idCol))
@@ -409,21 +413,18 @@ object Equity {
     * — for a caller that collects the verdicts anyway and sorts them on
     * the driver, where a range-shuffle sort is pure waste. */
   private[graft] def defensibilityVerdicts(df: DataFrame,
-      adjustments: DataFrame, overrides: Option[DataFrame], idCol: String,
-      deltaCol: String, cfg: EquityConfig): DataFrame = {
-    // overrides: long-format (id, predictor, value) -> wide coalesce
-    val overridden = overrides match {
-      case None => df
-      case Some(ov) =>
-        val preds = ov.select(col("predictor").cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        preds.foldLeft(df) { case (acc, p) =>
-          val pv = ov.filter(col("predictor") === lit(p))
-            .select(col(idCol), col("value").cast("double").as(s"__ov_$p"))
-          acc.join(broadcast(pv), Seq(idCol), "left")
-            .withColumn(p, coalesce(col(s"__ov_$p"), col(p).cast("double")))
-            .drop(s"__ov_$p")
-        }
+      adjustments: DataFrame, overrides: Seq[(Long, String, Double)],
+      idCol: String, deltaCol: String, cfg: EquityConfig): DataFrame = {
+    // long-format overrides -> one wide coalesce per predictor, each over
+    // a broadcast local relation of that predictor's (id, value) rows
+    val overridden = overrides.map(_._2).distinct.foldLeft(df) { (acc, p) =>
+      val pv = df.sparkSession.createDataFrame(
+        overrides.collect { case (id, `p`, v) => Row(id, v) }.asJava,
+        StructType(Seq(StructField(idCol, LongType, nullable = false),
+          StructField(s"__ov_$p", DoubleType))))
+      acc.join(broadcast(pv), Seq(idCol), "left")
+        .withColumn(p, coalesce(col(s"__ov_$p"), col(p).cast("double")))
+        .drop(s"__ov_$p")
     }
     val (p, lanes) = prepareAndGram(overridden, cfg)
     val model = fitFairModel(lanes(0)(0), lanes(1)(0), p.xCols, p.names,

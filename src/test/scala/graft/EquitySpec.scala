@@ -227,7 +227,7 @@ class EquitySpec extends SparkSpec {
     val out = Equity.checkDefensibility(f11,
       res.adjustments.filter(col("adjustment") > 0.0)
         .select(col("id"), col("adjustment")),
-      None, "id", "adjustment", f11cfg)
+      Nil, "id", "adjustment", f11cfg)
     val rows = out.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -259,7 +259,7 @@ class EquitySpec extends SparkSpec {
     def sources(df: DataFrame): (Seq[String], Seq[String], Seq[Double]) = {
       val res = Equity.optimize(df, cfg, id)
       assert(res.metrics.requiredBudget > cfg.budget, "the prefix-sum path must run")
-      val verdicts = Equity.defensibilityVerdicts(df, adj, None, id, "value", cfg)
+      val verdicts = Equity.defensibilityVerdicts(df, adj, Nil, id, "value", cfg)
       def code(q: DataFrame): Seq[String] = {
         q.collect() // AQE's final plan holds every codegen stage
         q.queryExecution.debug.codegenToSeq().map(_._2).sorted

@@ -6,13 +6,14 @@ import graft.estimators.{Kde, Probit, Rif}
 import graft.ext.{Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 
 /** `Jobs.par2`'s failure path, `Jobs.labeled`'s nesting,
-  * `Jobs.treeReduce`'s result and job labels, and the job counts of the
-  * discovery passes built on it. */
+  * `Jobs.treeReduce`'s result and job labels, the job counts of the
+  * discovery passes built on it, and the registry's driver-side result
+  * frames. */
 class JobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -206,5 +207,41 @@ class JobsSpec extends SparkSpec {
       s"unlabeled jobs: $labels")
     assert(labels.map(_.takeWhile(_ != ':')).toSet ==
       Set("rank-pick", "silverman", "rif"), labels)
+  }
+
+  test("Queries.local orders rows exactly as orderBy over a parallelized RDD") {
+    val smile = new String(Character.toChars(0x1F600))
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("x", DoubleType), StructField("i", IntegerType)))
+    // i is unique, so the row sequences differ whenever tied rows move
+    val rows = Seq[(String, java.lang.Double)](
+      ("b", 1.0), (null, 2.0), ("\uFF5E", Double.NaN), (smile, -0.0),
+      ("a", 0.0), ("b", null), ("B", -0.0), (null, Double.NaN), ("", 0.0),
+      ("a", -1.5), ("\u00e9", 1.0), (smile + "x", null), ("a", 0.0),
+      ("b", Double.NegativeInfinity), ("\uFF5E", Double.PositiveInfinity))
+      .zipWithIndex.map { case ((k, x), i) => Row(k, x, i) }
+    for (by <- Seq(Seq("x"), Seq("k"), Seq("k", "x"), Seq("x", "k"))) {
+      val want = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+        schema).orderBy(by.map(col): _*).collect().toSeq
+      val got = Queries.local(spark, schema, rows, by: _*).collect().toSeq
+      assert(got == want, s"sorted by $by")
+    }
+    assert(Queries.local(spark, schema, rows).collect().toSeq == rows)
+  }
+
+  test("the analyst registry queries label every job and collect with none") {
+    val queries = Seq("q_decomp_twofold", "q_decomp_threefold",
+      "q_decomp_detailed", "q_wls_decomp", "q_heckman_decomp", "q_logit",
+      "q_kde")
+    for (q <- queries) {
+      var result: DataFrame = null
+      val run = labelsOf { result = SparkEntry.queries(q)(spark, sf("sf0.001")) }
+      assert(run.contains("read: lineitem"), s"$q: $run")
+      assert(run.forall(_.nonEmpty), s"$q submitted unlabeled jobs: $run")
+      var rows = Array.empty[Row]
+      assert(labelsOf { rows = result.collect() }.isEmpty,
+        s"$q: collecting its result ran jobs")
+      assert(rows.nonEmpty, q)
+    }
   }
 }

@@ -26,6 +26,10 @@ enter the plan through `graft.functions.SortedLookup`), and on any
 mention under src/main of the switches and helpers that lookup replaced
 (`KeyedOffset`, `precomputedBoundaries`, `broadcastableGroups`,
 `caseOver`).
+Driver-held results have one route: exits 1 on a
+`sparkContext.parallelize(` call in Queries.scala, QueriesExt.scala or
+decompose/Oaxaca.scala; their few result rows become local relations
+(`Queries.local`, or `createDataFrame(rows.asJava, schema)`).
 
 Usage: python3 tools/list_knobs.py
 """
@@ -46,6 +50,9 @@ DEF = re.compile(r"\bdef (\w+)")
 RANK_PICK_CALLS = ("lit(", "isin(", "broadcast(")
 REPLACED = ("KeyedOffset", "precomputedBoundaries", "broadcastableGroups",
             "caseOver")
+GRAFT = os.path.join("src", "main", "scala", "graft")
+LOCAL_RESULTS = tuple(os.path.join(GRAFT, *f) for f in (
+    ("Queries.scala",), ("QueriesExt.scala",), ("decompose", "Oaxaca.scala")))
 
 
 def scan():
@@ -53,6 +60,7 @@ def scan():
     strays = []
     literals = []
     switches = []
+    rdds = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -81,11 +89,13 @@ def scan():
                     if in_def == "valuesAtRanksGrouped":
                         switches += [f"{rel}:{n}: {p}" for p in RANK_PICK_CALLS
                                      if p in code]
-    return knobs, strays, literals, switches
+                    if rel in LOCAL_RESULTS and "sparkContext.parallelize(" in code:
+                        rdds.append(f"{rel}:{n}: {code.strip()}")
+    return knobs, strays, literals, switches, rdds
 
 
 def main():
-    knobs, strays, literals, switches = scan()
+    knobs, strays, literals, switches, rdds = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -106,7 +116,9 @@ def main():
         print(f"FITTED VALUE AS lit( (use Param): {s}", file=sys.stderr)
     for s in switches:
         print(f"RANK-PICK SWITCH (use SortedLookup): {s}", file=sys.stderr)
-    return 1 if missing or repeated or strays or literals or switches else 0
+    for s in rdds:
+        print(f"DRIVER RESULT AS RDD (use Queries.local): {s}", file=sys.stderr)
+    return 1 if missing or repeated or strays or literals or switches or rdds else 0
 
 
 if __name__ == "__main__":
