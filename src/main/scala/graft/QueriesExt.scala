@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Jobs
 import graft.ext._
 import graft.streaming.Streams
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -157,11 +158,13 @@ object QueriesExt {
         .orderBy(col("doc_id"))),
 
     // ---- dedup family ----
-    "q_dedup_exact" -> ((s, d) =>
-      t(s, d, "documents").groupBy(col("source"))
+    "q_dedup_exact" -> ((s, d) => {
+      val groups = t(s, d, "documents").groupBy(col("source"))
         .agg(count(lit(1)).as("n"),
           countDistinct(md5(col("text"))).as("n_distinct"))
-        .orderBy(col("source"))),
+      local(s, groups.schema,
+        Jobs.labeled(s, "dedup: exact groups")(groups.collect()), "source")
+    }),
 
     "q_jaccard_pairs" -> ((s, d) =>
       Dedup.ngramJaccardPairs(t(s, d, "documents"), "doc_id", "text",
@@ -180,10 +183,13 @@ object QueriesExt {
           "doc_id", "text")
         .orderBy(col("doc_id"))),
 
-    "q_simhash_pairs" -> ((s, d) =>
-      Dedup.simhashPairs(t(s, d, "documents").filter(col("doc_id") < 50),
-          "doc_id", "text", maxHamming = 1)
-        .orderBy(col("id_a"), col("id_b"))),
+    "q_simhash_pairs" -> ((s, d) => {
+      val pairs = Dedup.simhashPairs(
+        t(s, d, "documents").filter(col("doc_id") < 50), "doc_id", "text",
+        maxHamming = 1)
+      local(s, pairs.schema,
+        Jobs.labeled(s, "dedup: simhash pairs")(pairs.collect()), "id_a", "id_b")
+    }),
 
     // ---- similarity search ----
     "q_embed_neardup" -> ((s, d) =>

@@ -83,16 +83,9 @@ object Dedup {
     * (rank window, set-table build, verification joins) amortize
     * against a quadratically growing saving. 50M pairs ~ 5 GB of
     * one-stage shuffle — comfortably inside any executor fleet's
-    * scratch and well under [[MinCandidatePairBudget]]. The conf key
-    * `spark.graft.dedup.directPathMaxPairs` overrides (0 forces the
-    * prefix path everywhere — used by the losslessness spec and by
-    * fleets whose crossover sits elsewhere). */
+    * scratch and well under [[MinCandidatePairBudget]]. Specs force
+    * either path through [[ngramJaccardPairsVia]]. */
   val DirectPathMaxPairs: Long = 50000000L
-
-  private def directPathMaxPairs(
-      spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.dedup.directPathMaxPairs")
-      .map(_.toLong).getOrElse(DirectPathMaxPairs)
 
   /** Threshold at or above which the prefix path indexes sorted PAIRS
     * of prefix shingles (k = 2 multi-prefix) instead of single
@@ -197,41 +190,31 @@ object Dedup {
     }
 
 
-  /** Conf key for the set-table broadcast ceiling (estimated bytes). */
-  val SetBroadcastBytesKey = "spark.graft.dedup.setBroadcastBytes"
-
-  /** Default estimated-byte ceiling for broadcasting the per-doc
-    * shingle-set table in exact verification (~2.5 GB estimate, i.e.
-    * ~2x that across the two join sides): ~3x under Spark's 8 GB
-    * broadcast hard cap. The DEFAULT is additionally gated at 1/4 of
-    * the JVM's max heap — the estimate sits on BOTH join sides and the
-    * HashedRelation build is often larger than the 2x-fudged estimate,
-    * so on a modest-heap driver/executor an ungated 2.5 GB default
-    * would OOM where sort-merge spills and completes. Setting
-    * [[SetBroadcastBytesKey]] explicitly bypasses the gate (the
-    * operator's opt-in raise for large-heap fleets). Past the ceiling
-    * the verify falls back to sort-merge and the candidate budget
-    * shrinks by the array carry instead. */
+  /** Ceiling (estimated bytes) for broadcasting the per-doc shingle-set
+    * table in exact verification (~2.5 GB estimate, i.e. ~2x that
+    * across the two join sides): ~3x under Spark's 8 GB broadcast hard
+    * cap. [[jaccardPlan]] further gates it at 1/4 of the JVM's max heap
+    * — the estimate sits on BOTH join sides and the HashedRelation
+    * build is often larger than the 2x-fudged estimate, so on a
+    * modest-heap driver/executor an ungated 2.5 GB ceiling would OOM
+    * where sort-merge spills and completes. Past the ceiling the verify
+    * falls back to sort-merge and the candidate budget shrinks by the
+    * array carry instead. */
   val DefaultSetBroadcastBytes: Long = 2500000000L
 
-  private def setBroadcastCeiling(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(SetBroadcastBytesKey).map(_.toLong)
-      .getOrElse(math.min(DefaultSetBroadcastBytes,
-        Runtime.getRuntime.maxMemory / 4))
-
-  /** The sort-merge verify drags ~2x avg-set-bytes per surviving
-    * candidate through its second shuffle; when the set table is too
-    * big to broadcast the candidate budget must shrink by that carry
-    * ratio or the guard bounds the wrong quantity (the sf10 failure
-    * mode: candidates fit, the verify shuffle did not). ONE definition
-    * shared by [[ngramJaccardPairs]] and [[effectiveCapFor]] so the
-    * oracle pin always tests the cap that would actually fire. */
-  private def carryShrunkBudget(budget: Long, setBytesEst: Long,
-      docs: Long): Long = {
-    val carry = 2L * setBytesEst / math.max(1L, docs)
-    math.max(1000000L, (budget.toDouble * CandidateRowScratchBytes /
-      (CandidateRowScratchBytes + carry)).toLong)
+  /** Physical route of an exact-Jaccard call: the plain inverted-index
+    * count, or the prefix path with its candidates verified by the
+    * single-broadcast kernel, by two broadcast joins, or by sort-merge
+    * (see [[exactInterByArrays]]). Every route gives the same pairs and
+    * Jaccard values. */
+  private[graft] sealed trait Route
+  private[graft] object Route {
+    case object Direct extends Route
+    case object Kernel extends Route
+    case object BroadcastJoins extends Route
+    case object SortMerge extends Route
   }
+  import Route._
 
   /** Per-df histogram of a (shingle, df) table under the given df
     * column name. #distinct df VALUES is tiny at any corpus size, so
@@ -272,6 +255,11 @@ object Dedup {
     * a candidate that exact verification then rejects, never lose one,
     * so 8-byte keys are safe and keep the self-join narrow.
     *
+    * Thresholds at or above [[PairKeyMinThreshold]] get the pair
+    * scheme: on a closed-vocabulary corpus the single-shingle
+    * background is the whole cost, and single-shingle prefixes barely
+    * dent it (measured 6.3x at sf10 vs ~1000x for pair keys).
+    *
     * Single scheme (k = 1 prefix): one key per prefix shingle,
     * rk1 == rk2. Pair scheme (k = 2 prefix): one key per sorted
     * 2-subset of the prefix — lossless because a qualifying pair's two
@@ -282,15 +270,15 @@ object Dedup {
     *
     * `maxShingleDf` drops above-cap shingles from the indexed prefix
     * AFTER ranks are assigned on the full ordered set (exactly the old
-    * post-window filter semantics). `allSingles`: ALSO emit every
-    * doc's k=1 single keys (over the k=1 prefix bound) — used when the
-    * explicit cap FIRES, restoring the capped k=1 path's recall
+    * post-window filter semantics). `allSingles`: under the pair
+    * scheme, ALSO emit every doc's k=1 single keys (over the k=1 prefix
+    * bound) — used when the explicit cap FIRES, restoring the capped k=1 path's recall
     * exactly (a pair sharing exactly ONE cold shingle would otherwise
     * vanish under the pair scheme); the extra mass is still priced by
     * the budget guard, which sees the unioned key index. */
   private def keyIndexFused(sh: DataFrame, dfTab: DataFrame, idCol: String,
-      threshold: Double, pairScheme: Boolean, maxShingleDf: Option[Long],
-      allSingles: Boolean = false): DataFrame = {
+      threshold: Double, maxShingleDf: Option[Long],
+      allSingles: Boolean): DataFrame = {
     // one row per doc; checkpointed because the downstream key join (and
     // the pair/singles union) reads the index more than once, and this
     // is the cheapest point in the pipeline to cut lineage
@@ -316,7 +304,7 @@ object Dedup {
         .select(col(idCol),
           xxhash64(lit("1"), col("__e__.s")).as("__key__"), col("__sz__"),
           col("__e__.rk").as("__rk1__"), col("__e__.rk").as("__rk2__"))
-    if (!pairScheme) singles("true")
+    if (threshold < PairKeyMinThreshold) singles("true")
     else {
       val pairs = arr
         .withColumn("__pr__", expr(prefCol(2)))
@@ -336,69 +324,141 @@ object Dedup {
     }
   }
 
+  /** The exact-Jaccard plan [[jaccardPlan]] derives from one full-corpus
+    * df histogram. On the prefix path: `nHotExplicit` shingles sit above
+    * the explicit cap; `why` names the set-table estimate, broadcast
+    * ceiling and heap gate that chose the verify `route`; `effBudget` is
+    * the candidate budget after the carry shrink; `keyHisto` and
+    * `budgetCap` price the key index when that budget may bind; and
+    * `index` is the capped key index the candidate join reads.
+    * `probeKernel`: a cost-based broadcast-joins route still takes the
+    * kernel if the semi-join-reduced sets fit [[heapGate]]. */
+  private case class JaccardPlan(sh: DataFrame, route: Route,
+      probeKernel: Boolean = false, nHotExplicit: Long = 0L,
+      why: String = "", effBudget: Option[Long] = None,
+      keyHisto: Option[Array[(Long, Long)]] = None,
+      budgetCap: Option[Long] = None, index: Option[DataFrame] = None)
+
+  /** A quarter of the JVM's max heap: the gate of the verify kernel's
+    * driver-side map and the cap on the set-table broadcast ceiling. */
+  private def heapGate: Long = Runtime.getRuntime.maxMemory / 4
+
+  /** Plan an exact-Jaccard call — the one place [[ngramJaccardPairs]]
+    * and [[effectiveCapFor]] take their route and guard decisions from.
+    * `force` replaces the cost-based route (the direct path still needs
+    * both guards idle); `forJoin` builds the key index the candidate
+    * join reads, checkpointing it (and its df table) when it is priced,
+    * since the join then reads both again. */
+  private def jaccardPlan(df: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double, maxShingleDf: Option[Long],
+      budget: Option[Long], force: Option[Route],
+      forJoin: Boolean): JaccardPlan = {
+    // shingle STRINGS become xxhash64 LONGS at ingest: every
+    // downstream structure (inverted-index join keys, rank window,
+    // verification set arrays) gets severalfold cheaper to shuffle,
+    // sort, and intersect. A hash collision merges two shingles
+    // CORPUS-WIDE (both docs' sets and every intersection see the
+    // merge consistently), perturbing one Jaccard value by ~1/|set|
+    // with probability ~vocab^2/2^64 — ~1e-8 even at a billion-shingle
+    // vocabulary, and an occurrence would surface as an oracle hash
+    // mismatch rather than pass silently.
+    val sh = shingles(df, idCol, textCol, n)
+      .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
+      .localCheckpoint()
+    // full-corpus df: the global rarity order for prefix filtering,
+    // the space the explicit hot-key cap lives in, and (as a tiny
+    // driver histogram) the cost model that picks the physical path.
+    // NOT checkpointed: the direct path touches only the histogram,
+    // and the prefix path reads the table exactly once (its __fdf__
+    // column then rides on every prefix row).
+    val dfTab = sh.groupBy(col("shingle"))
+      .agg(count(lit(1)).as("__fdf__"))
+    val histo = dfHistogram(dfTab, "__fdf__")
+    val nHot = maxShingleDf.fold(0L)(cap =>
+      histo.iterator.filter(_._1 > cap).map(_._2).sum)
+    val retainedMass = histo.iterator
+      .filter { case (d, _) => maxShingleDf.forall(d <= _) }
+      .map { case (d, cnt) => satMul(cnt, pairsOf(d)) }
+      .foldLeft(0L)(satAdd)
+    // COST-BASED PATH CHOICE. When no guard fires and the full
+    // inverted-index candidate mass is small, the plain index self-join
+    // + pair count IS the fastest plan: its per-pair cost is one
+    // hash-agg row, and the prefix path's fixed stages (set-table
+    // build, verification) cost more than the mass they would save.
+    // Past the crossover the prefix path wins quadratically.
+    if (nHot == 0L && budget.forall(_ >= retainedMass) &&
+        force.fold(retainedMass <= DirectPathMaxPairs)(_ == Direct))
+      return JaccardPlan(sh, Direct)
+    // set-table bytes from the histogram (total shingle rows x 16 B/elem
+    // x 2 overhead). Kernel when its BOXED driver map (up to ~3x the
+    // estimate on many-small-doc corpora) fits a quarter heap; broadcast
+    // joins (executor-side builds) up to the ceiling; sort-merge past it.
+    val setBytesEst = satMul(32L, histo.iterator
+      .map { case (d, c) => satMul(d, c) }.foldLeft(0L)(satAdd))
+    val ceiling = math.min(DefaultSetBroadcastBytes, heapGate)
+    val route = force.filter(_ != Direct).getOrElse(
+      if (setBytesEst > ceiling) SortMerge
+      else if (satMul(3L, setBytesEst) <= heapGate) Kernel
+      else BroadcastJoins)
+    // the verify route feeds back into the budget: a sort-merge verify
+    // ALSO drags ~2x avg-set-bytes per surviving candidate through its
+    // second shuffle — at 1 KB sets that dwarfs the 192 B/row model, so
+    // the budget shrinks by that carry ratio or the guard bounds the
+    // wrong quantity (the sf10 failure mode: candidates fit, the verify
+    // shuffle did not)
+    val effBudget = budget.map { b =>
+      if (route != SortMerge) b
+      else {
+        val carry = 2L * setBytesEst / math.max(1L, df.count())
+        math.max(1000000L, (b.toDouble * CandidateRowScratchBytes /
+          (CandidateRowScratchBytes + carry)).toLong)
+      }
+    }
+    // full-index mass bounds every key-index mass from above, so when
+    // it fits the budget no key pricing runs at all
+    val mayBind = effBudget.exists(capForBudget(histo, _).nonEmpty)
+    val keys = if (!forJoin && !mayBind) None else {
+      val k = keyIndexFused(sh, dfTab, idCol, threshold, maxShingleDf,
+        allSingles = nHot > 0L)
+      Some(if (forJoin && mayBind) k.localCheckpoint() else k)
+    }
+    // budget guard priced on the KEY index the join reads — the filters
+    // shrink the real mass far below the full-index upper bound, so the
+    // cap binds only against work the join would actually do
+    val keyTab = keys.filter(_ => mayBind).map { k =>
+      val t = k.groupBy(col("__key__")).agg(count(lit(1)).as("__pdf__"))
+      if (forJoin) t.localCheckpoint() else t
+    }
+    val keyHisto = keyTab.map(dfHistogram(_, "__pdf__"))
+    val budgetCap =
+      for (b <- effBudget; h <- keyHisto; cap <- capForBudget(h, b)) yield cap
+    val index = keys.filter(_ => forJoin).map(k => budgetCap.fold(k)(cap =>
+      k.join(keyTab.get.filter(col("__pdf__") > cap).select(col("__key__")),
+        Seq("__key__"), "left_anti")))
+    JaccardPlan(sh, route, route == BroadcastJoins && !force.contains(route),
+      nHot, s"set estimate $setBytesEst B, ceiling $ceiling B, heap gate " +
+        s"$heapGate B", effBudget, keyHisto, budgetCap, index)
+  }
+
   /** Whether (and at what df value) a guard of [[ngramJaccardPairs]]
-    * would drop shingles for these inputs — the index probe + cap
-    * algebra only, no candidate generation. None means NO shingle is
-    * dropped by either guard (the explicit full-df cap or the
-    * budget-derived prefix-df cap); the Some value is informational
-    * (the lower of the two caps, which live in different df spaces).
-    * Exists so correctness harnesses can PIN that an oracle-compared
-    * configuration runs unguarded (a firing guard changes which pairs
-    * are discovered, which is exactly what the oracle hashes). */
+    * would drop shingles for these inputs — its plan only, no candidate
+    * generation. None means NO shingle is dropped by either guard (the
+    * explicit full-df cap or the budget-derived prefix-df cap); the Some
+    * value is informational (the lower of the two caps, which live in
+    * different df spaces). Exists so correctness harnesses can PIN that
+    * an oracle-compared configuration runs unguarded (a firing guard
+    * changes which pairs are discovered, which is exactly what the
+    * oracle hashes). */
   def effectiveCapFor(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxShingleDf: Option[Long],
       candidateBudget: Option[Long]): Option[Long] = {
-    val spark = df.sparkSession
-    val resolved = candidateBudget.map(resolveCandidateBudget(spark, _))
-    if (maxShingleDf.isEmpty && resolved.isEmpty) None
-    else {
-      // mirror ngramJaccardPairs' hashed-shingle ingest exactly
-      val sh = shingles(df, idCol, textCol, n)
-        .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
-        .localCheckpoint()
-      val dfTab = sh.groupBy(col("shingle")).agg(count(lit(1)).as("__fdf__"))
-      val maxFdf = dfTab.agg(max(col("__fdf__"))).collect()(0) match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-      val explicitFiring = maxShingleDf.filter(_ < maxFdf)
-      val histoFull = dfHistogram(dfTab, "__fdf__")
-      val retainedMass = histoFull.iterator
-        .filter { case (d, _) => maxShingleDf.forall(d <= _) }
-        .map { case (d, cnt) => satMul(cnt, pairsOf(d)) }
-        .foldLeft(0L)(satAdd)
-      // mirror ngramJaccardPairs exactly, so the pin tests the cap
-      // that would actually fire: the direct path (small retained
-      // mass, no explicit hot shingle, budget covers the mass) never
-      // caps; otherwise price the FULL index first (an upper bound on
-      // the prefix-index mass) and fall to the prefix histogram only
-      // past the budget
-      if (explicitFiring.isEmpty &&
-          retainedMass <= directPathMaxPairs(spark) &&
-          resolved.forall(_ >= retainedMass)) None
-      else {
-        val budgetCap = resolved.flatMap { b =>
-          val totalShingleRows = histoFull.iterator
-            .map { case (d, c) => satMul(d, c) }.foldLeft(0L)(satAdd)
-          val setBytesEst = satMul(32L, totalShingleRows)
-          val eff =
-            if (setBytesEst <= setBroadcastCeiling(spark)) b
-            else carryShrunkBudget(b, setBytesEst, df.count())
-          if (capForBudget(histoFull, eff).isEmpty) None
-          else {
-            val pairScheme = threshold >= PairKeyMinThreshold
-            val keyDfTab = keyIndexFused(sh, dfTab, idCol, threshold,
-                pairScheme, maxShingleDf,
-                allSingles = pairScheme && explicitFiring.nonEmpty)
-              .groupBy(col("__key__")).agg(count(lit(1)).as("__pdf__"))
-            capForBudget(dfHistogram(keyDfTab, "__pdf__"), eff)
-          }
-        }
-        (explicitFiring, budgetCap) match {
-          case (Some(a), Some(b)) => Some(math.min(a, b))
-          case (a, b) => a.orElse(b)
-        }
-      }
+    val budget = candidateBudget.map(resolveCandidateBudget(df.sparkSession, _))
+    if (maxShingleDf.isEmpty && budget.isEmpty) None
+    else Jobs.labeled(df.sparkSession, "dedup: effective cap") {
+      val plan = jaccardPlan(df, idCol, textCol, n, threshold, maxShingleDf,
+        budget, force = None, forJoin = false)
+      (maxShingleDf.filter(_ => plan.nHotExplicit > 0L) ++ plan.budgetCap)
+        .reduceOption(_ min _)
     }
   }
 
@@ -471,47 +531,25 @@ object Dedup {
       n: Int, threshold: Double,
       maxShingleDf: Option[Long] = None,
       candidateBudget: Option[Long] = Some(AutoCandidatePairBudget))
-      : DataFrame = {
+      : DataFrame =
+    ngramJaccardPairsVia(df, idCol, textCol, n, threshold, maxShingleDf,
+      candidateBudget, route = None)
+
+  /** [[ngramJaccardPairs]] on the given route (the cost-based one when
+    * None). */
+  private[graft] def ngramJaccardPairsVia(df: DataFrame, idCol: String,
+      textCol: String, n: Int, threshold: Double,
+      maxShingleDf: Option[Long], candidateBudget: Option[Long],
+      route: Option[Route]): DataFrame = {
     val spark = df.sparkSession
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    // shingle STRINGS become xxhash64 LONGS at ingest: every
-    // downstream structure (inverted-index join keys, rank window,
-    // verification set arrays) gets severalfold cheaper to shuffle,
-    // sort, and intersect. A hash collision merges two shingles
-    // CORPUS-WIDE (both docs' sets and every intersection see the
-    // merge consistently), perturbing one Jaccard value by ~1/|set|
-    // with probability ~vocab^2/2^64 — ~1e-8 even at a billion-shingle
-    // vocabulary, and an occurrence would surface as an oracle hash
-    // mismatch rather than pass silently.
-    val sh = shingles(df, idCol, textCol, n)
-      .select(col(idCol), xxhash64(col("shingle")).as("shingle"))
-      .localCheckpoint()
-    val resolvedBudget = candidateBudget
-      .map(resolveCandidateBudget(spark, _))
-    // full-corpus df: the global rarity order for prefix filtering,
-    // the space the explicit hot-key cap lives in, and (as a tiny
-    // driver histogram) the cost model that picks the physical path.
-    // NOT checkpointed: the direct path touches only the histogram,
-    // and the prefix path reads the table exactly once (its __fdf__
-    // column then rides on every prefix row).
-    val dfTab = sh.groupBy(col("shingle"))
-      .agg(count(lit(1)).as("__fdf__"))
-    val histoFull = dfHistogram(dfTab, "__fdf__")
-    val nHotExplicit = maxShingleDf.map(cap =>
-      histoFull.iterator.filter(_._1 > cap).map(_._2).sum).getOrElse(0L)
-    val retainedMass = histoFull.iterator
-      .filter { case (d, _) => maxShingleDf.forall(d <= _) }
-      .map { case (d, cnt) => satMul(cnt, pairsOf(d)) }
-      .foldLeft(0L)(satAdd)
-    // COST-BASED PATH CHOICE off the driver-side histogram. When no
-    // guard fires and the full inverted-index candidate mass is small,
-    // the plain index self-join + pair count IS the fastest plan: its
-    // per-pair cost is one hash-agg row, and the prefix path's fixed
-    // stages (rank window, set-table build, two verification joins)
-    // cost more than the mass they would save. Past the crossover the
-    // prefix path wins quadratically.
-    if (nHotExplicit == 0L && retainedMass <= directPathMaxPairs(spark) &&
-        resolvedBudget.forall(_ >= retainedMass)) {
+    val budget = candidateBudget.map(resolveCandidateBudget(spark, _))
+    val plan = Jobs.labeled(spark, "dedup: jaccard plan") {
+      jaccardPlan(df, idCol, textCol, n, threshold, maxShingleDf, budget,
+        route, forJoin = true)
+    }
+    val sh = plan.sh
+    if (plan.route == Direct) {
       val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
       val a = sh.select(col(idCol).as("id_a"), col("shingle"))
       val b = sh.select(col(idCol).as("id_b"), col("shingle"))
@@ -531,81 +569,28 @@ object Dedup {
         .select(col("id_a"), col("id_b"), col("jaccard"))
     }
     // ---- prefix + verify path ----
-    // set-table bytes from the driver-side histogram (total shingle
-    // rows x 16 B/elem x 2 overhead) — no extra job
-    val totalShingleRows = histoFull.iterator
-      .map { case (d, c) => satMul(d, c) }.foldLeft(0L)(satAdd)
-    // the verify phase's join strategy feeds back into the budget: with
-    // a broadcastable set table the candidate stream's own scratch
-    // ([[CandidateRowScratchBytes]]/row) is the whole disk story, but a
-    // sort-merge verify ALSO drags ~2x avg-set-bytes per surviving
-    // candidate through its second shuffle — at 1 KB sets that dwarfs
-    // the 192 B/row model, so the budget shrinks by the carry ratio
-    // ([[carryShrunkBudget]]) or the guard bounds the wrong quantity
-    // (the sf10 failure mode: candidates fit, the verify shuffle did
-    // not)
-    val setBytesEst = satMul(32L, totalShingleRows)
-    val setsBroadcastable = setBytesEst <= setBroadcastCeiling(spark)
-    val effBudget: Option[Long] = resolvedBudget.map { b =>
-      if (setsBroadcastable) b
-      else carryShrunkBudget(b, setBytesEst, df.count())
-    }
-    // fast budget check: full-index mass bounds every key-index mass
-    // from above, so when it fits no key pricing runs at all
-    val budgetMayBind = effBudget.exists(b =>
-      capForBudget(histoFull, b).nonEmpty)
-    // HIGH thresholds get the k=2 PAIR-KEY scheme: a qualifying pair
-    // must share its two globally-smallest common shingles inside both
-    // (k=2)-extended prefixes (multi-prefix lemma, [[keyIndexFused]]),
-    // so indexing every sorted 2-subset of the prefix kills the
-    // single-shingle background QUADRATICALLY — on a closed-vocabulary
-    // corpus that background is the whole cost, and single-shingle
-    // prefixes barely dent it (measured 6.3x at sf10 vs ~1000x for
-    // pair keys). The index grows C(p,2)/p-fold, so LOW thresholds
-    // (long prefixes) keep the classic k=1 single-key scheme.
-    val pairScheme = threshold >= PairKeyMinThreshold
-    if (nHotExplicit > 0L) log.warn(
+    if (plan.nHotExplicit > 0L) log.warn(
       s"ngramJaccardPairs: explicit maxShingleDf=${maxShingleDf.get} " +
-        s"fires: dropping $nHotExplicit hot shingles from candidate " +
+        s"fires: dropping ${plan.nHotExplicit} hot shingles from candidate " +
         "generation; pairs overlapping ONLY on those shingles " +
         "will not be discovered")
-    val keysPlain = keyIndexFused(sh, dfTab, idCol, threshold, pairScheme,
-      maxShingleDf, allSingles = pairScheme && nHotExplicit > 0L)
-    // budget guard priced on the KEY index it will actually join — the
-    // filters above shrink the real mass far below the full-index
-    // upper bound, so the cap binds only against work the join would
-    // actually do (and on any sane corpus never fires at all)
-    val keys = if (budgetMayBind) keysPlain.localCheckpoint() else keysPlain
-    val keyDfTab = if (!budgetMayBind) None else Some(
-      keys.groupBy(col("__key__")).agg(count(lit(1)).as("__pdf__"))
-        .localCheckpoint())
-    val keyHisto = keyDfTab.map(dfHistogram(_, "__pdf__"))
-    val budgetCap: Option[Long] = (effBudget, keyHisto) match {
-      case (Some(b), Some(h)) => capForBudget(h, b)
-      case _ => None
-    }
-    budgetCap.foreach { cap =>
+    plan.budgetCap.foreach { cap =>
       // recall accounting: the histogram's cut tail IS the estimated
       // drop — surfaced with the cap so the tradeoff is observable at
       // the moment it is made, not reconstructed after the fact
-      val (nKeysDropped, massDropped) = droppedAboveCap(keyHisto.get, cap)
+      val (nKeysDropped, massDropped) = droppedAboveCap(plan.keyHisto.get, cap)
       log.warn(
         s"ngramJaccardPairs: budget cap fires: dropping $nKeysDropped " +
           s"index keys with df > $cap, an estimated $massDropped " +
           s"candidate pairs cut before verification " +
-          s"(candidateBudget=${effBudget.get}" +
-          (if (setsBroadcastable) ""
-           else s", carry-shrunk from ${resolvedBudget.get}: " +
+          s"(candidateBudget=${plan.effBudget.get}" +
+          (if (plan.route != SortMerge) ""
+           else s", carry-shrunk from ${budget.get}: " +
              "set table too large to broadcast") +
           "); pairs whose every shared index key is hotter than the " +
           "cap will not be discovered")
     }
-    val index = (budgetCap, keyDfTab) match {
-      case (Some(cap), Some(tab)) =>
-        keys.join(tab.filter(col("__pdf__") > cap)
-          .select(col("__key__")), Seq("__key__"), "left_anti")
-      case _ => keys
-    }
+    val index = plan.index.get
     val a = index.select(col(idCol).as("id_a"), col("__key__"),
       col("__sz__").as("sz_a"), col("__rk1__").as("ra1"),
       col("__rk2__").as("ra2"))
@@ -623,7 +608,7 @@ object Dedup {
         least(col("ra2") - col("ra1") - lit(1),
           col("rb2") - col("rb1") - lit(1)) +
         least(col("sz_a") - col("ra2"), col("sz_b") - col("rb2"))
-    val cand = a.join(b, "__key__")
+    val candStream = a.join(b, "__key__")
       .filter(col("id_a") < col("id_b"))
       .filter(least(col("sz_a"), col("sz_b")) >=
         lit(threshold) * greatest(col("sz_a"), col("sz_b")) - lit(1e-9))
@@ -643,12 +628,21 @@ object Dedup {
         lit(threshold / (1.0 + threshold)) *
           (col("__sza__") + col("__szb__")) - lit(1e-9))
       .select(col("id_a"), col("id_b"))
-    // semi-join reduction on: at guard scale the corpus is huge and
-    // the positional/length pruning leaves candidates over a doc
-    // subset, so the set build must not pay for every doc. Sets are
-    // the hashed shingles (see sh above).
-    exactInterByArrays(sh, idCol, cand, setsBroadcastable,
-        semiJoinSets = true, setBytesEst = setBytesEst)
+    // semi-join reduction: at guard scale the corpus is huge and the
+    // positional/length pruning leaves candidates over a doc subset,
+    // so the set build must not pay for every doc. The candidate list
+    // is checkpointed because it is then read twice. Sets are the
+    // hashed shingles (see sh above).
+    val cand = Jobs.labeled(spark, "dedup: candidates (budget cap " +
+        s"${plan.budgetCap.getOrElse("none")}, budget " +
+        s"${plan.effBudget.getOrElse("none")})") {
+      candStream.localCheckpoint()
+    }
+    val candIds = cand
+      .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
+      .distinct()
+    exactInterByArrays(sh.join(candIds, Seq(idCol), "left_semi"), idCol,
+        cand, plan.route, plan.why, plan.probeKernel)
       .withColumn("jaccard",
         col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
@@ -670,127 +664,101 @@ object Dedup {
     * the FIRST join's array column through the SECOND join's shuffle —
     * ~|cand| x avg-set-bytes of shuffle write (measured ~260 GB for a
     * 198M-candidate stream at ~1.3 KB/set: the sf10 scratch-disk
-    * killer, NOT the candidate stream itself). When the set table fits
-    * [[SetBroadcastBytesKey]] (estimated; default
-    * [[DefaultSetBroadcastBytes]]) both joins broadcast it instead:
-    * the candidate stream never shuffles with arrays attached and the
-    * verify phase writes ZERO array bytes to scratch. The CALLER picks
-    * the strategy — it knows the candidate scale and the set-table
-    * size for free (the budgeted jaccard path reads both off its
-    * df-histogram byte lanes; LSH banding's candidates are true-pair-
-    * many, where a broadcast build costs more than it saves).
+    * killer, NOT the candidate stream itself). Below the set-table
+    * ceiling ([[DefaultSetBroadcastBytes]], gated at a quarter heap)
+    * the sets are broadcast instead: the candidate stream never
+    * shuffles with arrays attached and the verify phase writes ZERO
+    * array bytes to scratch. The CALLER picks the `route` — it knows
+    * the candidate scale and the set-table size for free (the
+    * budgeted jaccard path reads both off its df histogram, see
+    * [[jaccardPlan]]; LSH banding's candidates are true-pair-many,
+    * where a broadcast build costs more than it saves). With
+    * `probeKernel`, a broadcast-joins route takes the kernel when the
+    * (semi-join-reduced) set table's own estimate fits [[heapGate]].
+    * Its jobs run under the label `dedup: verify by <route> (<why>)`.
     * Returns (id_a, id_b, inter, sz_a, sz_b); candidates sharing
     * nothing report inter = 0. */
   private def exactInterByArrays(sh: DataFrame, idCol: String,
-      cand0: DataFrame, broadcastSets: Boolean,
-      semiJoinSets: Boolean = false, setBytesEst: Long = -1L): DataFrame = {
-    // semi-join reduction (caller-chosen): only docs that appear in
-    // some candidate pair need a materialized set — on a huge corpus
-    // whose near-dups touch a fraction of the docs this shrinks the
-    // set build (and any broadcast of it) from corpus-sized to
-    // candidate-doc-sized. It costs one candidate checkpoint (the list
-    // is then read twice) + one distinct, so small-corpus callers
-    // (LSH verify at bench scale) skip it.
-    val cand = if (semiJoinSets) cand0.localCheckpoint() else cand0
-    val shForSets =
-      if (semiJoinSets) {
-        val candIds = cand
-          .select(explode(array(col("id_a"), col("id_b"))).as(idCol))
-          .distinct()
-        sh.join(candIds, Seq(idCol), "left_semi")
-      } else sh
-    // checkpoint: the table is read 2x (both join sides) — without it
-    // the groupBy + sort re-runs per side (broadcast builds don't share
-    // Spark's exchange reuse)
-    val setTab = shForSets
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col("shingle"))).as("__set__"))
-      .localCheckpoint()
-    // Single-broadcast kernel (`spark.graft.dedup.verifyKernel`,
-    // default ON when the sets are broadcastable): the two broadcast
-    // joins below each build their own HashedRelation of the SAME set
-    // table — the dominant verify cost once sets are hashed longs. The
-    // kernel collects the (ceiling-bounded, semi-join-reduced) set
-    // table ONCE, broadcasts one map, and runs a two-pointer merge per
-    // candidate inside mapPartitions — measured 2x on the whole sf10
-    // q_jaccard_pairs wall (~100 s -> ~48 s, identical pairs). The
-    // driver-side build is bounded by the SAME ceiling that gates
-    // Spark's own broadcast (which also builds driver-side); past it
-    // the sort-merge route below takes over. Results are pinned
-    // byte-identical to the join route by spec; set the conf to false
-    // to force the join plan.
-    //
-    // The kernel's driver map is BOXED (Map entry + key box + array
-    // header per doc), which on many-small-doc corpora runs up to ~3x
-    // the 32 B/row wire estimate — and an explicitly-set
-    // [[SetBroadcastBytesKey]] bypasses the default's maxHeap/4 gate
-    // (the operator's opt-in raise for executor-side broadcast JOINS,
-    // whose HashedRelation lives off-heap-ish in executor memory).
-    // The DRIVER collect must never ride that bypass: gate the kernel
-    // route at 3x-overhead-estimate <= maxHeap/4 unconditionally; past
-    // it the broadcast-join plan (same results, executor-side build)
-    // serves until its own ceiling, then sort-merge.
-    val heapGate = Runtime.getRuntime.maxMemory / 4
-    val kernelEnabled =
-      !sh.sparkSession.conf.getOption("spark.graft.dedup.verifyKernel")
-        .contains("false")
-    val kernelFitsFull = setBytesEst >= 0L &&
-      satMul(3L, setBytesEst) <= heapGate
-    // setBytesEst prices the FULL corpus, but with semiJoinSets the
-    // kernel collects only the candidate-doc-reduced table — on a huge
-    // corpus whose near-dups touch a fraction of the docs the full
-    // estimate would silently disable the 2x kernel where the reduced
-    // set fits comfortably. The reduced table is already checkpointed,
-    // so a real element count costs one cheap metadata-ish job, paid
-    // ONLY when it could flip the decision (full estimate too big).
-    val kernelFits = kernelFitsFull || (broadcastSets && kernelEnabled &&
-      semiJoinSets && setBytesEst >= 0L && {
+      cand: DataFrame, route: Route, why: String,
+      probeKernel: Boolean = false): DataFrame = {
+    val spark = sh.sparkSession
+    Jobs.labeled(spark, s"dedup: verify by $route ($why)") {
+      // checkpoint: the table is read 2x (both join sides) — without it
+      // the groupBy + sort re-runs per side (broadcast builds don't share
+      // Spark's exchange reuse)
+      val setTab = sh
+        .groupBy(col(idCol))
+        .agg(sort_array(collect_set(col("shingle"))).as("__set__"))
+        .localCheckpoint()
+      // Single-broadcast kernel: the two broadcast joins below each build
+      // their own HashedRelation of the SAME set table — the dominant
+      // verify cost once sets are hashed longs. The kernel collects the
+      // (ceiling-bounded, semi-join-reduced) set table ONCE, broadcasts
+      // one map, and runs a two-pointer merge per candidate inside
+      // mapPartitions — measured 2x on the whole sf10 q_jaccard_pairs
+      // wall (~100 s -> ~48 s, identical pairs). Its driver map is BOXED
+      // (Map entry + key box + array header per doc), up to ~3x the
+      // 32 B/row wire estimate, hence the 3x in the heap gate. Results
+      // are pinned byte-identical to the join routes by spec.
+      //
+      // The caller's estimate prices the FULL corpus, but the kernel
+      // collects only the candidate-doc-reduced table — on a huge corpus
+      // whose near-dups touch a fraction of the docs the full estimate
+      // would silently disable the 2x kernel where the reduced set fits
+      // comfortably. The reduced table is already checkpointed, so a real
+      // element count costs one cheap job, paid ONLY when it could flip
+      // the decision.
+      val reducedEst = if (!probeKernel) None else {
         val elems = setTab.agg(sum(size(col("__set__"))).cast("long")).head()
-        !elems.isNullAt(0) &&
-          satMul(3L, satMul(32L, elems.getLong(0))) <= heapGate
-      })
-    val useKernel = broadcastSets && kernelFits && kernelEnabled
-    if (useKernel) {
-      val sets: Map[Any, Array[Long]] = setTab.collect()
-        .map(r => r.get(0) -> r.getSeq[Long](1).toArray).toMap
-      val bc = sh.sparkSession.sparkContext.broadcast(sets)
-      val candSchema = cand.schema
-      val out = cand.rdd.mapPartitions { it =>
-        val m = bc.value
-        it.flatMap { row =>
-          (m.get(row.get(0)), m.get(row.get(1))) match {
-            case (Some(sa), Some(sb)) =>
-              var i = 0; var j = 0; var inter = 0L
-              while (i < sa.length && j < sb.length) {
-                if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
-                else if (sa(i) < sb(j)) i += 1
-                else j += 1
-              }
-              Some(Row(row.get(0), row.get(1), inter,
-                sa.length.toLong, sb.length.toLong))
-            case _ => None // inner-join semantics: unmatched ids drop
+        Some(if (elems.isNullAt(0)) Long.MaxValue
+          else satMul(32L, elems.getLong(0)))
+      }
+      if (route == Kernel || reducedEst.exists(satMul(3L, _) <= heapGate)) {
+        val sets: Map[Any, Array[Long]] = Jobs.labeled(spark,
+            s"dedup: verify by $Kernel ($why" +
+              reducedEst.fold("")(e => s", reduced set estimate $e B") + ")") {
+          setTab.collect()
+        }.map(r => r.get(0) -> r.getSeq[Long](1).toArray).toMap
+        val bc = spark.sparkContext.broadcast(sets)
+        val candSchema = cand.schema
+        val out = cand.rdd.mapPartitions { it =>
+          val m = bc.value
+          it.flatMap { row =>
+            (m.get(row.get(0)), m.get(row.get(1))) match {
+              case (Some(sa), Some(sb)) =>
+                var i = 0; var j = 0; var inter = 0L
+                while (i < sa.length && j < sb.length) {
+                  if (sa(i) == sb(j)) { inter += 1; i += 1; j += 1 }
+                  else if (sa(i) < sb(j)) i += 1
+                  else j += 1
+                }
+                Some(Row(row.get(0), row.get(1), inter,
+                  sa.length.toLong, sb.length.toLong))
+              case _ => None // inner-join semantics: unmatched ids drop
+            }
           }
         }
+        spark.createDataFrame(out, StructType(Seq(
+          candSchema.fields(0).copy(name = "id_a"),
+          candSchema.fields(1).copy(name = "id_b"),
+          StructField("inter", LongType),
+          StructField("sz_a", LongType),
+          StructField("sz_b", LongType))))
+      } else {
+        def side(idAs: String, setAs: String) = {
+          val s = setTab.select(col(idCol).as(idAs), col("__set__").as(setAs))
+          if (route == SortMerge) s else broadcast(s)
+        }
+        cand
+          .join(side("id_a", "__sa__"), "id_a")
+          .join(side("id_b", "__sb__"), "id_b")
+          .select(col("id_a"), col("id_b"),
+            size(array_intersect(col("__sa__"), col("__sb__")))
+              .cast("long").as("inter"),
+            size(col("__sa__")).cast("long").as("sz_a"),
+            size(col("__sb__")).cast("long").as("sz_b"))
       }
-      return sh.sparkSession.createDataFrame(out, StructType(Seq(
-        candSchema.fields(0).copy(name = "id_a"),
-        candSchema.fields(1).copy(name = "id_b"),
-        StructField("inter", LongType),
-        StructField("sz_a", LongType),
-        StructField("sz_b", LongType))))
     }
-    def side(idAs: String, setAs: String) = {
-      val s = setTab.select(col(idCol).as(idAs), col("__set__").as(setAs))
-      if (broadcastSets) broadcast(s) else s
-    }
-    cand
-      .join(side("id_a", "__sa__"), "id_a")
-      .join(side("id_b", "__sb__"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__sa__"), col("__sb__")))
-          .cast("long").as("inter"),
-        size(col("__sa__")).cast("long").as("sz_a"),
-        size(col("__sb__")).cast("long").as("sz_b"))
   }
 
   /** Modulus of the Carter-Wegman MinHash family: 2^56, matching the
@@ -840,13 +808,15 @@ object Dedup {
       shingleN: Int = 3, numHashes: Int = 16, bands: Int = 8,
       threshold: Double = 0.8): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sh = shingles(df, idCol, textCol, shingleN).localCheckpoint()
     // gate the length prefilter on the corpus size: the shingle table is
     // already checkpointed, so the row count is a ~40 ms cached-metadata
     // job. The filter is recall-lossless, so the gate can never change
     // results, only the candidate mass.
-    minhashLshPairsOn(sh, idCol, numHashes, bands, threshold,
-      lenFilter = sh.count() >= LshLenFilterMinShingleRows)
+    val (sh, lenFilter) = Jobs.labeled(df.sparkSession, "dedup: lsh shingles") {
+      val sh = shingles(df, idCol, textCol, shingleN).localCheckpoint()
+      (sh, sh.count() >= LshLenFilterMinShingleRows)
+    }
+    minhashLshPairsOn(sh, idCol, numHashes, bands, threshold, lenFilter)
   }
 
   /** [[minhashLshPairs]] on a checkpointed shingle table, with the length
@@ -858,9 +828,10 @@ object Dedup {
     // one row per doc — checkpoint so the 8-band union and the bucket
     // self-join read the tiny signature table instead of re-running the
     // numHashes-way aggregation over the full shingle set per branch
-    val sigs = minhashSignatures(sh, idCol, numHashes,
-        withSetSize = lenFilter)
-      .localCheckpoint()
+    val sigs = Jobs.labeled(sh.sparkSession, "dedup: minhash signatures") {
+      minhashSignatures(sh, idCol, numHashes, withSetSize = lenFilter)
+        .localCheckpoint()
+    }
     // band key = md5 of the concatenated band slice; the set size rides
     // each band row (8 extra bytes through the band shuffle) so the
     // LENGTH FILTER below costs no join at all
@@ -909,7 +880,7 @@ object Dedup {
     // its candidate stream is budget-many, 1000x larger
     val shHashed = sh.select(col(idCol),
       xxhash64(col("shingle")).as("shingle"))
-    exactInterByArrays(shHashed, idCol, cand, broadcastSets = false)
+    exactInterByArrays(shHashed, idCol, cand, SortMerge, "lsh candidates")
       .withColumn("jaccard",
         col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)

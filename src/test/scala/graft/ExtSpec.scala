@@ -225,115 +225,115 @@ class ExtSpec extends SparkSpec {
     assert(roomy == exact)
   }
 
+  // docs 8/9 are single-shingle twins (exactly 3 tokens): at high
+  // thresholds the pair-key scheme cannot form a 2-subset for them, so
+  // only the tiny-doc single-key fallback can discover the pair
+  private def prefixCorpus = Seq(
+    (0L, "the quick brown fox jumps over the lazy dog today"),
+    (1L, "the quick brown fox jumps over the lazy dog tonight"),
+    (2L, "the quick brown fox jumps over a sleepy cat today"),
+    (3L, "completely unrelated text about seventeen green bottles"),
+    (4L, "the quick brown fox jumps over the lazy dog today"),
+    (5L, "seventeen green bottles hanging on the wall somewhere"),
+    (6L, "short doc"),
+    (7L, "the quick brown fox leaps over the lazy dog today"),
+    (8L, "purple elephant parade"),
+    (9L, "purple elephant parade")
+  ).toDF("doc_id", "text")
+
+  private def pairsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => (r.get(0).toString.toLong, r.get(1).toString.toLong) ->
+      r.getDouble(2)).toMap
+
+  private val verifyRoutes = Seq(Dedup.Route.Kernel,
+    Dedup.Route.BroadcastJoins, Dedup.Route.SortMerge)
+
+  // capped-verify fixture: maxShingleDf = 3 drops the hot shingles so the
+  // exact-verification path must engage
+  private def verifyDocs = Seq(
+    (0L, "breaking news today alpha beta gamma delta epsilon"),
+    (1L, "breaking news today alpha beta gamma delta zeta"),
+    (2L, "breaking news today completely different one two"),
+    (3L, "alpha beta gamma delta epsilon zeta eta theta"),
+    (4L, "alpha beta gamma delta epsilon zeta eta iota")
+  ).toDF("doc_id", "text")
+
+  private def verifyVia(route: Dedup.Route) = pairsOf(
+    Dedup.ngramJaccardPairsVia(verifyDocs, "doc_id", "text", 3, 0.1,
+      maxShingleDf = Some(3L), candidateBudget = None, route = Some(route)))
+
   test("verify-join strategy (broadcast vs sort-merge) never changes results") {
-    // the sf10 scratch fix switches the exact-verification joins to
-    // broadcast when the set table fits SetBroadcastBytesKey; the join
-    // strategy is a pure physical choice, so forcing each extreme must
-    // produce byte-identical pair sets INCLUDING the jaccard values
-    val docs = Seq(
-      (0L, "breaking news today alpha beta gamma delta epsilon"),
-      (1L, "breaking news today alpha beta gamma delta zeta"),
-      (2L, "breaking news today completely different one two"),
-      (3L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (4L, "alpha beta gamma delta epsilon zeta eta iota")
-    ).toDF("doc_id", "text")
-    def toMapOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    def run() = toMapOf(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
-      0.1, maxShingleDf = Some(3L), candidateBudget = None))
-    val viaBroadcast = try {
-      spark.conf.set(Dedup.SetBroadcastBytesKey, Long.MaxValue.toString)
-      run()
-    } finally spark.conf.unset(Dedup.SetBroadcastBytesKey)
-    val viaSortMerge = try {
-      spark.conf.set(Dedup.SetBroadcastBytesKey, "0")
-      run()
-    } finally spark.conf.unset(Dedup.SetBroadcastBytesKey)
+    // the join strategy is a pure physical choice, so forcing each
+    // extreme must produce byte-identical pair sets INCLUDING the
+    // jaccard values
+    val viaBroadcast = verifyVia(Dedup.Route.BroadcastJoins)
+    val viaSortMerge = verifyVia(Dedup.Route.SortMerge)
     assert(viaBroadcast.nonEmpty, "capped verify path must engage")
     assert(viaBroadcast == viaSortMerge,
       s"join strategy changed results: $viaBroadcast vs $viaSortMerge")
   }
 
   test("opt-in verify kernel (single broadcast) matches the join routes") {
-    // spark.graft.dedup.verifyKernel (default on when broadcastable)
-    // swaps the two broadcast verify joins for one broadcast map + a
-    // two-pointer merge; the swap must be invisible in the results
-    val docs = Seq(
-      (0L, "breaking news today alpha beta gamma delta epsilon"),
-      (1L, "breaking news today alpha beta gamma delta zeta"),
-      (2L, "breaking news today completely different one two"),
-      (3L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (4L, "alpha beta gamma delta epsilon zeta eta iota")
-    ).toDF("doc_id", "text")
-    def toMapOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    def run() = toMapOf(Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3,
-      0.1, maxShingleDf = Some(3L), candidateBudget = None))
-    val viaJoins = try {
-      spark.conf.set(Dedup.SetBroadcastBytesKey, Long.MaxValue.toString)
-      spark.conf.set("spark.graft.dedup.verifyKernel", "false")
-      run()
-    } finally {
-      spark.conf.unset("spark.graft.dedup.verifyKernel")
-      spark.conf.unset(Dedup.SetBroadcastBytesKey)
-    }
-    val viaKernel = try {
-      spark.conf.set(Dedup.SetBroadcastBytesKey, Long.MaxValue.toString)
-      spark.conf.set("spark.graft.dedup.verifyKernel", "true")
-      run()
-    } finally {
-      spark.conf.unset("spark.graft.dedup.verifyKernel")
-      spark.conf.unset(Dedup.SetBroadcastBytesKey)
-    }
+    // the single-broadcast kernel (one broadcast map + a two-pointer
+    // merge) replaces both verify joins; the swap must be invisible in
+    // the results against either join route
+    val viaKernel = verifyVia(Dedup.Route.Kernel)
     assert(viaKernel.nonEmpty, "kernel path must engage and produce pairs")
-    assert(viaKernel == viaJoins,
-      s"verify kernel diverged: $viaKernel vs $viaJoins")
+    for (route <- Seq(Dedup.Route.BroadcastJoins, Dedup.Route.SortMerge)) {
+      val viaJoins = verifyVia(route)
+      assert(viaKernel == viaJoins,
+        s"verify kernel diverged from $route: $viaKernel vs $viaJoins")
+    }
   }
 
   test("prefix+length+positional filtering is recall-lossless vs the direct path") {
     // the cost-based path choice must be invisible in the results: the
-    // prefix-filtered + verified path (forced via directPathMaxPairs=0)
-    // must produce byte-identical pairs AND jaccard values to the plain
-    // inverted-index count, at a low and a high threshold
-    // docs 8/9 are single-shingle twins (exactly 3 tokens): at high
-    // thresholds the pair-key scheme cannot form a 2-subset for them,
-    // so only the tiny-doc single-key fallback can discover the pair —
-    // this pins that branch against the direct path
-    val corpus = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog today"),
-      (1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "the quick brown fox jumps over a sleepy cat today"),
-      (3L, "completely unrelated text about seventeen green bottles"),
-      (4L, "the quick brown fox jumps over the lazy dog today"),
-      (5L, "seventeen green bottles hanging on the wall somewhere"),
-      (6L, "short doc"),
-      (7L, "the quick brown fox leaps over the lazy dog today"),
-      (8L, "purple elephant parade"),
-      (9L, "purple elephant parade")
-    ).toDF("doc_id", "text")
-    def toMapOf(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // prefix-filtered + verified path, forced on each verify route, must
+    // produce byte-identical pairs AND jaccard values to the plain
+    // inverted-index count, at a low and a high threshold; the (8, 9)
+    // twins pin the pair-key scheme's tiny-doc fallback
     for (t <- Seq(0.2, 0.8)) {
-      val direct = toMapOf(Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-        n = 3, threshold = t, candidateBudget = None))
-      val viaPrefix = try {
-        spark.conf.set("spark.graft.dedup.directPathMaxPairs", "0")
-        toMapOf(Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
-          n = 3, threshold = t, candidateBudget = None))
-      } finally spark.conf.unset("spark.graft.dedup.directPathMaxPairs")
+      val direct = pairsOf(Dedup.ngramJaccardPairsVia(prefixCorpus, "doc_id",
+        "text", n = 3, threshold = t, maxShingleDf = None,
+        candidateBudget = None, route = Some(Dedup.Route.Direct)))
       assert(direct.nonEmpty, s"direct path empty at t=$t — fixture broken")
       assert(direct.contains((8L, 9L)) && direct((8L, 9L)) == 1.0,
         s"single-shingle twin pair missing at t=$t")
-      assert(viaPrefix == direct,
-        s"prefix path diverged at t=$t: $viaPrefix vs $direct")
+      for (route <- verifyRoutes) {
+        val viaPrefix = pairsOf(Dedup.ngramJaccardPairsVia(prefixCorpus,
+          "doc_id", "text", n = 3, threshold = t, maxShingleDf = None,
+          candidateBudget = None, route = Some(route)))
+        assert(viaPrefix == direct,
+          s"prefix path via $route diverged at t=$t: $viaPrefix vs $direct")
+      }
+    }
+  }
+
+  test("prefix path with integer and string ids matches long ids on every verify route") {
+    // PyApi passes any id column through; the kernel keys its map by the
+    // id value and the join routes join on it, so the id type must not
+    // change which pairs are found or their jaccard values
+    for (t <- Seq(0.2, 0.8)) {
+      val want = pairsOf(Dedup.ngramJaccardPairs(prefixCorpus, "doc_id",
+        "text", n = 3, threshold = t, candidateBudget = None))
+      assert(want.contains((8L, 9L)), s"fixture broken at t=$t: $want")
+      for (idType <- Seq("int", "string"); route <- verifyRoutes) {
+        val docs = prefixCorpus.withColumn("doc_id", col("doc_id").cast(idType))
+        val got = Dedup.ngramJaccardPairsVia(docs, "doc_id", "text", n = 3,
+          threshold = t, maxShingleDf = None, candidateBudget = None,
+          route = Some(route))
+        assert(got.schema("id_a").dataType == docs.schema("doc_id").dataType)
+        assert(pairsOf(got) == want,
+          s"$idType ids via $route at t=$t: ${pairsOf(got)} vs $want")
+      }
     }
   }
 
   test("effectiveCapFor mirrors the main path's guard decisions") {
-    // the pin helper must reproduce ngramJaccardPairs' routing exactly:
-    // direct-path mirror (roomy budget => None), binding budget => Some,
-    // explicit hot cap firing/not-firing — using the budget-guard
-    // fixture whose opener shingle has df 8
+    // the pin helper reads ngramJaccardPairs' own plan: direct path
+    // (roomy budget => None), binding budget => Some, explicit hot cap
+    // firing/not-firing — using the budget-guard fixture whose opener
+    // shingle has df 8
     val docs = Seq(
       (0L, "breaking news today alpha beta gamma delta epsilon"),
       (1L, "breaking news today alpha beta gamma delta zeta"),

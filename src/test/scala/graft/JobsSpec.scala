@@ -3,7 +3,7 @@ package graft
 import graft.core.{Gram, InvalidArgument, Jobs, Windows}
 import graft.equity.{Equity, EquityConfig, Frontier}
 import graft.estimators.{Kde, Probit, Rif}
-import graft.ext.{Embeddings, Sketches}
+import graft.ext.{Dedup, Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Row}
@@ -232,16 +232,47 @@ class JobsSpec extends SparkSpec {
   test("the analyst registry queries label every job and collect with none") {
     val queries = Seq("q_decomp_twofold", "q_decomp_threefold",
       "q_decomp_detailed", "q_wls_decomp", "q_heckman_decomp", "q_logit",
-      "q_kde")
-    for (q <- queries) {
+      "q_kde").map(_ -> "lineitem") ++
+      Seq("q_dedup_exact", "q_simhash_pairs").map(_ -> "documents")
+    for ((q, table) <- queries) {
       var result: DataFrame = null
       val run = labelsOf { result = SparkEntry.queries(q)(spark, sf("sf0.001")) }
-      assert(run.contains("read: lineitem"), s"$q: $run")
+      assert(run.contains(s"read: $table"), s"$q: $run")
       assert(run.forall(_.nonEmpty), s"$q submitted unlabeled jobs: $run")
       var rows = Array.empty[Row]
       assert(labelsOf { rows = result.collect() }.isEmpty,
         s"$q: collecting its result ran jobs")
       assert(rows.nonEmpty, q)
     }
+  }
+
+  test("exact-Jaccard calls label every job dedup:, naming the verify route and the cap") {
+    val docs = Seq(
+      (0L, "breaking news today alpha beta gamma delta epsilon"),
+      (1L, "breaking news today alpha beta gamma delta zeta"),
+      (2L, "breaking news today completely different one two"),
+      (3L, "breaking news today unrelated words four five"),
+      (10L, "breaking news today aaa bbb ccc"),
+      (11L, "breaking news today ddd eee fff")
+    ).toDF("doc_id", "text")
+    for (route <- Seq(Dedup.Route.Kernel, Dedup.Route.BroadcastJoins,
+        Dedup.Route.SortMerge)) {
+      val run = labelsOf {
+        Dedup.ngramJaccardPairsVia(docs, "doc_id", "text", 3, 0.1,
+          maxShingleDf = None, candidateBudget = Some(10L), route = Some(route))
+      }
+      assert(run.nonEmpty && run.forall(_.startsWith("dedup: ")), s"$route: $run")
+      assert(run.exists(_.startsWith(s"dedup: verify by $route (set estimate ")),
+        s"$route: $run")
+      // a sort-merge verify carry-shrinks the budget to its 1M floor
+      val budget = if (route == Dedup.Route.SortMerge) 1000000L else 10L
+      assert(run.exists(l => l.startsWith("dedup: candidates (budget cap ") &&
+        l.endsWith(s", budget $budget)")), s"$route: $run")
+    }
+    val others = labelsOf {
+      Dedup.effectiveCapFor(docs, "doc_id", "text", 3, 0.1, None, Some(10L))
+      Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.3)
+    }
+    assert(others.nonEmpty && others.forall(_.startsWith("dedup: ")), others)
   }
 }

@@ -30,6 +30,11 @@ Driver-held results have one route: exits 1 on a
 `sparkContext.parallelize(` call in Queries.scala, QueriesExt.scala or
 decompose/Oaxaca.scala; their few result rows become local relations
 (`Queries.local`, or `createDataFrame(rows.asJava, schema)`).
+The engine has one conf key: exits 1 on a `spark.graft.*` key other
+than `spark.graft.dedup.candidateBudget`, and on any mention under
+src/main of the spec-only Dedup switches that went (`verifyKernel`,
+`setBroadcastBytes`, `SetBroadcastBytesKey`, `directPathMaxPairs`);
+specs force a Dedup route through `Dedup.ngramJaccardPairsVia`.
 
 Usage: python3 tools/list_knobs.py
 """
@@ -50,6 +55,9 @@ DEF = re.compile(r"\bdef (\w+)")
 RANK_PICK_CALLS = ("lit(", "isin(", "broadcast(")
 REPLACED = ("KeyedOffset", "precomputedBoundaries", "broadcastableGroups",
             "caseOver")
+CONF_KEYS = ("spark.graft.dedup.candidateBudget",)
+DEDUP_SWITCHES = ("verifyKernel", "setBroadcastBytes", "SetBroadcastBytesKey",
+                  "directPathMaxPairs")
 GRAFT = os.path.join("src", "main", "scala", "graft")
 LOCAL_RESULTS = tuple(os.path.join(GRAFT, *f) for f in (
     ("Queries.scala",), ("QueriesExt.scala",), ("decompose", "Oaxaca.scala")))
@@ -61,6 +69,7 @@ def scan():
     literals = []
     switches = []
     rdds = []
+    dedup = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -73,6 +82,8 @@ def scan():
                 for n, line in enumerate(fh, 1):
                     code = line.split("//", 1)[0]
                     switches += [f"{rel}:{n}: {w}" for w in REPLACED if w in line]
+                    dedup += [f"{rel}:{n}: {w}" for w in DEDUP_SWITCHES
+                              if w in line]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
                     if code.lstrip().startswith(("*", "/*")):
@@ -91,17 +102,18 @@ def scan():
                                      if p in code]
                     if rel in LOCAL_RESULTS and "sparkContext.parallelize(" in code:
                         rdds.append(f"{rel}:{n}: {code.strip()}")
-    return knobs, strays, literals, switches, rdds
+    return knobs, strays, literals, switches, rdds, dedup
 
 
 def main():
-    knobs, strays, literals, switches, rdds = scan()
+    knobs, strays, literals, switches, rdds, dedup = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
     env = sorted(k for k in knobs if k.startswith("SPARK_GRAFT_"))
     missing = [k for k in conf + env if k not in readme]
     repeated = [k for k in env if len(knobs[k]) > 1]
+    extra = [k for k in conf if k not in CONF_KEYS]
     for title, keys in (("conf keys", conf), ("env vars", env)):
         print(f"{title} ({len(keys)}):")
         for k in keys:
@@ -110,6 +122,8 @@ def main():
         print(f"MISSING from README.md: {k}", file=sys.stderr)
     for k in repeated:
         print(f"READ AT {len(knobs[k])} SITES (one allowed): {k}", file=sys.stderr)
+    for k in extra:
+        print(f"CONF KEY BEYOND {', '.join(CONF_KEYS)}: {k}", file=sys.stderr)
     for site, s in strays:
         print(f"OUTSIDE {site}: {s}", file=sys.stderr)
     for s in literals:
@@ -118,7 +132,11 @@ def main():
         print(f"RANK-PICK SWITCH (use SortedLookup): {s}", file=sys.stderr)
     for s in rdds:
         print(f"DRIVER RESULT AS RDD (use Queries.local): {s}", file=sys.stderr)
-    return 1 if missing or repeated or strays or literals or switches or rdds else 0
+    for s in dedup:
+        print(f"DEDUP ROUTE SWITCH (force via ngramJaccardPairsVia): {s}",
+              file=sys.stderr)
+    return 1 if (missing or repeated or extra or strays or literals or switches
+                 or rdds or dedup) else 0
 
 
 if __name__ == "__main__":
