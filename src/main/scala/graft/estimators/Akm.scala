@@ -2,11 +2,11 @@ package graft.estimators
 
 import breeze.linalg.DenseVector
 import graft.core._
+import graft.ext.Cluster
 import graft.functions.Param
+import graft.prep.Prep
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import scala.collection.mutable
 
 /** AKM (Abowd–Kramarz–Margolis) two-way fixed effects
   * (`oaxaca_blinder/src/akm.rs`):
@@ -21,9 +21,10 @@ import scala.collection.mutable
   * [[Akm.DriverEdgeCap]] edges that table iterates on the driver (zero
   * Spark jobs per iteration; the obs table is touched by exactly three
   * passes: edge aggregation, demeaned Gram, R^2). Beyond the cap the
-  * loops run distributed: min-label propagation over the edge table and
-  * per-iteration groupBy-avg + join rounds with `localCheckpoint` to cut
-  * lineage — no per-node state on the driver.
+  * loops run distributed: per-iteration groupBy-avg + join rounds with
+  * `localCheckpoint` to cut lineage — no per-node state on the driver.
+  * The largest connected set comes from [[graft.ext.Cluster]] on both
+  * routes: its union-find on the driver, or its star rounds.
   */
 final case class AkmResult(
     beta: DenseVector[Double],
@@ -83,135 +84,45 @@ object Akm {
           col(c).cast("double").as(s"__v${i + 1}__")
         }): _*).na.drop()
 
-  /** Round-based min-label propagation over an in-memory edge list —
-    * EXACTLY the distributed semantics below (batch min per round,
-    * worker-labels-to-firms then firms-to-workers, change detection per
-    * round, ConvergenceFailed on round exhaustion, largest component by
-    * node count with min-label tie-break). Returns the worker keys of
-    * the winning component. */
-  private def driverComponentWorkers(edges: Array[(String, String)],
-      maxIters: Int): Set[String] = {
-    if (edges.isEmpty) throw InsufficientData("Empty graph")
-    val wLab = mutable.HashMap.empty[String, String]
-    val fLab = mutable.HashMap.empty[String, String]
-    edges.foreach { case (w, f) =>
-      wLab.getOrElseUpdate(w, "w:" + w)
-      fLab.getOrElseUpdate(f, "f:" + f)
-    }
-    var changed = true
-    var iters = 0
-    while (changed && iters < maxIters) {
-      iters += 1
-      changed = false
-      // batch min of worker labels into firms (one round, not in-place)
-      val fCand = mutable.HashMap.empty[String, String]
-      edges.foreach { case (w, f) =>
-        val c = wLab(w)
-        if (!fCand.get(f).exists(_ <= c)) fCand(f) = c
-      }
-      fCand.foreach { case (f, c) =>
-        if (c < fLab(f)) { fLab(f) = c; changed = true }
-      }
-      val wCand = mutable.HashMap.empty[String, String]
-      edges.foreach { case (w, f) =>
-        val c = fLab(f)
-        if (!wCand.get(w).exists(_ <= c)) wCand(w) = c
-      }
-      wCand.foreach { case (w, c) =>
-        if (c < wLab(w)) { wLab(w) = c; changed = true }
-      }
-    }
-    if (changed)
-      throw ConvergenceFailed("largest_connected_set label propagation " +
-        s"failed to converge within $maxIters iterations")
-    // largest component by node count (workers + firms), min label wins ties
-    val sizes = mutable.HashMap.empty[String, Long]
-    (wLab.valuesIterator ++ fLab.valuesIterator).foreach(l =>
-      sizes(l) = sizes.getOrElse(l, 0L) + 1L)
-    val topLab = sizes.toSeq.minBy { case (l, sz) => (-sz, l) }._1
-    wLab.iterator.collect { case (w, l) if l == topLab => w }.toSet
-  }
-
   /** Rows restricted to the largest connected worker-firm component
-    * (`akm.rs:151-234`); component size counted in NODES. Min-label
-    * propagation converges in O(component diameter) rounds; like the
-    * reference's ConvergenceFailed paths, iteration exhaustion throws
-    * instead of silently proceeding with wrong component labels. Small
-    * graphs (<= [[DriverEdgeCap]] edges) propagate on the driver. */
+    * (`akm.rs:114-148`); see [[componentWorkers]]. */
   def largestConnectedSet(df: DataFrame, workerCol: String,
-      firmCol: String, maxIters: Int = 200): DataFrame = {
+      firmCol: String): DataFrame = {
     val w = col(workerCol).cast("string")
-    val f = col(firmCol).cast("string")
-    val edges = df.select(w.as("w"), f.as("f")).na.drop().distinct()
-      .localCheckpoint()
-    if (edges.count() <= DriverEdgeCap) {
-      val e = edges.collect().map(r => (r.getString(0), r.getString(1)))
-      val keep = driverComponentWorkers(e, maxIters)
-      val spark = df.sparkSession
-      import spark.implicits._
-      return df.join(broadcast(keep.toSeq.toDF("w")), w === col("w"), "left_semi")
+    val edges = df.select(w.as("w"), col(firmCol).cast("string").as("f"))
+      .na.drop().distinct()
+    val keep = componentWorkers(edges, DriverEdgeCap)
+    df.join(keep, w === keep("w"), "left_semi")
+  }
+
+  /** The one-column frame of workers in the largest connected component
+    * of the (w, f) edge table, largest by node count (workers + firms),
+    * ties to the component holding the smallest node label. Each worker
+    * and firm is a long node id, the rank of its "w:"/"f:" label in
+    * Spark's UTF-8 string order, so a component's id (its smallest node
+    * id) names its smallest label; [[Cluster.connectedComponents]] finds
+    * the components by its own route under `driverEdgeCap`. */
+  private def componentWorkers(edges: DataFrame,
+      driverEdgeCap: Long): DataFrame =
+    Jobs.labeled(edges.sparkSession, "akm: connected set") {
+      // ids ascend with the sort: each partition of a global sort holds
+      // the next label range, and the id is (partition, row in partition)
+      val nodes = edges.select(concat(lit("w:"), col("w")).as("lab"))
+        .union(edges.select(concat(lit("f:"), col("f")).as("lab")))
+        .distinct().orderBy(col("lab"))
+        .withColumn("id", monotonically_increasing_id()).localCheckpoint()
+      def idOf(c: String, p: String) = nodes.select(col("lab").as(c), col("id").as(p))
+      val pairs = edges.select(concat(lit("w:"), col("w")).as("lw"),
+          concat(lit("f:"), col("f")).as("lf"))
+        .join(idOf("lw", "a"), "lw").join(idOf("lf", "b"), "lf")
+      val cc = Cluster.connectedComponents(pairs, "a", "b",
+        driverEdgeCap = driverEdgeCap)
+      val top = cc.groupBy(col("component")).count()
+        .orderBy(col("count").desc, col("component")).limit(1).collect()
+      if (top.isEmpty) throw InsufficientData("Empty graph")
+      cc.filter(col("component") === top(0).getLong(0)).join(nodes, "id")
+        .filter(col("lab").startsWith("w:")).select(expr("substring(lab, 3)").as("w"))
     }
-    semiJoinWorkers(df, df(workerCol).cast("string"),
-      distributedComponentWorkers(edges, maxIters))
-  }
-
-  /** Semi-join `df` to a one-column worker frame, broadcasting it only
-    * when it is small enough to ship (the largest component of a 100 TB
-    * graph easily exceeds the broadcast limit). */
-  private def semiJoinWorkers(df: DataFrame,
-      w: org.apache.spark.sql.Column, keepW: DataFrame): DataFrame = {
-    val kw = keepW.localCheckpoint()
-    val side = if (kw.count() <= DriverEdgeCap) broadcast(kw) else kw
-    df.join(side, w === kw(kw.columns.head), "left_semi")
-  }
-
-  /** Distributed min-label propagation over a checkpointed distinct edge
-    * table; returns the one-column frame of workers in the largest
-    * component (by node count, min label breaking ties) — same semantics
-    * as [[driverComponentWorkers]]. */
-  private def distributedComponentWorkers(edges: DataFrame,
-      maxIters: Int): DataFrame = {
-    // node labels: start as the node's own key; propagate min through edges
-    var wLab = edges.select(col("w")).distinct()
-      .withColumn("lab", concat(lit("w:"), col("w"))).localCheckpoint()
-    var fLab = edges.select(col("f")).distinct()
-      .withColumn("lab", concat(lit("f:"), col("f"))).localCheckpoint()
-
-    var changed = 1L
-    var iters = 0
-    while (changed > 0 && iters < maxIters) {
-      iters += 1
-      val fCand = edges.join(wLab, "w").groupBy(col("f"))
-        .agg(min(col("lab")).as("cand"))
-      val fNew = fLab.join(fCand, Seq("f"), "left")
-        .select(col("f"), least(col("lab"), coalesce(col("cand"), col("lab"))).as("lab"),
-          (col("cand").isNotNull && col("cand") < col("lab")).as("chg"))
-        .localCheckpoint()
-      val wCand = edges.join(fNew.select(col("f"), col("lab")), "f")
-        .groupBy(col("w")).agg(min(col("lab")).as("cand"))
-      val wNew = wLab.join(wCand, Seq("w"), "left")
-        .select(col("w"), least(col("lab"), coalesce(col("cand"), col("lab"))).as("lab"),
-          (col("cand").isNotNull && col("cand") < col("lab")).as("chg"))
-        .localCheckpoint()
-      // one action for both change counts (the inputs are checkpointed)
-      changed = fNew.select(col("chg")).unionByName(wNew.select(col("chg")))
-        .filter(col("chg")).count()
-      wLab = wNew.drop("chg")
-      fLab = fNew.drop("chg")
-    }
-    if (changed > 0)
-      throw ConvergenceFailed("largest_connected_set label propagation " +
-        s"failed to converge within $maxIters iterations")
-
-    // largest component by node count (workers + firms)
-    val sizes = wLab.select(col("lab")).unionByName(fLab.select(col("lab")))
-      .groupBy(col("lab")).agg(count(lit(1)).as("sz"))
-      .orderBy(col("sz").desc, col("lab")).limit(1)
-    val top = sizes.collect()
-    if (top.isEmpty) throw InsufficientData("Empty graph")
-    val topLab = top(0).getString(0)
-    wLab.filter(col("lab") === lit(topLab)).select(col("w"))
-  }
 
   /** `driverEdgeCap` routes between the driver edge-table path and the
     * fully distributed loops (default [[DriverEdgeCap]]; injectable so
@@ -241,29 +152,38 @@ object Akm {
       crossIdx.map { case (i, j) =>
         sum(col(s"__v${i}__") * col(s"__v${j}__")).as(s"q${i}_$j")
       }
+    // read twice (size aggregate, then collect or components): a cache,
+    // released before `run` returns, so no persisted RDD outlives the fit
     val edgeTab = obs.groupBy(col("w"), col("f"))
-      .agg(aggCols.head, aggCols.tail: _*).localCheckpoint()
-    // one aggregate sizes the graph in edges AND bytes: the byte side
-    // prices the driver collect at the keys' actual width, so a graph of
-    // long composite keys routes distributed even under the edge cap
-    val sz = edgeTab.agg(count(lit(1)),
-      sum(length(col("w")) + length(col("f")))).head()
-    val nEdges = sz.getLong(0)
-    if (nEdges == 0) throw InsufficientData("Empty graph")
-    val estBytes =
-      edgeBytesEstimate(nEdges, sz.getLong(1), nv + crossIdx.size + 1)
-    if (nEdges <= driverEdgeCap && estBytes <= DriverEdgeByteBudget)
-      return runDriver(edgeTab.collect(), nv, controls, tolerance,
-        maxIters, workerCol, firmCol)
-    // Distributed route: materialize the projected observations once —
-    // semiJoinWorkers and the zig-zag/FE loops in solve() otherwise
-    // re-derive them from the source per consumer.
-    val obsC = obs.localCheckpoint()
-    val keepW =
-      distributedComponentWorkers(edgeTab.select(col("w"), col("f")), 200)
-    val connected = semiJoinWorkers(obsC, obsC("w"), keepW)
-    if (connected.isEmpty) throw InsufficientData("No connected set found")
-    solve(connected, controls, tolerance, maxIters, workerCol, firmCol)
+      .agg(aggCols.head, aggCols.tail: _*).cache()
+    val spark = df.sparkSession
+    try Jobs.labeled(spark, "akm: edge table") {
+      // one aggregate sizes the graph in edges AND bytes: the byte side
+      // prices the driver collect at the keys' actual width, so a graph of
+      // long composite keys routes distributed even under the edge cap
+      val sz = edgeTab.agg(count(lit(1)),
+        sum(length(col("w")) + length(col("f")))).head()
+      val nEdges = sz.getLong(0)
+      if (nEdges == 0) throw InsufficientData("Empty graph")
+      val estBytes =
+        edgeBytesEstimate(nEdges, sz.getLong(1), nv + crossIdx.size + 1)
+      val why = s"edges $nEdges, cap $driverEdgeCap, est $estBytes B"
+      if (nEdges <= driverEdgeCap && estBytes <= DriverEdgeByteBudget)
+        Jobs.labeled(spark, s"akm: driver route ($why)") {
+          runDriver(edgeTab.collect(), nv, controls, tolerance, maxIters,
+            workerCol, firmCol)
+        }
+      else Jobs.labeled(spark, s"akm: distributed route ($why)") {
+        // materialize the projected observations once: the semi-join and
+        // the zig-zag/FE loops in solve() otherwise re-derive them from
+        // the source per consumer
+        val obsC = obs.localCheckpoint()
+        val connected = obsC.join(componentWorkers(edgeTab, driverEdgeCap),
+          Seq("w"), "left_semi")
+        if (connected.isEmpty) throw InsufficientData("No connected set found")
+        solve(connected, controls, tolerance, maxIters, workerCol, firmCol)
+      }
+    } finally edgeTab.unpersist()
   }
 
   /** Edge-table AKM (the <= [[DriverEdgeCap]] path).
@@ -295,12 +215,19 @@ object Akm {
     def qPos(i: Int, j: Int): Int =
       crossIdx(if (i <= j) (i, j) else (j, i))
 
-    // ---- largest connected component (driver label propagation) ----
-    val keepW = driverComponentWorkers(
-      rawEdges.map(r => (r.getString(0), r.getString(1))), 200)
-
-    val kept = rawEdges.filter(r => keepW.contains(r.getString(0)))
-    if (kept.isEmpty) throw InsufficientData("No connected set found")
+    // ---- largest connected component (Cluster's union-find) ----
+    // node ids rank the "w:"/"f:" labels in Spark's UTF-8 order, as the
+    // distributed route's do, so both break size ties to the same label
+    val labels = Prep.utf8Sorted(rawEdges.flatMap(r =>
+      Seq("w:" + r.getString(0), "f:" + r.getString(1))).distinct).toArray
+    val idOf = labels.zipWithIndex.toMap
+    val edgeIds = rawEdges.map(r =>
+      (idOf("w:" + r.getString(0)).toLong, idOf("f:" + r.getString(1)).toLong))
+    val compOf = Cluster.driverComponents(edgeIds).toMap
+    val top = compOf.values.groupBy(identity).minBy { case (c, m) => (-m.size, c) }._1
+    val kept = rawEdges.indices.collect {
+      case e if compOf(edgeIds(e)._1) == top => rawEdges(e)
+    }
     val wKeys = kept.map(_.getString(0)).distinct.sorted
     val fKeys = kept.map(_.getString(1)).distinct.sorted
     val wIdx = wKeys.zipWithIndex.toMap

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.{ConvergenceFailed, Jobs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -84,7 +85,8 @@ object Cluster {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxRounds: Int = 30,
       driverEdgeCap: Long = DriverEdgeCap): DataFrame = {
-    val sc = pairs.sparkSession.sparkContext
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
     // localCheckpoint pins its RDD in the block manager for the session;
     // O(log n) rounds x |edges| would accumulate, so each superseded
     // round's checkpoint is freed as soon as its successor materializes
@@ -96,70 +98,82 @@ object Cluster {
     }
     def free(ids: Seq[Int]): Unit = ids.foreach(id =>
       sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    var (edges, ckptIds) = ckpt(pairs
+    var (edges, ckptIds) = Jobs.labeled(spark, "cluster: edges")(ckpt(pairs
       .select(col(idA).cast("long").as("x"), col(idB).cast("long").as("y"))
       .filter(col("x") =!= col("y"))
       .select(greatest(col("x"), col("y")).as("u"),
         least(col("x"), col("y")).as("v"))
-      .distinct())
-    var sig = signature(edges)
+      .distinct()))
+    var sig = Jobs.labeled(spark, "cluster: edges")(signature(edges))
 
     if (sig._1 <= driverEdgeCap) {
-      // bounded driver fast path: union-find with path compression over
-      // the deduped edge list (already materialized by the checkpoint)
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      // bounded driver fast path over the deduped edge list (already
+      // materialized by the checkpoint)
+      val es = Jobs.labeled(spark,
+          s"cluster: driver union-find (edges ${sig._1}, cap $driverEdgeCap)") {
+        edges.collect().map(r => (r.getLong(0), r.getLong(1)))
+      }
       free(ckptIds)
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      es.foreach { case (u, v) =>
-        val ru = find(u); val rv = find(v)
-        if (ru != rv) {
-          // always attach the larger root under the smaller so every
-          // root IS the component minimum (matching the star fixpoint)
-          if (ru < rv) parent(rv) = ru else parent(ru) = rv
-        }
-      }
-      val nodes = es.iterator.flatMap { case (u, v) => Iterator(u, v) }
-        .toArray.distinct
-      val rows = nodes.map(n => (n, find(n)))
-      import pairs.sparkSession.implicits._
+      import spark.implicits._
       // parallelize, NOT toDF: a LocalRelation would embed the full
       // component map inside the logical plan, and downstream joins
       // (assignClusters) would carry those megabytes through every
       // plan copy/optimization; as an RDD scan the map lives once in
       // the block manager and the plan stays O(1)
-      return pairs.sparkSession.sparkContext
-        .parallelize(rows.toIndexedSeq).toDF("id", "component")
+      return sc.parallelize(driverComponents(es).toIndexedSeq)
+        .toDF("id", "component")
     }
 
     var round = 0
     var converged = false
     while (!converged && round < maxRounds) {
-      val (next, nextIds) = ckpt(smallStar(largeStar(edges)))
-      free(ckptIds)
-      edges = next
-      ckptIds = nextIds
-      val nextSig = signature(edges)
-      converged = nextSig == sig
-      sig = nextSig
       round += 1
+      Jobs.labeled(spark, s"cluster: star round $round (edges ${sig._1})") {
+        val (next, nextIds) = ckpt(smallStar(largeStar(edges)))
+        free(ckptIds)
+        edges = next
+        ckptIds = nextIds
+        val nextSig = signature(edges)
+        converged = nextSig == sig
+        sig = nextSig
+      }
     }
-    require(converged,
-      s"connectedComponents: no fixpoint after $maxRounds rounds " +
-        "(malformed edge input?)")
+    if (!converged)
+      throw ConvergenceFailed(s"connectedComponents: no fixpoint after " +
+        s"$maxRounds rounds (malformed edge input?)")
     // at the fixpoint every edge is (member, root); roots only appear on
     // the v side and map to themselves
     edges.select(col("u").as("id"), col("v").as("component"))
       .union(edges.select(col("v").as("id"), col("v").as("component")))
       .distinct()
+  }
+
+  /** Connected components of an edge list on the driver, submitting no
+    * Spark job: union-find with path compression. Returns (node,
+    * component) for every node of an edge, in order of first appearance,
+    * with component = the smallest node id reachable from node. */
+  private[graft] def driverComponents(
+      edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    edges.foreach { case (u, v) =>
+      val ru = find(u); val rv = find(v)
+      if (ru != rv) {
+        // always attach the larger root under the smaller so every
+        // root IS the component minimum (matching the star fixpoint)
+        if (ru < rv) parent(rv) = ru else parent(ru) = rv
+      }
+    }
+    edges.iterator.flatMap { case (u, v) => Iterator(u, v) }.toArray.distinct
+      .map(n => (n, find(n)))
   }
 
   /** Every document joined with its near-dup cluster: `cluster_id` is

@@ -15,12 +15,10 @@ import org.apache.spark.sql.types._
   * per payload, with bounded per-row work. AUDIO decode is REAL for
   * WAV/PCM: `javax.sound.sampled` ships with the JDK, so
   * [[decodeWav]]/[[audioFeatures]] extract duration, RMS, zero-crossing
-  * rate, and peak from actual sample data. VIDEO codecs are NOT
-  * available in this environment (the JDK ships none), so for that
-  * modality [[fakeDecode]] remains the documented stand-in: a
-  * deterministic content-hash featurizer with the same signature and
-  * batch shape a real decoder (ffmpeg behind a JNI or Pandas-UDF
-  * bridge) would have.
+  * rate, and peak from actual sample data. VIDEO frame codecs are NOT
+  * shipped with the JDK, so [[videoMetadata]] reads the ISO-BMFF
+  * container header only: duration, track layout, codec fourccs and
+  * display dimensions.
   */
 object Multimodal {
 
@@ -35,42 +33,6 @@ object Multimodal {
       StructField("mime", StringType),
       StructField("n_bytes", LongType),
       StructField("source", StringType))))))
-
-  /** Wrap a text table into a media table (payload = utf-8 bytes) — the
-    * test stand-in for reading real blobs. */
-  def fromDocuments(docs: DataFrame, idCol: String, textCol: String,
-      sourceCol: String): DataFrame =
-    docs.select(
-      col(idCol).cast("long").as("media_id"),
-      col(textCol).cast("binary").as("payload"),
-      struct(
-        lit("text/plain").as("mime"),
-        octet_length(col(textCol).cast("binary")).cast("long").as("n_bytes"),
-        col(sourceCol).cast("string").as("source")).as("meta"))
-
-  /** STUB DECODER: deterministic fake features from the payload bytes.
-    * A real deployment swaps ONLY this function for a codec call; the
-    * partition-wise batch loop and output schema stay identical. */
-  def fakeDecode(payload: Array[Byte], dim: Int): Array[Double] = {
-    val out = new Array[Double](dim)
-    var h = 1125899906842597L
-    var i = 0
-    while (i < payload.length) {
-      h = 31 * h + payload(i)
-      out(i % dim) += (payload(i) & 0xff) / 255.0
-      i += 1
-    }
-    // mix the rolling hash into the tail slot so equal-histogram payloads
-    // with different byte order still differ
-    out(dim - 1) += math.abs(h % 1000L) / 1000.0
-    out
-  }
-
-  val FeatureSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("mime", StringType),
-    StructField("n_bytes", LongType),
-    StructField("features", ArrayType(DoubleType, containsNull = false))))
 
   /** Real per-payload image features from the JDK's built-in readers. */
   final case class ImageFeatures(width: Int, height: Int, channels: Int,
@@ -127,9 +89,9 @@ object Multimodal {
     StructField("channels", IntegerType),
     StructField("luma_hist", ArrayType(DoubleType, containsNull = false))))
 
-  /** Partition-wise REAL image decode over a media table: same streaming
-    * batch shape as [[decodeFeatures]], but each payload goes through
-    * `javax.imageio`. Undecodable payloads keep their row with
+  /** Partition-wise REAL image decode over a media table: one batch loop
+    * per partition (rows stream through without collecting the
+    * partition), each payload through `javax.imageio`. Undecodable payloads keep their row with
     * decode_ok = false and null features (a dropped row would silently
     * shrink the corpus; a visible flag lets the pipeline route failures). */
   def imageFeatures(media: DataFrame, histBins: Int = 16): DataFrame = {
@@ -283,9 +245,7 @@ object Multimodal {
 
   /** Partition-wise REAL audio decode over a media table — the WAV
     * analog of [[imageFeatures]]. Undecodable payloads keep their row
-    * with decode_ok = false and null features. (Video remains the
-    * documented [[fakeDecode]] stand-in: the JDK ships no video codec,
-    * and this environment has no external ones.) */
+    * with decode_ok = false and null features. */
   def audioFeatures(media: DataFrame,
       maxFrames: Int = 1 << 20): DataFrame = {
     val spark = media.sparkSession
@@ -552,22 +512,5 @@ object Multimodal {
         }
       }
     spark.createDataFrame(rdd, MediaSchema)
-  }
-
-  /** Partition-wise decode: one batch loop per partition (the Scala
-    * analog of `mapInPandas` — rows stream through without collecting
-    * the partition). */
-  def decodeFeatures(media: DataFrame, dim: Int = 16): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("media_id"), col("payload"),
-        col("meta.mime"), col("meta.n_bytes")).rdd
-      .mapPartitions { it =>
-        it.map { r =>
-          val payload = r.getAs[Array[Byte]](1)
-          Row(r.getLong(0), r.getString(2), r.getLong(3),
-            fakeDecode(if (payload == null) Array.empty[Byte] else payload, dim).toSeq)
-        }
-      }
-    spark.createDataFrame(rdd, FeatureSchema)
   }
 }

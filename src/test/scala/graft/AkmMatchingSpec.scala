@@ -124,6 +124,51 @@ class AkmMatchingSpec extends SparkSpec {
     assert(workers == Set("w1", "w2"))
   }
 
+  test("AKM keeps a 500-edge worker-firm chain whole on both routes") {
+    // w_i-f_i and w_i-f_{i+1}: a path of 501 nodes, far longer than any
+    // round cap of a label-propagation loop
+    val rng = new scala.util.Random(17)
+    val df = (0 until 250).flatMap(i => Seq(f"w$i%03d" -> f"f$i%03d",
+        f"w$i%03d" -> f"f${i + 1}%03d"))
+      .map { case (w, f) => (w, f, rng.nextDouble(), rng.nextDouble()) }
+      .toDF("worker", "firm", "x", "y")
+    assert(Akm.largestConnectedSet(df, "worker", "firm").count() == 500)
+    for (cap <- Seq(Akm.DriverEdgeCap, 0L)) {
+      val res = Akm.run(df, "y", "worker", "firm", Seq("x"),
+        tolerance = 1e15, driverEdgeCap = cap)
+      assert(res.nObs == 500, s"cap $cap")
+      assert(res.workerEffects.count() == 250 && res.firmEffects.count() == 251,
+        s"cap $cap")
+    }
+  }
+
+  test("AKM breaks a component-size tie to the smallest label in UTF-8 order on both routes") {
+    // two 3-node components; U+FF5E sorts before U+1F600 in UTF-8 (and
+    // Spark's string order), after it in UTF-16
+    val smile = new String(Character.toChars(0x1F600))
+    val df = Seq(("w1", "\uFF5E", 1.0), ("w2", "\uFF5E", 2.0),
+        ("w3", smile, 3.0), ("w4", smile, 5.0)).toDF("worker", "firm", "y")
+    val kept = Akm.largestConnectedSet(df, "worker", "firm")
+      .select("worker").as[String].collect().toSet
+    assert(kept == Set("w1", "w2"))
+    val routes = Seq(Akm.DriverEdgeCap, 0L).map { cap =>
+      Akm.run(df, "y", "worker", "firm", driverEdgeCap = cap)
+        .workerEffects.select("worker").as[String].collect().toSet
+    }
+    assert(routes == Seq(kept, kept), s"$routes")
+  }
+
+  test("a driver-route AKM fit leaves no persisted RDD behind") {
+    val rng = new scala.util.Random(23)
+    val df = (0 until 200).map(_ => (s"w${rng.nextInt(20)}",
+        s"f${rng.nextInt(5)}", rng.nextDouble(), rng.nextDouble()))
+      .toDF("worker", "firm", "x", "y")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Akm.run(df, "y", "worker", "firm", Seq("x"))
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
   test("matching: weight mass invariants (F7)") {
     val rng = new scala.util.Random(9)
     // 50 treated around edu=16, 50 control: 46 around edu=12, 4 overlap at 16

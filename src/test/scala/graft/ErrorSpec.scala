@@ -123,12 +123,13 @@ class ErrorSpec extends SparkSpec {
   }
 
   test("AKM connected-set iteration exhaustion raises ConvergenceFailed") {
-    // a 3-firm chain needs >1 label-propagation round to converge
-    val df = Seq(("w1", "f1"), ("w1", "f2"), ("w2", "f2"), ("w2", "f3"))
-      .toDF("worker", "firm")
+    // AKM's connected set runs on Cluster's kernel; a 5-node chain needs
+    // more than one star round, so a one-round cap must raise the
+    // declared error on the distributed route
+    val df = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L)).toDF("id_a", "id_b")
     assertThrows[ConvergenceFailed] {
-      graft.estimators.Akm.largestConnectedSet(df, "worker", "firm",
-        maxIters = 1)
+      graft.ext.Cluster.connectedComponents(df, maxRounds = 1,
+        driverEdgeCap = 0L)
     }
   }
 

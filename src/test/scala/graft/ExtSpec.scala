@@ -573,22 +573,6 @@ class ExtSpec extends SparkSpec {
     assert(out.values.forall(v => v >= 0.0 && v <= 1.0))
   }
 
-  test("multimodal decode: schema, determinism, content sensitivity") {
-    val media = Multimodal.fromDocuments(docs, "doc_id", "text", "source")
-    assert(media.schema("meta").dataType.isInstanceOf[org.apache.spark.sql.types.StructType])
-    val feats = Multimodal.decodeFeatures(media, dim = 8)
-    val rows = feats.collect()
-    assert(rows.length == 6)
-    assert(rows.forall(_.getAs[Seq[Double]]("features").size == 8))
-    val byId = rows.map(r => r.getLong(0) -> r.getSeq[Double](3).toVector).toMap
-    assert(byId(0L) == byId(4L)) // identical payloads -> identical features
-    assert(byId(0L) != byId(1L))
-    // determinism across executions
-    val again = Multimodal.decodeFeatures(media, dim = 8).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](3).toVector).toMap
-    assert(again == byId)
-  }
-
   test("image decode: real javax.imageio golden values across PNG/JPEG/BMP") {
     // golden image: 8x6, left half pure black, right half pure white
     val img = new java.awt.image.BufferedImage(8, 6,

@@ -2,8 +2,8 @@ package graft
 
 import graft.core.{Gram, InvalidArgument, Jobs, Windows}
 import graft.equity.{Equity, EquityConfig, Frontier}
-import graft.estimators.{Kde, Probit, Rif}
-import graft.ext.{Dedup, Embeddings, Sketches}
+import graft.estimators.{Akm, Kde, Probit, Rif}
+import graft.ext.{Cluster, Dedup, Embeddings, Sketches}
 import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Row}
@@ -274,5 +274,24 @@ class JobsSpec extends SparkSpec {
       Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.3)
     }
     assert(others.nonEmpty && others.forall(_.startsWith("dedup: ")), others)
+  }
+
+  test("AKM fits and connected components label every job akm: or cluster: on both routes") {
+    val rng = new scala.util.Random(29)
+    val df = (0 until 200).map(_ => (s"w${rng.nextInt(20)}",
+        s"f${rng.nextInt(5)}", rng.nextDouble(), rng.nextDouble()))
+      .toDF("worker", "firm", "x", "y")
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+    val run = labelsOf {
+      for (cap <- Seq(Akm.DriverEdgeCap, 0L)) {
+        Akm.run(df, "y", "worker", "firm", Seq("x"), driverEdgeCap = cap)
+        Cluster.connectedComponents(pairs, driverEdgeCap = cap)
+      }
+    }
+    assert(run.nonEmpty && run.forall(l =>
+      Seq("akm: ", "cluster: ", "gram: ").exists(l.startsWith)), run)
+    for (p <- Seq("akm: driver route (", "akm: distributed route (",
+        "akm: connected set", "cluster: driver union-find (", "cluster: star round "))
+      assert(run.exists(_.startsWith(p)), s"no $p job in $run")
   }
 }

@@ -35,6 +35,11 @@ than `spark.graft.dedup.candidateBudget`, and on any mention under
 src/main of the spec-only Dedup switches that went (`verifyKernel`,
 `setBroadcastBytes`, `SetBroadcastBytesKey`, `directPathMaxPairs`);
 specs force a Dedup route through `Dedup.ngramJaccardPairsVia`.
+Connected components have one kernel: exits 1 on any mention under
+src/main of AKM's deleted label-propagation loops
+(`driverComponentWorkers`, `distributedComponentWorkers`,
+`semiJoinWorkers`); AKM's largest connected set runs on
+`Cluster.connectedComponents` and `Cluster.driverComponents`.
 
 Usage: python3 tools/list_knobs.py
 """
@@ -58,6 +63,8 @@ REPLACED = ("KeyedOffset", "precomputedBoundaries", "broadcastableGroups",
 CONF_KEYS = ("spark.graft.dedup.candidateBudget",)
 DEDUP_SWITCHES = ("verifyKernel", "setBroadcastBytes", "SetBroadcastBytesKey",
                   "directPathMaxPairs")
+AKM_LOOPS = ("driverComponentWorkers", "distributedComponentWorkers",
+             "semiJoinWorkers")
 GRAFT = os.path.join("src", "main", "scala", "graft")
 LOCAL_RESULTS = tuple(os.path.join(GRAFT, *f) for f in (
     ("Queries.scala",), ("QueriesExt.scala",), ("decompose", "Oaxaca.scala")))
@@ -70,6 +77,7 @@ def scan():
     switches = []
     rdds = []
     dedup = []
+    loops = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -84,6 +92,7 @@ def scan():
                     switches += [f"{rel}:{n}: {w}" for w in REPLACED if w in line]
                     dedup += [f"{rel}:{n}: {w}" for w in DEDUP_SWITCHES
                               if w in line]
+                    loops += [f"{rel}:{n}: {w}" for w in AKM_LOOPS if w in line]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
                     if code.lstrip().startswith(("*", "/*")):
@@ -102,11 +111,11 @@ def scan():
                                      if p in code]
                     if rel in LOCAL_RESULTS and "sparkContext.parallelize(" in code:
                         rdds.append(f"{rel}:{n}: {code.strip()}")
-    return knobs, strays, literals, switches, rdds, dedup
+    return knobs, strays, literals, switches, rdds, dedup, loops
 
 
 def main():
-    knobs, strays, literals, switches, rdds, dedup = scan()
+    knobs, strays, literals, switches, rdds, dedup, loops = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -135,8 +144,10 @@ def main():
     for s in dedup:
         print(f"DEDUP ROUTE SWITCH (force via ngramJaccardPairsVia): {s}",
               file=sys.stderr)
+    for s in loops:
+        print(f"CONNECTED-COMPONENTS LOOP (use Cluster): {s}", file=sys.stderr)
     return 1 if (missing or repeated or extra or strays or literals or switches
-                 or rdds or dedup) else 0
+                 or rdds or dedup or loops) else 0
 
 
 if __name__ == "__main__":
