@@ -1,6 +1,6 @@
 package graft.api
 
-import graft.core.{InvalidArgument, Session}
+import graft.core.{InvalidArgument, Jobs, Session}
 import graft.decompose.RefCoefficients
 import graft.equity._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -271,13 +271,15 @@ object McpServer {
   private def toolCall(spark: SparkSession, params: JValue): JValue = {
     val name = (params \ "name").extract[String]
     val args = params \ "arguments"
-    val result = name match {
-      case "forensic_decomposition" => forensicDecomposition(spark, args)
-      case "simulate_remediation" => simulateRemediation(spark, args)
-      case "verify_adjustments" => verifyAdjustments(spark, args)
-      case "check_defensibility" => checkDefensibility(spark, args)
-      case "generate_efficient_frontier" => efficientFrontier(spark, args)
-      case other => throw new IllegalArgumentException(s"Unknown tool: $other")
+    val result = Jobs.labeled(spark, s"mcp: $name") {
+      name match {
+        case "forensic_decomposition" => forensicDecomposition(spark, args)
+        case "simulate_remediation" => simulateRemediation(spark, args)
+        case "verify_adjustments" => verifyAdjustments(spark, args)
+        case "check_defensibility" => checkDefensibility(spark, args)
+        case "generate_efficient_frontier" => efficientFrontier(spark, args)
+        case other => throw new IllegalArgumentException(s"Unknown tool: $other")
+      }
     }
     // MCP tool-result envelope: the result JSON as a text content block
     JObject("content" -> JArray(List(JObject(

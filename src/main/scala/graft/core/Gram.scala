@@ -39,13 +39,6 @@ final case class GramResult(
       swyy + o.swyy, n + o.n, math.min(minW, o.minW))
 }
 
-object GramBuffer {
-  /** Cap on tracked extra lane-0 values: a group column with more than
-    * this many non-reference levels gets a real distinct pass instead
-    * (speculative tracking exists for the 2-level common case). */
-  val TrackCap = 64
-}
-
 /** Flat mutable accumulation buffer holding `lanes * repsTotal` Gram
   * systems (lane = group index; rep 0 = real weights, reps 1..B =
   * bootstrap replicate weights).
@@ -66,18 +59,13 @@ final class GramBuffer(val k: Int, val lanes: Int, val repsTotal: Int)
   // case of ONE value: the first value is cached and compared per row
   // as UTF8String bytes (a short memcmp against the row buffer, no
   // per-row allocation); only mismatching values pay a decode into the
-  // small extras set, capped at [[GramBuffer.TrackCap]] (past it the
-  // caller must fall back to a real distinct pass).
+  // extras set.
   var trackFirst: String = null
   @transient private var trackFirstU8: org.apache.spark.unsafe.types.UTF8String = null
   val trackExtras = scala.collection.mutable.HashSet.empty[String]
-  var trackOverflow = false
 
   private def addExtra(s: String): Unit =
-    if (s != trackFirst && !trackExtras.contains(s)) {
-      if (trackExtras.size >= GramBuffer.TrackCap) trackOverflow = true
-      else { trackExtras += s; () }
-    }
+    if (s != trackFirst) { trackExtras += s; () }
 
   /** Record one lane-0 value straight off the UnsafeRow buffer. */
   def trackValue(u8: org.apache.spark.unsafe.types.UTF8String): Unit = {
@@ -97,10 +85,9 @@ final class GramBuffer(val k: Int, val lanes: Int, val repsTotal: Int)
       else addExtra(o.trackFirst)
       o.trackExtras.foreach(addExtra)
     }
-    trackOverflow ||= o.trackOverflow
   }
 
-  /** Distinct lane-0 values seen (complete iff !trackOverflow). */
+  /** Distinct lane-0 values seen. */
   def trackedValues: Seq[String] =
     (Option(trackFirst).toSeq ++ trackExtras.toSeq)
   val tri = k * (k + 1) / 2
@@ -248,11 +235,6 @@ object Gram {
     computeGroupedImpl(df, yCol, xCols, wCol, laneOf, nLanes, reps, seed,
       repWeightCols, seedCols, trackCol = None)._1
 
-  /** Distinct lane-0 values recorded by a tracked Gram pass. `complete`
-    * is false past [[GramBuffer.TrackCap]] extras — the caller must then
-    * fall back to a real distinct pass. */
-  final case class TrackedValues(values: Seq[String], complete: Boolean)
-
   /** [[computeGrouped]] that ALSO records the distinct string values of
     * `trackCol` over lane-0 rows inside the same scan — the kernel
     * behind [[graft.prep.Prep.splitGroupsWithGram]]'s one-job
@@ -263,7 +245,7 @@ object Gram {
       wCol: Option[String], laneOf: Column, nLanes: Int, reps: Int,
       seed: Long, trackCol: Column, repWeightCols: Seq[String] = Nil,
       seedCols: Seq[String] = Nil)
-      : (Array[Array[GramResult]], TrackedValues) = {
+      : (Array[Array[GramResult]], Seq[String]) = {
     val (grams, tracked) = computeGroupedImpl(df, yCol, xCols, wCol, laneOf,
       nLanes, reps, seed, repWeightCols, seedCols, trackCol = Some(trackCol))
     (grams, tracked.get)
@@ -273,7 +255,7 @@ object Gram {
       xCols: Seq[String], wCol: Option[String], laneOf: Column, nLanes: Int,
       reps: Int, seed: Long, repWeightCols: Seq[String],
       seedCols: Seq[String], trackCol: Option[Column])
-      : (Array[Array[GramResult]], Option[TrackedValues]) = {
+      : (Array[Array[GramResult]], Option[Seq[String]]) = {
     val k = xCols.size
     val w = wCol.map(col(_).cast("double")).getOrElse(lit(1.0))
     val externalReps = repWeightCols.nonEmpty
@@ -360,8 +342,7 @@ object Gram {
       combOp = (a, b) => a.merge(b))
     val grams = Array.tabulate(nLanes)(l =>
       Array.tabulate(repsTotal)(r => res.result(l, r)))
-    (grams, trackCol.map(_ =>
-      TrackedValues(res.trackedValues, complete = !res.trackOverflow)))
+    (grams, trackCol.map(_ => res.trackedValues))
   }
 
   /** One system of a multi-system pass: its own response and weight

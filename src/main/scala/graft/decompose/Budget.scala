@@ -1,6 +1,7 @@
 package graft.decompose
 
 import graft.core.Windows
+import graft.functions.Param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -29,7 +30,7 @@ object BudgetOptimizer {
     Windows.exclusivePrefixSum(base, res, ascending = true, tieBreak, -res,
         "__spent_before__")
       .withColumn("adjustment",
-        greatest(lit(0.0), least(-res, lit(effective) - col("__spent_before__"))))
+        greatest(lit(0.0), least(-res, Param(effective) - col("__spent_before__"))))
       .filter(col("adjustment") > 1e-9)
       .drop("__spent_before__")
   }

@@ -518,11 +518,13 @@ object Equity {
       quantile: Option[Double] = None, seed: Long = 42L): DecompositionResult = {
     val g = col(cfg.group).cast("string")
     val y = col(cfg.outcome).cast("double")
-    val sums = df.agg(
-      count(lit(1)).as("n"),
-      sum(when(g === cfg.reference, 1L).otherwise(0L)).as("na"),
-      avg(when(g === cfg.reference, y)).as("ma"),
-      avg(when(g =!= cfg.reference, y)).as("mb")).head()
+    val sums = Jobs.labeled(df.sparkSession, "equity: summary") {
+      df.agg(
+        count(lit(1)).as("n"),
+        sum(when(g === cfg.reference, 1L).otherwise(0L)).as("na"),
+        avg(when(g === cfg.reference, y)).as("ma"),
+        avg(when(g =!= cfg.reference, y)).as("mb")).head()
+    }
     val summary = DecompositionSummary(sums.getLong(0), sums.getLong(1),
       sums.getLong(0) - sums.getLong(1), sums.getDouble(2), sums.getDouble(3))
 

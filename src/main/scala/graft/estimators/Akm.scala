@@ -228,8 +228,8 @@ object Akm {
     val kept = rawEdges.indices.collect {
       case e if compOf(edgeIds(e)._1) == top => rawEdges(e)
     }
-    val wKeys = kept.map(_.getString(0)).distinct.sorted
-    val fKeys = kept.map(_.getString(1)).distinct.sorted
+    val wKeys = Prep.utf8Sorted(kept.map(_.getString(0)).distinct)
+    val fKeys = Prep.utf8Sorted(kept.map(_.getString(1)).distinct)
     val wIdx = wKeys.zipWithIndex.toMap
     val fIdx = fKeys.zipWithIndex.toMap
     val nW = wKeys.length
@@ -612,8 +612,8 @@ object Akm {
 
     // first-firm normalization (sorted firm ids, `akm.rs:612-620`)
     val refVal = psi.orderBy(col("f")).limit(1).collect()(0).getDouble(1)
-    val psiN = psi.withColumn("__p__", col("__p__") - lit(refVal))
-    val alphaN = alpha.withColumn("__a__", col("__a__") + lit(refVal))
+    val psiN = psi.withColumn("__p__", col("__p__") - Param(refVal))
+    val alphaN = alpha.withColumn("__a__", col("__a__") + Param(refVal))
 
     // R^2
     val pred = withR.join(maybeBroadcast(alphaN, nWorkers), "w")

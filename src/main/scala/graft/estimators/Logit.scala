@@ -35,45 +35,32 @@ object Logit {
   /** `targetCol` must be numeric 0/1; xCols should include the intercept
     * column.
     *
-    * Each iteration is one [[IrlsDesign.gram]] closure over the cached
-    * primitive design — no per-iteration Catalyst planning (the beta
-    * literals would make every iteration's plan new; see [[IrlsDesign]]).
-    * The scalar working-response arithmetic below is written in the
-    * association order of the equivalent z/w Column expressions, so fits
-    * equal the per-iteration [[Gram.compute]] route bit for bit. */
+    * Iterations run on [[Irls.newton]], one pass each over the cached
+    * primitive design — no per-iteration Catalyst planning (the beta literals would
+    * make every iteration's plan new; see [[IrlsDesign]]). The scalar
+    * working-response arithmetic below is written in the association
+    * order of the equivalent z/w Column expressions, so fits equal the
+    * per-iteration [[Gram.computeMulti]] route bit for bit. */
   def fit(df: DataFrame, targetCol: String, xCols: Seq[String],
       maxIter: Int = 100, tol: Double = 1e-6,
       wCol: Option[String] = None): LogitFit = {
-    val k = xCols.size
-    val design = new IrlsDesign(df, targetCol, xCols,
-      Seq(wCol.map(col).getOrElse(lit(1.0))))
-    try {
-      var beta = DenseVector.zeros[Double](k)
-      var converged = false
-      var iters = 0
-      while (iters < maxIter && !converged) {
-        iters += 1
-        // z = xb + (y - p)/w0, w = w0 * base weight (WLS-style logit)
-        val g = design.gram(beta.toArray) { (y, wBase, xb, out) =>
-          val p0 = 1.0 / (1.0 + math.exp(-xb))
-          val p = math.min(math.max(p0, 1e-10), 1.0 - 1e-10)
-          val w0 = p * (1.0 - p)
-          out(0) = xb + (y - p) / w0
-          out(1) = w0 * wBase
-        }
-        val newBeta =
-          try LinAlg.cholSolve(g.xtx, g.xty)
-          catch {
-            case e: SingularMatrix => throw SingularMatrix(
-              "Failed to solve Information Matrix in Logit. Perfect separation? " + e.getMessage)
-          }
-        val step = newBeta - beta
-        beta = newBeta
-        if (norm(step) < tol) converged = true
-      }
-      LogitFit(xCols, beta, converged, iters)
-    } finally {
-      design.unpersist()
+    val start = Array(Array(DenseVector.zeros[Double](xCols.size)))
+    val fit = Irls.newton(df, targetCol, xCols,
+        Seq(wCol.map(col).getOrElse(lit(1.0))), start, maxIter) {
+      // z = xb + (y - p)/w0, w = w0 * base weight (WLS-style logit)
+      (y, wBase, xb, _, out) =>
+        val p0 = 1.0 / (1.0 + math.exp(-xb))
+        val p = math.min(math.max(p0, 1e-10), 1.0 - 1e-10)
+        val w0 = p * (1.0 - p)
+        out(0) = xb + (y - p) / w0
+        out(1) = w0 * wBase
+    } { (_, g, beta) =>
+      val newBeta = LinAlg.cholSolve(g.xtx, g.xty)
+      (newBeta, norm(newBeta - beta) < tol)
     }
+    val slot = fit.slots(0)(0)
+    slot.error.foreach(e => throw SingularMatrix(
+      "Failed to solve Information Matrix in Logit. Perfect separation? " + e.getMessage))
+    LogitFit(xCols, slot.beta, slot.done, fit.iterations)
   }
 }

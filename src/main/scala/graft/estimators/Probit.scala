@@ -41,58 +41,54 @@ object Probit {
     out(1) = w0 * wBase
   }
 
-  /** Batched probit: one fit per (lane, base-weight system), where each
-    * Fisher-scoring iteration is ONE multi-system Gram scan — the
-    * bootstrap-replicate fits advance together per data pass instead of
-    * one IRLS loop per replicate. Returns [lane][system]
-    * (beta, converged); a slot that hits a singular solve is frozen and
-    * reported unconverged. */
+  /** One ridged scoring step: (X'WX + rI) b' = X'Wz + r b (identical
+    * to the reference's ridged Newton step), by Cholesky with an LU
+    * fallback. */
+  private def solve(g: GramResult, beta: DenseVector[Double]): DenseVector[Double] = {
+    val rhs = g.xty + (beta * Ridge)
+    try LinAlg.ridgeSolve(g.xtx, rhs, Ridge)
+    catch {
+      case _: SingularMatrix =>
+        try ridged(g) \ rhs
+        catch {
+          case e: Exception => throw SingularMatrix(
+            "Failed to solve Hessian system in Probit: " + e.getMessage)
+        }
+    }
+  }
+
+  private def ridged(g: GramResult): DenseMatrix[Double] = {
+    val aa = g.xtx.copy
+    var i = 0
+    while (i < g.k) { aa(i, i) += Ridge; i += 1 }
+    aa
+  }
+
+  /** One probit per (lane, base-weight system): each Fisher-scoring
+    * iteration is ONE multi-system pass, so bootstrap-replicate fits
+    * advance together per data pass instead of one IRLS loop per
+    * replicate. Fixed-plan iterations (see IrlsDesign): one z/w Column
+    * pair per system per iteration would be, with hundreds of bootstrap
+    * replicates, a giant new plan + codegen compile every scan. */
+  private def newton(df: DataFrame, targetCol: String, xCols: Seq[String],
+      wCols: Seq[Column], laneOf: Column, nLanes: Int, maxIter: Int,
+      tol: Double): Irls.Fit =
+    Irls.newton(df, targetCol, xCols, wCols,
+      Array.fill(nLanes, wCols.size)(DenseVector.zeros[Double](xCols.size)),
+      maxIter, laneOf)((y, wBase, z, _, out) => working(y, wBase, z, out)) {
+      (_, g, beta) =>
+        val nb = solve(g, beta)
+        (nb, norm(nb - beta) < tol)
+    }
+
+  /** Batched probit, returns [lane][system] (beta, converged); a slot
+    * whose solve fails is frozen and reported unconverged. */
   def fitManyGrouped(df: DataFrame, targetCol: String, xCols: Seq[String],
       baseWCols: Seq[String], laneOf: Column,
       nLanes: Int, maxIter: Int = 100,
-      tol: Double = 1e-6): Array[Array[(DenseVector[Double], Boolean)]] = {
-    val k = xCols.size
-    val nSys = baseWCols.size
-    val betas = Array.fill(nLanes, nSys)(DenseVector.zeros[Double](k))
-    val converged = Array.fill(nLanes, nSys)(false)
-    val failed = Array.fill(nLanes, nSys)(false)
-    // fixed-plan iterations (see IrlsDesign): one z/w Column pair PER
-    // SYSTEM per iteration would be, with hundreds of bootstrap
-    // replicates, a giant new plan + codegen compile every scan
-    val design = new IrlsDesign(df, targetCol, xCols, baseWCols.map(col),
-      laneOf, nLanes)
-    try {
-      var iter = 0
-      var allDone = false
-      while (iter < maxIter && !allDone) {
-        iter += 1
-        // only systems with at least one unconverged lane pay for work
-        val active = (0 until nSys).filter(s =>
-          (0 until nLanes).exists(l => !converged(l)(s) && !failed(l)(s)))
-        val activeBetas = active.map(s =>
-          Array.tabulate(nLanes)(l => betas(l)(s).toArray)).toArray
-        val grams = design.gramMulti(activeBetas, active.toArray) {
-          (y, wBase, z, _, out) => working(y, wBase, z, out)
-        }
-        allDone = true
-        for (l <- 0 until nLanes; (s, si) <- active.zipWithIndex
-             if !converged(l)(s) && !failed(l)(s)) {
-          val g = grams(l)(si)
-          try {
-            val rhs = g.xty + (betas(l)(s) * Ridge)
-            val nb = LinAlg.ridgeSolve(g.xtx, rhs, Ridge)
-            val step = nb - betas(l)(s)
-            betas(l)(s) = nb
-            if (norm(step) < tol) converged(l)(s) = true else allDone = false
-          } catch {
-            case _: SingularMatrix => failed(l)(s) = true
-          }
-        }
-      }
-      Array.tabulate(nLanes)(l => Array.tabulate(nSys)(s =>
-        (betas(l)(s), converged(l)(s) && !failed(l)(s))))
-    } finally design.unpersist()
-  }
+      tol: Double = 1e-6): Array[Array[(DenseVector[Double], Boolean)]] =
+    newton(df, targetCol, xCols, baseWCols.map(col), laneOf, nLanes,
+      maxIter, tol).slots.map(_.map(s => (s.beta, s.done)))
 
   /** `targetCol` numeric 0/1; `xCols` should include the intercept.
     * `wCol` multiplies the information weights (bootstrap resampling /
@@ -100,45 +96,11 @@ object Probit {
   def fit(df: DataFrame, targetCol: String, xCols: Seq[String],
       maxIter: Int = 100, tol: Double = 1e-6,
       wCol: Option[String] = None): ProbitFit = {
-    val k = xCols.size
-    // fixed-plan iterations (see IrlsDesign)
-    val design = new IrlsDesign(df, targetCol, xCols,
-      Seq(wCol.map(col).getOrElse(lit(1.0))))
-    try {
-      var beta = DenseVector.zeros[Double](k)
-      var converged = false
-      var iters = 0
-      var lastGram: GramResult = null
-      while (iters < maxIter && !converged) {
-        iters += 1
-        val g = design.gram(beta.toArray)(working)
-        lastGram = g
-        // (X'WX + rI) b' = X'Wz + r b  (identical to the reference's
-        // ridged Newton step, see scaladoc)
-        val rhs = g.xty + (beta * Ridge)
-        val newBeta =
-          try LinAlg.ridgeSolve(g.xtx, rhs, Ridge)
-          catch {
-            case _: SingularMatrix =>
-              val aa = g.xtx.copy
-              var i = 0
-              while (i < k) { aa(i, i) += Ridge; i += 1 }
-              try aa \ rhs
-              catch {
-                case e: Exception => throw SingularMatrix(
-                  "Failed to solve Hessian system in Probit: " + e.getMessage)
-              }
-          }
-        val step = newBeta - beta
-        beta = newBeta
-        if (norm(step) < tol) converged = true
-      }
-      val info = lastGram.xtx.copy
-      var i = 0
-      while (i < k) { info(i, i) += Ridge; i += 1 }
-      ProbitFit(xCols, beta, LinAlg.symInverse(info), converged, iters)
-    } finally {
-      design.unpersist()
-    }
+    val fit = newton(df, targetCol, xCols,
+      Seq(wCol.map(col).getOrElse(lit(1.0))), lit(0), 1, maxIter, tol)
+    val slot = fit.slots(0)(0)
+    slot.error.foreach(throw _)
+    ProbitFit(xCols, slot.beta, LinAlg.symInverse(ridged(slot.gram)),
+      slot.done, fit.iterations)
   }
 }

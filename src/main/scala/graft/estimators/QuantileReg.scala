@@ -148,49 +148,31 @@ object QuantileReg {
           val g = Gram.compute(proj, yCol, xCols)
           Array.fill(nT)(LinAlg.solveLeastSquares(g.xtx, g.xty))
         }
-      val done = Array.fill(nT)(false)
       val prevObj = Array.fill(nT)(Double.NaN)
+      val tauArr = taus.toArray
       // fixed-plan iterations (see IrlsDesign): the per-tau reweighting
       // runs as a closure over the cached design instead of fresh
       // weight-column plans per iteration; w = c / max(|y - xb|, Eps)
       // keeps the association order of the equivalent Column expression
-      val design = new IrlsDesign(proj, yCol, xCols, Seq(lit(1.0)))
-      try {
-      var iter = 0
-      while (iter < maxIter && done.contains(false)) {
-        iter += 1
-        val active = (0 until nT).filter(i => !done(i))
-        val activeTaus = active.map(taus).toArray
-        // one lane, every tau on base-weight slot 0
-        val grams = design.gramMulti(
-          active.map(i => Array(betas(i).toArray)).toArray,
-          new Array[Int](active.size)) {
-          (y, _, xb, s, out) =>
-            val r = y - xb
-            val c = if (r > 0.0) activeTaus(s) else 1.0 - activeTaus(s)
-            out(0) = y
-            out(1) = c / math.max(math.abs(r), Eps)
-        }(0)
-        active.zipWithIndex.foreach { case (i, si) =>
-          val g = grams(si)
-          val b = betas(i)
-          // weighted SSR at the beta the weights were built from:
-          // sum w*r^2 with w = c/max(|r|, Eps) == sum c*|r| wherever
-          // |r| >= Eps — the pinball objective, free from this scan
-          val obj = g.swyy - 2.0 * (b dot g.xty) + (b dot (g.xtx * b))
-          if (objRtol > 0.0 && !prevObj(i).isNaN &&
-              prevObj(i) - obj < objRtol * math.abs(prevObj(i)))
-            done(i) = true
-          prevObj(i) = obj
-          val nb = LinAlg.ridgeSolve(g.xtx, g.xty,
-            1e-10 * (breeze.linalg.trace(g.xtx) / k + 1.0))
-          if (norm(nb - b) < tol * math.max(1.0, norm(b)))
-            done(i) = true
-          betas(i) = nb
-        }
+      val fit = Irls.newton(proj, yCol, xCols, Seq(lit(1.0)), Array(betas),
+          maxIter) { (y, _, xb, s, out) =>
+        val r = y - xb
+        val c = if (r > 0.0) tauArr(s) else 1.0 - tauArr(s)
+        out(0) = y
+        out(1) = c / math.max(math.abs(r), Eps)
+      } { (i, g, b) =>
+        // weighted SSR at the beta the weights were built from:
+        // sum w*r^2 with w = c/max(|r|, Eps) == sum c*|r| wherever
+        // |r| >= Eps — the pinball objective, free from this scan
+        val obj = g.swyy - 2.0 * (b dot g.xty) + (b dot (g.xtx * b))
+        val stalled = objRtol > 0.0 && !prevObj(i).isNaN &&
+          prevObj(i) - obj < objRtol * math.abs(prevObj(i))
+        prevObj(i) = obj
+        val nb = LinAlg.ridgeSolve(g.xtx, g.xty,
+          1e-10 * (breeze.linalg.trace(g.xtx) / k + 1.0))
+        (nb, stalled || norm(nb - b) < tol * math.max(1.0, norm(b)))
       }
-      } finally { design.unpersist() }
-      betas.toSeq
+      fit.slots(0).toSeq.map { slot => slot.error.foreach(throw _); slot.beta }
     } finally { proj.unpersist() }
   }
 }

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.functions.Param
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -186,7 +187,7 @@ object Embeddings {
     model.components.indices.foldLeft(df) { (acc, c) =>
       acc.withColumn(s"${outPrefix}_$c",
         projectionCol(model, col(vecCol), c) /
-          lit(math.sqrt(model.eigenvalues(c) + eps)))
+          Param(math.sqrt(model.eigenvalues(c) + eps)))
     }
 
   /** Johnson-Lindenstrauss sign matrix: s_{j,i} = +-1 from the engine-
@@ -220,7 +221,7 @@ object Embeddings {
       // fused dot-product loop (float elements widen in-loop) — the
       // zip_with/aggregate chain allocated an array per (row, output dim)
       acc.withColumn(s"${outPrefix}_$j",
-        graft.functions.DotProduct(col(vecCol), s) * lit(scale))
+        graft.functions.DotProduct(col(vecCol), s) * Param(scale))
     }
   }
 }

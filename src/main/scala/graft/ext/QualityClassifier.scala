@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.estimators.Logit
+import graft.functions.Param
 import graft.prep.Prep
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -57,7 +58,7 @@ object QualityClassifier {
     val (scored, beta, conv) = score(df, label, features, scoreCol,
       maxIter, tol)
     val p6 = round(col(scoreCol), 6)
-    val thr = scored.agg(round(avg(p6), 6)).head().getDouble(0)
-    (scored.withColumn(keepCol, p6 >= lit(thr)), beta, conv)
+    val meanScore = scored.agg(round(avg(p6), 6)).head().getDouble(0)
+    (scored.withColumn(keepCol, p6 >= Param(meanScore)), beta, conv)
   }
 }

@@ -107,11 +107,10 @@ object Prep {
     * speculative lanes WERE the true split — same rows, same lanes, same
     * accumulation order, so the Grams are bit-identical to the classic
     * discover-then-scan sequence — and the split's frames derive lazily
-    * with no extra action. Any other outcome (error cases, >2 levels
-    * whose extra rows polluted lane 0, or a tracking overflow past
-    * [[graft.core.GramBuffer.TrackCap]]) falls back to [[splitGroups]]'
-    * semantics, reproducing its exact errors and re-running the Gram on
-    * the true lanes — the rare path costs what the old path always paid.
+    * with no extra action. Any other outcome (error cases, or >2 levels
+    * whose extra rows polluted lane 0) falls back to [[splitGroups]]'
+    * semantics on the complete tracked level set, reproducing its exact
+    * errors and re-running the Gram on the true lanes.
     *
     * At the reference's published 100k x 10 benchmark shape this fold is
     * the difference between matching its point-estimate latency and
@@ -138,16 +137,16 @@ object Prep {
       wCol, specLane, nLanes = 2, reps = reps, seed = seed, trackCol = g,
       seedCols = seedCols)
     val refPresent = lanes(1)(0).n > 0
-    if (tracked.complete && tracked.values.size == 1 && refPresent) {
-      val levelA = tracked.values.head
+    if (tracked.size == 1 && refPresent) {
+      val levelA = tracked.head
       (GroupSplit(levelA, reference,
         dummied.filter(g === lit(levelA)), dummied.filter(g === lit(reference)),
         g === lit(levelA)), lanes)
-    } else if (tracked.complete) {
-      // the tracked set is complete, so splitGroups' validations can run
-      // on it without another discovery job
+    } else {
+      // the tracked set is every non-reference level, so splitGroups'
+      // validations run on it without another discovery job
       val levels = utf8Sorted(
-        tracked.values ++ (if (refPresent) Seq(reference) else Nil))
+        tracked ++ (if (refPresent) Seq(reference) else Nil))
       if (levels.size < 2)
         throw InvalidGroupVariable(
           s"Group variable '$groupCol' must have at least 2 levels, found ${levels.size}")
@@ -160,11 +159,6 @@ object Prep {
       val split = GroupSplit(levelA, reference,
         dummied.filter(g === lit(levelA)), dummied.filter(g === lit(reference)),
         g === lit(levelA))
-      (split, Gram.computeGrouped(dummied, yCol, xCols, wCol,
-        laneOf(split, groupCol), 2, reps, seed, seedCols = seedCols))
-    } else {
-      // overflow: a pathological level cardinality — classic path
-      val split = splitGroups(dummied, groupCol, reference)
       (split, Gram.computeGrouped(dummied, yCol, xCols, wCol,
         laneOf(split, groupCol), 2, reps, seed, seedCols = seedCols))
     }

@@ -158,6 +158,26 @@ class AkmMatchingSpec extends SparkSpec {
     assert(routes == Seq(kept, kept), s"$routes")
   }
 
+  test("AKM normalizes firm effects to the first firm in UTF-8 order on both routes") {
+    // U+FF5E < U+FF5F < U+1F600 in UTF-8 (Spark's string order); in
+    // UTF-16 the surrogate pair of U+1F600 sorts first
+    val firms = Seq("\uFF5E", "\uFF5F", new String(Character.toChars(0x1F600)))
+    val rng = new scala.util.Random(37)
+    val df = (0 until 120).map { i =>
+      val w = i % 12
+      val f = (i / 12 + w) % 3
+      (s"w$w", firms(f), 0.2 * w + 0.7 * f + rng.nextGaussian() * 0.01)
+    }.toDF("worker", "firm", "y")
+    val Seq(driver, dist) = Seq(Akm.DriverEdgeCap, 0L).map { cap =>
+      Akm.run(df, "y", "worker", "firm", driverEdgeCap = cap).firmEffects
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
+    assert(driver.keySet == firms.toSet && dist.keySet == firms.toSet)
+    assert(driver(firms.head) == 0.0 && dist(firms.head) == 0.0, s"$driver vs $dist")
+    assert(firms.map(f => math.abs(driver(f) - dist(f))).max < 1e-5,
+      s"$driver vs $dist")
+  }
+
   test("a driver-route AKM fit leaves no persisted RDD behind") {
     val rng = new scala.util.Random(23)
     val df = (0 until 200).map(_ => (s"w${rng.nextInt(20)}",

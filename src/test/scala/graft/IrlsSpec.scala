@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.estimators.Probit
 import graft.prep.Prep
 import org.apache.spark.sql.functions._
 
@@ -31,35 +32,44 @@ class IrlsSpec extends SparkSpec {
     assert(a.n == b.n, "n")
   }
 
-  test("gram with the identity working response equals Gram.compute bit for bit") {
-    val df = frame
-    val design = new IrlsDesign(df, "y", xCols, Seq(col("w0")))
-    try {
-      val g = design.gram(Array(0.1, -0.2, 0.3)) { (y, wBase, _, out) =>
-        out(0) = y
-        out(1) = wBase
-      }
-      assertSameBits(g, Gram.compute(df, "y", xCols, Some("w0")))
-    } finally design.unpersist()
-  }
-
   test("gramMulti over 2 lanes and 3 weight columns equals Gram.computeMulti") {
     val df = frame
     // lane C is outside [0, 2): dropped by both passes
     val lane = when(col("g") === "A", 0).when(col("g") === "B", 1)
-    val wCols = Seq("w0", "w1", "w2")
-    val design = new IrlsDesign(df, "y", xCols, wCols.map(col), lane, 2)
-    try {
-      val betas = Array.fill(3, 2)(Array(0.5, 0.5, 0.5))
-      val g = design.gramMulti(betas, Array(0, 1, 2)) { (y, wBase, _, _, out) =>
-        out(0) = y
-        out(1) = wBase
-      }
-      val ref = Gram.computeMulti(df, xCols,
-        wCols.map(w => Gram.MultiSystem("y", w)), lane, 2)
-      for (l <- 0 until 2; s <- 0 until 3) {
-        withClue(s"lane $l system $s: ") { assertSameBits(g(l)(s), ref(l)(s)) }
-      }
-    } finally design.unpersist()
+    for ((laneOf, nLanes, wCols) <- Seq((lit(0), 1, Seq("w0")),
+        (lane, 2, Seq("w0", "w1", "w2")))) {
+      val nSys = wCols.size
+      val design = new IrlsDesign(df, "y", xCols, wCols.map(col), laneOf, nLanes)
+      try {
+        val betas = Array.fill(nSys, nLanes)(Array(0.1, -0.2, 0.3))
+        val sys = Array.range(0, nSys)
+        val g = design.gramMulti(betas, sys, sys) { (y, wBase, _, _, out) =>
+          out(0) = y
+          out(1) = wBase
+        }
+        val ref = Gram.computeMulti(df, xCols,
+          wCols.map(w => Gram.MultiSystem("y", w)), laneOf, nLanes)
+        for (l <- 0 until nLanes; s <- 0 until nSys) {
+          withClue(s"$nLanes lanes, lane $l system $s: ") {
+            assertSameBits(g(l)(s), ref(l)(s))
+          }
+        }
+      } finally design.unpersist()
+    }
+  }
+
+  test("Probit.fit on one group's rows equals fitManyGrouped's slot for that group") {
+    val df = frame.withColumn("sel", (col("y") > 0.5).cast("double"))
+      .withColumn("one", lit(1.0))
+    val lane = when(col("g") === "A", 0).when(col("g") === "B", 1)
+    val batched = Probit.fitManyGrouped(df, "sel", xCols, Seq("one", "w0"), lane, 2)
+    for ((grp, l) <- Seq("A" -> 0, "B" -> 1);
+         (w, s) <- Seq(None -> 0, Some("w0") -> 1)) {
+      val one = Probit.fit(df.filter(col("g") === grp), "sel", xCols, wCol = w)
+      def bits(v: breeze.linalg.DenseVector[Double]) =
+        v.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq
+      assert(one.converged && batched(l)(s)._2, s"group $grp system $s")
+      assert(bits(one.beta) == bits(batched(l)(s)._1), s"group $grp system $s")
+    }
   }
 }

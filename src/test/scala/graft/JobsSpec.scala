@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.McpServer
 import graft.core.{Gram, InvalidArgument, Jobs, Windows}
 import graft.equity.{Equity, EquityConfig, Frontier}
 import graft.estimators.{Akm, Kde, Probit, Rif}
@@ -9,6 +10,8 @@ import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.json4s.{JNothing, JString}
+import org.json4s.jackson.JsonMethods
 
 /** `Jobs.par2`'s failure path, `Jobs.labeled`'s nesting,
   * `Jobs.treeReduce`'s result and job labels, the job counts of the
@@ -243,6 +246,32 @@ class JobsSpec extends SparkSpec {
       assert(labelsOf { rows = result.collect() }.isEmpty,
         s"$q: collecting its result ran jobs")
       assert(rows.nonEmpty, q)
+    }
+  }
+
+  test("the five MCP tools label every job they submit") {
+    val rng = new scala.util.Random(41)
+    val csv = ("wage,education,dept,group" +: (0 until 40).map { i =>
+      val g = if (i % 2 == 0) "A" else "B"
+      val edu = 8 + rng.nextInt(8)
+      val wage = 10.0 + edu + (if (g == "A") 3.0 else 0.0) + rng.nextGaussian()
+      f"$wage%.2f,$edu,d${i % 3},$g"
+    }).mkString("\n")
+    val base = s""""csv_content":${JsonMethods.compact(JsonMethods.render(JString(csv)))},""" +
+      """"outcome_variable":"wage","group_variable":"group","reference_group":"A",""" +
+      """"predictors":["education"],"categorical_predictors":["dept"],"bootstrap_reps":5"""
+    val adjustments = ""","adjustments":[{"index":1,"value":2.0},{"index":3,"value":1.5}]"""
+    for ((tool, extra) <- Seq("forensic_decomposition" -> "",
+        "simulate_remediation" -> ""","budget":20.0""",
+        "verify_adjustments" -> adjustments, "check_defensibility" -> adjustments,
+        "generate_efficient_frontier" -> ""","steps":3""")) {
+      var resp = ""
+      val run = labelsOf {
+        resp = McpServer.handle(spark, s"""{"jsonrpc":"2.0","id":1,"method":"tools/call",""" +
+          s""""params":{"name":"$tool","arguments":{$base$extra}}}""").get
+      }
+      assert((JsonMethods.parse(resp) \ "error") == JNothing, resp)
+      assert(run.nonEmpty && run.forall(_.nonEmpty), s"$tool submitted unlabeled jobs: $run")
     }
   }
 

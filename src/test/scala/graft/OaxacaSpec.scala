@@ -283,14 +283,24 @@ class OaxacaSpec extends SparkSpec {
     val noRefClassic = intercept[InvalidGroupVariable](
       Prep.splitGroups(df, "gender", "Z"))
     assert(noRef.getMessage == noRefClassic.getMessage)
-    // tracking overflow (> TrackCap non-reference levels) falls back to
-    // the classic discovery and still answers correctly
+    // 75 non-reference levels: the tracked set is every level, so the
+    // split needs only the tracked pass and the re-run on the true lanes
+    // (no level-discovery pass)
     val wide = (0 until 400).map(i =>
       (i.toDouble, (i % 7).toDouble, if (i % 4 == 0) "REF" else s"L${i % 100}"))
       .toDF("wage", "education", "gender")
-    val (sW, gW) = Prep.splitGroupsWithGram(wide, "gender", "REF", "wage",
-      Seq("education"), None, 0, 42L)
+    var wideRun: (Prep.GroupSplit, Array[Array[GramResult]]) = null
+    val jobs = labelsOf {
+      wideRun = Prep.splitGroupsWithGram(wide, "gender", "REF", "wage",
+        Seq("education"), None, 0, 42L)
+    }
+    assert(jobs == Seq.fill(2)("gram: 2-lane 1-rep fused scan"), jobs)
+    val (sW, gW) = wideRun
     val sWC = Prep.splitGroups(wide, "gender", "REF")
+    val gWC = Gram.computeGrouped(wide, "wage", Seq("education"), None,
+      Prep.laneOf(sWC, "gender"), 2, 0, 42L)
+    for (l <- 0 until 2)
+      assert(gW(l)(0).xtx == gWC(l)(0).xtx && gW(l)(0).n == gWC(l)(0).n)
     assert(sW.levelA == sWC.levelA)
     assert(gW(1)(0).n == 100L)
   }

@@ -17,7 +17,9 @@ sketches and grouped order statistics are built there
 (`Windows.boundaryLane`, `Windows.groupedOrderStats`).
 And exits 1 if a fitted or request-derived double (coefficients,
 (X'X)^-1, sigma^2, z, budget, pro-rata ratio, the prefix-sum offsets of
-`Windows.exclusivePrefixSum`) enters a plan through `lit(`: Spark writes
+`Windows.exclusivePrefixSum`, the effective allocation budget, AKM's
+reference-firm effect, the PCA eigenvalue and JL scales, the quality
+threshold) enters a plan through `lit(`: Spark writes
 a literal into the generated source, so every new value compiles a new
 class. Such values go through `graft.functions.Param`.
 The grouped rank-pick has one route: exits 1 on a `lit(`, `isin(` or
@@ -40,6 +42,10 @@ src/main of AKM's deleted label-propagation loops
 (`driverComponentWorkers`, `distributedComponentWorkers`,
 `semiJoinWorkers`); AKM's largest connected set runs on
 `Cluster.connectedComponents` and `Cluster.driverComponents`.
+IRLS has one Newton loop: exits 1 on a `new IrlsDesign(` or `gramMulti(`
+call outside core/Irls.scala (`Irls.newton` is the only caller of the
+pass). Lane-0 level tracking has no cap: exits 1 on any mention under
+src/main of `TrackCap` or `trackOverflow`.
 
 Usage: python3 tools/list_knobs.py
 """
@@ -51,11 +57,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PATTERN = re.compile(r'"((?:spark\.graft\.[A-Za-z0-9_.]+)|(?:SPARK_GRAFT_[A-Z0-9_]+))"')
 JOBS = os.path.join("src", "main", "scala", "graft", "core", "Jobs.scala")
 WINDOWS = os.path.join("src", "main", "scala", "graft", "core", "Windows.scala")
+IRLS = os.path.join("src", "main", "scala", "graft", "core", "Irls.scala")
 ONE_SITE = {
     JOBS: ("treeAggregate(", "getNumPartitions < 16"),
     WINDOWS: ("percentile_approx(", "approxQuantile(", "valuesAtRanksGrouped("),
+    IRLS: ("new IrlsDesign(", "gramMulti("),
 }
-FITTED_LIT = re.compile(r"lit\((beta|covInv|sigma2|zScore|effectiveBudget|ratio)")
+FITTED_LIT = re.compile(r"lit\((beta|covInv|sigma2|zScore|effective|ratio|refVal"
+                        r"|math\.sqrt\(model\.eigenvalues|scale\b|meanScore)")
 DEF = re.compile(r"\bdef (\w+)")
 RANK_PICK_CALLS = ("lit(", "isin(", "broadcast(")
 REPLACED = ("KeyedOffset", "precomputedBoundaries", "broadcastableGroups",
@@ -65,6 +74,7 @@ DEDUP_SWITCHES = ("verifyKernel", "setBroadcastBytes", "SetBroadcastBytesKey",
                   "directPathMaxPairs")
 AKM_LOOPS = ("driverComponentWorkers", "distributedComponentWorkers",
              "semiJoinWorkers")
+TRACK_CAP = ("TrackCap", "trackOverflow")
 GRAFT = os.path.join("src", "main", "scala", "graft")
 LOCAL_RESULTS = tuple(os.path.join(GRAFT, *f) for f in (
     ("Queries.scala",), ("QueriesExt.scala",), ("decompose", "Oaxaca.scala")))
@@ -78,6 +88,7 @@ def scan():
     rdds = []
     dedup = []
     loops = []
+    caps = []
     src = os.path.join(ROOT, "src", "main")
     for dirpath, _, files in sorted(os.walk(src)):
         for f in sorted(files):
@@ -93,6 +104,7 @@ def scan():
                     dedup += [f"{rel}:{n}: {w}" for w in DEDUP_SWITCHES
                               if w in line]
                     loops += [f"{rel}:{n}: {w}" for w in AKM_LOOPS if w in line]
+                    caps += [f"{rel}:{n}: {w}" for w in TRACK_CAP if w in line]
                     for m in PATTERN.finditer(code):
                         knobs.setdefault(m.group(1), []).append(f"{rel}:{n}")
                     if code.lstrip().startswith(("*", "/*")):
@@ -111,11 +123,11 @@ def scan():
                                      if p in code]
                     if rel in LOCAL_RESULTS and "sparkContext.parallelize(" in code:
                         rdds.append(f"{rel}:{n}: {code.strip()}")
-    return knobs, strays, literals, switches, rdds, dedup, loops
+    return knobs, strays, literals, switches, rdds, dedup, loops, caps
 
 
 def main():
-    knobs, strays, literals, switches, rdds, dedup, loops = scan()
+    knobs, strays, literals, switches, rdds, dedup, loops, caps = scan()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -146,8 +158,10 @@ def main():
               file=sys.stderr)
     for s in loops:
         print(f"CONNECTED-COMPONENTS LOOP (use Cluster): {s}", file=sys.stderr)
+    for s in caps:
+        print(f"LEVEL-TRACKING CAP (track every value): {s}", file=sys.stderr)
     return 1 if (missing or repeated or extra or strays or literals or switches
-                 or rdds or dedup or loops) else 0
+                 or rdds or dedup or loops or caps) else 0
 
 
 if __name__ == "__main__":
