@@ -18,9 +18,12 @@ import org.json4s.jackson.JsonMethods
   * envelope with the engine's field names (`engine/src/types.rs:18-149`).
   *
   * The CSV payload of a JSON-RPC call is inherently driver-local, so it
-  * is parsed driver-side and parallelized with its row index attached
+  * is parsed driver-side into ONE partition with its row index attached
   * (the reference's adjustment `index`); all analytics then run through
-  * the distributed engine paths. A deployment reading data from storage
+  * the distributed engine paths. A payload is bounded by the request
+  * cap, and with one partition every per-request Gram, aggregate and
+  * prefix-sum input adds its rows in one fixed order, so a repeated
+  * request returns the same bytes. A deployment reading data from storage
   * would swap [[csvToDf]] for `spark.read.csv` + `Prep.withRowId`.
   */
 object McpServer {
@@ -55,8 +58,8 @@ object McpServer {
     out.toSeq
   }
 
-  /** Parse csv_content into a DataFrame of string columns plus the
-    * 0-based row index (all numeric typing happens downstream in
+  /** Parse csv_content into a one-partition DataFrame of string columns
+    * plus the 0-based row index (all numeric typing happens downstream in
     * `Equity.prepareFrame`'s strict casts, like the engine's prepare_data). */
   def csvToDf(spark: SparkSession, csv: String): DataFrame = {
     val lines = csv.split("\r?\n").filter(_.nonEmpty)
@@ -67,7 +70,7 @@ object McpServer {
     }
     val schema = StructType(StructField(RowId, LongType, nullable = false) +:
       header.map(StructField(_, StringType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 
   private def cfgOf(a: JValue): EquityConfig = EquityConfig(
@@ -121,7 +124,7 @@ object McpServer {
 
   // ---- the five tools (`meridian-mcp/src/main.rs:703-795`) ----
 
-  private def decompositionJson(r: Equity.DecompositionResult): JValue = {
+  private[graft] def decompositionJson(r: Equity.DecompositionResult): JValue = {
     def detailed(cs: Seq[graft.decompose.ComponentResult]): JValue =
       JArray(cs.map(c => JObject(
         "name" -> JString(c.name), "estimate" -> JDouble(c.estimate),

@@ -12,8 +12,8 @@ import org.apache.spark.sql.functions.col
   * stage-materialization callsite. Descriptions are thread-local and
   * AQE's stage futures capture them, so concurrent actions from
   * different threads stay correctly labeled. Every one-pass aggregation
-  * merges through [[treeReduce]] and fans out through [[fanOut]] or
-  * [[fanOutBy]]. */
+  * merges through [[treeReduce]]; an under-partitioned file scan fans
+  * out through [[fanOut]] or [[fanOutBy]]. */
 object Jobs {
   /** Labels the jobs `body` submits; the enclosing label (or none) is
     * restored afterwards, so nested phases do not clobber their parent. */
@@ -34,24 +34,29 @@ object Jobs {
       rdd.treeAggregate(zero)(seqOp, combOp, depth = 2)
     }
 
-  /** Fan a scan of fewer than 16 partitions out to a FIXED 64 ahead of
-    * HEAVY per-row work (replicate-heavy Gram and IRLS passes, DFL's
-    * grid KDE, token hashing); otherwise return `df` itself. A single
-    * parquet file scans as ONE partition, so that work would run on one
-    * task. Cheap codegen Gram scans must not fan out: at sf0.1 the
-    * shuffle cost more than it saved (q_quantreg 1.4 -> 2.6 s). The
-    * fixed count keeps partition contents, and so every floating-point
-    * sum order, identical at any thread count. */
+  /** Fan a FILE scan of fewer than 16 partitions out to a FIXED 64
+    * ahead of HEAVY per-row work (replicate-heavy Gram and IRLS passes,
+    * DFL's grid KDE, token hashing); return any other `df` itself. A
+    * single parquet file scans as ONE partition, so that work would run
+    * on one task; the fixed count keeps partition contents, and so every
+    * floating-point sum order, identical at any thread count. A frame
+    * whose `inputFiles` is empty is decided from its logical plan alone,
+    * with no planning job: an in-memory source (`LocalRelation`, `range`,
+    * a parallelized RDD such as the one-slice MCP payload) keeps the
+    * partitioning its producer chose, which already fixes its sum order
+    * and which a shuffle would only slow down on small inputs. Cheap
+    * codegen Gram scans must not fan out either: at sf0.1 the shuffle
+    * cost more than it saved (q_quantreg 1.4 -> 2.6 s). */
   def fanOut(df: DataFrame): DataFrame =
-    if (narrow(df)) df.repartition(64) else df
+    if (narrowFileScan(df)) df.repartition(64) else df
 
   /** [[fanOut]]'s test, but hash-partitioned on `key` into 32, ahead of
     * a text operator's tokenize + explode: one id's rows land together. */
   def fanOutBy(df: DataFrame, key: String): DataFrame =
-    if (narrow(df)) df.repartition(32, col(key)) else df
+    if (narrowFileScan(df)) df.repartition(32, col(key)) else df
 
-  private def narrow(df: DataFrame): Boolean =
-    df.queryExecution.toRdd.getNumPartitions < 16
+  private def narrowFileScan(df: DataFrame): Boolean =
+    df.inputFiles.nonEmpty && df.queryExecution.toRdd.getNumPartitions < 16
 
   /** Run two INDEPENDENT action chains concurrently (guide §2.6 —
     * overlap independent jobs: Spark happily runs several jobs at once;

@@ -73,8 +73,9 @@ object MachadoMata {
       val y = rows.map(_.getDouble(0))
       (x, y)
     }
-    val (xA, yA) = collectGroup(split.dfA)
-    val (xB, yB) = collectGroup(split.dfB)
+    val ((xA, yA), (xB, yB)) = Jobs.labeled(df.sparkSession, "mm: group rows") {
+      (collectGroup(split.dfA), collectGroup(split.dfB))
+    }
     if (xA.length < 2 || xB.length < 2)
       throw InvalidGroupVariable("One group has insufficient data")
 

@@ -135,8 +135,10 @@ object QuantileReg {
       val hash = xxhash64((yCol +: xCols).map(col): _*)
       val sampleRows =
         if (warmStart)
-          proj.orderBy(hash).limit(warmN)
-            .select((col(yCol) +: xCols.map(col)): _*).collect()
+          Jobs.labeled(df.sparkSession, "irls: warm-start sample") {
+            proj.orderBy(hash).limit(warmN)
+              .select((col(yCol) +: xCols.map(col)): _*).collect()
+          }
         else Array.empty[org.apache.spark.sql.Row]
       val nT = taus.size
       val betas: Array[DenseVector[Double]] =

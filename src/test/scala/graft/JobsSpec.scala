@@ -9,7 +9,8 @@ import graft.prep.Prep
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField,
+  StructType}
 import org.json4s.{JNothing, JString}
 import org.json4s.jackson.JsonMethods
 
@@ -94,6 +95,28 @@ class JobsSpec extends SparkSpec {
     val want = rdd.treeAggregate(new Array[Double](3))(seqOp, combOp, depth = 2)
     assert(got.toSeq == want.toSeq)
     assert(got.toSeq == Seq(2001000.0, 2668667000.0, 2000.0))
+  }
+
+  test("fanOut and fanOutBy fan out only an under-partitioned file scan, with no job otherwise") {
+    val local = (0 until 200).map(i => (i.toLong, s"t$i")).toDF("id", "text")
+    val oneSlice = spark.createDataFrame(
+      spark.sparkContext.parallelize((0 until 200).map(i => Row(i.toLong, s"t$i")), 1),
+      StructType(Seq(StructField("id", LongType), StructField("text", StringType))))
+    for ((name, df) <- Seq("createDataFrame" -> local, "one-slice RDD" -> oneSlice)) {
+      var fanned: DataFrame = null
+      var byKey: DataFrame = null
+      val jobs = labelsOf { fanned = Jobs.fanOut(df); byKey = Jobs.fanOutBy(df, "id") }
+      assert((fanned eq df) && (byKey eq df), s"$name was fanned out")
+      assert(jobs.isEmpty, s"$name: deciding the fan-out ran jobs $jobs")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("fanout-spec").toString
+    try {
+      local.coalesce(1).write.mode("overwrite").parquet(s"$dir/one")
+      val file = spark.read.parquet(s"$dir/one")
+      assert(file.inputFiles.length == 1 && file.rdd.getNumPartitions == 1)
+      assert(Jobs.fanOut(file).rdd.getNumPartitions == 64)
+      assert(Jobs.fanOutBy(file, "id").rdd.getNumPartitions == 32)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("every single-pass aggregation outside the labeled phases carries its label") {
@@ -235,7 +258,7 @@ class JobsSpec extends SparkSpec {
   test("the analyst registry queries label every job and collect with none") {
     val queries = Seq("q_decomp_twofold", "q_decomp_threefold",
       "q_decomp_detailed", "q_wls_decomp", "q_heckman_decomp", "q_logit",
-      "q_kde").map(_ -> "lineitem") ++
+      "q_kde", "q_quantreg", "q_mm_quantile").map(_ -> "lineitem") ++
       Seq("q_dedup_exact", "q_simhash_pairs").map(_ -> "documents")
     for ((q, table) <- queries) {
       var result: DataFrame = null

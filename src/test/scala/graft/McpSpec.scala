@@ -1,6 +1,7 @@
 package graft
 
 import graft.api.McpServer
+import graft.equity.{Equity, EquityConfig}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -113,6 +114,37 @@ class McpSpec extends SparkSpec {
     assert(pts.size == 6) // 0..steps inclusive
     val budgets = pts.map(p => (p \ "budget").extract[Double])
     assert(budgets == budgets.sorted && budgets.head == 0.0)
+  }
+
+  test("each tool returns the same bytes twice; forensic_decomposition equals Equity.decompose") {
+    val rng = new scala.util.Random(17)
+    val payload = ("wage,education,dept,group" +: (0 until 300).map { i =>
+      val g = if (i % 3 == 0) "A" else "B"
+      val edu = 8 + rng.nextInt(10)
+      val wage = 12.0 + 1.3 * edu + (if (g == "A") 2.5 else 0.0) + rng.nextGaussian()
+      f"$wage%.3f,$edu,d${i % 4},$g"
+    }).mkString("\n")
+    val base = s"""{"csv_content":${JsonMethods.compact(JsonMethods.render(JString(payload)))},""" +
+      """"outcome_variable":"wage","group_variable":"group","reference_group":"A",""" +
+      """"predictors":["education"],"categorical_predictors":["dept"],"bootstrap_reps":24"""
+    val adjustments = ""","adjustments":[{"index":1,"value":2.0},{"index":4,"value":1.5}]"""
+    def text(tool: String, extra: String): String = {
+      val resp = McpServer.handle(spark, rpc("tools/call",
+        s"""{"name":"$tool","arguments":$base$extra}}""")).get
+      val parsed = JsonMethods.parse(resp)
+      assert((parsed \ "error") == JNothing, s"$tool: $resp")
+      ((parsed \ "result" \ "content")(0) \ "text").extract[String]
+    }
+    for ((tool, extra) <- Seq("forensic_decomposition" -> "",
+        "simulate_remediation" -> ""","budget":40.0""",
+        "verify_adjustments" -> adjustments, "check_defensibility" -> adjustments,
+        "generate_efficient_frontier" -> ""","steps":4"""))
+      assert(text(tool, extra) == text(tool, extra), s"$tool drifted between calls")
+    val direct = Equity.decompose(McpServer.csvToDf(spark, payload),
+      EquityConfig("wage", "group", "A", Seq("education"), categorical = Seq("dept")),
+      bootstrapReps = 24)
+    assert(text("forensic_decomposition", "") ==
+      JsonMethods.compact(JsonMethods.render(McpServer.decompositionJson(direct))))
   }
 
   test("negative bootstrap_reps and steps < 1 are rejected with a clear error") {

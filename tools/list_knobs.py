@@ -46,6 +46,10 @@ IRLS has one Newton loop: exits 1 on a `new IrlsDesign(` or `gramMulti(`
 call outside core/Irls.scala (`Irls.newton` is the only caller of the
 pass). Lane-0 level tracking has no cap: exits 1 on any mention under
 src/main of `TrackCap` or `trackOverflow`.
+A serving payload is one partition: exits 1 on a `parallelize(` call
+under src/main/scala/graft/api/ whose last argument is not the slice
+count `1`, so every per-request sum runs in one fixed order at any core
+count (`Jobs.fanOut` leaves in-memory frames as their producer made them).
 
 Usage: python3 tools/list_knobs.py
 """
@@ -78,6 +82,33 @@ TRACK_CAP = ("TrackCap", "trackOverflow")
 GRAFT = os.path.join("src", "main", "scala", "graft")
 LOCAL_RESULTS = tuple(os.path.join(GRAFT, *f) for f in (
     ("Queries.scala",), ("QueriesExt.scala",), ("decompose", "Oaxaca.scala")))
+API = os.path.join(GRAFT, "api")
+ONE_SLICE = re.compile(r"(numSlices\s*=\s*)?1")
+
+
+def multi_slice_payloads():
+    """`parallelize(` calls under api/ whose last top-level argument (the
+    parentheses matched across lines) is not a slice count of 1."""
+    found = []
+    for dirpath, _, files in sorted(os.walk(os.path.join(ROOT, API))):
+        for f in sorted(f for f in files if f.endswith(".scala")):
+            path = os.path.join(dirpath, f)
+            with open(path, encoding="utf-8") as fh:
+                lines = [l.split("//", 1)[0].rstrip("\n") for l in fh]
+            code = "\n".join("" if l.lstrip().startswith(("*", "/*")) else l
+                             for l in lines)
+            for m in re.finditer(r"parallelize\(", code):
+                i, depth, last = m.end(), 1, m.end()
+                while i < len(code) and depth:
+                    depth += {"(": 1, ")": -1, "[": 1, "]": -1}.get(code[i], 0)
+                    if code[i] == "," and depth == 1:
+                        last = i + 1
+                    i += 1
+                if last == m.end() or not ONE_SLICE.fullmatch(code[last:i - 1].strip()):
+                    n = code.count("\n", 0, m.start()) + 1
+                    args = " ".join(code[m.end():i - 1].split())
+                    found.append(f"{os.path.relpath(path, ROOT)}:{n}: parallelize({args})")
+    return found
 
 
 def scan():
@@ -128,6 +159,7 @@ def scan():
 
 def main():
     knobs, strays, literals, switches, rdds, dedup, loops, caps = scan()
+    payloads = multi_slice_payloads()
     with open(os.path.join(ROOT, "README.md"), encoding="utf-8") as fh:
         readme = fh.read()
     conf = sorted(k for k in knobs if k.startswith("spark.graft."))
@@ -160,8 +192,11 @@ def main():
         print(f"CONNECTED-COMPONENTS LOOP (use Cluster): {s}", file=sys.stderr)
     for s in caps:
         print(f"LEVEL-TRACKING CAP (track every value): {s}", file=sys.stderr)
+    for s in payloads:
+        print(f"PAYLOAD NOT ONE PARTITION (parallelize(..., 1)): {s}",
+              file=sys.stderr)
     return 1 if (missing or repeated or extra or strays or literals or switches
-                 or rdds or dedup or loops or caps) else 0
+                 or rdds or dedup or loops or caps or payloads) else 0
 
 
 if __name__ == "__main__":
